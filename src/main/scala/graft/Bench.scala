@@ -350,7 +350,7 @@ object Bench {
 
   /** Release persisted blocks between timed runs. clearCache() frees
     * only catalog-cached tables — localCheckpoint blocks (ScdType2,
-    * SurrogateKeys, Dedup.materialize, RcmPipeline.write) wait for GC +
+    * SurrogateKeys, Dedup.materialize, RcmModeling) wait for GC +
     * ContextCleaner otherwise, and a full bench session would pin
     * dozens of dead block sets of storage memory. Each timed run builds
     * its frames from scratch, so no prior run's checkpoint is ever

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Cleaning
+import graft.operators.ParallelJobs
 
 /** Phase-4 star-schema assembly — re-expression of
   * `/root/reference/python/dimensional_modeling.py`.
@@ -26,6 +27,17 @@ import graft.functions.Cleaning
   * never shuffle during key resolution; the only shuffles in this
   * phase are the `distinct()`s that build dim_procedures/dim_date,
   * which reduce map-side first (partial aggregation).
+  *
+  * Each star table is computed once per run. [[createDimensions]] pins
+  * every dimension except `dim_patients` (SCD2 replaces that one), and
+  * [[createFacts]] pins the four-lookup transactions join that both
+  * facts and [[validate]] read; the broadcasts, the CSV scans and the
+  * dimension windows then never re-run per consumer. The pins are
+  * small (dimensions plus one fact-sized frame) and their lifecycle
+  * belongs to the caller, as for [[graft.operators.ScdType2]]'s output:
+  * release them with [[graft.operators.Checkpoints.releasePinned]] once
+  * the star is written, or let the ContextCleaner drop them when the
+  * frames become unreachable.
   */
 object RcmModeling {
 
@@ -36,6 +48,8 @@ object RcmModeling {
     * data, README.md:177) and the non-positive-amount business rule. */
   final case class Validation(orphanedPatients: Long, nonPositiveAmounts: Long)
 
+  /** The five dimensions. All but `dim_patients` come back pinned
+    * (computed here, once); `dim_patients` stays lazy for SCD2. */
   def createDimensions(tables: Map[String, DataFrame]): Map[String, DataFrame] = {
     val patients = tables("patients")
     val dimPatients = patients.select(
@@ -76,14 +90,20 @@ object RcmModeling {
     val dimDepartments = tables("departments").select(
       col("department_sk"), col("DeptID"), col("Name"), col("source_hospital"))
 
-    Map(
-      "dim_patients" -> dimPatients,
+    // Pin the four SCD-free dimensions once, concurrently: the fact
+    // lookups broadcast them and the write persists them, and each of
+    // those consumers would otherwise re-derive them from the sources.
+    val pinned = ParallelJobs.map(Seq(
       "dim_providers" -> dimProviders,
       "dim_procedures" -> dimProcedures,
       "dim_date" -> dimDate,
-      "dim_departments" -> dimDepartments)
+      "dim_departments" -> dimDepartments).map { case (name, df) =>
+        () => name -> df.localCheckpoint() })
+    pinned.toMap + ("dim_patients" -> dimPatients)
   }
 
+  /** The two facts. `fact_transactions` comes back pinned (computed
+    * here, once); `fact_claims` stays lazy over that pin. */
   def createFacts(tables: Map[String, DataFrame], claims: DataFrame,
       dims: Map[String, DataFrame]): Map[String, DataFrame] = {
 
@@ -98,7 +118,9 @@ object RcmModeling {
     val proceduresLookup = dims("dim_procedures").select(col("ProcedureCode"), col("procedure_sk"))
 
     // fact_transactions: re-derive the unified id then resolve all four
-    // dimension keys by broadcast left joins (J3).
+    // dimension keys by broadcast left joins (J3). Pinned once with
+    // `source_hospital`: the fact is a projection of it, and the claims
+    // lookup below, validation and the write all read it.
     val trans = tables("transactions")
       .withColumn("unified_patient_id",
         Cleaning.unifiedPatientId(col("source_hospital"), col("PatientID")))
@@ -107,10 +129,12 @@ object RcmModeling {
       .join(broadcast(providersLookup), Seq("ProviderID", "source_hospital"), "left")
       .join(broadcast(proceduresLookup), Seq("ProcedureCode"), "left")
       .join(broadcast(dateLookup), trans("ServiceDate") === dateLookup("full_date"), "left")
-    val factTransactions = mergedTrans.select(
-      col("TransactionID"), col("EncounterID"), col("patient_sk"),
-      col("provider_sk"), col("procedure_sk"), col("date_sk"),
-      col("Amount"), col("PaidAmount"))
+      .select(
+        col("TransactionID"), col("EncounterID"), col("patient_sk"),
+        col("provider_sk"), col("procedure_sk"), col("date_sk"),
+        col("Amount"), col("PaidAmount"), col("source_hospital"))
+      .localCheckpoint()
+    val factTransactions = mergedTrans.drop("source_hospital")
 
     // fact_claims: inherit patient_sk through the transactions lookup
     // on (TransactionID, source_hospital) — TransactionID alone
@@ -127,12 +151,19 @@ object RcmModeling {
     Map("fact_transactions" -> factTransactions, "fact_claims" -> factClaims)
   }
 
+  /** Both counts in one pass over the facts: a left join to the
+    * distinct dimension keys tags each fact row with a marker, so an
+    * orphan is a row whose marker is null. A null `patient_sk` never
+    * matches and counts as an orphan, as under a `left_anti` join. */
   def validate(star: StarSchema): Validation = {
-    val factTrans = star.facts("fact_transactions")
     val validKeys = star.dimensions("dim_patients").select(col("patient_sk")).distinct()
-    val orphans = factTrans.join(validKeys, Seq("patient_sk"), "left_anti").count()
-    val nonPositive = factTrans.filter(col("Amount") <= 0).count()
-    Validation(orphans, nonPositive)
+      .withColumn("__graft_known", lit(true))
+    val row = star.facts("fact_transactions")
+      .join(validKeys, Seq("patient_sk"), "left")
+      .agg(count(when(col("__graft_known").isNull, 1)),
+        count(when(col("Amount") <= 0, 1)))
+      .head()
+    Validation(row.getLong(0), row.getLong(1))
   }
 
   def run(tables: Map[String, DataFrame], claims: DataFrame): StarSchema = {

@@ -2,10 +2,10 @@ package graft.etl
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.ScdType2
+import graft.operators.{DataQuality, ParallelJobs, ScdType2}
 
 /** End-to-end pipeline — the Spark re-expression of the reference's
   * entry point (`/root/reference/python/scd_implementation.py:102-132`):
@@ -33,7 +33,10 @@ object RcmPipeline {
 
   /** Same pipeline over already-extracted raw data — the entry point a
     * JDBC deployment uses after [[RcmExtraction.run]] with
-    * [[RcmExtraction.JdbcSource]]s (exercised in JdbcSourceSpec). */
+    * [[RcmExtraction.JdbcSource]]s (exercised in JdbcSourceSpec).
+    *
+    * The result's star holds pinned frames (see [[RcmModeling]]); a
+    * long-lived session releases them once the star is written. */
   def runRaw(raw: RcmExtraction.RawData, asOf: LocalDate,
       existingDimPatients: Option[DataFrame] = None): Result = {
     val asOfCol = lit(java.sql.Date.valueOf(asOf))
@@ -72,37 +75,49 @@ object RcmPipeline {
     * by `(unified_patient_id, is_current)` — giving the same locality
     * for sk-point queries that BQ clustering gives.
     *
-    * Scale notes: the written count comes from the same cached frame
-    * the write consumed (one extra count job over in-memory/sink-local
-    * data, never a pipeline recompute); the reloaded count is a
-    * parquet-footer metadata scan. Both are O(partitions), not
-    * O(data). */
+    * Write protocol: `written` is counted by the write itself, through
+    * an [[org.apache.spark.sql.Observation]] on the frame being written
+    * ([[DataQuality.observeValidation]]'s `n_rows`), so the count and
+    * the sink see the same rows without pinning the table first. Each
+    * write gets its own unnamed observation, so the concurrent writes
+    * cannot collide. `reloaded` comes from ONE query over the sink:
+    * the tables' parquet reads, each with the schema that was written
+    * (no footer inference job), tagged by name and counted per name.
+    * A table whose files all vanished reloads as 0.
+    *
+    * Scale notes: one write job per table (the writes overlap through
+    * [[ParallelJobs]], so one table's straggler tail back-fills the
+    * next) plus one reload query for the whole star. The observation
+    * is a map-side count folded into the write's tasks; the reload
+    * reads parquet row-group metadata only. Neither recomputes the
+    * pipeline: the expensive star inputs are pinned upstream
+    * ([[RcmModeling]]), and each table's own plan runs exactly once. */
   def write(star: RcmModeling.StarSchema, outDir: String): Seq[TableLoad] = {
     val clustering: Map[String, Seq[String]] = Map(
       "fact_transactions" -> Seq("patient_sk"),
       "fact_claims" -> Seq("patient_sk"),
       "dim_patients" -> Seq("unified_patient_id", "is_current"))
-    // each table's pin+count+write+reload chain is independent of the
-    // others' (distinct sink paths) — overlap them so one table's job
-    // tail back-fills the next's (guide §2.6, r19; the sequential loop
-    // paid ~4 actions × |tables| straggler tails)
-    val loads = graft.operators.ParallelJobs.map(
-      (star.dimensions ++ star.facts).toSeq.map { case (name, df) => () => {
-        val out = clustering.get(name) match {
-          case Some(cols) => df.sortWithinPartitions(cols.map(col): _*)
-          case None       => df
-        }
-        // Materialize once: the count and the write must see the SAME
-        // rows (an uncached lazy plan could legitimately recompute
-        // differently only in the presence of a bug upstream — exactly
-        // what reconciliation exists to catch, not mask).
-        val pinned = out.localCheckpoint()
-        val written = pinned.count()
-        val spark = df.sparkSession
-        pinned.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-        val reloaded = spark.read.parquet(s"$outDir/$name.parquet").count()
-        TableLoad(name, written, reloaded)
-      }})
+    val tables = (star.dimensions ++ star.facts).toSeq
+    def path(name: String) = s"$outDir/$name.parquet"
+    val written = ParallelJobs.map(tables.map { case (name, df) => () => {
+      val out = clustering.get(name) match {
+        case Some(cols) => df.sortWithinPartitions(cols.map(col): _*)
+        case None       => df
+      }
+      val obs = Observation()
+      DataQuality.observeValidation(out, obs, Seq.empty)
+        .write.mode("overwrite").parquet(path(name))
+      (name, obs.get("n_rows").asInstanceOf[Long], out.schema)
+    }})
+    val spark = tables.head._2.sparkSession
+    val reloaded = written.map { case (name, _, schema) =>
+      spark.read.schema(schema).parquet(path(name)).select(lit(name).as("table"))
+    }.reduce(_.unionByName(_))
+      .groupBy(col("table")).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val loads = written.map { case (name, n, _) =>
+      TableLoad(name, n, reloaded.getOrElse(name, 0L))
+    }
     val bad = loads.filterNot(_.reconciled)
     require(bad.isEmpty,
       s"post-load reconciliation failed: ${bad.mkString(", ")}")

@@ -37,29 +37,37 @@ private[graft] object ParallelJobs {
     "spark.jobGroup.id", "spark.job.description",
     "spark.job.interruptOnCancel")
 
+  /** How long an interrupted caller keeps awaiting its tasks after it
+    * cancelled their jobs. A task still running then is abandoned (it
+    * is interrupted, and its daemon thread cannot keep the JVM up). */
+  val InterruptSettleMs: Long = 10000L
+
   /** Run `tasks` concurrently (bounded), return results in input
     * order. Sequential fast path for 0/1 tasks.
     *
-    * Settle-all is UNCONDITIONAL: the first failure is recorded and
-    * rethrown only after every future has resolved, and a caller-
-    * thread interrupt is DEFERRED the same way — the interrupt flag
-    * is restored (and an InterruptedException thrown) only once every
-    * task has settled. The earlier behavior let the first
-    * InterruptedException poison every subsequent `get()` (each threw
-    * immediately on the still-set flag) and then `shutdownNow()`
-    * interrupted tasks mid-Spark-action — while the caller's `finally`
-    * unpersisted pinned slices those actions were still reading. */
+    * Settle-all: the first failure is recorded and rethrown only after
+    * every future has resolved, so cleanup code behind the call never
+    * races a still-running task.
+    *
+    * A caller-thread interrupt cancels and then settles: on the first
+    * InterruptedException the caller's job group, which every task
+    * inherited, is cancelled, so the tasks' Spark jobs fail promptly;
+    * the caller then awaits the tasks for at most [[InterruptSettleMs]]
+    * and throws an InterruptedException with its interrupt flag
+    * restored (a task failure, usually the cancellation itself, rides
+    * along as a suppressed exception). The cancel keeps a long job from
+    * holding an interrupted caller; the bound keeps a hung task from
+    * holding it forever. */
   def map[T](tasks: Seq[() => T],
       parallelism: Int = DefaultParallelism): Seq[T] = {
     require(parallelism >= 1, s"need parallelism >= 1, got $parallelism")
     if (tasks.size <= 1 || parallelism == 1) return tasks.map(_())
-    val callerProps: Seq[(String, String)] =
-      org.apache.spark.sql.SparkSession.getActiveSession
-        .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-        .map(_.sparkContext).toSeq.flatMap { sc =>
-          inheritedKeys.flatMap(k =>
-            Option(sc.getLocalProperty(k)).map(k -> _))
-        }
+    val context = org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
+      .map(_.sparkContext)
+    val callerProps: Seq[(String, String)] = context.toSeq.flatMap { sc =>
+      inheritedKeys.flatMap(k => Option(sc.getLocalProperty(k)).map(k -> _))
+    }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(parallelism, tasks.size),
       new java.util.concurrent.ThreadFactory {
@@ -87,28 +95,43 @@ private[graft] object ParallelJobs {
           }
         }))
       var err: Throwable = null
-      var interrupted = false
+      var deadline: Option[Long] = None // set by the first interrupt
+      var abandoned = 0
       val out = futures.map { f =>
         var res: Option[T] = None
         var settled = false
         while (!settled) {
-          try { res = Some(f.get()); settled = true }
-          catch {
+          try {
+            res = Some(deadline match {
+              case None => f.get()
+              case Some(d) => f.get(math.max(0L, d - System.nanoTime()),
+                java.util.concurrent.TimeUnit.NANOSECONDS)
+            })
+            settled = true
+          } catch {
             case e: java.util.concurrent.ExecutionException =>
               if (err == null) err = e.getCause
               settled = true
-            case _: InterruptedException =>
-              // defer: keep awaiting so no task outlives this call —
-              // the flag is restored after everything settles
-              interrupted = true
+            case _: java.util.concurrent.TimeoutException =>
+              abandoned += 1
+              settled = true
+            case _: InterruptedException if deadline.isEmpty =>
+              deadline = Some(System.nanoTime() + InterruptSettleMs * 1000000L)
+              for (sc <- context; (k, group) <- callerProps if k == "spark.jobGroup.id")
+                sc.cancelJobGroup(group)
+            case _: InterruptedException => () // the deadline already runs
           }
         }
         res
       }
-      if (interrupted) {
+      if (deadline.isDefined) {
         Thread.currentThread().interrupt()
-        if (err == null) err = new InterruptedException(
-          "interrupted while awaiting parallel jobs (all tasks settled)")
+        val e = new InterruptedException(
+          if (abandoned == 0) "interrupted while awaiting parallel jobs (all tasks settled)"
+          else s"interrupted while awaiting parallel jobs ($abandoned task(s) abandoned " +
+            s"unsettled after ${InterruptSettleMs} ms)")
+        if (err != null) e.addSuppressed(err)
+        throw e
       }
       if (err != null) throw err
       out.map(_.get)

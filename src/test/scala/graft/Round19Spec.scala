@@ -125,6 +125,51 @@ class Round19Spec extends AnyFunSuite {
     assert(flagAtThrow, "interrupt flag must be restored before rethrow")
   }
 
+  test("ParallelJobs: an interrupted caller cancels its job group and " +
+      "is not held forever by a hung task") {
+    val sc = spark.sparkContext
+    import Round19Spec.{hungJobStarted => jobStarted, hungJobRelease => release}
+    @volatile var thrown: Throwable = null
+    @volatile var flagAtThrow = false
+    val t = new Thread(() => {
+      sc.setJobGroup("r19-hung", "hung composite", interruptOnCancel = false)
+      try ParallelJobs.run(Seq(
+        // a Spark job that only ends when cancelled (or released)
+        () => spark.range(0, 1, 1, 1).foreach { _ =>
+          jobStarted.countDown()
+          while (!release.get) Thread.sleep(20)
+        },
+        // a hang no cancel or interrupt reaches
+        () => while (!release.get) {
+          try Thread.sleep(20) catch { case _: InterruptedException => () }
+        }))
+      catch { case e: Throwable =>
+        thrown = e
+        flagAtThrow = Thread.currentThread().isInterrupted
+      } finally sc.clearJobGroup()
+    })
+    try {
+      t.start()
+      assert(jobStarted.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      val t0 = System.nanoTime()
+      t.interrupt()
+      t.join(ParallelJobs.InterruptSettleMs + 20000L)
+      val waitedMs = (System.nanoTime() - t0) / 1000000L
+      assert(!t.isAlive, "the interrupted caller must return")
+      assert(waitedMs >= ParallelJobs.InterruptSettleMs - 100L,
+        s"returned after $waitedMs ms, before the settle bound")
+      assert(thrown.isInstanceOf[InterruptedException], s"threw $thrown")
+      assert(thrown.getMessage.contains("1 task(s) abandoned"), thrown.getMessage)
+      assert(flagAtThrow, "interrupt flag must be restored before rethrow")
+      assert(thrown.getSuppressed.exists(_.getMessage.contains("cancel")),
+        "the Spark task must have failed through the job-group cancel: " +
+          thrown.getSuppressed.map(_.getMessage).mkString("; "))
+      assert(sc.statusTracker.getJobIdsForGroup("r19-hung")
+        .forall(id => sc.statusTracker.getJobInfo(id).forall(
+          _.status != org.apache.spark.JobExecutionStatus.RUNNING)))
+    } finally release.set(true)
+  }
+
   // ------------- ModelCache: coherent derived-frame entries
 
   test("ModelCache.cachedDerived: base and derived frames live under " +
@@ -306,4 +351,11 @@ class Round19Spec extends AnyFunSuite {
     Seq(direct, cached).foreach(Checkpoints.releasePinned)
     mc.releaseAll()
   }
+}
+
+object Round19Spec {
+  // signals shared with a Spark task: module fields, so the task's
+  // closure reaches these instances rather than serialized copies
+  val hungJobStarted = new java.util.concurrent.CountDownLatch(1)
+  val hungJobRelease = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
