@@ -342,7 +342,7 @@ object Bench {
       .split("\\s+").take(3).toSeq.map(_.toDouble)
     catch { case _: Throwable => Seq.empty }
 
-  private def gcMs(): Long = {
+  private[graft] def gcMs(): Long = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(_.getCollectionTime).filter(_ >= 0).sum

@@ -8,7 +8,14 @@ package graft
   * so these numbers are comparable to BENCH artifacts).
   *
   * `runMain graft.TailScaleProbe <q1,q2,...> <dir1> [dir2 ...]`
-  * prints one `SCALE <dir> <query> <median>s [runs]` line per pair.
+  * prints one line per pair:
+  * `SCALE <dir> <query> <median> s  [runs]  gc_ms=[..] pinned_rdds=<n> pinned_mb=<mb>`.
+  * `gc_ms` is each timed run's own GC time (listed in the order of
+  * `[runs]`), read after `isolate`'s forced GC so that collection is
+  * not billed to the query; `pinned_rdds`/`pinned_mb` are the
+  * persistent RDDs (and their memory + disk MB) the last run left
+  * behind — pins that outlive a query show up here, not later as GC
+  * pressure.
   */
 object TailScaleProbe {
   def main(args: Array[String]): Unit = {
@@ -20,16 +27,21 @@ object TailScaleProbe {
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     dirs.foreach { dir =>
       names.foreach { n =>
-        def run(): Double = {
+        // (wall seconds, GC ms) of one run
+        def run(): (Double, Long) = {
           Bench.isolate(spark)
-          val t0 = System.nanoTime()
+          val (g0, t0) = (Bench.gcMs(), System.nanoTime())
           SparkEntry.queries(n)(spark, dir).count()
-          (System.nanoTime() - t0) / 1e9
+          ((System.nanoTime() - t0) / 1e9, Bench.gcMs() - g0)
         }
         run() // warmup: JIT + planner, untimed
-        val times = (1 to 3).map(_ => run()).sorted
-        println(f"SCALE $dir $n ${times(1)}%.3f s  " +
-          times.map(t => f"$t%.3f").mkString("[", ",", "]"))
+        val runs = (1 to 3).map(_ => run()).sortBy(_._1)
+        val pinned = spark.sparkContext.getRDDStorageInfo
+        val pinnedMb = pinned.map(r => r.memSize + r.diskSize).sum / (1024.0 * 1024)
+        println(f"SCALE $dir $n ${runs(1)._1}%.3f s  " +
+          runs.map(r => f"${r._1}%.3f").mkString("[", ",", "]") +
+          runs.map(_._2).mkString("  gc_ms=[", ",", "]") +
+          f" pinned_rdds=${pinned.length} pinned_mb=$pinnedMb%.1f")
       }
     }
     spark.stop()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -264,7 +264,29 @@ object LateInteraction {
     * first append (`_buckets` meta file). */
   def writeTokenIndex(passages: DataFrame, passageCol: String,
       textCol: String, dim: Int, root: String, batchId: Long,
-      buckets: Int = DefaultBuckets): Unit = {
+      buckets: Int = DefaultBuckets): Unit =
+    appendTokenIndex(passages, passageCol, textCol, root, batchId, buckets,
+      floatVocab(dim), floatValues)
+
+  /** The float index's vocabulary (`__tok, __tv, __tn`) and stored
+    * value columns (`__dv`, `__dn`). */
+  private def floatVocab(dim: Int)(toks: DataFrame): DataFrame =
+    embedVocab(toks, dim).select(col("__tok"), col("__tv"), col("__tn"))
+  private val floatValues = Seq(col("__tv").as("__dv"), col("__tn").as("__dn"))
+
+  /** The int8 index's vocabulary (`__tok, __qb` — packed codes) and
+    * stored value column (`__qb`). */
+  private def int8Vocab(dim: Int)(toks: DataFrame): DataFrame =
+    embedVocabInt8(toks, dim)
+      .select(col("__tok"), graft.plans.Int8Codec.pack(col("q")).as("__qb"))
+  private val int8Values = Seq(col("__qb"))
+
+  /** The single-batch writer body shared by [[writeTokenIndex]] and
+    * [[writeTokenIndexInt8]]: `vocabOf` embeds the distinct tokens
+    * (`__tok` + value columns), `values` are the stored value columns. */
+  private def appendTokenIndex(passages: DataFrame, passageCol: String,
+      textCol: String, root: String, batchId: Long, buckets: Int,
+      vocabOf: DataFrame => DataFrame, values: Seq[Column]): Unit = {
     // pinned: the (passage, token) pairs feed the vocabulary AND the
     // join back — and the slice's DISTINCT tokens embed exactly once
     // (vocabulary-sized md5 work, not corpus-token-sized: the same
@@ -279,16 +301,13 @@ object LateInteraction {
     // parallel embed + bucket-aligned join/write — the slice writers'
     // discipline (AQE pins the distinct at ~1 partition at gate scale)
     val toks = pairs.select(col("__tok")).distinct().localCheckpoint()
-    val vocab = embedVocab(Parallelism.spread(toks, "__tok"), dim)
-      .select(col("__tok"), col("__tv"), col("__tn"))
-      .localCheckpoint()
+    val vocab = vocabOf(Parallelism.spread(toks, "__tok")).localCheckpoint()
     Checkpoints.releasePinned(toks)
     val rows = pairs
       .withColumn("__pb", passageBucket(passageCol, buckets))
       .repartition(buckets, col("__pb"))
       .join(broadcast(vocab), Seq("__tok"))
-      .select(col(passageCol),
-        col("__tv").as("__dv"), col("__tn").as("__dn"), col("__pb"))
+      .select((col(passageCol) +: values :+ col("__pb")): _*)
     dropStaleSidecar(passages.sparkSession, root, batchId)
     BatchStore.append(rows, root, batchId, partitionBy = Seq("__pb"))
     writeBatchIdBloom(passages.sparkSession, root, batchId, passageCol)
@@ -358,8 +377,18 @@ object LateInteraction {
     * Round19Spec pins byte-identical store rows. */
   def writeTokenIndexSlices(passages: DataFrame, passageCol: String,
       textCol: String, dim: Int, root: String,
-      slices: Seq[(Long, org.apache.spark.sql.Column)],
-      buckets: Int = DefaultBuckets): Unit = {
+      slices: Seq[(Long, Column)],
+      buckets: Int = DefaultBuckets): Unit =
+    appendTokenIndexSlices(passages, passageCol, textCol, root, slices,
+      buckets, floatVocab(dim), floatValues)
+
+  /** The slices writer body shared by [[writeTokenIndexSlices]] and
+    * [[writeTokenIndexInt8Slices]] (`vocabOf`/`values` as in
+    * [[appendTokenIndex]]). */
+  private def appendTokenIndexSlices(passages: DataFrame,
+      passageCol: String, textCol: String, root: String,
+      slices: Seq[(Long, Column)], buckets: Int,
+      vocabOf: DataFrame => DataFrame, values: Seq[Column]): Unit = {
     require(slices.nonEmpty, "need at least one slice")
     require(slices.map(_._1).distinct.size == slices.size,
       "duplicate batch ids across slices")
@@ -375,8 +404,7 @@ object LateInteraction {
     // byte-based coalescing can't see compute cost): pin the tiny
     // token frame, spread it, embed parallel
     val toks = pairs.select(col("__tok")).distinct().localCheckpoint()
-    val vocab = embedVocab(Parallelism.spread(toks, "__tok"), dim)
-      .select(col("__tok"), col("__tv"), col("__tn"))
+    val vocab = vocabOf(Parallelism.spread(toks, "__tok"))
       .localCheckpoint() // embedded ONCE, joined per slice
     Checkpoints.releasePinned(toks)
     try ParallelJobs.run(slices.map { case (batchId, pred) => () => {
@@ -393,8 +421,7 @@ object LateInteraction {
         // pessimistic, and a sort-merge fallback would re-exchange the
         // rows and break the bucket alignment
         .join(broadcast(vocab), Seq("__tok"))
-        .select(col(passageCol),
-          col("__tv").as("__dv"), col("__tn").as("__dn"), col("__pb"))
+        .select((col(passageCol) +: values :+ col("__pb")): _*)
       dropStaleSidecar(spark, root, batchId)
       BatchStore.append(rows, root, batchId, partitionBy = Seq("__pb"))
       writeBatchIdBloom(spark, root, batchId, passageCol)
@@ -418,28 +445,9 @@ object LateInteraction {
     * ±127 component, so norms never vanish after quantization. */
   def writeTokenIndexInt8(passages: DataFrame, passageCol: String,
       textCol: String, dim: Int, root: String, batchId: Long,
-      buckets: Int = DefaultBuckets): Unit = {
-    ensureBucketsMeta(passages.sparkSession, root, buckets)
-    val pairs = Parallelism.spread(passages, passageCol) // §2.5 floor (r19)
-      .select(col(passageCol),
-        explode(TextFunctions.tokens(col(textCol))).as("__tok"))
-      .distinct()
-      .localCheckpoint() // feeds the vocabulary AND the join back
-    val toks = pairs.select(col("__tok")).distinct().localCheckpoint()
-    val vocab = embedVocabInt8(Parallelism.spread(toks, "__tok"), dim)
-      .select(col("__tok"), graft.plans.Int8Codec.pack(col("q")).as("__qb"))
-      .localCheckpoint()
-    Checkpoints.releasePinned(toks)
-    val rows = pairs
-      .withColumn("__pb", passageBucket(passageCol, buckets))
-      .repartition(buckets, col("__pb"))
-      .join(broadcast(vocab), Seq("__tok"))
-      .select(col(passageCol), col("__qb"), col("__pb"))
-    dropStaleSidecar(passages.sparkSession, root, batchId)
-    BatchStore.append(rows, root, batchId, partitionBy = Seq("__pb"))
-    writeBatchIdBloom(passages.sparkSession, root, batchId, passageCol)
-    Seq(pairs, vocab).foreach(Checkpoints.releasePinned)
-  }
+      buckets: Int = DefaultBuckets): Unit =
+    appendTokenIndex(passages, passageCol, textCol, root, batchId, buckets,
+      int8Vocab(dim), int8Values)
 
   /** [[writeTokenIndexSlices]] for the int8 index — one
     * tokenize+quantize-embed pass feeding every slice's append, same
@@ -447,41 +455,10 @@ object LateInteraction {
     * deterministic function of the token). */
   def writeTokenIndexInt8Slices(passages: DataFrame, passageCol: String,
       textCol: String, dim: Int, root: String,
-      slices: Seq[(Long, org.apache.spark.sql.Column)],
-      buckets: Int = DefaultBuckets): Unit = {
-    require(slices.nonEmpty, "need at least one slice")
-    require(slices.map(_._1).distinct.size == slices.size,
-      "duplicate batch ids across slices")
-    val spark = passages.sparkSession
-    ensureBucketsMeta(spark, root, buckets)
-    val pairs = Parallelism.spread(passages, passageCol) // §2.5 floor (r19)
-      .select(col(passageCol),
-        explode(TextFunctions.tokens(col(textCol))).as("__tok"))
-      .distinct()
-      .localCheckpoint()
-    // pin + spread the tiny token frame so the quantized embedding
-    // runs parallel (see the float writer's note)
-    val toks = pairs.select(col("__tok")).distinct().localCheckpoint()
-    val vocab = embedVocabInt8(Parallelism.spread(toks, "__tok"), dim)
-      .select(col("__tok"), graft.plans.Int8Codec.pack(col("q")).as("__qb"))
-      .localCheckpoint()
-    Checkpoints.releasePinned(toks)
-    try ParallelJobs.run(slices.map { case (batchId, pred) => () => {
-      // bucket-aligned join + write (see the float writer's note)
-      val rows = pairs.filter(pred)
-        .withColumn("__pb", passageBucket(passageCol, buckets))
-        .repartition(buckets, col("__pb"))
-        // broadcast FORCED: a pinned frame's size estimate can be
-        // pessimistic, and a sort-merge fallback would re-exchange the
-        // rows and break the bucket alignment
-        .join(broadcast(vocab), Seq("__tok"))
-        .select(col(passageCol), col("__qb"), col("__pb"))
-      dropStaleSidecar(spark, root, batchId)
-      BatchStore.append(rows, root, batchId, partitionBy = Seq("__pb"))
-      writeBatchIdBloom(spark, root, batchId, passageCol)
-    }})
-    finally Seq(pairs, vocab).foreach(Checkpoints.releasePinned)
-  }
+      slices: Seq[(Long, Column)],
+      buckets: Int = DefaultBuckets): Unit =
+    appendTokenIndexSlices(passages, passageCol, textCol, root, slices,
+      buckets, int8Vocab(dim), int8Values)
 
   /** [[maxSimFromTokenIndex]] over the int8 index: the passage side
     * unpacks stored codes to exact ints (widened to double — dots of

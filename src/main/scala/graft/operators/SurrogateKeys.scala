@@ -113,14 +113,6 @@ object SurrogateKeys {
     sequentialKeys(keys, naturalKey.map(col), skName)
   }
 
-  /** Same, but ordered by explicit columns (e.g. dim_date ordered by the
-    * date itself, `python/dimensional_modeling.py:39-40`). */
-  def surrogateKeysOrdered(df: DataFrame, naturalKey: Seq[String],
-      skName: String, orderBy: Seq[Column]): DataFrame = {
-    val keys = df.select(naturalKey.map(col): _*).na.drop().distinct()
-    sequentialKeys(keys, orderBy, skName)
-  }
-
   /** Scale-path alternative: stable 64-bit hash key of the natural key.
     * No global sort, no shuffle beyond the distinct; stable across runs. */
   def stableHashKey(df: DataFrame, naturalKey: Seq[String], skName: String): DataFrame =

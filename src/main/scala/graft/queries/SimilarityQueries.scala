@@ -1110,8 +1110,9 @@ object SimilarityQueries {
   // exhaustive ADC (5/5), probing 3 of 8 coarse lists can miss a
   // mate whose jitter crossed a coarse boundary — the measured floor
   // is 3/5 (min over the 10 gate queries; mean 4.2) with the 32-code
-  // 2-round-trained residual codebook, vs 1/5 untrained (RecallProbe
-  // planted:50x10@1.0) — so training still carries the gate. All
+  // 2-round-trained residual codebook, vs 1/5 untrained (SCALE.md
+  // "Round-10: recall floors re-derived on planted neighbors") — so
+  // training still carries the gate. All
   // arithmetic is the q148 fixed-point discipline; codes, scores,
   // ranks, and the mate audit hash-match the oracle.
   private val PlantedIvfMateFloorHits = 3L

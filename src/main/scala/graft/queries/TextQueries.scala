@@ -2073,7 +2073,8 @@ object TextQueries {
   // ColBERT storage answer — token vectors symmetrically
   // int8-quantized (per-vector absmax, the q135 discipline) and
   // persisted ONE BYTE per component via the native Int8Pack codec.
-  // Measured honestly (TokenIndexSizeProbe): 1.4–1.6× smaller on
+  // Measured honestly (SCALE.md "Quantized token index: measured
+  // storage"; LateInteractionSpec pins int8 < float64): 1.4–1.6× smaller on
   // disk, NOT 4× — parquet dictionary pages already deduplicate the
   // repeated per-token vectors in both layouts, so the narrowing
   // shrinks only the dictionary; the raw-bytes 4×/9× shows up where
