@@ -1,7 +1,5 @@
 package graft
 
-import scala.collection.mutable
-
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 

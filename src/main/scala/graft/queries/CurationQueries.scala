@@ -14,13 +14,7 @@ import graft.operators.{Packing, Sampling, Skew, SurrogateKeys}
   * selections use the same 60-bit md5 on both engines.
   */
 object CurationQueries {
-
-  /** DuckDB fragment: 60-bit md5 hash, value-identical to
-    * [[graft.operators.TextFunctions.hash60]]. */
-  private def dHash(x: String) = s"CAST('0x' || substr(md5($x), 1, 15) AS BIGINT)"
-  /** DuckDB fragment: whitespace tokens of `text`. */
-  private val dTokens =
-    "list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '')"
+  import TextQueries.{dHash, dTokens, dTokensOf}
 
   // ---------------------------------------------------------------
   // q47 — salted two-phase aggregation equals the direct aggregation
@@ -103,7 +97,7 @@ object CurationQueries {
   private val q53Sql =
     s"""SELECT ${dHash("CAST(doc_id AS VARCHAR)")} % 8 AS shard,
        |  COUNT(*) AS n_docs,
-       |  CAST(SUM(len(list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> ''))) AS BIGINT) AS n_tokens,
+       |  CAST(SUM(len($dTokens)) AS BIGINT) AS n_tokens,
        |  CAST(SUM(n_chars) AS BIGINT) AS total_chars
        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin
 
@@ -1321,9 +1315,6 @@ object CurationQueries {
       |WHERE r.epoch >= 1
       |ORDER BY r.doc_id""".stripMargin
 
-  private def dToksOf(t: String) =
-    s"list_filter(regexp_split_to_array(trim($t), '\\s+'), t -> t <> '')"
-
   /** The q221/q223/q224 shared oracle chain: the ENTIRE curation DAG
     * replayed in DuckDB through the `mix` CTE (final kept doc ids) —
     * q221/q223 append the packing prefix sums, q224 the per-doc
@@ -1341,8 +1332,6 @@ object CurationQueries {
     * line of it may START with `||` (the outer stripMargin would eat
     * the first pipe). */
   private def curationChain(dedCtes: String): String = {
-    val toks = dTokens
-    def toksOf(t: String) = dToksOf(t)
     s"""WITH str AS (
       |  SELECT doc_id, source, n_chars, text, doc_id % 3 AS epoch
       |  FROM documents
@@ -1378,7 +1367,7 @@ object CurationQueries {
       |$dedCtes,
       |tr AS (SELECT
       |    CASE WHEN n_chars >= 300 THEN 'good' ELSE 'bad' END AS label,
-      |    $toks AS toks FROM documents),
+      |    $dTokens AS toks FROM documents),
       |tf AS (SELECT label, ${dHash("g")} % 4096 AS bucket FROM (
       |  SELECT label, unnest(toks) AS g FROM tr
       |  UNION ALL
@@ -1391,7 +1380,7 @@ object CurationQueries {
       |    CAST(floor(CAST(1 AS DOUBLE) * 1073741824.0 / (cl + v.v))
       |      AS BIGINT) AS floor0
       |  FROM cl CROSS JOIN v),
-      |ca AS (SELECT doc_id, ${toksOf("text")} AS toks FROM ded),
+      |ca AS (SELECT doc_id, ${dTokensOf("text")} AS toks FROM ded),
       |cf AS (SELECT doc_id, ${dHash("g")} % 4096 AS bucket FROM (
       |  SELECT doc_id, unnest(toks) AS g FROM ca
       |  UNION ALL
@@ -1414,7 +1403,7 @@ object CurationQueries {
       |  SELECT doc_id, label, row_number() OVER (PARTITION BY doc_id
       |    ORDER BY score_fp DESC, label) AS rn FROM sc)
       |  WHERE rn = 1 AND label = 'good'),
-      |ltr AS (SELECT $toks AS t FROM documents),
+      |ltr AS (SELECT $dTokens AS t FROM documents),
       |lbg AS (SELECT t[i] AS w1, t[i+1] AS w2
       |  FROM ltr, unnest(generate_series(1, len(t) - 1)) u(i)
       |  WHERE len(t) >= 2),
@@ -1423,7 +1412,7 @@ object CurationQueries {
       |lv AS (SELECT COUNT(DISTINCT w2) AS v FROM lcb),
       |cbg AS (SELECT d.doc_id, t.t[i] AS w1, t.t[i+1] AS w2
       |  FROM ded d JOIN goodk USING (doc_id)
-      |  JOIN (SELECT doc_id, ${toksOf("text")} AS t FROM ded) t USING (doc_id),
+      |  JOIN (SELECT doc_id, ${dTokensOf("text")} AS t FROM ded) t USING (doc_id),
       |  unnest(generate_series(1, len(t.t) - 1)) u(i)
       |  WHERE len(t.t) >= 2),
       |lsc AS (SELECT b.doc_id,
@@ -1500,7 +1489,7 @@ object CurationQueries {
         |    AND b.doc_id NOT IN (SELECT bid FROM nnear$e)) WHERE rn = 1)"""
         .stripMargin
     s"""nt AS MATERIALIZED (SELECT doc_id, epoch, md5(text) AS chash,
-      |  ${dToksOf("text")} AS toks FROM reb),
+      |  ${dTokensOf("text")} AS toks FROM reb),
       |nth AS (SELECT doc_id, epoch, chash,
       |  list_transform(toks, x -> ${dHash("x")} % 4294967296) AS th FROM nt),
       |nhb AS MATERIALIZED (SELECT doc_id, epoch, chash,
@@ -1526,7 +1515,7 @@ object CurationQueries {
 
   private lazy val packingTailSql = s"""
       |pk AS (SELECT doc_id, ${dHash("CAST(doc_id AS VARCHAR)")} AS h,
-      |    CAST(len(${dToksOf("text")}) AS BIGINT) AS n_tokens FROM mix),
+      |    CAST(len(${dTokensOf("text")}) AS BIGINT) AS n_tokens FROM mix),
       |pc AS (SELECT doc_id, h % 4 AS shard, n_tokens,
       |    CAST(COALESCE(SUM(n_tokens) OVER (PARTITION BY h % 4
       |      ORDER BY h, CAST(doc_id AS VARCHAR)

@@ -18,11 +18,7 @@ import graft.operators._
   * compaction that kept forgotten mass, and that store's row breaks.
   */
 object ErasureQueries {
-
-  private def dHash(x: String) =
-    s"CAST('0x' || substr(md5($x), 1, 15) AS BIGINT)"
-  private def dTokensOf(t: String) =
-    s"list_filter(regexp_split_to_array(trim($t), '\\s+'), t -> t <> '')"
+  import TextQueries.{dHash, dTokensOf}
 
   /** The slice written into every store. */
   private val writtenF = "doc_id % 2 = 0"

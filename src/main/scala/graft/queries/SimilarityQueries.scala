@@ -419,6 +419,219 @@ object SimilarityQueries {
       |FROM assign LEFT JOIN drops ON drops.vec_id = assign.vec_id
       |ORDER BY assign.vec_id""".stripMargin
 
+  // ---------------------------------------------------------------
+  // DuckDB fragments of the PQ / IVF-PQ oracles. The multi-line ones
+  // are UNSTRIPPED (their lines keep the `|` margins) and are
+  // interpolated into the caller's string before its one stripMargin.
+  private val pqSubs = "(SELECT unnest(range(4)) AS sub) s"
+  /** Squared L2 distance of two DOUBLE[] lists, as inner products. */
+  private def d2(a: String, b: String) =
+    s"(list_inner_product($a, $a) - 2 * list_inner_product($a, $b) + list_inner_product($b, $b))"
+  /** md5-derived uniform in [-1,1): the hash60 rule of q91's planes. */
+  private def u(key: String) =
+    s"(CAST('0x' || substr(md5($key), 1, 15) AS BIGINT) / 576460752303423488.0 - 1.0)"
+  /** The `embeddings` table as the `e` CTE (opens the WITH). */
+  private val embeddingsE =
+    "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),"
+  /** The planted-cluster fixture ([[graft.ScaleGen.plantedEmbeddings]],
+    * 50 clusters × 10, md5-derived) regenerated as the `gen` and `e`
+    * CTEs (opens the WITH). */
+  private val plantedE =
+    s"""WITH gen AS (SELECT i AS vec_id, i % 50 AS label,
+      |    list_transform(range(0, 64), j -> CAST(
+      |      ${u("'pc:' || (i % 50) || ':' || j")}
+      |        + 1.0 * ${u("'pn:' || i || ':' || j")} AS FLOAT)) AS emb
+      |  FROM range(0, 500) t(i)),
+      |e AS (SELECT vec_id, label, CAST(emb AS DOUBLE[]) AS v FROM gen),"""
+  /** Sub-space slices `xs` of `e` and the seed codebook `cb0` (the
+    * `vec_id < seedsBelow` vectors' slices). */
+  private def pqSlicesSql(seedsBelow: Int): String =
+    s"""xs AS (SELECT vec_id, s.sub, v[s.sub*16+1 : s.sub*16+16] AS sv
+      |  FROM e, $pqSubs),
+      |cb0 AS (SELECT sub, vec_id AS code, sv AS cv FROM xs WHERE vec_id < $seedsBelow),"""
+  /** The PQ ADC chain after `e`: [[pqSlicesSql]], the trained
+    * codebook, argmin `codes`, the per-query ADC table `dt` (queries
+    * vec_id < 10) and the summed fixed-point scores `sc`. */
+  private def pqAdcSql(seedsBelow: Int): String = {
+    val (trainCtes, cbFinal) = pqTrainSql("xs", "cb0", PqTrainIters)
+    s"""${pqSlicesSql(seedsBelow)}
+      |$trainCtes,
+      |scored AS (SELECT xs.vec_id, xs.sub, cb.code,
+      |    ${d2("xs.sv", "cb.cv")} AS d2
+      |  FROM xs JOIN $cbFinal cb ON xs.sub = cb.sub),
+      |codes AS (SELECT vec_id, sub, code FROM (
+      |  SELECT vec_id, sub, code,
+      |    row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2, code) AS rn
+      |  FROM scored) WHERE rn = 1),
+      |dt AS (SELECT xs.vec_id AS query_id, cb.sub, cb.code,
+      |    CAST(floor(${d2("xs.sv", "cb.cv")} * 1073741824) AS BIGINT) AS dfp
+      |  FROM xs JOIN $cbFinal cb ON xs.sub = cb.sub WHERE xs.vec_id < 10),
+      |sc AS (SELECT dt.query_id, codes.vec_id AS neighbor_id,
+      |    CAST(SUM(dfp) AS BIGINT) AS adc_fp
+      |  FROM codes JOIN dt ON codes.sub = dt.sub AND codes.code = dt.code
+      |  GROUP BY 1, 2)"""
+  }
+  /** The IVF-PQ chain after `e` (q148/q152/q179 family): coarse
+    * assignment to the 8 seed lists, residuals, the residual codebook
+    * trained from the `8 <= vec_id < resSeedsBelow` seeds, argmin
+    * `codes`, each query's `nProbe` nearest lists and its per-(query,
+    * list) ADC table `dt`. Ends with `dt`'s comma. */
+  private def ivfPqSql(resSeedsBelow: Int, nProbe: Int): String = {
+    val (trainCtes, cbFinal) = pqTrainSql("rxs", "cb0", PqTrainIters)
+    s"""c8 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
+      |asg0 AS (SELECT e.vec_id, c8.cid, c8.cv, ${d2("e.v", "c8.cv")} AS d2
+      |  FROM e CROSS JOIN c8),
+      |asg AS (SELECT vec_id, cid AS list_id, cv FROM (
+      |  SELECT vec_id, cid, cv,
+      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
+      |  FROM asg0) WHERE rn = 1),
+      |res AS (SELECT a.vec_id, a.list_id,
+      |    list_transform(generate_series(1, 64), i -> e.v[i] - a.cv[i]) AS rv
+      |  FROM asg a JOIN e ON e.vec_id = a.vec_id),
+      |rxs AS (SELECT vec_id, list_id, s.sub,
+      |    rv[s.sub*16+1 : s.sub*16+16] AS sv FROM res, $pqSubs),
+      |cb0 AS (SELECT sub, vec_id AS code, sv AS cv FROM rxs
+      |  WHERE vec_id >= 8 AND vec_id < $resSeedsBelow),
+      |$trainCtes,
+      |rcb AS (SELECT sub, code, cv FROM $cbFinal),
+      |sc0 AS (SELECT rxs.vec_id, rxs.list_id, rxs.sub, rcb.code,
+      |    ${d2("rxs.sv", "rcb.cv")} AS d2
+      |  FROM rxs JOIN rcb ON rxs.sub = rcb.sub),
+      |codes AS (SELECT vec_id, list_id, sub, code FROM (
+      |  SELECT vec_id, list_id, sub, code,
+      |    row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2, code) AS rn
+      |  FROM sc0) WHERE rn = 1),
+      |pr0 AS (SELECT q.vec_id AS query_id, c8.cid AS list_id, c8.cv,
+      |    ${d2("q.v", "c8.cv")} AS d2
+      |  FROM (SELECT * FROM e WHERE vec_id < 10) q CROSS JOIN c8),
+      |pr AS (SELECT query_id, list_id, cv FROM (
+      |  SELECT query_id, list_id, cv,
+      |    row_number() OVER (PARTITION BY query_id ORDER BY d2, list_id) AS rn
+      |  FROM pr0) WHERE rn <= $nProbe),
+      |qres AS (SELECT p.query_id, p.list_id,
+      |    list_transform(generate_series(1, 64), i -> e.v[i] - p.cv[i]) AS rv
+      |  FROM pr p JOIN e ON e.vec_id = p.query_id),
+      |qxs AS (SELECT query_id, list_id, s.sub,
+      |    rv[s.sub*16+1 : s.sub*16+16] AS sv FROM qres, $pqSubs),
+      |dt AS (SELECT qxs.query_id, qxs.list_id, qxs.sub, rcb.code,
+      |    CAST(floor(${d2("qxs.sv", "rcb.cv")} * 1073741824) AS BIGINT) AS dfp
+      |  FROM qxs JOIN rcb ON qxs.sub = rcb.sub),"""
+  }
+  /** IVF-PQ summed scores `sc` of the codes in CTE `live` against `dt`. */
+  private def ivfScSql(live: String): String =
+    s"""sc AS (SELECT dt.query_id, $live.vec_id AS neighbor_id,
+      |    CAST(SUM(dfp) AS BIGINT) AS adc_fp
+      |  FROM $live JOIN dt ON $live.list_id = dt.list_id
+      |    AND $live.sub = dt.sub AND $live.code = dt.code
+      |  GROUP BY 1, 2)"""
+  /** Each query's top 5 of `sc` by (adc_fp, neighbor_id). */
+  private val top5Sql =
+    """SELECT query_id, rank, neighbor_id, adc_fp FROM (
+      |  SELECT query_id, neighbor_id, adc_fp,
+      |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY adc_fp, neighbor_id) AS BIGINT) AS rank
+      |  FROM sc) WHERE rank <= 5"""
+  /** The exact-top-5 recall audit over `topk` (q146/q148): the exact
+    * squared-L2 top 5 per query, each returned neighbor's hit, the
+    * audited rows. Closes the statement. */
+  private val recallAuditSql =
+    s"""q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
+      |ex AS (SELECT query_id, neighbor_id FROM (
+      |  SELECT q.query_id, e.vec_id AS neighbor_id,
+      |    row_number() OVER (PARTITION BY q.query_id
+      |      ORDER BY CAST(floor(${d2("e.v", "q.qv")} * 1073741824) AS BIGINT), e.vec_id) AS rn
+      |  FROM e CROSS JOIN q) WHERE rn <= 5),
+      |rec AS (SELECT t.query_id,
+      |    CAST(SUM(CASE WHEN ex.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
+      |  FROM topk t LEFT JOIN ex
+      |    ON t.query_id = ex.query_id AND t.neighbor_id = ex.neighbor_id
+      |  GROUP BY t.query_id)
+      |SELECT t.query_id, t.rank, t.neighbor_id, t.adc_fp, rec.n_hits
+      |FROM topk t JOIN rec ON t.query_id = rec.query_id
+      |ORDER BY t.query_id, t.rank"""
+  /** The cluster-mate audit over `topk` (q150/q152). Closes the
+    * statement. */
+  private val mateAuditSql =
+    """mates AS (SELECT t.query_id,
+      |    CAST(SUM(CASE WHEN lq.label = ln.label THEN 1 ELSE 0 END) AS BIGINT) AS n_mates
+      |  FROM topk t
+      |  JOIN e lq ON lq.vec_id = t.query_id
+      |  JOIN e ln ON ln.vec_id = t.neighbor_id
+      |  GROUP BY t.query_id)
+      |SELECT t.query_id, t.rank, t.neighbor_id, t.adc_fp, m.n_mates
+      |FROM topk t JOIN mates m ON t.query_id = m.query_id
+      |ORDER BY t.query_id, t.rank"""
+
+  /** q146/q148's in-plan recall floor on an ANN top-5 `adc`
+    * (query_id, rank, neighbor_id, adc_fp): each query's exact
+    * squared-L2 top 5 over `e` (fixed-point distances, id tiebreak)
+    * counts the returned neighbors it contains, and any query below
+    * `floorHits` fails the run with `what`'s message. */
+  private def recallAudited(e: DataFrame, queries: DataFrame,
+      adc: DataFrame, floorHits: Long, what: String): DataFrame = {
+    import graft.operators.Similarity.dot
+    val qv = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    val exact = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("xv"))
+      .crossJoin(broadcast(qv))
+      .withColumn("dfp", floor(
+        (dot(col("xv"), col("xv")) - lit(2.0) * dot(col("xv"), col("qv"))
+          + dot(col("qv"), col("qv"))) * lit(1073741824.0)).cast("long"))
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
+          .orderBy(col("dfp"), col("neighbor_id"))))
+      .filter(col("rn") <= 5)
+      .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
+    val rec = adc.join(exact, Seq("query_id", "neighbor_id"), "left")
+      .groupBy(col("query_id"))
+      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
+    adc.join(rec, Seq("query_id"))
+      .filter(assert_true(col("n_hits") >= floorHits,
+        concat(lit(s"$what recall@5 below $floorHits/5 for query "),
+          col("query_id").cast("string"))).isNull)
+      .select(col("query_id"), col("rank"), col("neighbor_id"),
+        col("adc_fp"), col("n_hits"))
+      .orderBy(col("query_id"), col("rank"))
+  }
+
+  /** q150/q152's in-plan cluster-mate floor on a planted-fixture
+    * top-5 `adc`: per query, how many returned neighbors share its
+    * `label`; any query below `floorHits` fails the run. */
+  private def mateAudited(e: DataFrame, adc: DataFrame, floorHits: Long,
+      what: String): DataFrame = {
+    val lbl = e.select(col("vec_id"), col("label"))
+    val mates = adc
+      .join(lbl.select(col("vec_id").as("query_id"), col("label").as("qlabel")), "query_id")
+      .join(lbl.select(col("vec_id").as("neighbor_id"), col("label").as("nlabel")), "neighbor_id")
+      .groupBy(col("query_id"))
+      .agg(sum(when(col("qlabel") === col("nlabel"), 1L).otherwise(0L)).as("n_mates"))
+    adc.join(mates, Seq("query_id"))
+      .filter(assert_true(col("n_mates") >= floorHits,
+        concat(lit(s"$what mate precision below $floorHits/5 for query "),
+          col("query_id").cast("string"))).isNull)
+      .select(col("query_id"), col("rank"), col("neighbor_id"),
+        col("adc_fp"), col("n_mates"))
+      .orderBy(col("query_id"), col("rank"))
+  }
+
+  /** The IVF-PQ fixture of q148/q179/q186/q187 over the `embeddings`
+    * table: 8 coarse centroids (vec_id < 8), residual-codebook
+    * seeds 8..15, queries vec_id < 10, and the residual codebook —
+    * the q146 train-once discipline, trained against the same coarse
+    * frame it serves with and cached in the ModelStore (one training
+    * per session, shared by all four gates). */
+  private final case class IvfPq(e: DataFrame, coarse: DataFrame,
+      resSeeds: DataFrame, queries: DataFrame, rcb: DataFrame)
+  private def ivfPqFixture(s: SparkSession, dir: String): IvfPq = {
+    val e = Tables.embeddings(s, dir)
+    val coarse = e.filter(col("vec_id") < 8)
+    val resSeeds = e.filter(col("vec_id") >= 8 && col("vec_id") < 16)
+    val queries = e.filter(col("vec_id") < 10)
+    val rcb = graft.operators.ModelStore.cached(s, s"q148_rcb:$dir") {
+      Similarity.ivfPqResidualCodebook(e, coarse, resSeeds,
+        "vec_id", "embedding", dim = 64, m = 4, trainIters = PqTrainIters)
+    }
+    IvfPq(e, coarse, resSeeds, queries, rcb)
+  }
+
   /** Unrolled DuckDB twin of one [[graft.operators.Similarity
     * .pqTrainedCodebook]] training run: `iters` Lloyd rounds over the
     * slice CTE `xs` (columns vec_id, sub, sv) seeded from `cb0`
@@ -429,8 +642,6 @@ object SimilarityQueries {
     * no-member fallback to the previous centroid. Returns the CTE
     * fragments and the final codebook CTE's name. */
   private def pqTrainSql(xs: String, cb0: String, iters: Int): (String, String) = {
-    def d2(a: String, b: String) =
-      s"(list_inner_product($a, $a) - 2 * list_inner_product($a, $b) + list_inner_product($b, $b))"
     val frags = (1 to iters).map { i =>
       val prev = if (i == 1) cb0 else s"cb_t${i - 1}"
       s"""asg_t$i AS (SELECT x.vec_id, x.sub, c.code, ${d2("x.sv", "c.cv")} AS d2, x.sv
@@ -476,7 +687,6 @@ object SimilarityQueries {
   // coding, or the ADC table regresses to zero overlap.
   private val PqRecallFloorHits = 1L
   private def q146(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Similarity.dot
     val e = Tables.embeddings(s, dir)
     val seeds = e.filter(col("vec_id") < 8)
     val queries = e.filter(col("vec_id") < 10)
@@ -495,72 +705,13 @@ object SimilarityQueries {
     }
     val adc = Similarity.pqAdcTopK(e, queries, cb, "vec_id", "embedding",
       dim = 64, m = 4, k = 5)
-    val qv = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val exact = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("xv"))
-      .crossJoin(broadcast(qv))
-      .withColumn("dfp", floor(
-        (dot(col("xv"), col("xv")) - lit(2.0) * dot(col("xv"), col("qv"))
-          + dot(col("qv"), col("qv"))) * lit(1073741824.0)).cast("long"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("dfp"), col("neighbor_id"))))
-      .filter(col("rn") <= 5)
-      .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-    val rec = adc.join(exact, Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-    adc.join(rec, Seq("query_id"))
-      .filter(assert_true(col("n_hits") >= PqRecallFloorHits,
-        concat(lit(s"PQ ADC recall@5 below $PqRecallFloorHits/5 for query "),
-          col("query_id").cast("string"))).isNull)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("adc_fp"), col("n_hits"))
-      .orderBy(col("query_id"), col("rank"))
+    recallAudited(e, queries, adc, PqRecallFloorHits, "PQ ADC")
   }
-  private val q146Sql = {
-    val subs = "(SELECT unnest(range(4)) AS sub) s"
-    def ip(a: String, b: String) = s"list_inner_product($a, $b)"
-    def d2(a: String, b: String) =
-      s"(${ip(a, a)} - 2 * ${ip(a, b)} + ${ip(b, b)})"
-    val (trainCtes, cbFinal) = pqTrainSql("xs", "cb0", PqTrainIters)
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |xs AS (SELECT vec_id, s.sub, v[s.sub*16+1 : s.sub*16+16] AS sv
-      |  FROM e, $subs),
-      |cb0 AS (SELECT sub, vec_id AS code, sv AS cv FROM xs WHERE vec_id < 8),
-      |$trainCtes,
-      |scored AS (SELECT xs.vec_id, xs.sub, cb.code,
-      |    ${d2("xs.sv", "cb.cv")} AS d2
-      |  FROM xs JOIN $cbFinal cb ON xs.sub = cb.sub),
-      |codes AS (SELECT vec_id, sub, code FROM (
-      |  SELECT vec_id, sub, code,
-      |    row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2, code) AS rn
-      |  FROM scored) WHERE rn = 1),
-      |dt AS (SELECT xs.vec_id AS query_id, cb.sub, cb.code,
-      |    CAST(floor(${d2("xs.sv", "cb.cv")} * 1073741824) AS BIGINT) AS dfp
-      |  FROM xs JOIN $cbFinal cb ON xs.sub = cb.sub WHERE xs.vec_id < 10),
-      |sc AS (SELECT dt.query_id, codes.vec_id AS neighbor_id,
-      |    CAST(SUM(dfp) AS BIGINT) AS adc_fp
-      |  FROM codes JOIN dt ON codes.sub = dt.sub AND codes.code = dt.code
-      |  GROUP BY 1, 2),
-      |topk AS (SELECT query_id, rank, neighbor_id, adc_fp FROM (
-      |  SELECT query_id, neighbor_id, adc_fp,
-      |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY adc_fp, neighbor_id) AS BIGINT) AS rank
-      |  FROM sc) WHERE rank <= 5),
-      |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-      |ex AS (SELECT query_id, neighbor_id FROM (
-      |  SELECT q.query_id, e.vec_id AS neighbor_id,
-      |    row_number() OVER (PARTITION BY q.query_id
-      |      ORDER BY CAST(floor(${d2("e.v", "q.qv")} * 1073741824) AS BIGINT), e.vec_id) AS rn
-      |  FROM e CROSS JOIN q) WHERE rn <= 5),
-      |rec AS (SELECT t.query_id,
-      |    CAST(SUM(CASE WHEN ex.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-      |  FROM topk t LEFT JOIN ex
-      |    ON t.query_id = ex.query_id AND t.neighbor_id = ex.neighbor_id
-      |  GROUP BY t.query_id)
-      |SELECT t.query_id, t.rank, t.neighbor_id, t.adc_fp, rec.n_hits
-      |FROM topk t JOIN rec ON t.query_id = rec.query_id
-      |ORDER BY t.query_id, t.rank""".stripMargin
-  }
+  private val q146Sql =
+    s"""$embeddingsE
+      |${pqAdcSql(8)},
+      |topk AS ($top5Sql),
+      |$recallAuditSql""".stripMargin
 
   // ---------------------------------------------------------------
   // q148 — IVF-PQ: the production billion-vector index (FAISS's
@@ -581,111 +732,18 @@ object SimilarityQueries {
   // in-plan.
   private val IvfPqRecallFloorHits = 1L
   private def q148(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Similarity.dot
-    val e = Tables.embeddings(s, dir)
-    val coarse = e.filter(col("vec_id") < 8)
-    val resSeeds = e.filter(col("vec_id") >= 8 && col("vec_id") < 16)
-    val queries = e.filter(col("vec_id") < 10)
-    // the q146 train-once discipline, applied to the RESIDUAL
-    // codebook (built against the same coarse frame it serves with)
-    val rcb = graft.operators.ModelStore.cached(s, s"q148_rcb:$dir") {
-      Similarity.ivfPqResidualCodebook(e, coarse, resSeeds,
-        "vec_id", "embedding", dim = 64, m = 4, trainIters = PqTrainIters)
-    }
+    val IvfPq(e, coarse, resSeeds, queries, rcb) = ivfPqFixture(s, dir)
     val adc = Similarity.ivfPqTopK(e, queries, coarse, resSeeds,
       "vec_id", "embedding", dim = 64, m = 4, nProbe = 2, k = 5,
       trainIters = PqTrainIters, residualCodebook = Some(rcb))
-    val qv = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val exact = e.select(col("vec_id").as("neighbor_id"), col("embedding").as("xv"))
-      .crossJoin(broadcast(qv))
-      .withColumn("dfp", floor(
-        (dot(col("xv"), col("xv")) - lit(2.0) * dot(col("xv"), col("qv"))
-          + dot(col("qv"), col("qv"))) * lit(1073741824.0)).cast("long"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
-          .orderBy(col("dfp"), col("neighbor_id"))))
-      .filter(col("rn") <= 5)
-      .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-    val rec = adc.join(exact, Seq("query_id", "neighbor_id"), "left")
-      .groupBy(col("query_id"))
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-    adc.join(rec, Seq("query_id"))
-      .filter(assert_true(col("n_hits") >= IvfPqRecallFloorHits,
-        concat(lit(s"IVF-PQ recall@5 below $IvfPqRecallFloorHits/5 for query "),
-          col("query_id").cast("string"))).isNull)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("adc_fp"), col("n_hits"))
-      .orderBy(col("query_id"), col("rank"))
+    recallAudited(e, queries, adc, IvfPqRecallFloorHits, "IVF-PQ")
   }
-  private val q148Sql = {
-    val subs = "(SELECT unnest(range(4)) AS sub) s"
-    def ip(a: String, b: String) = s"list_inner_product($a, $b)"
-    def d2(a: String, b: String) =
-      s"(${ip(a, a)} - 2 * ${ip(a, b)} + ${ip(b, b)})"
-    val (trainCtes, cbFinal) = pqTrainSql("rxs", "cb0", PqTrainIters)
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |c8 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-      |asg0 AS (SELECT e.vec_id, c8.cid, c8.cv, ${d2("e.v", "c8.cv")} AS d2
-      |  FROM e CROSS JOIN c8),
-      |asg AS (SELECT vec_id, cid AS list_id, cv FROM (
-      |  SELECT vec_id, cid, cv,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-      |  FROM asg0) WHERE rn = 1),
-      |res AS (SELECT a.vec_id, a.list_id,
-      |    list_transform(generate_series(1, 64), i -> e.v[i] - a.cv[i]) AS rv
-      |  FROM asg a JOIN e ON e.vec_id = a.vec_id),
-      |rxs AS (SELECT vec_id, list_id, s.sub,
-      |    rv[s.sub*16+1 : s.sub*16+16] AS sv FROM res, $subs),
-      |cb0 AS (SELECT sub, vec_id AS code, sv AS cv FROM rxs
-      |  WHERE vec_id >= 8 AND vec_id < 16),
-      |$trainCtes,
-      |rcb AS (SELECT sub, code, cv FROM $cbFinal),
-      |sc0 AS (SELECT rxs.vec_id, rxs.list_id, rxs.sub, rcb.code,
-      |    ${d2("rxs.sv", "rcb.cv")} AS d2
-      |  FROM rxs JOIN rcb ON rxs.sub = rcb.sub),
-      |codes AS (SELECT vec_id, list_id, sub, code FROM (
-      |  SELECT vec_id, list_id, sub, code,
-      |    row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2, code) AS rn
-      |  FROM sc0) WHERE rn = 1),
-      |pr0 AS (SELECT q.vec_id AS query_id, c8.cid AS list_id, c8.cv,
-      |    ${d2("q.v", "c8.cv")} AS d2
-      |  FROM (SELECT * FROM e WHERE vec_id < 10) q CROSS JOIN c8),
-      |pr AS (SELECT query_id, list_id, cv FROM (
-      |  SELECT query_id, list_id, cv,
-      |    row_number() OVER (PARTITION BY query_id ORDER BY d2, list_id) AS rn
-      |  FROM pr0) WHERE rn <= 2),
-      |qres AS (SELECT p.query_id, p.list_id,
-      |    list_transform(generate_series(1, 64), i -> e.v[i] - p.cv[i]) AS rv
-      |  FROM pr p JOIN e ON e.vec_id = p.query_id),
-      |qxs AS (SELECT query_id, list_id, s.sub,
-      |    rv[s.sub*16+1 : s.sub*16+16] AS sv FROM qres, $subs),
-      |dt AS (SELECT qxs.query_id, qxs.list_id, qxs.sub, rcb.code,
-      |    CAST(floor(${d2("qxs.sv", "rcb.cv")} * 1073741824) AS BIGINT) AS dfp
-      |  FROM qxs JOIN rcb ON qxs.sub = rcb.sub),
-      |sc AS (SELECT dt.query_id, codes.vec_id AS neighbor_id,
-      |    CAST(SUM(dfp) AS BIGINT) AS adc_fp
-      |  FROM codes JOIN dt ON codes.list_id = dt.list_id
-      |    AND codes.sub = dt.sub AND codes.code = dt.code
-      |  GROUP BY 1, 2),
-      |topk AS (SELECT query_id, rank, neighbor_id, adc_fp FROM (
-      |  SELECT query_id, neighbor_id, adc_fp,
-      |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY adc_fp, neighbor_id) AS BIGINT) AS rank
-      |  FROM sc) WHERE rank <= 5),
-      |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-      |ex AS (SELECT query_id, neighbor_id FROM (
-      |  SELECT q.query_id, e.vec_id AS neighbor_id,
-      |    row_number() OVER (PARTITION BY q.query_id
-      |      ORDER BY CAST(floor(${d2("e.v", "q.qv")} * 1073741824) AS BIGINT), e.vec_id) AS rn
-      |  FROM e CROSS JOIN q) WHERE rn <= 5),
-      |rec AS (SELECT t.query_id,
-      |    CAST(SUM(CASE WHEN ex.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-      |  FROM topk t LEFT JOIN ex
-      |    ON t.query_id = ex.query_id AND t.neighbor_id = ex.neighbor_id
-      |  GROUP BY t.query_id)
-      |SELECT t.query_id, t.rank, t.neighbor_id, t.adc_fp, rec.n_hits
-      |FROM topk t JOIN rec ON t.query_id = rec.query_id
-      |ORDER BY t.query_id, t.rank""".stripMargin
-  }
+  private val q148Sql =
+    s"""$embeddingsE
+      |${ivfPqSql(resSeedsBelow = 16, nProbe = 2)}
+      |${ivfScSql("codes")},
+      |topk AS ($top5Sql),
+      |$recallAuditSql""".stripMargin
 
   // ---------------------------------------------------------------
   // q179 — IVF-PQ SERVING FROM THE LIST-PARTITIONED INDEX: q176's
@@ -702,94 +760,33 @@ object SimilarityQueries {
   // q148 — one training per session); the oracle is the q148 chain
   // through its topk CTE (store union == in-memory coding).
   private def q179(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-    val coarse = e.filter(col("vec_id") < 8)
-    val resSeeds = e.filter(col("vec_id") >= 8 && col("vec_id") < 16)
-    val queries = e.filter(col("vec_id") < 10)
-    val rcb = graft.operators.ModelStore.cached(s, s"q148_rcb:$dir") {
-      Similarity.ivfPqResidualCodebook(e, coarse, resSeeds,
-        "vec_id", "embedding", dim = 64, m = 4, trainIters = PqTrainIters)
+    val IvfPq(e, coarse, _, queries, rcb) = ivfPqFixture(s, dir)
+    StoreGates.withTempStore(s, "graft_q179_ivfpq") { root =>
+      // independent appends (distinct batch ids) — overlap (guide §2.6)
+      graft.operators.ParallelJobs.run(Seq(
+        () => Similarity.writeIvfPqIndex(e.filter(col("vec_id") % 2 === 0),
+          coarse, rcb, "vec_id", "embedding", dim = 64, m = 4, root,
+          batchId = 1L),
+        () => Similarity.writeIvfPqIndex(e.filter(col("vec_id") % 2 === 1),
+          coarse, rcb, "vec_id", "embedding", dim = 64, m = 4, root,
+          batchId = 2L)))
+      Similarity.ivfPqTopKFromStore(s, root, queries, coarse, rcb,
+          "vec_id", "embedding", dim = 64, m = 4, nProbe = 2, k = 5)
+        .orderBy(col("query_id"), col("rank"))
+        .localCheckpoint()
     }
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_q179_ivfpq").toString
-    // independent appends (distinct batch ids) — overlap (guide §2.6)
-    graft.operators.ParallelJobs.run(Seq(
-      () => Similarity.writeIvfPqIndex(e.filter(col("vec_id") % 2 === 0),
-        coarse, rcb, "vec_id", "embedding", dim = 64, m = 4, root,
-        batchId = 1L),
-      () => Similarity.writeIvfPqIndex(e.filter(col("vec_id") % 2 === 1),
-        coarse, rcb, "vec_id", "embedding", dim = 64, m = 4, root,
-        batchId = 2L)))
-    val out = Similarity.ivfPqTopKFromStore(s, root, queries, coarse, rcb,
-        "vec_id", "embedding", dim = 64, m = 4, nProbe = 2, k = 5)
-      .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint()
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    out
   }
   /** The q179 serving oracle, parameterized by a predicate on the
     * CODES side (q187 re-uses the chain with the deleted vectors'
     * codes filtered out — exactly what a correct tombstone mask /
     * purge must equal). */
-  private def ivfPqStoreSql(codesWhere: String): String = {
-    val subs = "(SELECT unnest(range(4)) AS sub) s"
-    def ip(a: String, b: String) = s"list_inner_product($a, $b)"
-    def d2(a: String, b: String) =
-      s"(${ip(a, a)} - 2 * ${ip(a, b)} + ${ip(b, b)})"
-    val (trainCtes, cbFinal) = pqTrainSql("rxs", "cb0", PqTrainIters)
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |c8 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-      |asg0 AS (SELECT e.vec_id, c8.cid, c8.cv, ${d2("e.v", "c8.cv")} AS d2
-      |  FROM e CROSS JOIN c8),
-      |asg AS (SELECT vec_id, cid AS list_id, cv FROM (
-      |  SELECT vec_id, cid, cv,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-      |  FROM asg0) WHERE rn = 1),
-      |res AS (SELECT a.vec_id, a.list_id,
-      |    list_transform(generate_series(1, 64), i -> e.v[i] - a.cv[i]) AS rv
-      |  FROM asg a JOIN e ON e.vec_id = a.vec_id),
-      |rxs AS (SELECT vec_id, list_id, s.sub,
-      |    rv[s.sub*16+1 : s.sub*16+16] AS sv FROM res, $subs),
-      |cb0 AS (SELECT sub, vec_id AS code, sv AS cv FROM rxs
-      |  WHERE vec_id >= 8 AND vec_id < 16),
-      |$trainCtes,
-      |rcb AS (SELECT sub, code, cv FROM $cbFinal),
-      |sc0 AS (SELECT rxs.vec_id, rxs.list_id, rxs.sub, rcb.code,
-      |    ${d2("rxs.sv", "rcb.cv")} AS d2
-      |  FROM rxs JOIN rcb ON rxs.sub = rcb.sub),
-      |codes AS (SELECT vec_id, list_id, sub, code FROM (
-      |  SELECT vec_id, list_id, sub, code,
-      |    row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2, code) AS rn
-      |  FROM sc0) WHERE rn = 1),
-      |pr0 AS (SELECT q.vec_id AS query_id, c8.cid AS list_id, c8.cv,
-      |    ${d2("q.v", "c8.cv")} AS d2
-      |  FROM (SELECT * FROM e WHERE vec_id < 10) q CROSS JOIN c8),
-      |pr AS (SELECT query_id, list_id, cv FROM (
-      |  SELECT query_id, list_id, cv,
-      |    row_number() OVER (PARTITION BY query_id ORDER BY d2, list_id) AS rn
-      |  FROM pr0) WHERE rn <= 2),
-      |qres AS (SELECT p.query_id, p.list_id,
-      |    list_transform(generate_series(1, 64), i -> e.v[i] - p.cv[i]) AS rv
-      |  FROM pr p JOIN e ON e.vec_id = p.query_id),
-      |qxs AS (SELECT query_id, list_id, s.sub,
-      |    rv[s.sub*16+1 : s.sub*16+16] AS sv FROM qres, $subs),
-      |dt AS (SELECT qxs.query_id, qxs.list_id, qxs.sub, rcb.code,
-      |    CAST(floor(${d2("qxs.sv", "rcb.cv")} * 1073741824) AS BIGINT) AS dfp
-      |  FROM qxs JOIN rcb ON qxs.sub = rcb.sub),
+  private def ivfPqStoreSql(codesWhere: String): String =
+    s"""$embeddingsE
+      |${ivfPqSql(resSeedsBelow = 16, nProbe = 2)}
       |live AS (SELECT * FROM codes $codesWhere),
-      |sc AS (SELECT dt.query_id, live.vec_id AS neighbor_id,
-      |    CAST(SUM(dfp) AS BIGINT) AS adc_fp
-      |  FROM live JOIN dt ON live.list_id = dt.list_id
-      |    AND live.sub = dt.sub AND live.code = dt.code
-      |  GROUP BY 1, 2)
-      |SELECT query_id, rank, neighbor_id, adc_fp FROM (
-      |  SELECT query_id, neighbor_id, adc_fp,
-      |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY adc_fp, neighbor_id) AS BIGINT) AS rank
-      |  FROM sc) WHERE rank <= 5
+      |${ivfScSql("live")}
+      |$top5Sql
       |ORDER BY query_id, rank""".stripMargin
-  }
   private val q179Sql = ivfPqStoreSql(codesWhere = "")
 
   // ---------------------------------------------------------------
@@ -803,42 +800,17 @@ object SimilarityQueries {
   // across vectors, so serving is independent of epoch chunking and
   // the oracle is q179's SQL verbatim.
   private def q186(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-    val coarse = e.filter(col("vec_id") < 8)
-    val resSeeds = e.filter(col("vec_id") >= 8 && col("vec_id") < 16)
-    val queries = e.filter(col("vec_id") < 10)
-    val rcb = graft.operators.ModelStore.cached(s, s"q148_rcb:$dir") {
-      Similarity.ivfPqResidualCodebook(e, coarse, resSeeds,
-        "vec_id", "embedding", dim = 64, m = 4, trainIters = PqTrainIters)
+    val IvfPq(e, coarse, _, queries, rcb) = ivfPqFixture(s, dir)
+    StoreGates.withStreamedStore(s, "graft_q186",
+      slices = Seq(e.filter(col("vec_id") % 2 === 0),
+        e.filter(col("vec_id") % 2 === 1)),
+      sink = store => Similarity.ivfPqIndexSink(coarse, rcb,
+        "vec_id", "embedding", dim = 64, m = 4, store)) { store =>
+      Similarity.ivfPqTopKFromStore(s, store, queries, coarse, rcb,
+          "vec_id", "embedding", dim = 64, m = 4, nProbe = 2, k = 5)
+        .orderBy(col("query_id"), col("rank"))
+        .localCheckpoint()
     }
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft_q186_stage").toString
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_q186_store").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_q186_ckpt").toString
-    e.filter(col("vec_id") % 2 === 0).coalesce(1)
-      .write.mode("append").parquet(stage)
-    e.filter(col("vec_id") % 2 === 1).coalesce(1)
-      .write.mode("append").parquet(stage)
-    val sink = Similarity.ivfPqIndexSink(coarse, rcb,
-      "vec_id", "embedding", dim = 64, m = 4, store)
-    val stream = s.readStream.schema(e.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-    val q = stream.writeStream
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => sink(b, id))
-      .option("checkpointLocation", ckpt)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val out = Similarity.ivfPqTopKFromStore(s, store, queries, coarse, rcb,
-        "vec_id", "embedding", dim = 64, m = 4, nProbe = 2, k = 5)
-      .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint()
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    Seq(stage, store, ckpt).foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
-    out
   }
   private val q186Sql = q179Sql
 
@@ -855,45 +827,27 @@ object SimilarityQueries {
   // identical in-plan. Oracle: q179's chain with the deleted
   // vectors' codes filtered out.
   private def q187(s: SparkSession, dir: String): DataFrame = {
-    val e = Tables.embeddings(s, dir)
-    val coarse = e.filter(col("vec_id") < 8)
-    val resSeeds = e.filter(col("vec_id") >= 8 && col("vec_id") < 16)
-    val queries = e.filter(col("vec_id") < 10)
-    val rcb = graft.operators.ModelStore.cached(s, s"q148_rcb:$dir") {
-      Similarity.ivfPqResidualCodebook(e, coarse, resSeeds,
-        "vec_id", "embedding", dim = 64, m = 4, trainIters = PqTrainIters)
+    val IvfPq(e, coarse, _, queries, rcb) = ivfPqFixture(s, dir)
+    StoreGates.withTempStore(s, "graft_q187_ivfpq") { root =>
+      Similarity.writeIvfPqIndex(e, coarse, rcb,
+        "vec_id", "embedding", dim = 64, m = 4, root, batchId = 1L)
+      Similarity.deleteFromIvfPqIndex(
+        e.filter(col("vec_id") % 2 === 1).select(col("vec_id")),
+        "vec_id", root, batchId = 2L)
+      def serve() = Similarity.ivfPqTopKFromStore(s, root, queries, coarse,
+          rcb, "vec_id", "embedding", dim = 64, m = 4, nProbe = 2, k = 5)
+        .localCheckpoint()
+      val masked = serve()
+      Similarity.purgeIvfPqIndex(s, root, "vec_id", newBatchId = 3L)
+      val purged = serve()
+      val out = StoreGates.compactionIdentityGate(masked, purged,
+          "purge changed served IVF-PQ results")
+        .orderBy(col("query_id"), col("rank"))
+        .localCheckpoint()
+      graft.operators.Checkpoints.releasePinned(masked)
+      graft.operators.Checkpoints.releasePinned(purged)
+      out
     }
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_q187_ivfpq").toString
-    Similarity.writeIvfPqIndex(e, coarse, rcb,
-      "vec_id", "embedding", dim = 64, m = 4, root, batchId = 1L)
-    Similarity.deleteFromIvfPqIndex(
-      e.filter(col("vec_id") % 2 === 1).select(col("vec_id")),
-      "vec_id", root, batchId = 2L)
-    def serve() = Similarity.ivfPqTopKFromStore(s, root, queries, coarse,
-        rcb, "vec_id", "embedding", dim = 64, m = 4, nProbe = 2, k = 5)
-      .localCheckpoint()
-    val masked = serve()
-    Similarity.purgeIvfPqIndex(s, root, "vec_id", newBatchId = 3L)
-    val purged = serve()
-    val eq = masked.union(purged)
-      .groupBy(col("query_id"), col("rank"), col("neighbor_id"), col("adc_fp"))
-      .agg(count(lit(1)).as("n"))
-      .agg(min(col("n")).as("mn"), max(col("n")).as("mx"),
-        count(lit(1)).as("groups"))
-    val out = purged.crossJoin(broadcast(eq))
-      .filter(assert_true(
-        col("mn") === 2 && col("mx") === 2 && col("groups") === masked.count(),
-        lit("purge changed served IVF-PQ results")).isNull)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("adc_fp"))
-      .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint()
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    graft.operators.Checkpoints.releasePinned(masked)
-    graft.operators.Checkpoints.releasePinned(purged)
-    out
   }
   private val q187Sql = ivfPqStoreSql(codesWhere = "WHERE vec_id % 2 = 0")
 
@@ -920,12 +874,9 @@ object SimilarityQueries {
       .orderBy(col("sub"), col("code"), col("dim"))
   }
   private val q175Sql = {
-    val subs = "(SELECT unnest(range(4)) AS sub) s"
     val (trainCtes, cbFinal) = pqTrainSql("xs", "cb0", PqTrainIters)
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |xs AS (SELECT vec_id, s.sub, v[s.sub*16+1 : s.sub*16+16] AS sv
-      |  FROM e, $subs),
-      |cb0 AS (SELECT sub, vec_id AS code, sv AS cv FROM xs WHERE vec_id < 8),
+    s"""$embeddingsE
+      |${pqSlicesSql(8)}
       |$trainCtes
       |SELECT sub, code, CAST(generate_subscripts(cv, 1) - 1 AS BIGINT) AS dim,
       |  unnest(cv) AS c
@@ -954,54 +905,24 @@ object SimilarityQueries {
       Similarity.pqTrainedCodebook(e, seeds, "vec_id", "embedding",
         dim = 64, m = 4, iters = PqTrainIters)
     }
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_q176_pqindex").toString
-    // independent appends (distinct batch ids) — overlap (guide §2.6)
-    graft.operators.ParallelJobs.run(Seq(
-      () => Similarity.writePqIndex(e.filter(col("vec_id") % 2 === 0), cb,
-        "vec_id", "embedding", dim = 64, m = 4, root, batchId = 1L),
-      () => Similarity.writePqIndex(e.filter(col("vec_id") % 2 === 1), cb,
-        "vec_id", "embedding", dim = 64, m = 4, root, batchId = 2L)))
-    val out = Similarity.pqAdcTopKFromStore(s, root, queries, cb,
-        "vec_id", "embedding", dim = 64, m = 4, k = 5)
-      .orderBy(col("query_id"), col("rank"))
-      .localCheckpoint()
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    out
+    StoreGates.withTempStore(s, "graft_q176_pqindex") { root =>
+      // independent appends (distinct batch ids) — overlap (guide §2.6)
+      graft.operators.ParallelJobs.run(Seq(
+        () => Similarity.writePqIndex(e.filter(col("vec_id") % 2 === 0), cb,
+          "vec_id", "embedding", dim = 64, m = 4, root, batchId = 1L),
+        () => Similarity.writePqIndex(e.filter(col("vec_id") % 2 === 1), cb,
+          "vec_id", "embedding", dim = 64, m = 4, root, batchId = 2L)))
+      Similarity.pqAdcTopKFromStore(s, root, queries, cb,
+          "vec_id", "embedding", dim = 64, m = 4, k = 5)
+        .orderBy(col("query_id"), col("rank"))
+        .localCheckpoint()
+    }
   }
-  private val q176Sql = {
-    val subs = "(SELECT unnest(range(4)) AS sub) s"
-    def ip(a: String, b: String) = s"list_inner_product($a, $b)"
-    def d2(a: String, b: String) =
-      s"(${ip(a, a)} - 2 * ${ip(a, b)} + ${ip(b, b)})"
-    val (trainCtes, cbFinal) = pqTrainSql("xs", "cb0", PqTrainIters)
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |xs AS (SELECT vec_id, s.sub, v[s.sub*16+1 : s.sub*16+16] AS sv
-      |  FROM e, $subs),
-      |cb0 AS (SELECT sub, vec_id AS code, sv AS cv FROM xs WHERE vec_id < 8),
-      |$trainCtes,
-      |scored AS (SELECT xs.vec_id, xs.sub, cb.code,
-      |    ${d2("xs.sv", "cb.cv")} AS d2
-      |  FROM xs JOIN $cbFinal cb ON xs.sub = cb.sub),
-      |codes AS (SELECT vec_id, sub, code FROM (
-      |  SELECT vec_id, sub, code,
-      |    row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2, code) AS rn
-      |  FROM scored) WHERE rn = 1),
-      |dt AS (SELECT xs.vec_id AS query_id, cb.sub, cb.code,
-      |    CAST(floor(${d2("xs.sv", "cb.cv")} * 1073741824) AS BIGINT) AS dfp
-      |  FROM xs JOIN $cbFinal cb ON xs.sub = cb.sub WHERE xs.vec_id < 10),
-      |sc AS (SELECT dt.query_id, codes.vec_id AS neighbor_id,
-      |    CAST(SUM(dfp) AS BIGINT) AS adc_fp
-      |  FROM codes JOIN dt ON codes.sub = dt.sub AND codes.code = dt.code
-      |  GROUP BY 1, 2)
-      |SELECT query_id, rank, neighbor_id, adc_fp FROM (
-      |  SELECT query_id, neighbor_id, adc_fp,
-      |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY adc_fp, neighbor_id) AS BIGINT) AS rank
-      |  FROM sc) WHERE rank <= 5
+  private val q176Sql =
+    s"""$embeddingsE
+      |${pqAdcSql(8)}
+      |$top5Sql
       |ORDER BY query_id, rank""".stripMargin
-  }
 
   // ---------------------------------------------------------------
   // q150 — trained-PQ retrieval on a PLANTED-cluster fixture: the
@@ -1034,67 +955,13 @@ object SimilarityQueries {
       dim = 64, m = 4, iters = PqTrainIters)
     val adc = Similarity.pqAdcTopK(e, queries, cb, "vec_id", "embedding",
       dim = 64, m = 4, k = 5)
-    val lbl = e.select(col("vec_id"), col("label"))
-    val mates = adc
-      .join(lbl.select(col("vec_id").as("query_id"), col("label").as("qlabel")), "query_id")
-      .join(lbl.select(col("vec_id").as("neighbor_id"), col("label").as("nlabel")), "neighbor_id")
-      .groupBy(col("query_id"))
-      .agg(sum(when(col("qlabel") === col("nlabel"), 1L).otherwise(0L)).as("n_mates"))
-    adc.join(mates, Seq("query_id"))
-      .filter(assert_true(col("n_mates") >= PlantedMateFloorHits,
-        concat(lit(s"trained-PQ mate precision below $PlantedMateFloorHits/5 for query "),
-          col("query_id").cast("string"))).isNull)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("adc_fp"), col("n_mates"))
-      .orderBy(col("query_id"), col("rank"))
+    mateAudited(e, adc, PlantedMateFloorHits, "trained-PQ")
   }
-  private val q150Sql = {
-    val subs = "(SELECT unnest(range(4)) AS sub) s"
-    // md5-derived uniform in [-1,1): the hash60 rule of q91's planes
-    def u(key: String) =
-      s"(CAST('0x' || substr(md5($key), 1, 15) AS BIGINT) / 576460752303423488.0 - 1.0)"
-    def ip(a: String, b: String) = s"list_inner_product($a, $b)"
-    def d2(a: String, b: String) =
-      s"(${ip(a, a)} - 2 * ${ip(a, b)} + ${ip(b, b)})"
-    val (trainCtes, cbFinal) = pqTrainSql("xs", "cb0", PqTrainIters)
-    s"""WITH gen AS (SELECT i AS vec_id, i % 50 AS label,
-      |    list_transform(range(0, 64), j -> CAST(
-      |      ${u("'pc:' || (i % 50) || ':' || j")}
-      |        + 1.0 * ${u("'pn:' || i || ':' || j")} AS FLOAT)) AS emb
-      |  FROM range(0, 500) t(i)),
-      |e AS (SELECT vec_id, label, CAST(emb AS DOUBLE[]) AS v FROM gen),
-      |xs AS (SELECT vec_id, s.sub, v[s.sub*16+1 : s.sub*16+16] AS sv
-      |  FROM e, $subs),
-      |cb0 AS (SELECT sub, vec_id AS code, sv AS cv FROM xs WHERE vec_id < 32),
-      |$trainCtes,
-      |scored AS (SELECT xs.vec_id, xs.sub, cb.code,
-      |    ${d2("xs.sv", "cb.cv")} AS d2
-      |  FROM xs JOIN $cbFinal cb ON xs.sub = cb.sub),
-      |codes AS (SELECT vec_id, sub, code FROM (
-      |  SELECT vec_id, sub, code,
-      |    row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2, code) AS rn
-      |  FROM scored) WHERE rn = 1),
-      |dt AS (SELECT xs.vec_id AS query_id, cb.sub, cb.code,
-      |    CAST(floor(${d2("xs.sv", "cb.cv")} * 1073741824) AS BIGINT) AS dfp
-      |  FROM xs JOIN $cbFinal cb ON xs.sub = cb.sub WHERE xs.vec_id < 10),
-      |sc AS (SELECT dt.query_id, codes.vec_id AS neighbor_id,
-      |    CAST(SUM(dfp) AS BIGINT) AS adc_fp
-      |  FROM codes JOIN dt ON codes.sub = dt.sub AND codes.code = dt.code
-      |  GROUP BY 1, 2),
-      |topk AS (SELECT query_id, rank, neighbor_id, adc_fp FROM (
-      |  SELECT query_id, neighbor_id, adc_fp,
-      |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY adc_fp, neighbor_id) AS BIGINT) AS rank
-      |  FROM sc) WHERE rank <= 5),
-      |mates AS (SELECT t.query_id,
-      |    CAST(SUM(CASE WHEN lq.label = ln.label THEN 1 ELSE 0 END) AS BIGINT) AS n_mates
-      |  FROM topk t
-      |  JOIN e lq ON lq.vec_id = t.query_id
-      |  JOIN e ln ON ln.vec_id = t.neighbor_id
-      |  GROUP BY t.query_id)
-      |SELECT t.query_id, t.rank, t.neighbor_id, t.adc_fp, m.n_mates
-      |FROM topk t JOIN mates m ON t.query_id = m.query_id
-      |ORDER BY t.query_id, t.rank""".stripMargin
-  }
+  private val q150Sql =
+    s"""$plantedE
+      |${pqAdcSql(32)},
+      |topk AS ($top5Sql),
+      |$mateAuditSql""".stripMargin
 
   // ---------------------------------------------------------------
   // q152 — IVF-PQ on the PLANTED-cluster fixture: q148's production
@@ -1126,91 +993,14 @@ object SimilarityQueries {
     val adc = Similarity.ivfPqTopK(e, queries, coarse, resSeeds,
       "vec_id", "embedding", dim = 64, m = 4, nProbe = 3, k = 5,
       trainIters = PqTrainIters)
-    val lbl = e.select(col("vec_id"), col("label"))
-    val mates = adc
-      .join(lbl.select(col("vec_id").as("query_id"), col("label").as("qlabel")), "query_id")
-      .join(lbl.select(col("vec_id").as("neighbor_id"), col("label").as("nlabel")), "neighbor_id")
-      .groupBy(col("query_id"))
-      .agg(sum(when(col("qlabel") === col("nlabel"), 1L).otherwise(0L)).as("n_mates"))
-    adc.join(mates, Seq("query_id"))
-      .filter(assert_true(col("n_mates") >= PlantedIvfMateFloorHits,
-        concat(lit(s"IVF-PQ mate precision below $PlantedIvfMateFloorHits/5 for query "),
-          col("query_id").cast("string"))).isNull)
-      .select(col("query_id"), col("rank"), col("neighbor_id"),
-        col("adc_fp"), col("n_mates"))
-      .orderBy(col("query_id"), col("rank"))
+    mateAudited(e, adc, PlantedIvfMateFloorHits, "IVF-PQ")
   }
-  private val q152Sql = {
-    val subs = "(SELECT unnest(range(4)) AS sub) s"
-    def u(key: String) =
-      s"(CAST('0x' || substr(md5($key), 1, 15) AS BIGINT) / 576460752303423488.0 - 1.0)"
-    def ip(a: String, b: String) = s"list_inner_product($a, $b)"
-    def d2(a: String, b: String) =
-      s"(${ip(a, a)} - 2 * ${ip(a, b)} + ${ip(b, b)})"
-    val (trainCtes, cbFinal) = pqTrainSql("rxs", "cb0", PqTrainIters)
-    s"""WITH gen AS (SELECT i AS vec_id, i % 50 AS label,
-      |    list_transform(range(0, 64), j -> CAST(
-      |      ${u("'pc:' || (i % 50) || ':' || j")}
-      |        + 1.0 * ${u("'pn:' || i || ':' || j")} AS FLOAT)) AS emb
-      |  FROM range(0, 500) t(i)),
-      |e AS (SELECT vec_id, label, CAST(emb AS DOUBLE[]) AS v FROM gen),
-      |c8 AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-      |asg0 AS (SELECT e.vec_id, c8.cid, c8.cv, ${d2("e.v", "c8.cv")} AS d2
-      |  FROM e CROSS JOIN c8),
-      |asg AS (SELECT vec_id, cid AS list_id, cv FROM (
-      |  SELECT vec_id, cid, cv,
-      |    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-      |  FROM asg0) WHERE rn = 1),
-      |res AS (SELECT a.vec_id, a.list_id,
-      |    list_transform(generate_series(1, 64), i -> e.v[i] - a.cv[i]) AS rv
-      |  FROM asg a JOIN e ON e.vec_id = a.vec_id),
-      |rxs AS (SELECT vec_id, list_id, s.sub,
-      |    rv[s.sub*16+1 : s.sub*16+16] AS sv FROM res, $subs),
-      |cb0 AS (SELECT sub, vec_id AS code, sv AS cv FROM rxs
-      |  WHERE vec_id >= 8 AND vec_id < 40),
-      |$trainCtes,
-      |rcb AS (SELECT sub, code, cv FROM $cbFinal),
-      |sc0 AS (SELECT rxs.vec_id, rxs.list_id, rxs.sub, rcb.code,
-      |    ${d2("rxs.sv", "rcb.cv")} AS d2
-      |  FROM rxs JOIN rcb ON rxs.sub = rcb.sub),
-      |codes AS (SELECT vec_id, list_id, sub, code FROM (
-      |  SELECT vec_id, list_id, sub, code,
-      |    row_number() OVER (PARTITION BY vec_id, sub ORDER BY d2, code) AS rn
-      |  FROM sc0) WHERE rn = 1),
-      |pr0 AS (SELECT q.vec_id AS query_id, c8.cid AS list_id, c8.cv,
-      |    ${d2("q.v", "c8.cv")} AS d2
-      |  FROM (SELECT * FROM e WHERE vec_id < 10) q CROSS JOIN c8),
-      |pr AS (SELECT query_id, list_id, cv FROM (
-      |  SELECT query_id, list_id, cv,
-      |    row_number() OVER (PARTITION BY query_id ORDER BY d2, list_id) AS rn
-      |  FROM pr0) WHERE rn <= 3),
-      |qres AS (SELECT p.query_id, p.list_id,
-      |    list_transform(generate_series(1, 64), i -> e.v[i] - p.cv[i]) AS rv
-      |  FROM pr p JOIN e ON e.vec_id = p.query_id),
-      |qxs AS (SELECT query_id, list_id, s.sub,
-      |    rv[s.sub*16+1 : s.sub*16+16] AS sv FROM qres, $subs),
-      |dt AS (SELECT qxs.query_id, qxs.list_id, qxs.sub, rcb.code,
-      |    CAST(floor(${d2("qxs.sv", "rcb.cv")} * 1073741824) AS BIGINT) AS dfp
-      |  FROM qxs JOIN rcb ON qxs.sub = rcb.sub),
-      |sc AS (SELECT dt.query_id, codes.vec_id AS neighbor_id,
-      |    CAST(SUM(dfp) AS BIGINT) AS adc_fp
-      |  FROM codes JOIN dt ON codes.list_id = dt.list_id
-      |    AND codes.sub = dt.sub AND codes.code = dt.code
-      |  GROUP BY 1, 2),
-      |topk AS (SELECT query_id, rank, neighbor_id, adc_fp FROM (
-      |  SELECT query_id, neighbor_id, adc_fp,
-      |    CAST(row_number() OVER (PARTITION BY query_id ORDER BY adc_fp, neighbor_id) AS BIGINT) AS rank
-      |  FROM sc) WHERE rank <= 5),
-      |mates AS (SELECT t.query_id,
-      |    CAST(SUM(CASE WHEN lq.label = ln.label THEN 1 ELSE 0 END) AS BIGINT) AS n_mates
-      |  FROM topk t
-      |  JOIN e lq ON lq.vec_id = t.query_id
-      |  JOIN e ln ON ln.vec_id = t.neighbor_id
-      |  GROUP BY t.query_id)
-      |SELECT t.query_id, t.rank, t.neighbor_id, t.adc_fp, m.n_mates
-      |FROM topk t JOIN mates m ON t.query_id = m.query_id
-      |ORDER BY t.query_id, t.rank""".stripMargin
-  }
+  private val q152Sql =
+    s"""$plantedE
+      |${ivfPqSql(resSeedsBelow = 40, nProbe = 3)}
+      |${ivfScSql("codes")},
+      |topk AS ($top5Sql),
+      |$mateAuditSql""".stripMargin
 
   // ---------------------------------------------------------------
   // q165 — HARD-NEGATIVE MINING ([[Similarity.hardNegatives]]) on
@@ -1229,15 +1019,8 @@ object SimilarityQueries {
         "vec_id", "label", "embedding", k = 3)
       .orderBy(col("query_id"), col("rank"))
   }
-  private val q165Sql = {
-    def u(key: String) =
-      s"(CAST('0x' || substr(md5($key), 1, 15) AS BIGINT) / 576460752303423488.0 - 1.0)"
-    s"""WITH gen AS (SELECT i AS vec_id, i % 50 AS label,
-      |    list_transform(range(0, 64), j -> CAST(
-      |      ${u("'pc:' || (i % 50) || ':' || j")}
-      |        + 1.0 * ${u("'pn:' || i || ':' || j")} AS FLOAT)) AS emb
-      |  FROM range(0, 500) t(i)),
-      |e AS (SELECT vec_id, label, CAST(emb AS DOUBLE[]) AS v FROM gen),
+  private val q165Sql =
+    s"""$plantedE
       |q AS (SELECT vec_id AS query_id, label AS ql, v AS qv FROM e
       |      WHERE vec_id < 10),
       |scored AS (
@@ -1249,7 +1032,6 @@ object SimilarityQueries {
       |  FROM scored)
       |SELECT query_id, rank, neighbor_id, cosine FROM ranked
       |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
-  }
 
   // ---------------------------------------------------------------
   // q167 — RETRIEVAL QUALITY AS EXACT ARITHMETIC: mean-reciprocal-
@@ -1280,15 +1062,8 @@ object SimilarityQueries {
         expr("60 DIV first_mate_rank"), lit(0L)))
       .orderBy(col("query_id"))
   }
-  private val q167Sql = {
-    def u(key: String) =
-      s"(CAST('0x' || substr(md5($key), 1, 15) AS BIGINT) / 576460752303423488.0 - 1.0)"
-    s"""WITH gen AS (SELECT i AS vec_id, i % 50 AS label,
-      |    list_transform(range(0, 64), j -> CAST(
-      |      ${u("'pc:' || (i % 50) || ':' || j")}
-      |        + 1.0 * ${u("'pn:' || i || ':' || j")} AS FLOAT)) AS emb
-      |  FROM range(0, 500) t(i)),
-      |e AS (SELECT vec_id, label, CAST(emb AS DOUBLE[]) AS v FROM gen),
+  private val q167Sql =
+    s"""$plantedE
       |q AS (SELECT vec_id AS query_id, label AS ql, v AS qv FROM e
       |      WHERE vec_id < 10),
       |scored AS (
@@ -1305,7 +1080,6 @@ object SimilarityQueries {
       |  COALESCE(60 // fm.first_mate_rank, 0) AS rr_x60
       |FROM q LEFT JOIN fm USING (query_id)
       |ORDER BY q.query_id""".stripMargin
-  }
 
   // ---------------------------------------------------------------
   // q225 — PROTOTYPE PRUNING ([[graft.operators.Similarity

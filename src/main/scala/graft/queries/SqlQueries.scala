@@ -147,6 +147,24 @@ object SqlQueries {
       |GROUP BY c_mktsegment
       |ORDER BY c_mktsegment""".stripMargin
 
+  /** In-query proof that the rollup rewrite FIRED: `out`'s optimized
+    * plan must scan ONLY the rollup at `root` — a rewrite that
+    * silently stops firing fails the gate, not just a spec. */
+  private def requireRollupScan(out: DataFrame, root: String,
+      what: String): Unit = {
+    val scans = out.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        r.relation match {
+          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            fs.location.rootPaths.map(_.toString)
+          case _ => Seq.empty[String]
+        }
+    }.flatten
+    require(scans.nonEmpty && scans.forall(_.contains(
+        new java.io.File(root).getName)),
+      s"$what rewrite did not fire: scans=$scans")
+  }
+
   // ---------------------------------------------------------------
   // q196 — MATERIALIZED-ROLLUP REWRITE ([[graft.plans.SummaryRewrite]]
   // via [[graft.plans.GraftExtensions]]): the view-matching optimizer
@@ -163,33 +181,19 @@ object SqlQueries {
   private def q196(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val basePath = s"$dir/documents.parquet"
-    val summary = java.nio.file.Files
-      .createTempDirectory("graft_q196_rollup").toString
-    try {
-      graft.plans.SummaryRewrite.buildAndRegister(s, basePath,
-        keys = Seq("lang", "source"), measures = Seq("n_chars"), summary)
-      val out = s.read.parquet(basePath)
-        .filter(col("source") =!= "src0")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          min(col("n_chars")).as("min_chars"), max(col("n_chars")).as("max_chars"))
-        .orderBy(col("lang"))
-      val scans = out.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty[String]
-          }
-      }.flatten
-      require(scans.nonEmpty && scans.forall(_.contains(
-          new java.io.File(summary).getName)),
-        s"summary rewrite did not fire: scans=$scans")
-      out.localCheckpoint()
-    } finally {
-      graft.plans.SummaryRewrite.deregister(basePath)
-      val p = new org.apache.hadoop.fs.Path(summary)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+    StoreGates.withTempStore(s, "graft_q196_rollup") { summary =>
+      try {
+        graft.plans.SummaryRewrite.buildAndRegister(s, basePath,
+          keys = Seq("lang", "source"), measures = Seq("n_chars"), summary)
+        val out = s.read.parquet(basePath)
+          .filter(col("source") =!= "src0")
+          .groupBy(col("lang"))
+          .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
+            min(col("n_chars")).as("min_chars"), max(col("n_chars")).as("max_chars"))
+          .orderBy(col("lang"))
+        requireRollupScan(out, summary, "summary")
+        out.localCheckpoint()
+      } finally graft.plans.SummaryRewrite.deregister(basePath)
     }
   }
   private val q196Sql =
@@ -215,40 +219,26 @@ object SqlQueries {
   private def q203(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val basePath = s"$dir/documents.parquet"
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_q203_rollup").toString
-    try {
-      val base = s.read.parquet(basePath)
-      graft.plans.SummaryRewrite.appendRollupSlice(
-        base.filter(col("doc_id") % 2 === 0),
-        keys = Seq("lang", "source"), measures = Seq("n_chars"), root, 1L)
-      graft.plans.SummaryRewrite.appendRollupSlice(
-        base.filter(col("doc_id") % 2 =!= 0),
-        keys = Seq("lang", "source"), measures = Seq("n_chars"), root, 2L)
-      graft.plans.SummaryRewrite.register(s, basePath, root,
-        keys = Seq("lang", "source"), measures = Seq("n_chars"))
-      val out = s.read.parquet(basePath)
-        .filter(col("lang") =!= "zh")
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          min(col("n_chars")).as("min_chars"), max(col("n_chars")).as("max_chars"))
-        .orderBy(col("source"))
-      val scans = out.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty[String]
-          }
-      }.flatten
-      require(scans.nonEmpty && scans.forall(_.contains(
-          new java.io.File(root).getName)),
-        s"incremental-rollup rewrite did not fire: scans=$scans")
-      out.localCheckpoint()
-    } finally {
-      graft.plans.SummaryRewrite.deregister(basePath)
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+    StoreGates.withTempStore(s, "graft_q203_rollup") { root =>
+      try {
+        val base = s.read.parquet(basePath)
+        graft.plans.SummaryRewrite.appendRollupSlice(
+          base.filter(col("doc_id") % 2 === 0),
+          keys = Seq("lang", "source"), measures = Seq("n_chars"), root, 1L)
+        graft.plans.SummaryRewrite.appendRollupSlice(
+          base.filter(col("doc_id") % 2 =!= 0),
+          keys = Seq("lang", "source"), measures = Seq("n_chars"), root, 2L)
+        graft.plans.SummaryRewrite.register(s, basePath, root,
+          keys = Seq("lang", "source"), measures = Seq("n_chars"))
+        val out = s.read.parquet(basePath)
+          .filter(col("lang") =!= "zh")
+          .groupBy(col("source"))
+          .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
+            min(col("n_chars")).as("min_chars"), max(col("n_chars")).as("max_chars"))
+          .orderBy(col("source"))
+        requireRollupScan(out, root, "incremental-rollup")
+        out.localCheckpoint()
+      } finally graft.plans.SummaryRewrite.deregister(basePath)
     }
   }
   private val q203Sql =
@@ -274,41 +264,27 @@ object SqlQueries {
   private def q208(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val basePath = s"$dir/documents.parquet"
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_q208_rollup").toString
-    try {
-      val base = s.read.parquet(basePath)
-      graft.plans.SummaryRewrite.appendRollupSlice(
-        base.filter(col("doc_id") % 2 === 0),
-        keys = Seq("lang", "source"), measures = Seq("n_chars"), root, 1L)
-      graft.plans.SummaryRewrite.register(s, basePath, root,
-        keys = Seq("lang", "source"), measures = Seq("n_chars"))
-      // maintenance lands AFTER registration — the fresh-serve point
-      graft.plans.SummaryRewrite.appendRollupSlice(
-        base.filter(col("doc_id") % 2 =!= 0),
-        keys = Seq("lang", "source"), measures = Seq("n_chars"), root, 2L)
-      val out = s.read.parquet(basePath)
-        .filter(col("source") =!= "src2")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
-          max(col("n_chars")).as("max_chars"))
-        .orderBy(col("lang"))
-      val scans = out.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty[String]
-          }
-      }.flatten
-      require(scans.nonEmpty && scans.forall(_.contains(
-          new java.io.File(root).getName)),
-        s"fresh-rollup rewrite did not fire: scans=$scans")
-      out.localCheckpoint()
-    } finally {
-      graft.plans.SummaryRewrite.deregister(basePath)
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+    StoreGates.withTempStore(s, "graft_q208_rollup") { root =>
+      try {
+        val base = s.read.parquet(basePath)
+        graft.plans.SummaryRewrite.appendRollupSlice(
+          base.filter(col("doc_id") % 2 === 0),
+          keys = Seq("lang", "source"), measures = Seq("n_chars"), root, 1L)
+        graft.plans.SummaryRewrite.register(s, basePath, root,
+          keys = Seq("lang", "source"), measures = Seq("n_chars"))
+        // maintenance lands AFTER registration — the fresh-serve point
+        graft.plans.SummaryRewrite.appendRollupSlice(
+          base.filter(col("doc_id") % 2 =!= 0),
+          keys = Seq("lang", "source"), measures = Seq("n_chars"), root, 2L)
+        val out = s.read.parquet(basePath)
+          .filter(col("source") =!= "src2")
+          .groupBy(col("lang"))
+          .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"),
+            max(col("n_chars")).as("max_chars"))
+          .orderBy(col("lang"))
+        requireRollupScan(out, root, "fresh-rollup")
+        out.localCheckpoint()
+      } finally graft.plans.SummaryRewrite.deregister(basePath)
     }
   }
   private val q208Sql =
@@ -331,34 +307,20 @@ object SqlQueries {
   // rewrite-fired require; oracle = the query text itself.
   private def q205(s: SparkSession, dir: String): DataFrame = {
     val basePath = s"$dir/documents.parquet"
-    val summary = java.nio.file.Files
-      .createTempDirectory("graft_q205_rollup").toString
-    try {
-      graft.plans.SummaryRewrite.buildAndRegister(s, basePath,
-        keys = Seq("lang", "source"), measures = Seq("n_chars"), summary)
-      s.read.parquet(basePath).createOrReplaceTempView("q205_docs")
-      val out = s.sql(
-        """SELECT lang, source, COUNT(*) AS n_docs,
-          |  SUM(n_chars) AS sum_chars, MIN(n_chars) AS min_chars
-          |FROM q205_docs WHERE source IN ('src1', 'src3', 'src5')
-          |GROUP BY lang, source
-          |ORDER BY lang, source""".stripMargin)
-      val scans = out.queryExecution.optimizedPlan.collect {
-        case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          r.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(_.toString)
-            case _ => Seq.empty[String]
-          }
-      }.flatten
-      require(scans.nonEmpty && scans.forall(_.contains(
-          new java.io.File(summary).getName)),
-        s"SQL-front-door rewrite did not fire: scans=$scans")
-      out.localCheckpoint()
-    } finally {
-      graft.plans.SummaryRewrite.deregister(basePath)
-      val p = new org.apache.hadoop.fs.Path(summary)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+    StoreGates.withTempStore(s, "graft_q205_rollup") { summary =>
+      try {
+        graft.plans.SummaryRewrite.buildAndRegister(s, basePath,
+          keys = Seq("lang", "source"), measures = Seq("n_chars"), summary)
+        s.read.parquet(basePath).createOrReplaceTempView("q205_docs")
+        val out = s.sql(
+          """SELECT lang, source, COUNT(*) AS n_docs,
+            |  SUM(n_chars) AS sum_chars, MIN(n_chars) AS min_chars
+            |FROM q205_docs WHERE source IN ('src1', 'src3', 'src5')
+            |GROUP BY lang, source
+            |ORDER BY lang, source""".stripMargin)
+        requireRollupScan(out, summary, "SQL-front-door")
+        out.localCheckpoint()
+      } finally graft.plans.SummaryRewrite.deregister(basePath)
     }
   }
   private val q205Sql =
@@ -399,17 +361,7 @@ object SqlQueries {
           .groupBy(col("lang"), col("source"))
           .agg(count(lit(1)).as("n_docs"), min(col("n_chars")).as("min_chars"))
           .orderBy(col("lang"), col("source"))
-        val scans = out.queryExecution.optimizedPlan.collect {
-          case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-            r.relation match {
-              case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-                fs.location.rootPaths.map(_.toString)
-              case _ => Seq.empty[String]
-            }
-        }.flatten
-        require(scans.nonEmpty && scans.forall(_.contains(
-            new java.io.File(root).getName)),
-          s"streamed-rollup rewrite did not fire: scans=$scans")
+        requireRollupScan(out, root, "streamed-rollup")
         out.localCheckpoint()
       }
     } finally graft.plans.SummaryRewrite.deregister(basePath)

@@ -3,9 +3,14 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared gate plumbing for the temp-store lifecycle queries
-  * (q189–q191, q198–q201): guaranteed store cleanup and the in-plan
-  * pre/post-compaction equality assertion (q180's discipline).
+/** The registry's store-gate plumbing, and its only copy: every gate's
+  * temp store ([[withTempStore]]), streamed ingest
+  * ([[withStreamedStore]]) and in-plan purge/compaction identity
+  * assertion ([[compactionIdentityGate]], q180's discipline) goes
+  * through here, so cleanup is guaranteed even when the assertion
+  * fires. (`WindowQueries`' stage outlives one body and keeps its own
+  * lifecycle; arrival-order-sensitive streams stage through
+  * [[PinnedMtimeStager]].)
   */
 private[queries] object StoreGates {
 
@@ -25,14 +30,13 @@ private[queries] object StoreGates {
     }
   }
 
-  /** Shared streamed-ingest gate plumbing (q194/q200/q202): stage
-    * each slice as one parquet file, deliver them one per micro-batch
-    * through the checkpointed file source into the store's
-    * exactly-once `foreachBatch` sink, serve from the completed
-    * store, and clean up stage + store + checkpoint — the serve
-    * result must be materialized (`localCheckpoint`) by `serve`
-    * (every FromStore serving call does) since the dirs are deleted
-    * on return. */
+  /** Streamed-ingest gate plumbing: stage each slice as one parquet
+    * file, deliver them one per micro-batch through the checkpointed
+    * file source into the store's exactly-once `foreachBatch` sink,
+    * serve from the completed store, and clean up stage + store +
+    * checkpoint (also when `serve` throws) — the serve result must be
+    * materialized (`localCheckpoint`) by `serve` (every FromStore
+    * serving call does) since the dirs are deleted on return. */
   def withStreamedStore(s: SparkSession, prefix: String,
       slices: Seq[DataFrame], sink: String => (DataFrame, Long) => Unit)(
       serve: String => DataFrame): DataFrame = {

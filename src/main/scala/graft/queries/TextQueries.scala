@@ -19,16 +19,75 @@ import graft.operators.{Chunking, Decontaminate, Dedup, Multimodal, Pii, Samplin
   */
 object TextQueries {
 
+  /** DuckDB fragment: whitespace tokens of the string column `t`
+    * (shared by every query object's oracle SQL). */
+  private[queries] def dTokensOf(t: String) =
+    s"list_filter(regexp_split_to_array(trim($t), '\\s+'), t -> t <> '')"
   /** DuckDB fragment: whitespace tokens of `text`. */
-  private val dTokens =
-    "list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '')"
-  /** DuckDB fragment: 60-bit md5 hash of an expression. */
-  private def dHash(x: String) = s"CAST('0x' || substr(md5($x), 1, 15) AS BIGINT)"
+  private[queries] val dTokens = dTokensOf("text")
+  /** DuckDB fragment: 60-bit md5 hash of an expression, value-identical
+    * to [[graft.operators.TextFunctions.hash60]]. */
+  private[queries] def dHash(x: String) = s"CAST('0x' || substr(md5($x), 1, 15) AS BIGINT)"
   /** DuckDB fragment: distinct word-3-gram shingles of list `t`. */
   private def dShingles(t: String) =
     s"list_distinct(CASE WHEN len($t) >= 3 THEN " +
       s"list_transform(generate_series(1, len($t) - 2), i -> array_to_string($t[i:i+2], ' ')) " +
       s"ELSE [] END)"
+
+  /** DuckDB fragment: the hashed bag-of-words embedding of token list
+    * `toks` — `dim` buckets by md5(token) % dim, each token adding its
+    * own md5-derived weight in [-1, 1] (a sequential fold from 0.0). */
+  private def dHashedEmb(toks: String, dim: Int): String = {
+    val w = s"(${dHash("'1:' || tk")} % 2001 - 1000) / 1000.0"
+    s"""list_transform(range(0, $dim), d ->
+      |    list_reduce(list_prepend(0.0, list_transform($toks, tk ->
+      |      CASE WHEN ${dHash("tk")} % $dim = d THEN $w ELSE 0.0 END)),
+      |      (a, b) -> a + b))""".stripMargin
+  }
+  /** DuckDB fragment: the L2 norm of list column `emb` (sequential fold). */
+  private val dNorm = "sqrt(list_reduce(list_prepend(0.0, " +
+    "list_transform(emb, x -> x * x)), (a, b) -> a + b))"
+  /** The passage-retrieval family's chunking (q160/q164/q172/q193):
+    * `t` tokens, `ch` 64-token chunks at stride 48 of every non-eval
+    * doc (doc_id % 97 <> 3). Opens the WITH, ends with `ch`'s comma;
+    * UNSTRIPPED (its lines keep the `|` margins) — the caller's
+    * stripMargin strips it. */
+  private val passageChunksSql =
+    s"""WITH t AS (SELECT doc_id, $dTokens AS toks FROM documents),
+      |ch AS (SELECT doc_id, CAST((start - 1) // 48 AS BIGINT) AS chunk_id,
+      |    toks[start:start+63] AS ctoks
+      |  FROM (SELECT doc_id, toks, unnest(range(1, len(toks) + 1, 48)) AS start
+      |        FROM t WHERE len(toks) > 0 AND doc_id % 97 <> 3)),"""
+  /** [[passageChunksSql]] plus the normed chunk embeddings
+    * `cn(doc_id, chunk_id, emb, n)` and eval-query embeddings
+    * `qn(query_id, emb, n)` (q160/q164). Ends with `qn`'s comma. */
+  private val passageNormsSql =
+    s"""$passageChunksSql
+      |ce AS (SELECT doc_id, chunk_id, ${dHashedEmb("ctoks", 32)} AS emb FROM ch),
+      |cn AS (SELECT doc_id, chunk_id, emb, $dNorm AS n FROM ce),
+      |q0 AS (SELECT doc_id AS query_id, ${dHashedEmb("toks", 32)} AS emb FROM t
+      |       WHERE doc_id % 97 = 3),
+      |qn AS (SELECT query_id, emb, $dNorm AS n FROM q0),"""
+  /** The 5 greedy MMR picks (λ = 1/2, empty-selected max = 0) unrolled
+    * as CTEs m1..sel5 over the candidate CTE `cand`
+    * (query_id, cid, rel), the pair similarities `s` and the empty
+    * `sel0` (q164/q193). */
+  private def mmrStepsSql(cand: String): String = (1 to 5).map { t =>
+    s"""m$t AS (SELECT s.query_id, s.cid_a AS cid, MAX(s.sim) AS ms
+      |  FROM s JOIN sel${t - 1} z
+      |    ON s.query_id = z.query_id AND s.cid_b = z.cid
+      |  GROUP BY 1, 2),
+      |sc$t AS (SELECT c.query_id, c.cid, c.rel,
+      |    0.5 * c.rel - 0.5 * COALESCE(m.ms, 0.0) AS mmr
+      |  FROM $cand c LEFT JOIN m$t m
+      |    ON c.query_id = m.query_id AND c.cid = m.cid
+      |  WHERE NOT EXISTS (SELECT 1 FROM sel${t - 1} z
+      |    WHERE z.query_id = c.query_id AND z.cid = c.cid)),
+      |p$t AS (SELECT query_id, cid, rel, mmr, $t AS pick_rank FROM (
+      |  SELECT *, row_number() OVER (PARTITION BY query_id
+      |    ORDER BY mmr DESC, cid) AS rn FROM sc$t) WHERE rn = 1),
+      |sel$t AS (SELECT * FROM sel${t - 1} UNION ALL SELECT * FROM p$t)""".stripMargin
+  }.mkString(",\n")
 
   // ---------------------------------------------------------------
   // q25 — per-document statistics (token counting).
@@ -462,11 +521,7 @@ object TextQueries {
       .orderBy(col("id_a"), col("id_b"))
   }
   private val q130Sql = {
-    val w = s"(${dHash("'1:' || tk")} % 2001 - 1000) / 1000.0"
-    val emb = s"""list_transform(range(0, 8), d ->
-      |    list_reduce(list_prepend(0.0, list_transform(toks, tk ->
-      |      CASE WHEN ${dHash("tk")} % 8 = d THEN $w ELSE 0.0 END)),
-      |      (a, b) -> a + b))""".stripMargin
+    val emb = dHashedEmb("toks", 8)
     s"""WITH t AS (SELECT doc_id, source, $dTokens AS toks FROM documents),
       |e AS (SELECT doc_id, source, $emb AS emb FROM t),
       |n AS (SELECT doc_id, source, emb,
@@ -538,11 +593,7 @@ object TextQueries {
       .orderBy(col("id_a"), col("id_b"))
   }
   private val q131Sql = {
-    val w = s"(${dHash("'1:' || tk")} % 2001 - 1000) / 1000.0"
-    val emb = s"""list_transform(range(0, 32), d ->
-      |    list_reduce(list_prepend(0.0, list_transform(toks, tk ->
-      |      CASE WHEN ${dHash("tk")} % 32 = d THEN $w ELSE 0.0 END)),
-      |      (a, b) -> a + b))""".stripMargin
+    val emb = dHashedEmb("toks", 32)
     val cos = "list_inner_product(ea.emb, eb.emb) / " +
       "(sqrt(list_inner_product(ea.emb, ea.emb)) * sqrt(list_inner_product(eb.emb, eb.emb)))"
     s"""WITH t AS (SELECT doc_id, $dTokens AS toks FROM documents),
@@ -696,42 +747,31 @@ object TextQueries {
       pmod(TextFunctions.hash60(col("doc_id").cast("string")), lit(10L)) < 1
     val hist = docs.filter(!isBatch)
     val batch = docs.filter(isBatch)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_q188_store").toString
-    // independent appends (distinct batch ids) — overlap (guide §2.6)
-    graft.operators.ParallelJobs.run(Seq(
-      () => Dedup.writeSignatureStore(hist.filter(col("doc_id") % 2 === 0),
-        "doc_id", "text", k = 16, shingleN = 3, root = root, batchId = 1L),
-      () => Dedup.writeSignatureStore(hist.filter(col("doc_id") % 2 === 1),
-        "doc_id", "text", k = 16, shingleN = 3, root = root, batchId = 2L)))
-    Dedup.deleteFromSignatureStore(
-      hist.filter(col("doc_id") % 9 === 4).select(col("doc_id")),
-      "doc_id", root, batchId = 3L)
-    def verdict() = Dedup.incrementalDedupFromStore(
-        Dedup.readSignatureStore(s, root, "doc_id"), batch,
-        "doc_id", "text", k = 16, shingleN = 3, bands = 8, threshold = 0.5)
-      .localCheckpoint()
-    val masked = verdict()
-    Dedup.purgeSignatureStore(s, root, "doc_id", newBatchId = 4L)
-    val purged = verdict()
-    val eq = masked.union(purged)
-      .groupBy(purged.columns.map(col): _*)
-      .agg(count(lit(1)).as("n"))
-      .agg(min(col("n")).as("mn"), max(col("n")).as("mx"),
-        count(lit(1)).as("groups"))
-    val out = purged.crossJoin(broadcast(eq))
-      .filter(assert_true(
-        col("mn") === 2 && col("mx") === 2 && col("groups") === masked.count(),
-        lit("purge changed the dedup verdict")).isNull)
-      .select(purged.columns.map(col): _*)
-      .orderBy(col("doc_id"))
-      .localCheckpoint()
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    graft.operators.Checkpoints.releasePinned(masked)
-    graft.operators.Checkpoints.releasePinned(purged)
-    out
+    StoreGates.withTempStore(s, "graft_q188_store") { root =>
+      // independent appends (distinct batch ids) — overlap (guide §2.6)
+      graft.operators.ParallelJobs.run(Seq(
+        () => Dedup.writeSignatureStore(hist.filter(col("doc_id") % 2 === 0),
+          "doc_id", "text", k = 16, shingleN = 3, root = root, batchId = 1L),
+        () => Dedup.writeSignatureStore(hist.filter(col("doc_id") % 2 === 1),
+          "doc_id", "text", k = 16, shingleN = 3, root = root, batchId = 2L)))
+      Dedup.deleteFromSignatureStore(
+        hist.filter(col("doc_id") % 9 === 4).select(col("doc_id")),
+        "doc_id", root, batchId = 3L)
+      def verdict() = Dedup.incrementalDedupFromStore(
+          Dedup.readSignatureStore(s, root, "doc_id"), batch,
+          "doc_id", "text", k = 16, shingleN = 3, bands = 8, threshold = 0.5)
+        .localCheckpoint()
+      val masked = verdict()
+      Dedup.purgeSignatureStore(s, root, "doc_id", newBatchId = 4L)
+      val purged = verdict()
+      val out = StoreGates.compactionIdentityGate(masked, purged,
+          "purge changed the dedup verdict")
+        .orderBy(col("doc_id"))
+        .localCheckpoint()
+      graft.operators.Checkpoints.releasePinned(masked)
+      graft.operators.Checkpoints.releasePinned(purged)
+      out
+    }
   }
   private val q188Sql =
     incDedupSql(a => s"NOT $a.is_batch AND $a.doc_id % 9 <> 4")
@@ -751,18 +791,14 @@ object TextQueries {
     val docs = Tables.documents(s, dir)
     val isBatch =
       pmod(TextFunctions.hash60(col("doc_id").cast("string")), lit(10L)) < 1
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_q134_store").toString
-    Dedup.writeSignatureStore(docs.filter(!isBatch), "doc_id", "text",
-      k = 16, shingleN = 3, root = root, batchId = 1L)
-    val out = Dedup.incrementalDedupFromStore(
-        Dedup.readSignatureStore(s, root), docs.filter(isBatch),
-        "doc_id", "text", k = 16, shingleN = 3, bands = 8, threshold = 0.5)
-      .localCheckpoint()
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    out.orderBy(col("doc_id"))
+    StoreGates.withTempStore(s, "graft_q134_store") { root =>
+      Dedup.writeSignatureStore(docs.filter(!isBatch), "doc_id", "text",
+        k = 16, shingleN = 3, root = root, batchId = 1L)
+      Dedup.incrementalDedupFromStore(
+          Dedup.readSignatureStore(s, root), docs.filter(isBatch),
+          "doc_id", "text", k = 16, shingleN = 3, bands = 8, threshold = 0.5)
+        .localCheckpoint()
+    }.orderBy(col("doc_id"))
   }
   private val q134Sql = q128Sql
 
@@ -785,24 +821,20 @@ object TextQueries {
     val docs = Tables.documents(s, dir)
     val coin = pmod(TextFunctions.hash60(col("doc_id").cast("string")),
       lit(10L))
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_q239_store").toString
-    // nine independent daily appends (distinct batch ids; the _bands
-    // meta commit is race-hardened) — overlap them, pool of 4 in
-    // flight (guide §2.6, r19: the sequential chain paid nine
-    // straggler tails)
-    graft.operators.ParallelJobs.run((1 to 9).map(b => () =>
-      Dedup.writeSignatureStoreBanded(docs.filter(coin === b), "doc_id",
-        "text", k = 16, shingleN = 3, bands = 8, root = root,
-        batchId = b.toLong)))
-    val out = Dedup.incrementalDedupFromStoreAt(s, root,
-        docs.filter(coin < 1), "doc_id", "text", k = 16, shingleN = 3,
-        bands = 8, threshold = 0.5)
-      .localCheckpoint()
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    out.orderBy(col("doc_id"))
+    StoreGates.withTempStore(s, "graft_q239_store") { root =>
+      // nine independent daily appends (distinct batch ids; the _bands
+      // meta commit is race-hardened) — overlap them, pool of 4 in
+      // flight (guide §2.6, r19: the sequential chain paid nine
+      // straggler tails)
+      graft.operators.ParallelJobs.run((1 to 9).map(b => () =>
+        Dedup.writeSignatureStoreBanded(docs.filter(coin === b), "doc_id",
+          "text", k = 16, shingleN = 3, bands = 8, root = root,
+          batchId = b.toLong)))
+      Dedup.incrementalDedupFromStoreAt(s, root,
+          docs.filter(coin < 1), "doc_id", "text", k = 16, shingleN = 3,
+          bands = 8, threshold = 0.5)
+        .localCheckpoint()
+    }.orderBy(col("doc_id"))
   }
   private val q239Sql = q128Sql
 
@@ -1120,17 +1152,13 @@ object TextQueries {
 
   private def q159(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_q159_postings").toString
-    writePostingHalves(docs, root)
-    val out = graft.operators.InvertedIndex.andSearchFromStore(
-        graft.operators.BatchStore.read(s, root), "doc_id",
-        terms = Seq("spark", "join", "hash"), k = 20)
-      .localCheckpoint()
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    out
+    StoreGates.withTempStore(s, "graft_q159_postings") { root =>
+      writePostingHalves(docs, root)
+      graft.operators.InvertedIndex.andSearchFromStore(
+          graft.operators.BatchStore.read(s, root), "doc_id",
+          terms = Seq("spark", "join", "hash"), k = 20)
+        .localCheckpoint()
+    }
   }
   private val q159Sql = q139Sql
 
@@ -1146,20 +1174,16 @@ object TextQueries {
   // the searcher noticing.
   private def q169(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_q169_postings").toString
-    writePostingHalves(docs, root)
-    val replaced = graft.operators.InvertedIndex.compactPostingStore(
-      s, root, newBatchId = 3L)
-    require(replaced == 2, s"expected 2 batches replaced, got $replaced")
-    val out = graft.operators.InvertedIndex.andSearchFromStore(
-        graft.operators.BatchStore.read(s, root), "doc_id",
-        terms = Seq("spark", "join", "hash"), k = 20)
-      .localCheckpoint()
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    out
+    StoreGates.withTempStore(s, "graft_q169_postings") { root =>
+      writePostingHalves(docs, root)
+      val replaced = graft.operators.InvertedIndex.compactPostingStore(
+        s, root, newBatchId = 3L)
+      require(replaced == 2, s"expected 2 batches replaced, got $replaced")
+      graft.operators.InvertedIndex.andSearchFromStore(
+          graft.operators.BatchStore.read(s, root), "doc_id",
+          terms = Seq("spark", "join", "hash"), k = 20)
+        .localCheckpoint()
+    }
   }
   private val q169Sql = q139Sql
 
@@ -1178,33 +1202,15 @@ object TextQueries {
   // chunked docs into epochs — union semantics, the q166 argument.
   private def q177(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft_q177_stage").toString
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_q177_store").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_q177_ckpt").toString
-    docs.filter(col("doc_id") % 2 === 0).coalesce(1)
-      .write.mode("append").parquet(stage)
-    docs.filter(col("doc_id") % 2 === 1).coalesce(1)
-      .write.mode("append").parquet(stage)
-    val sink = graft.operators.InvertedIndex
-      .postingStoreSink("doc_id", "text", store)
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-    val q = stream.writeStream
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => sink(b, id))
-      .option("checkpointLocation", ckpt)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val out = graft.operators.InvertedIndex.bm25SearchFromStore(
-        s, store, "doc_id", q151Terms, k = 20)
-      .localCheckpoint()
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    Seq(stage, store, ckpt).foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
-    out
+    StoreGates.withStreamedStore(s, "graft_q177",
+      slices = Seq(docs.filter(col("doc_id") % 2 === 0),
+        docs.filter(col("doc_id") % 2 === 1)),
+      sink = store => graft.operators.InvertedIndex
+        .postingStoreSink("doc_id", "text", store)) { store =>
+      graft.operators.InvertedIndex.bm25SearchFromStore(
+          s, store, "doc_id", q151Terms, k = 20)
+        .localCheckpoint()
+    }
   }
   // lazy: bm25SqlFor reads q151Terms, which initializes LATER in this
   // object — an eager val here would NPE at class init
@@ -1229,40 +1235,26 @@ object TextQueries {
   // break the hash.
   private def q180(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_q180_tomb").toString
-    writePostingHalves(docs, root)
-    graft.operators.InvertedIndex.deleteFromPostingStore(
-      docs.filter(col("doc_id") % 7 === 3), "doc_id", "text", root, batchId = 3L)
-    val masked = graft.operators.InvertedIndex.bm25SearchFromStore(
-        s, root, "doc_id", q151Terms, k = 20)
-      .localCheckpoint()
-    graft.operators.InvertedIndex.purgeTombstones(
-      s, root, "doc_id", newBatchId = 4L)
-    val purged = graft.operators.InvertedIndex.bm25SearchFromStore(
-        s, root, "doc_id", q151Terms, k = 20)
-      .localCheckpoint()
-    // in-plan equality gate: every (doc_id, doc_len, score) row must
-    // appear exactly once in EACH serving — count==2 per group and
-    // group-count preserved (the q162 audit discipline)
-    val eq = masked.union(purged)
-      .groupBy(col("doc_id"), col("doc_len"), col("score"))
-      .agg(count(lit(1)).as("n"))
-      .agg(min(col("n")).as("mn"), max(col("n")).as("mx"),
-        count(lit(1)).as("groups"))
-    val out = purged.crossJoin(broadcast(eq))
-      .filter(assert_true(
-        col("mn") === 2 && col("mx") === 2 && col("groups") === masked.count(),
-        lit("purge changed served BM25 results")).isNull)
-      .select(col("doc_id"), col("doc_len"), col("score"))
-      .orderBy(desc("score"), col("doc_id"))
-      .localCheckpoint()
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    graft.operators.Checkpoints.releasePinned(masked)
-    graft.operators.Checkpoints.releasePinned(purged)
-    out
+    StoreGates.withTempStore(s, "graft_q180_tomb") { root =>
+      writePostingHalves(docs, root)
+      graft.operators.InvertedIndex.deleteFromPostingStore(
+        docs.filter(col("doc_id") % 7 === 3), "doc_id", "text", root, batchId = 3L)
+      val masked = graft.operators.InvertedIndex.bm25SearchFromStore(
+          s, root, "doc_id", q151Terms, k = 20)
+        .localCheckpoint()
+      graft.operators.InvertedIndex.purgeTombstones(
+        s, root, "doc_id", newBatchId = 4L)
+      val purged = graft.operators.InvertedIndex.bm25SearchFromStore(
+          s, root, "doc_id", q151Terms, k = 20)
+        .localCheckpoint()
+      val out = StoreGates.compactionIdentityGate(masked, purged,
+          "purge changed served BM25 results")
+        .orderBy(desc("score"), col("doc_id"))
+        .localCheckpoint()
+      graft.operators.Checkpoints.releasePinned(masked)
+      graft.operators.Checkpoints.releasePinned(purged)
+      out
+    }
   }
   private lazy val q180Sql = bm25SqlFor(
     "SELECT COUNT(*) AS n_docs, SUM(len(toks)) AS total_len FROM t",
@@ -1333,24 +1325,20 @@ object TextQueries {
   // single-shot training on the concatenated slices.
   private def q182(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_q182_lm").toString
-    // independent appends (distinct batch ids) — overlap (guide §2.6)
-    graft.operators.ParallelJobs.run(Seq(
-      () => graft.operators.LanguageModel.writeLmStore(
-        docs.filter(col("doc_id") % 3 === 1), "doc_id", "text", root,
-        batchId = 1L),
-      () => graft.operators.LanguageModel.writeLmStore(
-        docs.filter(col("doc_id") % 3 === 2), "doc_id", "text", root,
-        batchId = 2L)))
-    graft.operators.BatchStore.compact(s, root, newBatchId = 3L)
-    val out = graft.operators.LanguageModel.bigramLmScoreFromStore(
-        s, root, docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", k = 20)
-      .localCheckpoint()
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    out
+    StoreGates.withTempStore(s, "graft_q182_lm") { root =>
+      // independent appends (distinct batch ids) — overlap (guide §2.6)
+      graft.operators.ParallelJobs.run(Seq(
+        () => graft.operators.LanguageModel.writeLmStore(
+          docs.filter(col("doc_id") % 3 === 1), "doc_id", "text", root,
+          batchId = 1L),
+        () => graft.operators.LanguageModel.writeLmStore(
+          docs.filter(col("doc_id") % 3 === 2), "doc_id", "text", root,
+          batchId = 2L)))
+      graft.operators.BatchStore.compact(s, root, newBatchId = 3L)
+      graft.operators.LanguageModel.bigramLmScoreFromStore(
+          s, root, docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", k = 20)
+        .localCheckpoint()
+    }
   }
   private val q182Sql = lmSql
 
@@ -1369,36 +1357,18 @@ object TextQueries {
     val docs = Tables.documents(s, dir)
     val evalSet = docs.filter(col("doc_id") % 97 === 3)
     val train = docs.filter(col("doc_id") % 97 =!= 3)
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft_q183_stage").toString
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_q183_store").toString
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_q183_ckpt").toString
-    train.filter(col("doc_id") % 2 === 0).coalesce(1)
-      .write.mode("append").parquet(stage)
-    train.filter(col("doc_id") % 2 === 1).coalesce(1)
-      .write.mode("append").parquet(stage)
-    val sink = Decontaminate.contaminationSink(
-      evalSet, "doc_id", "text", n = 3, store, keep = Seq("doc_id", "lang"))
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stage)
-    val q = stream.writeStream
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => sink(b, id))
-      .option("checkpointLocation", ckpt)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val out = graft.operators.BatchStore.read(s, store)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_train"),
-        sum(when(col("is_contaminated"), 1L).otherwise(0L)).as("n_contaminated"))
-      .orderBy(col("lang"))
-      .localCheckpoint()
-    val fs = new org.apache.hadoop.fs.Path(store)
-      .getFileSystem(s.sessionState.newHadoopConf())
-    Seq(stage, store, ckpt).foreach(p =>
-      fs.delete(new org.apache.hadoop.fs.Path(p), true))
-    out
+    StoreGates.withStreamedStore(s, "graft_q183",
+      slices = Seq(train.filter(col("doc_id") % 2 === 0),
+        train.filter(col("doc_id") % 2 === 1)),
+      sink = store => Decontaminate.contaminationSink(
+        evalSet, "doc_id", "text", n = 3, store, keep = Seq("doc_id", "lang"))) { store =>
+      graft.operators.BatchStore.read(s, store)
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_train"),
+          sum(when(col("is_contaminated"), 1L).otherwise(0L)).as("n_contaminated"))
+        .orderBy(col("lang"))
+        .localCheckpoint()
+    }
   }
   // lazy: q60Sql initializes later in this object (the q177 rule)
   private lazy val q183Sql = q60Sql
@@ -1533,12 +1503,6 @@ object TextQueries {
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
   private val q185Sql = langidSqlFor("doc_id % 5 <> 0")
 
-  /** Temp store root with guaranteed cleanup ([[StoreGates]] — shared
-    * with the q201 DSIR-store gate in CurationQueries). */
-  private def withTempStore(s: SparkSession, prefix: String)(
-      body: String => DataFrame): DataFrame =
-    StoreGates.withTempStore(s, prefix)(body)
-
   /** q189/q190 shared fixture: the appended-minus-erased LM store —
     * two training-slice appends (doc_id % 3 = 1, then % 3 = 2) and
     * one negated-delta erasure of the % 3 = 1 AND % 5 = 0 sub-slice.
@@ -1560,13 +1524,6 @@ object TextQueries {
   private val erasedLmFilter =
     "doc_id % 3 <> 0 AND NOT (doc_id % 3 = 1 AND doc_id % 5 = 0)"
 
-  /** In-plan pre/post-compaction equality gate (q180's discipline,
-    * shared by q189/q191/q199 here and q201 in CurationQueries —
-    * [[StoreGates.compactionIdentityGate]]). */
-  private def compactionIdentityGate(masked: DataFrame,
-      compacted: DataFrame, msg: String): DataFrame =
-    StoreGates.compactionIdentityGate(masked, compacted, msg)
-
   // ---------------------------------------------------------------
   // q189 — ERASURE IN THE LM STORE ([[graft.operators.LanguageModel
   // .deleteFromLmStore]] / [[LanguageModel.compactLmStore]]): the
@@ -1586,13 +1543,13 @@ object TextQueries {
   private def q189(s: SparkSession, dir: String): DataFrame = {
     val LM = graft.operators.LanguageModel
     val docs = Tables.documents(s, dir)
-    withTempStore(s, "graft_q189_lm") { root =>
+    StoreGates.withTempStore(s, "graft_q189_lm") { root =>
       buildErasedLmStore(docs, root)
       val cand = docs.filter(col("doc_id") % 3 === 0)
       val masked = LM.bigramLmScoreFromStore(s, root, cand, "doc_id", "text", k = 20)
       LM.compactLmStore(s, root, newBatchId = 4L)
       val compacted = LM.bigramLmScoreFromStore(s, root, cand, "doc_id", "text", k = 20)
-      val out = compactionIdentityGate(masked, compacted,
+      val out = StoreGates.compactionIdentityGate(masked, compacted,
           "LM-store compaction changed served scoring")
         .orderBy(col("lm_avg"), col("doc_id"))
         .localCheckpoint()
@@ -1617,7 +1574,7 @@ object TextQueries {
   private def q190(s: SparkSession, dir: String): DataFrame = {
     val LM = graft.operators.LanguageModel
     val docs = Tables.documents(s, dir)
-    withTempStore(s, "graft_q190_lm") { root =>
+    StoreGates.withTempStore(s, "graft_q190_lm") { root =>
       buildErasedLmStore(docs, root)
       LM.compactLmStore(s, root, newBatchId = 4L)
       LM.stupidBackoffScoreFromStore(s, root,
@@ -1644,7 +1601,7 @@ object TextQueries {
     val LM = graft.operators.LanguageModel
     val docs = Tables.documents(s, dir)
     val train = docs.filter(col("doc_id") % 5 =!= 0)
-    withTempStore(s, "graft_q191_lid") { root =>
+    StoreGates.withTempStore(s, "graft_q191_lid") { root =>
       // independent appends (distinct batch ids) — overlap (guide §2.6)
       graft.operators.ParallelJobs.run(Seq(
         () => LM.writeLangIdStore(train.filter(col("doc_id") % 2 === 0),
@@ -1657,7 +1614,7 @@ object TextQueries {
       val masked = LM.classifyLangByTrigramsFromStore(s, root, cand, "doc_id", "text")
       LM.compactLangIdStore(s, root, newBatchId = 4L)
       val compacted = LM.classifyLangByTrigramsFromStore(s, root, cand, "doc_id", "text")
-      val out = compactionIdentityGate(masked, compacted,
+      val out = StoreGates.compactionIdentityGate(masked, compacted,
           "lang-id store compaction changed served classification")
         .join(cand.select(col("doc_id"), col("lang")), Seq("doc_id"))
         .groupBy(col("lang"), col("lang_pred"))
@@ -1763,34 +1720,20 @@ object TextQueries {
         lam = 0.5, meanRecallFloor = Q193MeanRecallFloor)
       .orderBy(col("query_id"), col("pick_rank"))
   }
-  /** Shared q193/q197 serving-front oracle prefix: tokens → chunks →
-    * chunk/query embeddings → md5 hyperplanes → sign buckets → LSH
-    * candidates → exact-cosine top-10 per query, ending at
-    * `cand10(query_id, cid, rel, emb, n)` — the full DuckDB replay of
-    * [[graft.operators.Similarity.rpLshTopK]] over the q193 fixture.
-    * The two consumers append different back stages (q193 the MMR
-    * recursion, q197 the MaxSim chain). */
-  private lazy val lshCand10Sql: String = {
-    val w = s"(${dHash("'1:' || tk")} % 2001 - 1000) / 1000.0"
-    def emb(toks: String) = s"""list_transform(range(0, 32), d ->
-      |    list_reduce(list_prepend(0.0, list_transform($toks, tk ->
-      |      CASE WHEN ${dHash("tk")} % 32 = d THEN $w ELSE 0.0 END)),
-      |      (a, b) -> a + b))""".stripMargin
+  /** The LSH candidate chain shared by q172's oracle and
+    * [[lshCand10Sql]]: tokens → chunks → chunk/query embeddings → md5
+    * hyperplanes → sign buckets → `cand(query_id, nid)`. Opens the
+    * WITH and ends with `cand`'s comma; UNSTRIPPED (its lines keep the
+    * `|` margins) — the caller's stripMargin strips it. */
+  private def lshCandSql: String = {
     val bits = Q172Bits
     val nPlanes = Q172Bits * Q172Tables
-    val relExpr = "list_inner_product(a.emb, b.emb) / " +
-      "(sqrt(list_inner_product(a.emb, a.emb)) * " +
-      "sqrt(list_inner_product(b.emb, b.emb)))"
-    s"""WITH t AS (SELECT doc_id, $dTokens AS toks FROM documents),
-      |ch AS (SELECT doc_id, CAST((start - 1) // 48 AS BIGINT) AS chunk_id,
-      |    toks[start:start+63] AS ctoks
-      |  FROM (SELECT doc_id, toks, unnest(range(1, len(toks) + 1, 48)) AS start
-      |        FROM t WHERE len(toks) > 0 AND doc_id % 97 <> 3)),
-      |ce AS (SELECT doc_id * 1048576 + chunk_id AS nid, ${emb("ctoks")} AS emb
+    s"""$passageChunksSql
+      |ce AS (SELECT doc_id * 1048576 + chunk_id AS nid, ${dHashedEmb("ctoks", 32)} AS emb
       |  FROM ch),
       |cv AS (SELECT nid, emb FROM ce
       |  WHERE sqrt(list_inner_product(emb, emb)) > 0),
-      |qe AS (SELECT doc_id AS query_id, ${emb("toks")} AS emb FROM t
+      |qe AS (SELECT doc_id AS query_id, ${dHashedEmb("toks", 32)} AS emb FROM t
       |       WHERE doc_id % 97 = 3),
       |qv AS (SELECT query_id, emb FROM qe
       |  WHERE sqrt(list_inner_product(emb, emb)) > 0),
@@ -1813,7 +1756,19 @@ object TextQueries {
       |  SELECT DISTINCT q.query_id, c.nid
       |  FROM qsig q JOIN csig c
       |    ON q.rp_table = c.rp_table AND q.rp_bucket = c.rp_bucket
-      |  WHERE q.query_id <> c.nid),
+      |  WHERE q.query_id <> c.nid),"""
+  }
+  /** Shared q193/q197 serving-front oracle prefix: the
+    * [[lshCandSql]] candidates → exact-cosine top-10 per query, ending at
+    * `cand10(query_id, cid, rel, emb, n)` — the full DuckDB replay of
+    * [[graft.operators.Similarity.rpLshTopK]] over the q193 fixture.
+    * The two consumers append different back stages (q193 the MMR
+    * recursion, q197 the MaxSim chain). */
+  private lazy val lshCand10Sql: String = {
+    val relExpr = "list_inner_product(a.emb, b.emb) / " +
+      "(sqrt(list_inner_product(a.emb, a.emb)) * " +
+      "sqrt(list_inner_product(b.emb, b.emb)))"
+    s"""$lshCandSql
       |lr AS (SELECT cand.query_id, cand.nid, $relExpr AS rel, a.emb AS emb,
       |    row_number() OVER (PARTITION BY cand.query_id
       |      ORDER BY $relExpr DESC, cand.nid) AS rank
@@ -1822,23 +1777,7 @@ object TextQueries {
       |cand10 AS (SELECT query_id, nid AS cid, rel, emb,
       |    sqrt(list_inner_product(emb, emb)) AS n FROM lr WHERE rank <= 10)""".stripMargin
   }
-  private lazy val q193Sql = {
-    val steps = (1 to 5).map { t =>
-      s"""m$t AS (SELECT s.query_id, s.cid_a AS cid, MAX(s.sim) AS ms
-        |  FROM s JOIN sel${t - 1} z
-        |    ON s.query_id = z.query_id AND s.cid_b = z.cid
-        |  GROUP BY 1, 2),
-        |sc$t AS (SELECT c.query_id, c.cid, c.rel,
-        |    0.5 * c.rel - 0.5 * COALESCE(m.ms, 0.0) AS mmr
-        |  FROM cand10 c LEFT JOIN m$t m
-        |    ON c.query_id = m.query_id AND c.cid = m.cid
-        |  WHERE NOT EXISTS (SELECT 1 FROM sel${t - 1} z
-        |    WHERE z.query_id = c.query_id AND z.cid = c.cid)),
-        |p$t AS (SELECT query_id, cid, rel, mmr, $t AS pick_rank FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY mmr DESC, cid) AS rn FROM sc$t) WHERE rn = 1),
-        |sel$t AS (SELECT * FROM sel${t - 1} UNION ALL SELECT * FROM p$t)""".stripMargin
-    }.mkString(",\n")
+  private lazy val q193Sql =
     s"""$lshCand10Sql,
       |s AS (SELECT a.query_id, a.cid AS cid_a, b.cid AS cid_b,
       |    list_inner_product(a.emb, b.emb) / (a.n * b.n) AS sim
@@ -1846,10 +1785,9 @@ object TextQueries {
       |    ON a.query_id = b.query_id AND a.cid <> b.cid),
       |sel0 AS (SELECT query_id, cid, rel, 0.0 AS mmr, 0 AS pick_rank
       |  FROM cand10 WHERE FALSE),
-      |$steps
+      |${mmrStepsSql("cand10")}
       |SELECT query_id, pick_rank, cid AS neighbor_id, rel, mmr FROM sel5
       |ORDER BY query_id, pick_rank""".stripMargin
-  }
 
   // ---------------------------------------------------------------
   // q194 — STREAMED LM-STORE MAINTENANCE ([[graft.operators
@@ -2000,7 +1938,7 @@ object TextQueries {
   private def q198(s: SparkSession, dir: String): DataFrame = {
     val LI = graft.operators.LateInteraction
     val (cands, qtext, passages) = maxSimFixture(s, dir)
-    withTempStore(s, "graft_q198_ti") { root =>
+    StoreGates.withTempStore(s, "graft_q198_ti") { root =>
       // r19: the two daily appends in ONE tokenize+embed pass with
       // overlapped commits (writeTokenIndexSlices — the per-slice
       // calls each re-chunked the whole corpus and re-embedded the
@@ -2037,7 +1975,7 @@ object TextQueries {
     // materializing corpus chunk text costs more than re-chunking)
     val (cands0, qtext, passages) = maxSimFixture(s, dir)
     val cands = cands0.localCheckpoint()
-    val res = withTempStore(s, "graft_q199_ti") { root =>
+    val res = StoreGates.withTempStore(s, "graft_q199_ti") { root =>
       // r19: one tokenize+embed pass + overlapped commits (q198's
       // writeTokenIndexSlices note)
       LI.writeTokenIndexSlices(passages, "neighbor_id", "text", dim = 16,
@@ -2053,7 +1991,7 @@ object TextQueries {
       val masked = serve()
       LI.purgeTokenIndex(s, root, "neighbor_id", newBatchId = 4L)
       val purged = serve()
-      val out = compactionIdentityGate(masked, purged,
+      val out = StoreGates.compactionIdentityGate(masked, purged,
           "token-index purge changed served ranking")
         .orderBy(col("query_id"), col("rank"))
         .localCheckpoint()
@@ -2087,7 +2025,7 @@ object TextQueries {
   private def q204(s: SparkSession, dir: String): DataFrame = {
     val LI = graft.operators.LateInteraction
     val (cands, qtext, passages) = maxSimFixture(s, dir)
-    withTempStore(s, "graft_q204_ti8") { root =>
+    StoreGates.withTempStore(s, "graft_q204_ti8") { root =>
       // r19: one tokenize+quantize pass + overlapped commits (q198's
       // writeTokenIndexSlices note, int8 twin)
       LI.writeTokenIndexInt8Slices(passages, "neighbor_id", "text",
@@ -2145,22 +2083,18 @@ object TextQueries {
   // tiebreak.
   private def q174(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_q174_export").toString
-    graft.operators.InvertedIndex.exportPostings(
-      docs, "doc_id", "text", root, batchId = 1L, docBuckets = 8)
-    val out = graft.operators.BatchStore.read(s, root)
-      .groupBy(col("token"))
-      .agg(countDistinct(col("doc_id")).as("df"),
-        sum(col("tf")).cast("long").as("cf"),
-        countDistinct(col("doc_bucket")).as("n_buckets"))
-      .orderBy(desc("cf"), col("token"))
-      .limit(20)
-      .localCheckpoint()
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    out
+    StoreGates.withTempStore(s, "graft_q174_export") { root =>
+      graft.operators.InvertedIndex.exportPostings(
+        docs, "doc_id", "text", root, batchId = 1L, docBuckets = 8)
+      graft.operators.BatchStore.read(s, root)
+        .groupBy(col("token"))
+        .agg(countDistinct(col("doc_id")).as("df"),
+          sum(col("tf")).cast("long").as("cf"),
+          countDistinct(col("doc_bucket")).as("n_buckets"))
+        .orderBy(desc("cf"), col("token"))
+        .limit(20)
+        .localCheckpoint()
+    }
   }
   private val q174Sql = {
     val bucket = s"${dHash("CAST(doc_id AS VARCHAR)")} % 8"
@@ -2227,25 +2161,9 @@ object TextQueries {
         col("doc_id"), col("chunk_id"), col("cosine"))
       .orderBy(col("query_id"), col("rank"))
   private val q160Sql = {
-    val w = s"(${dHash("'1:' || tk")} % 2001 - 1000) / 1000.0"
-    def emb(toks: String) = s"""list_transform(range(0, 32), d ->
-      |    list_reduce(list_prepend(0.0, list_transform($toks, tk ->
-      |      CASE WHEN ${dHash("tk")} % 32 = d THEN $w ELSE 0.0 END)),
-      |      (a, b) -> a + b))""".stripMargin
-    val nrm = "sqrt(list_reduce(list_prepend(0.0, " +
-      "list_transform(emb, x -> x * x)), (a, b) -> a + b))"
     val dot = "list_reduce(list_prepend(0.0, " +
       "list_transform(range(1, 33), i -> c.emb[i] * q.emb[i])), (x, y) -> x + y)"
-    s"""WITH t AS (SELECT doc_id, $dTokens AS toks FROM documents),
-      |ch AS (SELECT doc_id, CAST((start - 1) // 48 AS BIGINT) AS chunk_id,
-      |    toks[start:start+63] AS ctoks
-      |  FROM (SELECT doc_id, toks, unnest(range(1, len(toks) + 1, 48)) AS start
-      |        FROM t WHERE len(toks) > 0 AND doc_id % 97 <> 3)),
-      |ce AS (SELECT doc_id, chunk_id, ${emb("ctoks")} AS emb FROM ch),
-      |cn AS (SELECT doc_id, chunk_id, emb, $nrm AS n FROM ce),
-      |q0 AS (SELECT doc_id AS query_id, ${emb("toks")} AS emb FROM t
-      |       WHERE doc_id % 97 = 3),
-      |qn AS (SELECT query_id, emb, $nrm AS n FROM q0),
+    s"""$passageNormsSql
       |p AS (SELECT q.query_id, c.doc_id, c.chunk_id,
       |    $dot / (c.n * q.n) AS cosine
       |  FROM cn c CROSS JOIN qn q WHERE c.n > 0 AND q.n > 0),
@@ -2301,48 +2219,9 @@ object TextQueries {
       .orderBy(col("query_id"))
   }
   private val q172Sql = {
-    val w = s"(${dHash("'1:' || tk")} % 2001 - 1000) / 1000.0"
-    def emb(toks: String) = s"""list_transform(range(0, 32), d ->
-      |    list_reduce(list_prepend(0.0, list_transform($toks, tk ->
-      |      CASE WHEN ${dHash("tk")} % 32 = d THEN $w ELSE 0.0 END)),
-      |      (a, b) -> a + b))""".stripMargin
-    val bits = Q172Bits
-    val nPlanes = Q172Bits * Q172Tables
     def cos(a: String, b: String) =
       s"list_inner_product($a.emb, $b.emb) / (sqrt(list_inner_product($a.emb, $a.emb)) * sqrt(list_inner_product($b.emb, $b.emb)))"
-    s"""WITH t AS (SELECT doc_id, $dTokens AS toks FROM documents),
-      |ch AS (SELECT doc_id, CAST((start - 1) // 48 AS BIGINT) AS chunk_id,
-      |    toks[start:start+63] AS ctoks
-      |  FROM (SELECT doc_id, toks, unnest(range(1, len(toks) + 1, 48)) AS start
-      |        FROM t WHERE len(toks) > 0 AND doc_id % 97 <> 3)),
-      |ce AS (SELECT doc_id * 1048576 + chunk_id AS nid, ${emb("ctoks")} AS emb
-      |  FROM ch),
-      |cv AS (SELECT nid, emb FROM ce
-      |  WHERE sqrt(list_inner_product(emb, emb)) > 0),
-      |qe AS (SELECT doc_id AS query_id, ${emb("toks")} AS emb FROM t
-      |       WHERE doc_id % 97 = 3),
-      |qv AS (SELECT query_id, emb FROM qe
-      |  WHERE sqrt(list_inner_product(emb, emb)) > 0),
-      |planes AS (
-      |  SELECT p, list_transform(range(0, 32), i ->
-      |    CASE WHEN CAST('0x' || substr(md5('rp:' || p || ':' || i), 1, 15) AS BIGINT) % 2 = 0
-      |         THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END) AS coefs
-      |  FROM range(0, $nPlanes) t(p)),
-      |csig AS (
-      |  SELECT v.nid, p // $bits AS rp_table,
-      |    SUM(CASE WHEN list_inner_product(v.emb, pl.coefs) > 0
-      |             THEN 1 << (p % $bits) ELSE 0 END) AS rp_bucket
-      |  FROM cv v CROSS JOIN planes pl GROUP BY 1, 2),
-      |qsig AS (
-      |  SELECT q.query_id, p // $bits AS rp_table,
-      |    SUM(CASE WHEN list_inner_product(q.emb, pl.coefs) > 0
-      |             THEN 1 << (p % $bits) ELSE 0 END) AS rp_bucket
-      |  FROM qv q CROSS JOIN planes pl GROUP BY 1, 2),
-      |cand AS (
-      |  SELECT DISTINCT q.query_id, c.nid
-      |  FROM qsig q JOIN csig c
-      |    ON q.rp_table = c.rp_table AND q.rp_bucket = c.rp_bucket
-      |  WHERE q.query_id <> c.nid),
+    s"""$lshCandSql
       |lsh AS (SELECT query_id, nid FROM (
       |  SELECT cand.query_id, cand.nid,
       |    row_number() OVER (PARTITION BY cand.query_id
@@ -2444,20 +2323,16 @@ object TextQueries {
   // staging is a temp dir, deleted after the checkpoint.
   private def q163(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_q163_jsonl").toString
-    docs.write.mode("overwrite").json(tmp)
-    val out = s.read.schema(docs.schema).json(tmp)
-      .groupBy(col("lang")).agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_chars")).as("n_chars"),
-        sum(length(col("text")).cast("long")).as("text_chars"))
-      .orderBy(col("lang"))
-      .localCheckpoint()
-    new org.apache.hadoop.fs.Path(tmp)
-      .getFileSystem(s.sessionState.newHadoopConf())
-      .delete(new org.apache.hadoop.fs.Path(tmp), true)
-    out
+    StoreGates.withTempStore(s, "graft_q163_jsonl") { tmp =>
+      docs.write.mode("overwrite").json(tmp)
+      s.read.schema(docs.schema).json(tmp)
+        .groupBy(col("lang")).agg(
+          count(lit(1)).as("n_docs"),
+          sum(col("n_chars")).as("n_chars"),
+          sum(length(col("text")).cast("long")).as("text_chars"))
+        .orderBy(col("lang"))
+        .localCheckpoint()
+    }
   }
   private val q163Sql =
     """SELECT lang, COUNT(*) AS n_docs,
@@ -2486,41 +2361,9 @@ object TextQueries {
       .orderBy(col("query_id"), col("pick_rank"))
   }
   private val q164Sql = {
-    val w = s"(${dHash("'1:' || tk")} % 2001 - 1000) / 1000.0"
-    def emb(toks: String) = s"""list_transform(range(0, 32), d ->
-      |    list_reduce(list_prepend(0.0, list_transform($toks, tk ->
-      |      CASE WHEN ${dHash("tk")} % 32 = d THEN $w ELSE 0.0 END)),
-      |      (a, b) -> a + b))""".stripMargin
-    val nrm = "sqrt(list_reduce(list_prepend(0.0, " +
-      "list_transform(emb, x -> x * x)), (a, b) -> a + b))"
     def dotp(x: String, y: String) = "list_reduce(list_prepend(0.0, " +
       s"list_transform(range(1, 33), i -> $x[i] * $y[i])), (p, q) -> p + q)"
-    val steps = (1 to 5).map { t =>
-      s"""m$t AS (SELECT s.query_id, s.cid_a AS cid, MAX(s.sim) AS ms
-        |  FROM s JOIN sel${t - 1} z
-        |    ON s.query_id = z.query_id AND s.cid_b = z.cid
-        |  GROUP BY 1, 2),
-        |sc$t AS (SELECT c.query_id, c.cid, c.rel,
-        |    0.5 * c.rel - 0.5 * COALESCE(m.ms, 0.0) AS mmr
-        |  FROM cand c LEFT JOIN m$t m
-        |    ON c.query_id = m.query_id AND c.cid = m.cid
-        |  WHERE NOT EXISTS (SELECT 1 FROM sel${t - 1} z
-        |    WHERE z.query_id = c.query_id AND z.cid = c.cid)),
-        |p$t AS (SELECT query_id, cid, rel, mmr, $t AS pick_rank FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id
-        |    ORDER BY mmr DESC, cid) AS rn FROM sc$t) WHERE rn = 1),
-        |sel$t AS (SELECT * FROM sel${t - 1} UNION ALL SELECT * FROM p$t)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH t AS (SELECT doc_id, $dTokens AS toks FROM documents),
-      |ch AS (SELECT doc_id, CAST((start - 1) // 48 AS BIGINT) AS chunk_id,
-      |    toks[start:start+63] AS ctoks
-      |  FROM (SELECT doc_id, toks, unnest(range(1, len(toks) + 1, 48)) AS start
-      |        FROM t WHERE len(toks) > 0 AND doc_id % 97 <> 3)),
-      |ce AS (SELECT doc_id, chunk_id, ${emb("ctoks")} AS emb FROM ch),
-      |cn AS (SELECT doc_id, chunk_id, emb, $nrm AS n FROM ce),
-      |q0 AS (SELECT doc_id AS query_id, ${emb("toks")} AS emb FROM t
-      |       WHERE doc_id % 97 = 3),
-      |qn AS (SELECT query_id, emb, $nrm AS n FROM q0),
+    s"""$passageNormsSql
       |pp AS (SELECT q.query_id, c.doc_id, c.chunk_id, c.emb, c.n,
       |    ${dotp("c.emb", "q.emb")} / (c.n * q.n) AS cosine
       |  FROM cn c CROSS JOIN qn q WHERE c.n > 0 AND q.n > 0),
@@ -2534,7 +2377,7 @@ object TextQueries {
       |    ON a.query_id = b.query_id AND a.cid <> b.cid),
       |sel0 AS (SELECT query_id, cid, rel, 0.0 AS mmr, 0 AS pick_rank
       |  FROM cand WHERE FALSE),
-      |$steps
+      |${mmrStepsSql("cand")}
       |SELECT query_id, pick_rank, cid, rel, mmr FROM sel5
       |ORDER BY query_id, pick_rank""".stripMargin
   }
@@ -2551,30 +2394,25 @@ object TextQueries {
   // batch oracle checks.
   private def q166(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_q166_jsonl").toString
-    docs.repartition(3).write.mode("overwrite").json(tmp)
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").json(tmp)
-    val agg = stream.groupBy(col("lang")).agg(
-      count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
-    val sink = "q166_" + java.util.UUID.randomUUID().toString.take(8)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val q = agg.writeStream.format("memory").queryName(sink)
-        .outputMode("complete").start()
-      try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    val out = s.table(sink).orderBy(col("lang")).localCheckpoint()
-    // the checkpoint owns the rows now — drop the memory-sink temp
-    // view, or each bench invocation (3 runs/query) leaves a cached
-    // result table registered for the session's lifetime
-    s.catalog.dropTempView(sink)
-    new org.apache.hadoop.fs.Path(tmp)
-      .getFileSystem(s.sessionState.newHadoopConf())
-      .delete(new org.apache.hadoop.fs.Path(tmp), true)
-    out
+    StoreGates.withTempStore(s, "graft_q166_jsonl") { tmp =>
+      docs.repartition(3).write.mode("overwrite").json(tmp)
+      val stream = s.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", "1").json(tmp)
+      val agg = stream.groupBy(col("lang")).agg(
+        count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"))
+      val sink = "q166_" + java.util.UUID.randomUUID().toString.take(8)
+      WindowQueries.withShufflePartitions(s, "4") {
+        val q = agg.writeStream.format("memory").queryName(sink)
+          .outputMode("complete").start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      val out = s.table(sink).orderBy(col("lang")).localCheckpoint()
+      // the checkpoint owns the rows now — drop the memory-sink temp
+      // view, or each bench invocation (3 runs/query) leaves a cached
+      // result table registered for the session's lifetime
+      s.catalog.dropTempView(sink)
+      out
+    }
   }
   private val q166Sql =
     """SELECT lang, COUNT(*) AS n_docs,
@@ -2591,20 +2429,16 @@ object TextQueries {
   // encoding/values loss in the round-trip breaks the hash.
   private def q168(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_q168_orc").toString
-    docs.write.mode("overwrite").orc(tmp)
-    val out = s.read.orc(tmp)
-      .groupBy(col("lang")).agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_chars")).as("n_chars"),
-        sum(length(col("text")).cast("long")).as("text_chars"))
-      .orderBy(col("lang"))
-      .localCheckpoint()
-    new org.apache.hadoop.fs.Path(tmp)
-      .getFileSystem(s.sessionState.newHadoopConf())
-      .delete(new org.apache.hadoop.fs.Path(tmp), true)
-    out
+    StoreGates.withTempStore(s, "graft_q168_orc") { tmp =>
+      docs.write.mode("overwrite").orc(tmp)
+      s.read.orc(tmp)
+        .groupBy(col("lang")).agg(
+          count(lit(1)).as("n_docs"),
+          sum(col("n_chars")).as("n_chars"),
+          sum(length(col("text")).cast("long")).as("text_chars"))
+        .orderBy(col("lang"))
+        .localCheckpoint()
+    }
   }
   private val q168Sql = q163Sql
 
@@ -2707,16 +2541,12 @@ object TextQueries {
   // path is now value-identical to the scan path on any corpus.
   private def q161(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_q161_postings").toString
-    writePostingHalves(docs, root)
-    val out = graft.operators.InvertedIndex.bm25SearchFromStore(
-        s, root, "doc_id", q151Terms, k = 20)
-      .localCheckpoint()
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sessionState.newHadoopConf())
-      .delete(new org.apache.hadoop.fs.Path(root), true)
-    out
+    StoreGates.withTempStore(s, "graft_q161_postings") { root =>
+      writePostingHalves(docs, root)
+      graft.operators.InvertedIndex.bm25SearchFromStore(
+          s, root, "doc_id", q151Terms, k = 20)
+        .localCheckpoint()
+    }
   }
   private val q161Sql = bm25SqlFor(
     "SELECT COUNT(*) AS n_docs, SUM(len(toks)) AS total_len FROM t")
@@ -2737,7 +2567,7 @@ object TextQueries {
   // parenthesization change all break the hash.
   private def q215(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    withTempStore(s, "graft_q215_prf") { root =>
+    StoreGates.withTempStore(s, "graft_q215_prf") { root =>
       writePostingHalves(docs, root)
       graft.operators.InvertedIndex.prfSearchFromStore(
         s, root, docs, "doc_id", "text", q151Terms,
@@ -2941,11 +2771,7 @@ object TextQueries {
       .orderBy(col("lang"))
   }
   private val q156Sql = {
-    val w = s"(${dHash("'1:' || tk")} % 2001 - 1000) / 1000.0"
-    val emb = s"""list_transform(range(0, 32), d ->
-      |    list_reduce(list_prepend(0.0, list_transform(toks, tk ->
-      |      CASE WHEN ${dHash("tk")} % 32 = d THEN $w ELSE 0.0 END)),
-      |      (a, b) -> a + b))""".stripMargin
+    val emb = dHashedEmb("toks", 32)
     s"""WITH t AS (SELECT doc_id, lang, $dTokens AS toks FROM documents),
       |e0 AS (SELECT doc_id, lang, $emb AS emb FROM t),
       |n AS (SELECT doc_id, lang, doc_id % 97 = 3 AS is_eval, emb,

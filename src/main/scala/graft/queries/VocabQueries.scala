@@ -18,10 +18,7 @@ import graft.operators.Tokenizer
   * integers — bit-identical in any IEEE engine.
   */
 object VocabQueries {
-
-  /** DuckDB fragment: whitespace tokens of `text`. */
-  private val dTokens =
-    "list_filter(regexp_split_to_array(trim(text), '\\s+'), t -> t <> '')"
+  import TextQueries.dTokens
 
   // ---------------------------------------------------------------
   // q72 — the top-20 BPE merge candidates: corpus-wide adjacent-pair
@@ -345,9 +342,7 @@ object VocabQueries {
   // strings exactly, so the oracle is q178's chain verbatim.
   private def q207(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_q207_tok").toString
-    try {
+    StoreGates.withTempStore(s, "graft_q207_tok") { root =>
       def merges = graft.operators.ModelStore.cachedAt(s, root,
           s"q207_bpe:$dir") {
         Tokenizer.bpeTrain(docs.filter(col("doc_id") % 2 === 0),
@@ -365,9 +360,6 @@ object VocabQueries {
           Seq("lang"), trained)
         .orderBy(col("lang"))
         .localCheckpoint()
-    } finally {
-      val p = new org.apache.hadoop.fs.Path(root)
-      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
     }
   }
   private val q207Sql = q178Sql

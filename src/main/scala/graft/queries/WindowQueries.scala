@@ -299,6 +299,23 @@ object WindowQueries {
     GateStage(stage, inDir, hold, chunks.head.schema, fs, chunks.size)
   }
 
+  /** Runs `body` with `spark.sql.shuffle.partitions` set to `n`,
+    * restoring the previous value afterwards (also on a throw). A
+    * stream's state-store count is pinned at start from this conf: at
+    * 32, every micro-batch pays 32 state-store instances per stateful
+    * operator (checkpoint dirs, snapshot+delta files, task
+    * scheduling) for a ~4k-row bounded slice — nearly all of a
+    * streamed gate's fixed cost. 4 partitions carry the same
+    * semantics (the oracle still gates the result) at a fraction of
+    * the per-batch machinery. Batch queries are unaffected: frames
+    * returned after the restore re-plan under the restored setting. */
+  private[queries] def withShufflePartitions[T](s: SparkSession, n: String)(
+      body: => T): T = {
+    val prev = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", n)
+    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   /** The staging machinery of [[streamedIntervalGate]] with the final
     * projection/order left to the caller (`finish` — must also drop
     * the sentinel's `user_id < 0` rows): shared by the interval-join
@@ -313,23 +330,12 @@ object WindowQueries {
       .option("maxFilesPerTrigger", 1).parquet(gs.inDir.toString)
     val joined = xform(stream)
     val sink = tag + "_" + java.util.UUID.randomUUID().toString.take(8)
-    // The stream's state-store count is pinned at start from
-    // spark.sql.shuffle.partitions: at 32, every micro-batch pays 32
-    // state-store instances per stateful operator (checkpoint dirs,
-    // snapshot+delta files, task scheduling) for a ~4k-row bounded
-    // slice — nearly all of the gate's fixed cost. 4 partitions carry
-    // the same semantics (the oracle still gates the result) at a
-    // fraction of the per-batch machinery. Batch queries are
-    // unaffected: the conf is restored before returning, and the
-    // returned frame's sort re-plans under the restored setting.
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    withShufflePartitions(s, "4") {
       val q = joined.writeStream.format("memory").queryName(sink)
         .option("checkpointLocation", s"${gs.stage}/ckpt")
         .outputMode(outputMode).start()
       try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     gs.delete()
     finish(s.table(sink))
   }
@@ -355,15 +361,13 @@ object WindowQueries {
     * localCheckpoint'd before the staging dir is deleted. */
   private def streamedGateRestart(s: SparkSession, dir: String,
       tag: String, phases: Seq[Int],
-      cutOverride: Option[Long] = None)(xform: DataFrame => DataFrame)(
+      cutOverride: Option[Long])(xform: DataFrame => DataFrame)(
       finish: DataFrame => DataFrame): DataFrame = {
     val gs = stageChunks(s, dir, tag, cutOverride)
     require(phases.sum == gs.nChunks && phases.forall(_ > 0),
       s"phases $phases must partition the ${gs.nChunks} staged chunks")
     val outDir = s"${gs.stage}/out"
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    withShufflePartitions(s, "4") {
       var revealed = 0
       phases.foreach { n =>
         gs.reveal(revealed, n)
@@ -376,7 +380,7 @@ object WindowQueries {
           .outputMode("append").start()
         try q.processAllAvailable() finally q.stop()
       }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     val out = finish(s.read.parquet(outDir)).localCheckpoint()
     gs.delete()
     out
@@ -449,14 +453,12 @@ object WindowQueries {
       .option("maxFilesPerTrigger", 1).parquet(gs.inDir.toString)
     val out = xform(history, stream)
     val sink = tag + "_" + java.util.UUID.randomUUID().toString.take(8)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    withShufflePartitions(s, "4") {
       val q = out.writeStream.format("memory").queryName(sink)
         .option("checkpointLocation", s"${gs.stage}/ckpt")
         .outputMode("update").start()
       try q.processAllAvailable() finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     gs.delete()
     finish(s.table(sink))
   }
@@ -485,9 +487,7 @@ object WindowQueries {
     val history = s.read.schema(gs.schema)
       .parquet(new java.io.File(gs.hold, "c0.parquet").toString)
     val outDir = s"${gs.stage}/out"
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    withShufflePartitions(s, "4") {
       var revealed = 1
       Seq(1, 2).foreach { n =>
         gs.reveal(revealed, n)
@@ -500,7 +500,7 @@ object WindowQueries {
           .outputMode("append").start()
         try q.processAllAvailable() finally q.stop()
       }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     val out = finish(s.read.parquet(outDir)).localCheckpoint()
     gs.delete()
     out

@@ -88,7 +88,6 @@ class CurationPipelineSpec extends AnyFunSuite {
       // same stages with the same slice-order dedup rule: strip ->
       // (epoch, id)-ordered keeper -> classifier 'good' (lm cut 0 and
       // mix=true are pass-through in this fixture)
-      val epoch = (col("doc_id") % 3).as("__e")
       val stripped = Boilerplate.stripRepeatedLinesFromStore(spark,
         st.lineDf,
         docs.withColumn("text", Boilerplate.stripMarkup(col("text"))),

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, Multimodal}
@@ -19,7 +18,6 @@ class ImageDedupSpec extends AnyFunSuite {
   }
 
   test("dHash: byte-identical re-encodes hash identically; a top-row tint moves bits ONLY in band b0") {
-    import spark.implicits._
     val w = 16; val h = 12
     val df = media(
       1L -> Multimodal.pngNoiseBytes(w, h, "k1"),

@@ -107,8 +107,6 @@ class MetricsSpec extends AnyFunSuite {
   }
 
   test("AQE splits a skewed join partition at runtime (the q82 salting's runtime twin)") {
-    val s = spark
-    import s.implicits._
     // one hot key owning ~all rows, forced through a sort-merge join
     val hot = spark.range(0, 200000).select(
       lit(7L).as("k"), col("id").as("payload"))

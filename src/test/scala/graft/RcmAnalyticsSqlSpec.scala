@@ -10,18 +10,28 @@ import graft.etl.RcmPipeline
 
 /** Pins the `spark.sql` twin surface ([[graft.analytics.RcmAnalyticsSql]])
   * to the DataFrame DSL ([[graft.analytics.RcmAnalytics]]): for each of
-  * the reference's 11 analysis queries
-  * (SQL files under `/root/reference/Analysis/Big query/`) the SQL
-  * string and the
-  * DSL function must produce identical schemas and identical row
-  * multisets — same values bit-for-bit, since the BROADCAST hints make
-  * the physical plans (and hence double-aggregation order) agree.
+  * the reference's 11 analysis queries the SQL string and the DSL
+  * function, over the [[RcmFixtures]] day-2 star, must produce
+  * identical schemas and identical row multisets — same values
+  * bit-for-bit, since the BROADCAST hints make the physical plans (and
+  * hence double-aggregation order) agree.
   */
 class RcmAnalyticsSqlSpec extends AnyFunSuite {
   lazy val spark = Sessions.local(8)
 
-  private lazy val star =
-    RcmPipeline.run(spark, "/root/reference", LocalDate.parse("2024-12-01")).star
+  /** The day-2 star over [[RcmFixtures]]: day 1 is built and written,
+    * then day 2 runs SCD2 against day 1's written `dim_patients`, as
+    * the nightly job (and [[RcmNightlySpec]]) does. */
+  private lazy val star = {
+    val root = java.nio.file.Files.createTempDirectory("rcm_analytics_sql").toString
+    RcmFixtures.write(root, 1)
+    RcmPipeline.write(RcmPipeline.runRaw(RcmFixtures.extract(spark, root, 1),
+      LocalDate.parse("2024-12-01")).star, s"$root/star")
+    RcmFixtures.write(root, 2)
+    val existing = spark.read.parquet(s"$root/star/dim_patients.parquet").localCheckpoint()
+    RcmPipeline.runRaw(RcmFixtures.extract(spark, root, 2),
+      LocalDate.parse("2024-12-02"), Some(existing)).star
+  }
 
   private def canon(df: DataFrame): (Seq[String], Seq[String]) = {
     val schema = df.schema.fields.map(f => s"${f.name}:${f.dataType.sql}").toSeq

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.SparkException
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite

@@ -2,7 +2,6 @@ package graft
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.{col, to_date}
 import org.scalatest.funsuite.AnyFunSuite
 

@@ -163,7 +163,6 @@ class TombstoneSpec extends AnyFunSuite {
   }
 
   test("the tombstone mask preserves the pushed term filter beneath the anti-join") {
-    import spark.implicits._
     val root = tmp("graft_tomb_push")
     val docs = corpus
     InvertedIndex.writePostingStore(docs, "doc_id", "text", root, 1L)
