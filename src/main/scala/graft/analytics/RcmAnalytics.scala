@@ -63,19 +63,13 @@ object RcmAnalytics {
 
   /** Q5 — demographics by hospital (`pateint_metrics.sql:1-15`);
     * current rows only. */
-  def q5Demographics(star: StarSchema): DataFrame = {
-    val dim = star.dimensions("dim_patients")
-    // current-rows filter only applies to an SCD2-maintained dim (the
-    // plain modeling path has no is_current column)
-    val current = if (dim.columns.contains("is_current"))
-      dim.filter(col("is_current")) else dim
-    current
+  def q5Demographics(star: StarSchema): DataFrame =
+    star.dimensions("dim_patients").filter(col("is_current"))
       .groupBy(col("source_hospital"), col("Gender"))
       .agg(
         countDistinct(col("patient_sk")).as("NumberOfPatients"),
         avg("age").as("AveragePatientAge"))
       .orderBy(col("source_hospital"), desc("NumberOfPatients"))
-  }
 
   /** Q6 — insurance mix (`pateint_metrics.sql:17-27`). */
   def q6InsuranceMix(star: StarSchema): DataFrame =

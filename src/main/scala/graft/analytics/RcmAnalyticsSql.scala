@@ -114,21 +114,9 @@ object RcmAnalyticsSql {
         |GROUP BY d.year, d.quarter, d.month
         |ORDER BY d.year, d.quarter, d.month""".stripMargin)
 
-  /** The SQL for one named query, adapted to the star's actual shape:
-    * q5's current-rows filter only applies to an SCD2-maintained
-    * dim_patients — the plain modeling path has no `is_current` column
-    * (mirrors the DSL twin's guard, RcmAnalytics.q5Demographics). */
-  def sqlFor(star: StarSchema, name: String): String = {
-    val base = sql(name)
-    if (name == "q5_demographics" &&
-        !star.dimensions("dim_patients").columns.contains("is_current"))
-      base.replace("WHERE is_current", "WHERE TRUE")
-    else base
-  }
-
   /** Register the star and run one named query through `spark.sql`. */
   def run(spark: SparkSession, star: StarSchema, name: String): DataFrame = {
     register(star)
-    spark.sql(sqlFor(star, name))
+    spark.sql(sql(name))
   }
 }

@@ -1,11 +1,10 @@
 package graft.etl
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Cleaning
-import graft.operators.ParallelJobs
+import graft.operators.{ParallelJobs, SurrogateKeys}
 
 /** Phase-4 star-schema assembly — re-expression of
   * `/root/reference/python/dimensional_modeling.py`.
@@ -28,16 +27,23 @@ import graft.operators.ParallelJobs
   * phase are the `distinct()`s that build dim_procedures/dim_date,
   * which reduce map-side first (partial aggregation).
   *
+  * The star always carries an SCD2 `dim_patients`: [[createDimensions]]
+  * returns the patients' input snapshot under that name, the caller
+  * replaces it with [[graft.operators.ScdType2]]'s output (as
+  * [[RcmPipeline.runRaw]] does), and [[createFacts]] keys facts
+  * against its current rows.
+  *
   * Each star table is computed once per run. [[createDimensions]] pins
-  * every dimension except `dim_patients` (SCD2 replaces that one), and
-  * [[createFacts]] pins the four-lookup transactions join that both
-  * facts and [[validate]] read; the broadcasts, the CSV scans and the
-  * dimension windows then never re-run per consumer. The pins are
-  * small (dimensions plus one fact-sized frame) and their lifecycle
-  * belongs to the caller, as for [[graft.operators.ScdType2]]'s output:
-  * release them with [[graft.operators.Checkpoints.releasePinned]] once
-  * the star is written, or let the ContextCleaner drop them when the
-  * frames become unreachable.
+  * every dimension except `dim_patients`, and [[createFacts]] pins the
+  * four-lookup transactions join that both facts and [[validate]]
+  * read; the broadcasts, the CSV scans and the dense-key passes
+  * ([[graft.operators.SurrogateKeys.surrogateKeys]]) then never re-run
+  * per consumer. The pins are small (dimensions plus one fact-sized
+  * frame) and their lifecycle belongs to the caller, as for
+  * [[graft.operators.ScdType2]]'s output: release them with
+  * [[graft.operators.Checkpoints.releasePinned]] once the star is
+  * written, or let the ContextCleaner drop them when the frames become
+  * unreachable.
   */
 object RcmModeling {
 
@@ -49,7 +55,9 @@ object RcmModeling {
   final case class Validation(orphanedPatients: Long, nonPositiveAmounts: Long)
 
   /** The five dimensions. All but `dim_patients` come back pinned
-    * (computed here, once); `dim_patients` stays lazy for SCD2. */
+    * (computed here, once); `dim_patients` is the lazy SCD2 input
+    * snapshot (no version columns yet), which the caller replaces with
+    * the SCD2-maintained dimension before [[createFacts]]. */
   def createDimensions(tables: Map[String, DataFrame]): Map[String, DataFrame] = {
     val patients = tables("patients")
     val dimPatients = patients.select(
@@ -69,19 +77,18 @@ object RcmModeling {
     // dim_procedures: distinct codes; sk = rank of the sorted code (the
     // reference uses appearance order — an artifact of pandas state; we
     // pick the deterministic total order, SURVEY.md §7.3).
-    val dimProcedures = tables("transactions")
-      .select(col("ProcedureCode")).na.drop().distinct()
-      .withColumn("procedure_sk",
-        row_number().over(Window.orderBy(col("ProcedureCode"))).cast("long") - 1)
+    val dimProcedures = SurrogateKeys.surrogateKeys(tables("transactions"),
+        Seq("ProcedureCode"), "procedure_sk")
       .withColumn("ProcedureDescription",
         concat(lit("Desc for Code "), col("ProcedureCode").cast("string")))
       .select(col("ProcedureCode"), col("procedure_sk"), col("ProcedureDescription"))
 
-    // dim_date: transaction ∪ encounter dates (NOT claim dates).
-    val dimDate = tables("transactions").select(col("ServiceDate").as("full_date"))
-      .unionByName(tables("encounters").select(col("EncounterDate").as("full_date")))
-      .na.drop().distinct()
-      .withColumn("date_sk", row_number().over(Window.orderBy(col("full_date"))).cast("long") - 1)
+    // dim_date: transaction ∪ encounter dates (NOT claim dates), keyed
+    // like dim_procedures.
+    val dimDate = SurrogateKeys.surrogateKeys(
+        tables("transactions").select(col("ServiceDate").as("full_date"))
+          .unionByName(tables("encounters").select(col("EncounterDate").as("full_date"))),
+        Seq("full_date"), "date_sk")
       .withColumn("year", year(col("full_date")))
       .withColumn("month", month(col("full_date")))
       .withColumn("quarter", quarter(col("full_date")))
@@ -103,15 +110,14 @@ object RcmModeling {
   }
 
   /** The two facts. `fact_transactions` comes back pinned (computed
-    * here, once); `fact_claims` stays lazy over that pin. */
+    * here, once); `fact_claims` stays lazy over that pin. `dims` must
+    * carry the SCD2-maintained `dim_patients` (with `is_current`). */
   def createFacts(tables: Map[String, DataFrame], claims: DataFrame,
       dims: Map[String, DataFrame]): Map[String, DataFrame] = {
 
-    // When dim_patients is SCD2-maintained, facts key against CURRENT
-    // rows only (history versions are dimension-side).
-    val dimPatients = dims("dim_patients")
-    val patientsLookup = (if (dimPatients.columns.contains("is_current"))
-        dimPatients.filter(col("is_current")) else dimPatients)
+    // Facts key against CURRENT rows of the SCD2 dim_patients only
+    // (history versions are dimension-side).
+    val patientsLookup = dims("dim_patients").filter(col("is_current"))
       .select(col("unified_patient_id"), col("patient_sk"))
     val providersLookup = dims("dim_providers").select(col("ProviderID"), col("source_hospital"), col("provider_sk"))
     val dateLookup = dims("dim_date").select(col("full_date"), col("date_sk"))
@@ -164,10 +170,5 @@ object RcmModeling {
         count(when(col("Amount") <= 0, 1)))
       .head()
     Validation(row.getLong(0), row.getLong(1))
-  }
-
-  def run(tables: Map[String, DataFrame], claims: DataFrame): StarSchema = {
-    val dims = createDimensions(tables)
-    StarSchema(dims, createFacts(tables, claims, dims))
   }
 }

@@ -55,12 +55,9 @@ object RcmTransform {
       ("providers", Seq("ProviderID", "source_hospital"), "provider_sk"),
       ("departments", Seq("DeptID", "source_hospital"), "department_sk"))
     keyedDims.foldLeft(tables) { case (acc, (name, naturalKey, skName)) =>
-      acc.get(name) match {
-        case Some(df) =>
-          val sk = SurrogateKeys.surrogateKeys(df, naturalKey, skName)
-          acc + (name -> SurrogateKeys.attach(df, sk, naturalKey))
-        case None => acc
-      }
+      val df = acc(name)
+      val sk = SurrogateKeys.surrogateKeys(df, naturalKey, skName)
+      acc + (name -> SurrogateKeys.attach(df, sk, naturalKey))
     }
   }
 

@@ -39,27 +39,33 @@ import org.apache.spark.sql.types.{DateType, StringType}
   * the cluster even at billion-row dimension cardinality; for stable
   * cross-run keys swap [[SurrogateKeys.stableHashKeyChecked]] — the
   * trade-off is documented there.
+  *
+  * Lifecycle: the diff join and (above the broadcast threshold) the
+  * re-key are `localCheckpoint`s, not cached plans, so the
+  * ContextCleaner drops their blocks once unreachable. The operator
+  * releases the diff pin itself when the re-key's checkpoint strands
+  * it; the output's own pin belongs to the caller (release with
+  * [[Checkpoints.releasePinned]] after the write, or between calls
+  * with [[graft.Bench.releaseBlocks]]; CheckpointLifecycleSpec pins
+  * block stability under that pattern).
   */
 object ScdType2 {
 
   /** @param newSnap   new snapshot: `idCol` + `attrCols`
-    * @param existing  prior dimension state (None/empty → first run):
+    * @param existing  prior dimension state (None → first run):
     *                  `skCol, idCol, attrCols..., version,
-    *                  effective_date, expiry_date, is_current`
+    *                  effective_date, expiry_date, is_current`. An
+    *                  empty prior needs no special case: every
+    *                  snapshot row is right-only in the diff and comes
+    *                  out as the first run's row. The prior is read
+    *                  twice and never pinned here; a caller that
+    *                  overwrites its path before this output is
+    *                  written pins it first (RcmRun does).
     * @param idCol     business key (e.g. `unified_patient_id`)
     * @param attrCols  all carried attribute columns
     * @param tracked   subset of `attrCols` that triggers a new version
     * @param skCol     surrogate-key output column
     * @param asOf      run date (reference: `datetime.now()`)
-    * @param checkUniqueIds guard against duplicate business ids in
-    *                  `newSnap`: a duplicated id would fan out the
-    *                  full-outer join and silently emit multiple
-    *                  current rows per id. The guard is IN-PLAN (a
-    *                  per-id window count + `assert_true` filter), so
-    *                  it costs zero extra Spark jobs — its hash
-    *                  exchange on the id is the same distribution the
-    *                  diff join needs and is reused. A violation
-    *                  surfaces as a SparkException at execution time.
     * @param changedOnly incremental-batch mode: semi-join-prune the
     *                  existing CURRENT rows to ids present in
     *                  `newSnap` BEFORE the full-outer diff, so the
@@ -79,22 +85,25 @@ object ScdType2 {
     */
   def apply(newSnap: DataFrame, existing: Option[DataFrame], idCol: String,
       attrCols: Seq[String], tracked: Seq[String], skCol: String,
-      asOf: LocalDate, checkUniqueIds: Boolean = true,
-      changedOnly: Boolean = false): DataFrame = {
+      asOf: LocalDate, changedOnly: Boolean = false): DataFrame = {
 
-    val snap = if (!checkUniqueIds) newSnap else {
-      require(!newSnap.columns.contains("__graft_nid"),
-        "input already defines internal column __graft_nid")
-      newSnap
-        .withColumn("__graft_nid",
-          count(lit(1)).over(Window.partitionBy(col(idCol))))
-        .filter(assert_true(col("__graft_nid") <= 1,
-          concat(lit("ScdType2: duplicate business id in new snapshot: "),
-            col(idCol).cast("string"),
-            lit(s" — dedupe on $idCol upstream; one-current-row-per-id cannot hold otherwise")))
-          .isNull)
-        .drop("__graft_nid")
-    }
+    // Duplicate-id guard: a duplicated id would fan out the full-outer
+    // join and silently emit multiple current rows per id. It is
+    // IN-PLAN (a per-id window count + `assert_true` filter), so it
+    // costs no extra Spark job — its hash exchange on the id is the
+    // distribution the diff join needs and is reused. A violation
+    // surfaces as a SparkException at execution time.
+    require(!newSnap.columns.contains("__graft_nid"),
+      "input already defines internal column __graft_nid")
+    val snap = newSnap
+      .withColumn("__graft_nid",
+        count(lit(1)).over(Window.partitionBy(col(idCol))))
+      .filter(assert_true(col("__graft_nid") <= 1,
+        concat(lit("ScdType2: duplicate business id in new snapshot: "),
+          col(idCol).cast("string"),
+          lit(s" — dedupe on $idCol upstream; one-current-row-per-id cannot hold otherwise")))
+        .isNull)
+      .drop("__graft_nid")
 
     val asOfCol = lit(java.sql.Date.valueOf(asOf)).cast(DateType)
     val nullDate = lit(null).cast(DateType)
@@ -115,33 +124,10 @@ object ScdType2 {
       SurrogateKeys.sequentialKeys(df, Seq(col(idCol), col("version")), skCol)
         .select(outCols: _*)
 
-    // Materialize the prior state BEFORE the emptiness probe: the probe
-    // is an action, and the state is then read three more times
-    // (current-row join, unchanged-history join) — unmaterialized, a
-    // non-trivial upstream plan would re-execute each time.
-    // localCheckpoint (not cache): checkpoint blocks are released by
-    // the ContextCleaner once unreachable, while CacheManager pins
-    // cached plans until an explicit unpersist this operator has no
-    // hook for. Production multi-run deployments read the prior state
-    // from storage anyway (see RcmRun). Sessions that call this
-    // operator repeatedly should release consumed checkpoint blocks
-    // between calls (graft.Bench.releaseBlocks documents the pattern;
-    // CheckpointLifecycleSpec pins stability under it).
-    val ckExisting = existing.map(_.localCheckpoint())
-    val nonEmptyExisting = ckExisting.filter(!_.isEmpty)
-    // Release intermediates the result plan no longer reaches: when the
-    // re-key takes the checkpointing path its output is a fresh
-    // LogicalRDD, stranding these consumed frames beyond any release
-    // the caller could express (see Checkpoints.releaseConsumed).
-    def releasing(intermediates: Seq[DataFrame])(result: DataFrame): DataFrame = {
-      Checkpoints.releaseConsumed(result, intermediates)
-      result
-    }
-    nonEmptyExisting match {
+    existing match {
       case None =>
         // First run (`scd_implementation.py:21-30`).
-        releasing(ckExisting.toSeq)(
-          rekey(stamped(snap.select((idCol +: attrCols).map(col): _*), lit(1))))
+        rekey(stamped(snap.select((idCol +: attrCols).map(col): _*), lit(1)))
 
       case Some(existingDim) =>
         val cur0 = existingDim.filter(col("is_current"))
@@ -203,7 +189,13 @@ object ScdType2 {
           .unionByName(expiredOld)
           .unionByName(newVersion)
           .unionByName(brandNew)
-        releasing(ckExisting.toSeq :+ joined)(rekey(assembled))
+        // Release the diff pin once the result no longer reaches it:
+        // when the re-key takes the checkpointing path its output is a
+        // fresh LogicalRDD, stranding `joined` beyond any release the
+        // caller could express (see Checkpoints.releaseConsumed).
+        val result = rekey(assembled)
+        Checkpoints.releaseConsumed(result, Seq(joined))
+        result
     }
   }
 

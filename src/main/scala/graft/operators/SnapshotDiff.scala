@@ -6,9 +6,12 @@ import org.apache.spark.sql.functions._
 /** Snapshot differencing — the CDC primitive between two versions of
   * the same table: which keys were added, removed, or changed (on a
   * chosen set of tracked columns), and which survived untouched.
-  * [[ScdType2]] consumes exactly this classification to build history;
-  * this operator exposes it standalone, the way a 100 TB lakehouse
-  * compacts "yesterday's export vs today's" into an incremental feed.
+  * This operator exposes that classification standalone, the way a
+  * 100 TB lakehouse compacts "yesterday's export vs today's" into an
+  * incremental feed.
+  * [[ScdType2]] does NOT call it: its own diff compares strings the
+  * reference's null-as-empty way (`fillna('')`), where this operator's
+  * `<=>` counts null vs "" as a change.
   *
   * Shape: ONE full-outer shuffle join on the key (the unavoidable
   * comparison); change predicates are null-safe `<=>` on the tracked
@@ -24,29 +27,9 @@ object SnapshotDiff {
     * (in both, some tracked column differs null-safely), `unchanged`.
     */
   def diff(prev: DataFrame, next: DataFrame, keyCols: Seq[String],
-      trackedCols: Seq[String]): DataFrame = {
-    require(keyCols.nonEmpty, "keyCols must be non-empty")
-    require(!keyCols.contains("change_type") && !trackedCols.contains("change_type"),
-      "column change_type is reserved")
-    val p = prev.select((keyCols ++ trackedCols).map(col): _*)
-      .withColumn("__in_prev", lit(true))
-    val n = next.select((keyCols ++ trackedCols).map(col): _*)
-      .withColumn("__in_next", lit(true))
-    val renamedP = trackedCols.foldLeft(p)((d, c) => d.withColumnRenamed(c, s"__prev_$c"))
-    val renamedN = trackedCols.foldLeft(n)((d, c) => d.withColumnRenamed(c, s"__next_$c"))
-
-    val anyChange: Column = trackedCols
-      .map(c => !(col(s"__prev_$c") <=> col(s"__next_$c")))
-      .reduceOption(_ || _).getOrElse(lit(false))
-
-    renamedP.join(renamedN, keyCols, "full_outer")
-      .withColumn("change_type",
-        when(col("__in_prev").isNull, lit("added"))
-          .when(col("__in_next").isNull, lit("removed"))
-          .when(anyChange, lit("changed"))
-          .otherwise(lit("unchanged")))
+      trackedCols: Seq[String]): DataFrame =
+    classified(prev, next, keyCols, trackedCols)(_.otherwise(lit("unchanged")))
       .select(keyCols.map(col) :+ col("change_type"): _*)
-  }
 
   /** The incremental feed with payload: every key whose state moved
     * between the snapshots — `(key..., change_type, tracked...)` where
@@ -56,7 +39,18 @@ object SnapshotDiff {
     * 100 TB snapshots that differ in 0.1% of keys emits 0.1% of keys.
     */
   def changeSet(prev: DataFrame, next: DataFrame, keyCols: Seq[String],
-      trackedCols: Seq[String]): DataFrame = {
+      trackedCols: Seq[String]): DataFrame =
+    classified(prev, next, keyCols, trackedCols)(identity)
+      .filter(col("change_type").isNotNull)
+      .select(keyCols.map(col) ++ (col("change_type") +:
+        trackedCols.map(c => col(s"__next_$c").as(c))): _*)
+
+  /** The full-outer join of both snapshots on the key, tracked columns
+    * renamed `__prev_*` / `__next_*`, with `change_type` set to
+    * `added`, `removed` or `changed`; `finish` closes that `when`
+    * chain (the `unchanged` default, or none: null). */
+  private def classified(prev: DataFrame, next: DataFrame, keyCols: Seq[String],
+      trackedCols: Seq[String])(finish: Column => Column): DataFrame = {
     require(keyCols.nonEmpty, "keyCols must be non-empty")
     require(!keyCols.contains("change_type") && !trackedCols.contains("change_type"),
       "column change_type is reserved")
@@ -66,17 +60,16 @@ object SnapshotDiff {
       .withColumn("__in_next", lit(true))
     val renamedP = trackedCols.foldLeft(p)((d, c) => d.withColumnRenamed(c, s"__prev_$c"))
     val renamedN = trackedCols.foldLeft(n)((d, c) => d.withColumnRenamed(c, s"__next_$c"))
+
     val anyChange: Column = trackedCols
       .map(c => !(col(s"__prev_$c") <=> col(s"__next_$c")))
       .reduceOption(_ || _).getOrElse(lit(false))
+
     renamedP.join(renamedN, keyCols, "full_outer")
-      .withColumn("change_type",
+      .withColumn("change_type", finish(
         when(col("__in_prev").isNull, lit("added"))
           .when(col("__in_next").isNull, lit("removed"))
-          .when(anyChange, lit("changed")))
-      .filter(col("change_type").isNotNull)
-      .select(keyCols.map(col) ++ (col("change_type") +:
-        trackedCols.map(c => col(s"__next_$c").as(c))): _*)
+          .when(anyChange, lit("changed"))))
   }
 
   /** MERGE: apply a [[changeSet]] to the base snapshot — delete

@@ -310,11 +310,25 @@ object WindowQueries {
     * the per-batch machinery. Batch queries are unaffected: frames
     * returned after the restore re-plan under the restored setting. */
   private[queries] def withShufflePartitions[T](s: SparkSession, n: String)(
+      body: => T): T =
+    withConf(s, "spark.sql.shuffle.partitions", n)(body)
+
+  /** Runs `body` with the session conf `key` set to `value`; afterwards
+    * (also on a throw) restores the previous value, or unsets the key
+    * if it had none. */
+  private def withConf[T](s: SparkSession, key: String, value: String)(
       body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    val prev = s.conf.getOption(key)
+    s.conf.set(key, value)
+    try body finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
   }
+
+  /** Runs `body` on the RocksDB state-store provider, which
+    * `transformWithState` requires (the HDFS-backed default throws
+    * STATE_STORE_MULTIPLE_COLUMN_FAMILIES). */
+  private def withRocksDbStateStore[T](s: SparkSession)(body: => T): T =
+    withConf(s, "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   /** The staging machinery of [[streamedIntervalGate]] with the final
     * projection/order left to the caller (`finish` — must also drop
@@ -520,12 +534,8 @@ object WindowQueries {
   // This is the streaming twin of q134's signature-store warm start —
   // same day-2 economics: history is one batch scan at query start,
   // never rescanned per micro-batch.
-  private def q142(s: SparkSession, dir: String): DataFrame = {
-    val prevProvider =
-      s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+  private def q142(s: SparkSession, dir: String): DataFrame =
+    withRocksDbStateStore(s) {
       bootstrapGate(s, dir, "q142")((history, stream) => {
         import s.implicits._
         val historyKeys = history
@@ -538,10 +548,7 @@ object WindowQueries {
       })(
         _.filter(col("user_id") >= 0)
           .orderBy(col("user_id"), col("event_type"), col("day")))
-    } finally prevProvider.fold(
-      s.conf.unset("spark.sql.streaming.stateStore.providerClass"))(
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", _))
-  }
+    }
   private val q142Sql =
     """WITH e AS (
       |  SELECT event_id, user_id, event_type, epoch_us(ts) AS us,
@@ -578,12 +585,8 @@ object WindowQueries {
   // replayed batch double-writes into the exactly-once parquet sink
   // — all three break the q142 oracle. Same oracle as q142: the
   // restart must be invisible.
-  private def q143(s: SparkSession, dir: String): DataFrame = {
-    val prevProvider =
-      s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+  private def q143(s: SparkSession, dir: String): DataFrame =
+    withRocksDbStateStore(s) {
       bootstrapGateRestart(s, dir, "q143")((history, stream) => {
         import s.implicits._
         val historyKeys = history
@@ -596,10 +599,7 @@ object WindowQueries {
       })(
         _.filter(col("user_id") >= 0)
           .orderBy(col("user_id"), col("event_type"), col("day")))
-    } finally prevProvider.fold(
-      s.conf.unset("spark.sql.streaming.stateStore.providerClass"))(
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", _))
-  }
+    }
   private val q143Sql = q142Sql
 
   // ---------------------------------------------------------------
@@ -616,12 +616,8 @@ object WindowQueries {
   // q80, KMV here) has a bounded-state streaming twin. The sentinel
   // rows are filtered BEFORE the processor (their hashes must not
   // enter a real type's sketch); TimeMode.None needs no watermark.
-  private def q149(s: SparkSession, dir: String): DataFrame = {
-    val prevProvider =
-      s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+  private def q149(s: SparkSession, dir: String): DataFrame =
+    withRocksDbStateStore(s) {
       streamedGate(s, dir, "q149", outputMode = "update")(stream =>
         graft.streaming.EventStream.kmvSketchStream(
           s, stream.filter(col("user_id") >= 0), k = 32).toDF())(
@@ -629,10 +625,7 @@ object WindowQueries {
           .agg(max(col("n_seen")).as("n_seen"),
             max_by(col("sketch"), col("n_seen")).as("sketch"))
           .orderBy(col("event_type")))
-    } finally prevProvider.fold(
-      s.conf.unset("spark.sql.streaming.stateStore.providerClass"))(
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", _))
-  }
+    }
   private val q149Sql =
     """WITH e AS (SELECT event_type,
       |    CAST('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15) AS BIGINT) AS h
@@ -658,12 +651,8 @@ object WindowQueries {
   // check, with O(k) per-key state the same way q149's KMV bounds
   // its sketch. Values pass through state EXACTLY (no arithmetic),
   // so the doubles hash-match the source parquet.
-  private def q170(s: SparkSession, dir: String): DataFrame = {
-    val prevProvider =
-      s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+  private def q170(s: SparkSession, dir: String): DataFrame =
+    withRocksDbStateStore(s) {
       streamedGate(s, dir, "q170", outputMode = "update")(stream =>
         graft.streaming.EventStream.topKStream(
           s, stream.filter(col("user_id") >= 0), k = 5).toDF())(
@@ -673,10 +662,7 @@ object WindowQueries {
           .filter(col("n_seen") === col("__mx"))
           .select(col("event_type"), col("rank"), col("event_id"), col("value"))
           .orderBy(col("event_type"), col("rank")))
-    } finally prevProvider.fold(
-      s.conf.unset("spark.sql.streaming.stateStore.providerClass"))(
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", _))
-  }
+    }
   private val q170Sql =
     """SELECT event_type, rank, event_id, value FROM (
       |  SELECT event_type, event_id, value,
@@ -921,12 +907,8 @@ object WindowQueries {
   // oracle, so the running sum is an exact long however the batches
   // split. The memory sink in update mode retains every emission;
   // `finish` folds to the final row per user and drops the sentinel.
-  private def q137(s: SparkSession, dir: String): DataFrame = {
-    val prevProvider =
-      s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+  private def q137(s: SparkSession, dir: String): DataFrame =
+    withRocksDbStateStore(s) {
       streamedGate(s, dir, "q137", outputMode = "update")(stream => {
         import s.implicits._
         graft.streaming.EventStream.runningTotals(
@@ -937,10 +919,7 @@ object WindowQueries {
           .agg(max(col("n_events")).as("n_events"),
             max_by(col("total_micros"), col("n_events")).as("total_micros"))
           .orderBy(col("user_id")))
-    } finally prevProvider.fold(
-      s.conf.unset("spark.sql.streaming.stateStore.providerClass"))(
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", _))
-  }
+    }
   private val q137Sql =
     """SELECT user_id, COUNT(*) AS n_events,
       |  CAST(SUM(CAST(floor(value * 1000000 + 0.5) AS BIGINT)) AS BIGINT) AS total_micros

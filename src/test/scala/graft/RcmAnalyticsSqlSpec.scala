@@ -43,18 +43,6 @@ class RcmAnalyticsSqlSpec extends AnyFunSuite {
     (schema, rows)
   }
 
-  test("q5 twin adapts to a non-SCD2 dim_patients (no is_current column)") {
-    import org.apache.spark.sql.functions.col
-    val plainDim = star.dimensions("dim_patients")
-      .filter(col("is_current"))
-      .drop("is_current", "version", "effective_date", "expiry_date")
-    val plain = star.copy(dimensions = star.dimensions + ("dim_patients" -> plainDim))
-    val dsl = canon(RcmAnalytics.all("q5_demographics")(plain))
-    val sql = canon(RcmAnalyticsSql.run(spark, plain, "q5_demographics"))
-    assert(sql == dsl)
-    assert(dsl._2.nonEmpty)
-  }
-
   for (name <- RcmAnalytics.all.keys.toSeq.sorted) {
     test(s"$name: SQL twin is hash-identical to the DSL") {
       val dsl = canon(RcmAnalytics.all(name)(star))

@@ -126,19 +126,26 @@ object RcmFixtures {
       hospitals.map(h => (claimsFile(root, day, h), h)))
   }
 
+  /** The procedure codes transactions use, in ascending order: the
+    * `dim_procedures` members (either day). */
+  val dimProcedureCodes: Seq[Int] = (1 to transactionsPerHospital)
+    .map(i => procedureCodes(i % procedureCodes.size)).distinct.sorted
+
+  /** Transaction service dates ∪ encounter dates, ascending: the
+    * `dim_date` members (either day). */
+  val dimDates: Seq[java.time.LocalDate] = ((1 to transactionsPerHospital).map(serviceDate) ++
+    (1 to patientsPerHospital).map(encounterDate)).distinct.sortBy(_.toEpochDay)
+
   /** Row counts each star table must have after a night of `day`,
     * counted from the fixture's own definitions. */
-  def expectedRows(day: Int): Map[String, Long] = {
-    val txns = (1 to transactionsPerHospital)
+  def expectedRows(day: Int): Map[String, Long] =
     Map(
       "dim_patients" -> (2L * patientsPerHospital +
         (if (day == 2) newIds + trackedChanges else 0L)),
       "dim_providers" -> 2L * departments.size,
       "dim_departments" -> 2L * departments.size,
-      "dim_procedures" -> txns.map(i => procedureCodes(i % procedureCodes.size)).distinct.size.toLong,
-      "dim_date" -> (txns.map(serviceDate) ++
-        (1 to patientsPerHospital).map(encounterDate)).distinct.size.toLong,
+      "dim_procedures" -> dimProcedureCodes.size.toLong,
+      "dim_date" -> dimDates.size.toLong,
       "fact_transactions" -> 2L * transactionsPerHospital,
       "fact_claims" -> 2L * transactionsPerHospital)
-  }
 }

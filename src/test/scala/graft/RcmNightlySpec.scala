@@ -92,6 +92,19 @@ class RcmNightlySpec extends AnyFunSuite with TimeLimits {
     assert(versions(RcmFixtures.newId) == 1L)
   }
 
+  test("procedure_sk and date_sk are dense 0..n-1 in ProcedureCode / full_date order") {
+    day2
+    def keyed(t: String, natural: String, sk: String) = read(t)
+      .select(col(sk), col(natural)).orderBy(col(sk)).collect()
+      .map(r => r.getLong(0) -> r.get(1)).toSeq
+    val procedures = keyed("dim_procedures", "ProcedureCode", "procedure_sk")
+    assert(procedures == RcmFixtures.dimProcedureCodes.zipWithIndex.map {
+      case (code, i) => i.toLong -> code })
+    val dates = keyed("dim_date", "full_date", "date_sk")
+      .map { case (sk, d) => sk -> d.asInstanceOf[java.sql.Date].toLocalDate }
+    assert(dates == RcmFixtures.dimDates.zipWithIndex.map { case (d, i) => i.toLong -> d })
+  }
+
   test("claims resolve patient_sk through (TransactionID, source_hospital)") {
     day2
     val claims = read("fact_claims")

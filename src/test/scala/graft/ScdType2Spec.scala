@@ -2,7 +2,7 @@ package graft
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.functions.{col, to_date}
+import org.apache.spark.sql.functions.{col, lit, to_date}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ScdType2
@@ -42,6 +42,26 @@ class ScdType2Spec extends AnyFunSuite {
     assert(out.forall(r => r.getAs[Boolean]("is_current")))
     assert(out.forall(r => r.getAs[java.sql.Date]("effective_date").toString == "2024-06-01"))
     assert(out.forall(r => r.getAs[java.sql.Date]("expiry_date") == null))
+  }
+
+  test("an empty prior gives exactly the first-run rows and keys") {
+    val rows = snap(("b", "Bob", "1 Main"), ("a", "Ann", "2 Oak"), ("c", "Cal", "5 Pine"))
+    val firstRun = ScdType2(rows, None, "id", attrs, tracked, "sk", d2)
+    val emptyPrior = ScdType2(snap(("z", "Zed", "0 Nil")), None, "id", attrs,
+      tracked, "sk", d1).filter(lit(false))
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    val want = sorted(firstRun)
+    assert(want.size == 3)
+    for (pruned <- Seq(false, true)) {
+      val got = ScdType2(rows, Some(emptyPrior), "id", attrs, tracked, "sk", d2,
+        changedOnly = pruned)
+      // same columns and types; nullability is the diff path's, as
+      // for any non-empty prior
+      assert(got.schema.map(f => f.name -> f.dataType) ==
+        firstRun.schema.map(f => f.name -> f.dataType), s"changedOnly=$pruned")
+      assert(sorted(got) == want, s"changedOnly=$pruned")
+    }
   }
 
   private def secondRun(newSnap: org.apache.spark.sql.DataFrame) = {
