@@ -3,10 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Generic append-only batch store: the commit protocol behind
-  * [[Dedup.writeSignatureStore]] (which predates this helper and
-  * keeps its own copy), reusable for any frame a daily pipeline
-  * appends deltas to — posting lists ([[InvertedIndex]]), feature
-  * tables, document signatures. Layout is one parquet dir per
+  * [[Dedup.writeSignatureStore]] (which commits through [[append]]),
+  * reusable for any frame a daily pipeline appends deltas to —
+  * posting lists ([[InvertedIndex]]), feature tables, document
+  * signatures. Layout is one parquet dir per
   * committed batch (`root/batch=<id>`); a batch is staged under a
   * dot-dir (invisible to readers — the parquet source skips dot
   * paths) and RENAMED in atomically, so:
@@ -39,6 +39,22 @@ object BatchStore {
       .parquet(tmp.toString)
     require(fs.rename(tmp, dest), s"commit rename $tmp -> $dest failed")
   }
+
+  /** The exactly-once `foreachBatch` epoch rule every store sink
+    * shares: epoch `e` commits as batch id `1 + e`, and an epoch whose
+    * `root/batch=<id>` is already committed is a replay that writes
+    * nothing — the stage-and-rename commit means that dir is either
+    * complete or absent. `write(batch, id)` commits one epoch. Requires
+    * the replayed epoch to carry the same rows, which the checkpointed
+    * file/kafka sources guarantee. */
+  private[graft] def epochSink(root: String)(
+      write: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
+    (batch, epochId) => {
+      val id = 1L + epochId
+      val dest = new org.apache.hadoop.fs.Path(root, s"batch=$id")
+      val fs = dest.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
+      if (!fs.exists(dest)) write(batch, id)
+    }
 
   /** All committed batches as one frame; the `batch` partition column
     * rides along for auditing. */

@@ -172,17 +172,11 @@ object Boilerplate {
 
   /** Maintain the detector FROM A STREAM — the exactly-once epoch
     * discipline shared by every count store ([[LanguageModel
-    * .lmStoreSink]]): batch id = `baseBatchId + epochId`, committed
-    * epochs no-op on replay. */
+    * .lmStoreSink]], [[BatchStore.epochSink]]). */
   def lineDfStoreSink(idCol: String, domainCol: String, textCol: String,
-      root: String, baseBatchId: Long = 1L): (DataFrame, Long) => Unit =
-    (batch, epochId) => {
-      val id = baseBatchId + epochId
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-      if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"batch=$id")))
-        writeLineDfStore(batch, idCol, domainCol, textCol, root, id)
-    }
+      root: String): (DataFrame, Long) => Unit =
+    BatchStore.epochSink(root)(
+      writeLineDfStore(_, idCol, domainCol, textCol, root, _))
 
   /** Erase documents from the persisted detector — negated line-df
     * counts ([[LanguageModel.deleteFromLmStore]]'s contract: each doc

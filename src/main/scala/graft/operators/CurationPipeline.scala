@@ -474,7 +474,7 @@ object CurationPipeline {
       .drop("__ord")
   }
 
-  /** [[processSlice]] as a `foreachBatch` sink — batch id = `base +
+  /** [[processSlice]] as a `foreachBatch` sink — batch id = `1 +
     * epochId`, the exactly-once epoch discipline shared by every
     * store sink in the library. `models` (a per-stream
     * [[ModelCache]], recommended for any multi-epoch run) makes the
@@ -482,10 +482,10 @@ object CurationPipeline {
     * per-micro-batch ones; the caller releases it
     * (`models.releaseAll()`) when the stream ends. */
   def sink(st: Stores, gates: Gates, idCol: String, domainCol: String,
-      textCol: String, baseBatchId: Long = 1L,
+      textCol: String,
       models: Option[ModelCache] = None): (DataFrame, Long) => Unit =
     (batch, epochId) => processSlice(batch.sparkSession, st, gates,
-      batch, idCol, domainCol, textCol, baseBatchId + epochId, models)
+      batch, idCol, domainCol, textCol, 1L + epochId, models)
 
   /** The post-stream export: [[Packing.packSequences]] over the
     * accumulated kept store, summarized per shard. Packing is

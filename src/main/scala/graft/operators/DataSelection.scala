@@ -172,20 +172,14 @@ object DataSelection {
 
   /** Maintain the target model FROM A STREAM — the
     * [[LanguageModel.lmStoreSink]] epoch discipline on the selection
-    * model: batch id = `baseBatchId + epochId`, exactly-once under
-    * replay (single [[BatchStore]] dir — `batch=$id` committed
-    * completely or absent, nothing to heal). Served selection is
+    * model: exactly-once under replay ([[BatchStore.epochSink]] —
+    * single dir, nothing to heal). Served selection is
     * epoch-chunking-independent (bucket counts merge by SUM; q202
     * pins the streamed store against single-shot fitting). */
   def dsirStoreSink(idCol: String, textCol: String, buckets: Int,
-      root: String, baseBatchId: Long = 1L): (DataFrame, Long) => Unit =
-    (batch, epochId) => {
-      val id = baseBatchId + epochId
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-      if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"batch=$id")))
-        writeDsirTargetStore(batch, idCol, textCol, buckets, root, id)
-    }
+      root: String): (DataFrame, Long) => Unit =
+    BatchStore.epochSink(root)(
+      writeDsirTargetStore(_, idCol, textCol, buckets, root, _))
 
   /** ERASE documents from the persisted target model — negated bucket
     * counts ([[LanguageModel.deleteFromLmStore]]'s contract: each doc

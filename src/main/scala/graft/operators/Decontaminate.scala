@@ -117,20 +117,14 @@ object Decontaminate {
     * via the [[BatchStore]] stage-and-rename protocol. Results are
     * therefore independent of how the source chunks docs into epochs
     * (union semantics — the q166 argument), and the sink is
-    * EXACTLY-ONCE under at-least-once epoch replay: one dir per epoch,
-    * so a committed epoch's replay no-ops on the exists check — no
-    * two-dir crash window to heal, unlike the posting-store sink. */
+    * EXACTLY-ONCE under at-least-once epoch replay
+    * ([[BatchStore.epochSink]]: one dir per epoch — no two-dir crash
+    * window to heal, unlike the posting-store sink). */
   def contaminationSink(eval: DataFrame, idCol: String, textCol: String,
-      n: Int, root: String, keep: Seq[String],
-      baseBatchId: Long = 1L): (DataFrame, Long) => Unit =
-    (batch, epochId) => {
-      val id = baseBatchId + epochId
-      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-        batch.sparkSession.sessionState.newHadoopConf())
-      if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"batch=$id")))
-        BatchStore.append(
-          flagContaminated(batch, eval, idCol, textCol, n)
-            .select((keep :+ "is_contaminated").map(col): _*),
-          root, id)
-    }
+      n: Int, root: String, keep: Seq[String]): (DataFrame, Long) => Unit =
+    BatchStore.epochSink(root)((batch, id) =>
+      BatchStore.append(
+        flagContaminated(batch, eval, idCol, textCol, n)
+          .select((keep :+ "is_contaminated").map(col): _*),
+        root, id))
 }

@@ -483,18 +483,6 @@ object Dedup {
     n
   }
 
-  /** Delete leftover `.staging-*` dirs from CRASHED
-    * [[writeSignatureStore]] writes. Readers never see them (dot-dirs
-    * are invisible to the parquet source), so this is hygiene, not
-    * correctness — but a daily job that dies mid-write every so often
-    * would otherwise accrete dead bytes forever. Never touches
-    * committed `batch=` dirs; returns the number of dirs removed.
-    * Only run when no concurrent writer is staging (the
-    * [[graft.operators.Layout]] vacuum discipline). */
-  def vacuumSignatureStaging(spark: org.apache.spark.sql.SparkSession,
-      root: String): Int =
-    BatchStore.vacuumStaging(spark, root)
-
   // ------------- per-batch Bloom sidecars: history-flat store serves
 
   // Sidecar protocol, fpp sizing rationale and probe-job shape live in
@@ -1221,14 +1209,13 @@ object Dedup {
   }
 
   /** [[nearDupAdmitSlice]] as a `foreachBatch` sink — batch id =
-    * `baseBatchId + epochId`, the shared exactly-once epoch
-    * discipline. */
+    * `1 + epochId`, the shared exactly-once epoch discipline. */
   def nearDupAdmitSink(idCol: String, textCol: String, k: Int,
       shingleN: Int, bands: Int, threshold: Double, sigRoot: String,
-      keptRoot: String, baseBatchId: Long = 1L): (DataFrame, Long) => Unit =
+      keptRoot: String): (DataFrame, Long) => Unit =
     (batch, epochId) => nearDupAdmitSlice(batch.sparkSession, batch,
       idCol, textCol, k, shingleN, bands, threshold, sigRoot, keptRoot,
-      baseBatchId + epochId)
+      1L + epochId)
 
   // ------------------------------------ persisted Hamming-sketch store
 

@@ -142,19 +142,11 @@ object FeatureHashing {
   }
 
   /** Maintain the store FROM A STREAM — the exactly-once foreachBatch
-    * epoch discipline (batch id = `baseBatchId + epochId`; a replayed
-    * epoch's committed batch no-ops). Features are per-doc rows, so
-    * the served retrieval is epoch-chunking-independent. */
+    * epoch discipline ([[BatchStore.epochSink]]). Features are per-doc
+    * rows, so the served retrieval is epoch-chunking-independent. */
   def hashedStoreSink(idCol: String, textCol: String, dim: Int,
-      root: String, baseBatchId: Long = 1L): (DataFrame, Long) => Unit =
-    (batch, epochId) => {
-      val dest = new org.apache.hadoop.fs.Path(root,
-        s"batch=${baseBatchId + epochId}")
-      val fs = dest.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-      if (!fs.exists(dest))
-        writeHashedStore(batch, idCol, textCol, dim, root,
-          baseBatchId + epochId)
-    }
+      root: String): (DataFrame, Long) => Unit =
+    BatchStore.epochSink(root)(writeHashedStore(_, idCol, textCol, dim, root, _))
 
   /** Tombstone `ids` out of every serve (mask-on-read,
     * delete-volume-sized — the shared [[Tombstones]] discipline;

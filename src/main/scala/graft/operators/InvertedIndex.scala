@@ -455,7 +455,7 @@ object InvertedIndex {
   /** Maintain the posting store FROM A STREAM — index maintenance as
     * a `foreachBatch` streaming job, the production shape where the
     * daily-delta batches of [[writePostingStore]] arrive continuously
-    * instead. Batch id = `baseBatchId + epochId`, and the sink is
+    * instead. Batch id = `1 + epochId`, and the sink is
     * EXACTLY-ONCE under Structured Streaming's at-least-once epoch
     * replay:
     *  - epoch fully committed → the replay is a NO-OP (both dirs
@@ -468,11 +468,11 @@ object InvertedIndex {
     *  - epoch never started → the normal write.
     * Requires the replayed epoch to carry the same rows, which the
     * checkpointed file/kafka sources guarantee. */
-  def postingStoreSink(idCol: String, textCol: String, root: String,
-      baseBatchId: Long = 1L): (DataFrame, Long) => Unit =
+  def postingStoreSink(idCol: String, textCol: String,
+      root: String): (DataFrame, Long) => Unit =
     (batch, epochId) => {
       val spark = batch.sparkSession
-      val id = baseBatchId + epochId
+      val id = 1L + epochId
       val fs = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(spark.sessionState.newHadoopConf())
       val postingsDone = fs.exists(

@@ -502,9 +502,9 @@ object LanguageModel {
     * `foreachBatch` streaming job, the production shape where the
     * daily training slices of [[writeLmStore]] arrive continuously
     * instead ([[InvertedIndex.postingStoreSink]]'s discipline on the
-    * count store). Batch id = `baseBatchId + epochId`, and the sink
-    * is EXACTLY-ONCE under Structured Streaming's at-least-once epoch
-    * replay: the LM store is a SINGLE [[BatchStore]] dir (no stats
+    * count store). The sink is EXACTLY-ONCE under Structured
+    * Streaming's at-least-once epoch replay ([[BatchStore.epochSink]]):
+    * the LM store is a SINGLE [[BatchStore]] dir (no stats
     * sidecar — left counts and V derive from the counts themselves,
     * see [[bigramCounts]]), so there is no partial-commit crash
     * window to heal: the stage-and-rename commit means `batch=$id`
@@ -514,15 +514,9 @@ object LanguageModel {
     * ([[bigramLmScoreFromStore]]) is independent of how the source
     * chunked the corpus into epochs — counts merge by SUM (q194 pins
     * the streamed store against single-shot training). */
-  def lmStoreSink(idCol: String, textCol: String, root: String,
-      baseBatchId: Long = 1L): (DataFrame, Long) => Unit =
-    (batch, epochId) => {
-      val id = baseBatchId + epochId
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-      if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"batch=$id")))
-        writeLmStore(batch, idCol, textCol, root, id)
-    }
+  def lmStoreSink(idCol: String, textCol: String,
+      root: String): (DataFrame, Long) => Unit =
+    BatchStore.epochSink(root)(writeLmStore(_, idCol, textCol, root, _))
 
   /** ERASE documents from the persisted LM — the takedown path that
     * completes the tombstone discipline for the one served store

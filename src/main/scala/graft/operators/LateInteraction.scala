@@ -495,27 +495,20 @@ object LateInteraction {
 
   /** Maintain the token index FROM A STREAM — the
     * [[LanguageModel.lmStoreSink]] discipline on the vector store:
-    * batch id = `baseBatchId + epochId`, exactly-once under epoch
-    * replay (`batch=$id` either committed completely or absent, so a
-    * replay no-ops or writes normally; a crash between the batch
-    * commit and its Bloom sidecar leaves a batch that is simply
-    * always scanned until [[refreshTokenIndexBlooms]] — sound, the
-    * shared sidecar discipline). Each streamed passage must
+    * exactly-once under epoch replay ([[BatchStore.epochSink]]; a
+    * crash between the batch commit and its Bloom sidecar leaves a
+    * batch that is simply always scanned until
+    * [[refreshTokenIndexBlooms]] — sound, the shared sidecar
+    * discipline). Each streamed passage must
     * arrive wholly in one epoch (the per-passage distinct-token
     * collapse happens within the batch), which file/kafka sources
     * carrying whole documents guarantee. Serving is independent of
     * epoch chunking — the store is a union of per-passage rows
     * (q200 pins the streamed store against the batch build). */
   def tokenIndexSink(passageCol: String, textCol: String, dim: Int,
-      root: String, baseBatchId: Long = 1L,
-      buckets: Int = DefaultBuckets): (DataFrame, Long) => Unit =
-    (batch, epochId) => {
-      val id = baseBatchId + epochId
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-      if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"batch=$id")))
-        writeTokenIndex(batch, passageCol, textCol, dim, root, id, buckets)
-    }
+      root: String): (DataFrame, Long) => Unit =
+    BatchStore.epochSink(root)(
+      writeTokenIndex(_, passageCol, textCol, dim, root, _))
 
   /** ERASE passages from the token index — the shared tombstone
     * discipline ([[Tombstones]]): commit only the removed ids; every

@@ -179,7 +179,7 @@ object Packing {
   }
 
   /** [[packIncrement]] as a `foreachBatch` sink — batch id =
-    * `baseBatchId + epochId`, the exactly-once epoch discipline every
+    * `1 + epochId`, the exactly-once epoch discipline every
     * store sink in the library shares. UNLIKE the order-free count
     * stores, arrival order is SEMANTIC here (a slice lays out after
     * the epochs before it), so the source must deliver slices in
@@ -188,10 +188,9 @@ object Packing {
     * crash between them heals on the replay ([[packIncrement]]'s
     * protocol). */
   def packIncrementSink(idCol: String, textCol: String, shards: Int,
-      budgetTokens: Long, root: String,
-      baseBatchId: Long = 1L): (DataFrame, Long) => Unit =
+      budgetTokens: Long, root: String): (DataFrame, Long) => Unit =
     (batch, epochId) => packIncrement(batch, idCol, textCol, shards,
-      budgetTokens, root, baseBatchId + epochId)
+      budgetTokens, root, 1L + epochId)
 
   /** Global ORDER-PRESERVING token-budget sharding: documents are laid
     * out in `idCol` order and cut into shards of ~`budget` tokens, so

@@ -132,20 +132,14 @@ object QualityClassifier {
 
   /** Maintain the model FROM A STREAM — the [[LanguageModel
     * .lmStoreSink]] epoch discipline on the classifier's count store:
-    * batch id = `baseBatchId + epochId`, exactly-once under replay
-    * (single [[BatchStore]] dir — `batch=$id` committed completely or
-    * absent, nothing to heal). Served classification is
+    * exactly-once under replay ([[BatchStore.epochSink]] — single dir,
+    * nothing to heal). Served classification is
     * epoch-chunking-independent (counts merge by SUM; q213 pins the
     * streamed store against single-shot training). */
   def qualityStoreSink(labelCol: String, textCol: String, buckets: Int,
-      root: String, baseBatchId: Long = 1L): (DataFrame, Long) => Unit =
-    (batch, epochId) => {
-      val id = baseBatchId + epochId
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-      if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"batch=$id")))
-        writeQualityStore(batch, labelCol, textCol, buckets, root, id)
-    }
+      root: String): (DataFrame, Long) => Unit =
+    BatchStore.epochSink(root)(
+      writeQualityStore(_, labelCol, textCol, buckets, root, _))
 
   /** Erase labeled documents from the persisted model — negated
     * per-class feature counts ([[LanguageModel.deleteFromLmStore]]'s

@@ -1191,20 +1191,13 @@ object Similarity {
     * batch ([[writeIvfPqIndex]]). Coding is stateless across vectors
     * (the frozen model is the only shared state), so the served index
     * is independent of epoch chunking, and the sink is EXACTLY-ONCE
-    * under at-least-once replay: one dir per epoch, committed epochs
-    * no-op on the exists check (the [[graft.operators.Decontaminate
-    * .contaminationSink]] shape — no two-dir crash window). */
+    * under at-least-once replay ([[BatchStore.epochSink]]: one dir per
+    * epoch — no two-dir crash window). */
   def ivfPqIndexSink(coarse: DataFrame, codebook: DataFrame,
-      idCol: String, vecCol: String, dim: Int, m: Int, root: String,
-      baseBatchId: Long = 1L): (DataFrame, Long) => Unit =
-    (batch, epochId) => {
-      val id = baseBatchId + epochId
-      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-        batch.sparkSession.sessionState.newHadoopConf())
-      if (!fs.exists(new org.apache.hadoop.fs.Path(root, s"batch=$id")))
-        writeIvfPqIndex(batch, coarse, codebook, idCol, vecCol, dim, m,
-          root, id)
-    }
+      idCol: String, vecCol: String, dim: Int, m: Int,
+      root: String): (DataFrame, Long) => Unit =
+    BatchStore.epochSink(root)(writeIvfPqIndex(_, coarse, codebook, idCol,
+      vecCol, dim, m, root, _))
 
   /** DELETE vectors from the served IVF-PQ index — the
     * [[Tombstones]] discipline (an embedding of an erased document is

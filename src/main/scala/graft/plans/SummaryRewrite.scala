@@ -140,20 +140,14 @@ object SummaryRewrite {
 
   /** Maintain the rollup FROM A STREAM — [[appendRollupSlice]] as an
     * exactly-once `foreachBatch` sink (the count-store epoch
-    * discipline: batch id = `baseBatchId + epochId`, committed epochs
-    * no-op on replay), INCLUDING the freshness refresh: every epoch's
+    * discipline, [[graft.operators.BatchStore.epochSink]]), INCLUDING the freshness refresh: every epoch's
     * commit re-resolves the registrations serving `summaryRoot`, so a
     * dashboard query rewritten onto the rollup sees each micro-batch
     * as it lands (oracle-gated, q217). */
   def rollupSink(keys: Seq[String], measures: Seq[String],
-      summaryRoot: String, baseBatchId: Long = 1L): (DataFrame, Long) => Unit =
-    (batch, epochId) => {
-      val id = baseBatchId + epochId
-      val fs = new org.apache.hadoop.fs.Path(summaryRoot)
-        .getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-      if (!fs.exists(new org.apache.hadoop.fs.Path(summaryRoot, s"batch=$id")))
-        appendRollupSlice(batch, keys, measures, summaryRoot, id)
-    }
+      summaryRoot: String): (DataFrame, Long) => Unit =
+    graft.operators.BatchStore.epochSink(summaryRoot)(
+      appendRollupSlice(_, keys, measures, summaryRoot, _))
 
   /** Re-resolve (fresh file listing) every registered rollup whose
     * summary location is `summaryPath` — the maintenance half of the

@@ -318,7 +318,18 @@ object CurationQueries {
       out
     }
   }
-  private val q228Sql = {
+  /** Per-shard packing stats over `pc(doc_id, shard, n_tokens,
+    * cum_before)` with 512-token sequences (q228 and the curation
+    * chain's packing tail). Unstripped. */
+  private lazy val packStatsSelect =
+    """SELECT shard, COUNT(*) AS n_docs,
+      |  COUNT(DISTINCT cum_before // 512) AS n_seqs,
+      |  CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens,
+      |  CAST(SUM(CASE WHEN n_tokens > 0
+      |    AND (cum_before + n_tokens - 1) // 512 > cum_before // 512
+      |    THEN 1 ELSE 0 END) AS BIGINT) AS n_straddles
+      |FROM pc GROUP BY shard ORDER BY shard"""
+  private lazy val q228Sql = {
     val h = dHash("CAST(doc_id AS VARCHAR)")
     s"""WITH pk AS (SELECT doc_id, $h AS h,
        |  CAST(len($dTokens) AS BIGINT) AS n_tokens FROM documents
@@ -329,13 +340,7 @@ object CurationQueries {
        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
        |    AS cum_before
        |  FROM pk)
-       |SELECT shard, COUNT(*) AS n_docs,
-       |  COUNT(DISTINCT cum_before // 512) AS n_seqs,
-       |  CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens,
-       |  CAST(SUM(CASE WHEN n_tokens > 0
-       |    AND (cum_before + n_tokens - 1) // 512 > cum_before // 512
-       |    THEN 1 ELSE 0 END) AS BIGINT) AS n_straddles
-       |FROM pc GROUP BY shard ORDER BY shard""".stripMargin
+       |$packStatsSelect""".stripMargin
   }
 
   // ---------------------------------------------------------------
@@ -406,15 +411,9 @@ object CurationQueries {
       val stage = stager.stage
       (0 to 2).foreach(e =>
         stager.stageSlice(docs.filter(col("doc_id") % 3 === e)))
-      val snk = Packing.packIncrementSink("doc_id", "text", shards = 4,
-        budgetTokens = 512, store)
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-        .writeStream
-        .foreachBatch((b: DataFrame, id: Long) => snk(b, id))
-        .option("checkpointLocation", ckpt)
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      StoreGates.drainFileStream(s, docs.schema, stage, ckpt)(
+        Packing.packIncrementSink("doc_id", "text", shards = 4,
+          budgetTokens = 512, store))
       graft.operators.BatchStore.read(s, store)
         .select(col("doc_id"), col("shard"), col("n_tokens"),
           col("seq_id"), col("seq_offset"), col("straddles"),
@@ -610,15 +609,10 @@ object CurationQueries {
         boilerLined(Tables.documents(s, dir)),
         "doc_id", "source", "text", minDf = 10L)
       .orderBy(col("doc_id"))
-  /** The q209/q212 shared oracle tail: given CTEs ending in a frame
-    * `lined(doc_id, source, ltext)`, replay the line split, md5 line
-    * hash, distinct-doc frequency, threshold, and order-preserving
-    * rebuild. */
-  private def boilerplateSqlTail(linedCtes: String): String =
-    // concatenate AFTER the tail's stripMargin — a second stripMargin
-    // over the embedded CTE would eat the first `|` of a line-leading
-    // `||` continuation
-    linedCtes + ",\n" +
+  /** The line split, md5 line hash, distinct-doc frequency and
+    * threshold over a frame `lined(doc_id, source, ltext)`: the lines
+    * that survive, `kept(doc_id, source, pos, line)`. Unstripped. */
+  private lazy val boilerKeptCtes =
     s"""ls AS (SELECT doc_id, source, string_split(ltext, chr(10)) AS ls
       |  FROM lined),
       |lines AS (SELECT doc_id, source, u.i AS pos, ls[u.i] AS line
@@ -630,14 +624,24 @@ object CurationQueries {
       |kept AS (SELECT l.doc_id, l.source, l.pos, l.line
       |  FROM lines l LEFT JOIN boiler b
       |    ON l.source = b.source AND ${dHash("l.line")} = b.lh
-      |  WHERE b.lh IS NULL),
+      |  WHERE b.lh IS NULL),"""
+  /** The q209/q212 shared oracle tail: given CTEs ending in a frame
+    * `lined(doc_id, source, ltext)`, replay the line split, md5 line
+    * hash, distinct-doc frequency, threshold, and order-preserving
+    * rebuild. */
+  private def boilerplateSqlTail(linedCtes: String): String =
+    // concatenate AFTER the tail's stripMargin — a second stripMargin
+    // over the embedded CTE would eat the first `|` of a line-leading
+    // `||` continuation
+    linedCtes + ",\n" +
+    s"""$boilerKeptCtes
       |tot AS (SELECT doc_id, len(ls) AS n_lines FROM ls)
       |SELECT k.doc_id, k.source, CAST(t.n_lines AS BIGINT) AS n_lines,
       |  CAST(COUNT(*) AS BIGINT) AS n_kept,
       |  string_agg(k.line, chr(10) ORDER BY k.pos) AS text
       |FROM kept k JOIN tot t ON k.doc_id = t.doc_id
       |GROUP BY 1, 2, 3 ORDER BY k.doc_id""".stripMargin
-  private val q209Sql = boilerplateSqlTail(boilerLinedCte)
+  private lazy val q209Sql = boilerplateSqlTail(boilerLinedCte)
 
   // ---------------------------------------------------------------
   // q214 — THE COMPOSED CURATION PIPELINE (boilerplate strip →
@@ -674,20 +678,9 @@ object CurationQueries {
     graft.operators.Checkpoints.releasePinned(st)
     out
   }
-  private val q214Sql =
+  private lazy val q214Sql =
     boilerLinedCte + ",\n" +
-    s"""ls AS (SELECT doc_id, source, string_split(ltext, chr(10)) AS ls
-      |  FROM lined),
-      |lines AS (SELECT doc_id, source, u.i AS pos, ls[u.i] AS line
-      |  FROM ls, UNNEST(generate_series(1, len(ls))) AS u(i)),
-      |dfh AS (SELECT source, lh, COUNT(*) AS df FROM (
-      |    SELECT DISTINCT doc_id, source, ${dHash("line")} AS lh FROM lines)
-      |  GROUP BY 1, 2),
-      |boiler AS (SELECT source, lh FROM dfh WHERE df >= 10),
-      |kept AS (SELECT l.doc_id, l.source, l.pos, l.line
-      |  FROM lines l LEFT JOIN boiler b
-      |    ON l.source = b.source AND ${dHash("l.line")} = b.lh
-      |  WHERE b.lh IS NULL),
+    s"""$boilerKeptCtes
       |reb AS (SELECT doc_id, source,
       |    string_agg(line, chr(10) ORDER BY pos) AS text
       |  FROM kept GROUP BY 1, 2),
@@ -817,27 +810,31 @@ object CurationQueries {
       val masked = serve()
       QC.compactQualityStore(s, root, newBatchId = 4L)
       val compacted = serve()
-      val out = StoreGates.compactionIdentityGate(masked, compacted,
-          "quality-store compaction changed classifications")
-        .join(cand.select(col("doc_id"), col("label").as("label_true")),
-          Seq("doc_id"))
-        .groupBy(col("label_true"), col("label_pred"))
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy(col("label_true"), col("label_pred"))
-        .localCheckpoint()
+      val out = confusion(StoreGates.compactionIdentityGate(masked, compacted,
+        "quality-store compaction changed classifications"), cand)
       graft.operators.Checkpoints.releasePinned(masked)
       graft.operators.Checkpoints.releasePinned(compacted)
       out
     }
   }
-  /** q210's NB-replay oracle with a pluggable TRAINING filter — q213
-    * streams the full labeled slice (no erasure), so its oracle
-    * trains on everything outside the held-out quarter. */
-  private def qualityNbSqlFor(trainWhere: String): String =
-    s"""WITH tr AS (SELECT
+  /** q210/q213's confusion counts: predicted labels joined to the
+    * candidates' true labels, pinned so the store can go. */
+  private def confusion(pred: DataFrame, cand: DataFrame): DataFrame =
+    pred.join(cand.select(col("doc_id"), col("label").as("label_true")),
+        Seq("doc_id"))
+      .groupBy(col("label_true"), col("label_pred"))
+      .agg(count(lit(1)).as("n_docs"))
+      .orderBy(col("label_true"), col("label_pred"))
+      .localCheckpoint()
+
+  /** The classifier's naive-Bayes model CTEs: labeled training tokens
+    * `tr` read from `trainFrom`, hashed uni+bigram features `tf`,
+    * per-(label, bucket) counts `cb`, label totals `cl`, vocabulary
+    * `v` and per-label smoothing `cls`. Unstripped. */
+  private def nbTrainCtes(trainFrom: String): String =
+    s"""tr AS (SELECT
       |    CASE WHEN n_chars >= 300 THEN 'good' ELSE 'bad' END AS label,
-      |    $dTokens AS toks FROM documents
-      |  WHERE $trainWhere),
+      |    $dTokens AS toks FROM $trainFrom),
       |tf AS (SELECT label, ${dHash("g")} % 4096 AS bucket FROM (
       |  SELECT label, unnest(toks) AS g FROM tr
       |  UNION ALL
@@ -849,11 +846,12 @@ object CurationQueries {
       |cls AS (SELECT label, cl, v.v AS v,
       |    CAST(floor(CAST(1 AS DOUBLE) * 1073741824.0 / (cl + v.v))
       |      AS BIGINT) AS floor0
-      |  FROM cl CROSS JOIN v),
-      |ca AS (SELECT doc_id,
-      |    CASE WHEN n_chars >= 300 THEN 'good' ELSE 'bad' END AS label_true,
-      |    $dTokens AS toks FROM documents WHERE doc_id % 4 = 0),
-      |cf AS (SELECT doc_id, ${dHash("g")} % 4096 AS bucket FROM (
+      |  FROM cl CROSS JOIN v),"""
+  /** Scores every candidate in `ca` (doc_id, toks) under each label of
+    * [[nbTrainCtes]]' model: `sc` (doc_id, label, score_fp).
+    * Unstripped. */
+  private lazy val nbScoreCtes =
+    s"""cf AS (SELECT doc_id, ${dHash("g")} % 4096 AS bucket FROM (
       |  SELECT doc_id, unnest(toks) AS g FROM ca
       |  UNION ALL
       |  SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 1),
@@ -870,13 +868,25 @@ object CurationQueries {
       |    COALESCE(seen.seen_fp, 0)
       |      + (nf.n_feats - COALESCE(seen.n_seen, 0)) * cls.floor0 AS score_fp
       |  FROM nf CROSS JOIN cls
-      |  LEFT JOIN seen ON seen.doc_id = nf.doc_id AND seen.label = cls.label),
+      |  LEFT JOIN seen ON seen.doc_id = nf.doc_id AND seen.label = cls.label),"""
+  /** q210's NB-replay oracle with a pluggable TRAINING filter — q213
+    * streams the full labeled slice (no erasure), so its oracle
+    * trains on everything outside the held-out quarter. */
+  private def qualityNbSqlFor(trainWhere: String): String = {
+    val train = s"""documents
+      |  WHERE $trainWhere"""
+    s"""WITH ${nbTrainCtes(train)}
+      |ca AS (SELECT doc_id,
+      |    CASE WHEN n_chars >= 300 THEN 'good' ELSE 'bad' END AS label_true,
+      |    $dTokens AS toks FROM documents WHERE doc_id % 4 = 0),
+      |$nbScoreCtes
       |pred AS (SELECT doc_id, label AS label_pred FROM (
       |  SELECT doc_id, label, row_number() OVER (PARTITION BY doc_id
       |    ORDER BY score_fp DESC, label) AS rn FROM sc) WHERE rn = 1)
       |SELECT ca.label_true, pred.label_pred, COUNT(*) AS n_docs
       |FROM pred JOIN ca ON pred.doc_id = ca.doc_id
       |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
+  }
   private val q210Sql =
     qualityNbSqlFor("doc_id % 4 <> 0 AND doc_id % 5 <> 0")
 
@@ -905,13 +915,7 @@ object CurationQueries {
     ) { store =>
       val served = QC.classifyFromStore(s, store, cand,
         "doc_id", "text", buckets = 4096)
-      val out = served
-        .join(cand.select(col("doc_id"), col("label").as("label_true")),
-          Seq("doc_id"))
-        .groupBy(col("label_true"), col("label_pred"))
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy(col("label_true"), col("label_pred"))
-        .localCheckpoint()
+      val out = confusion(served, cand)
       graft.operators.Checkpoints.releasePinned(served)
       out
     }
@@ -947,32 +951,8 @@ object CurationQueries {
         .localCheckpoint()
     }
   }
-  private val q211Sql =
-    s"""WITH tr AS (SELECT doc_id, $dTokens AS toks FROM documents
-      |  WHERE doc_id % 3 <> 0),
-      |tb AS (SELECT doc_id, unnest(list_transform(
-      |    generate_series(1, len(toks) - 1),
-      |    i -> {'w1': toks[i], 'w2': toks[i + 1]})) AS bg FROM tr),
-      |tbg AS (SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2 FROM tb),
-      |cb AS (SELECT w1, w2, COUNT(*) AS cnt FROM tbg GROUP BY 1, 2),
-      |cl AS (SELECT w1, CAST(SUM(cnt) AS BIGINT) AS cl FROM cb GROUP BY 1),
-      |v AS (SELECT COUNT(DISTINCT w2) AS v FROM cb),
-      |ca AS (SELECT doc_id, $dTokens AS toks FROM documents
-      |  WHERE doc_id % 3 = 0),
-      |cab AS (SELECT doc_id, unnest(list_transform(
-      |    generate_series(1, len(toks) - 1),
-      |    i -> {'w1': toks[i], 'w2': toks[i + 1]})) AS bg FROM ca),
-      |cbg AS (SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2 FROM cab),
-      |sc AS (SELECT c.doc_id,
-      |    CAST(floor(CAST(COALESCE(cb.cnt, 0) + 1 AS DOUBLE) * 1073741824.0
-      |      / (COALESCE(cl.cl, 0) + v.v)) AS BIGINT) AS contrib
-      |  FROM cbg c
-      |  LEFT JOIN cb ON c.w1 = cb.w1 AND c.w2 = cb.w2
-      |  LEFT JOIN cl ON c.w1 = cl.w1
-      |  CROSS JOIN v),
-      |agg AS (SELECT doc_id, CAST(SUM(contrib) AS BIGINT) AS lm_fp,
-      |    COUNT(*) AS n_bigrams
-      |  FROM sc GROUP BY 1),
+  private lazy val q211Sql =
+    s"""${TextQueries.laplaceAggCtes("doc_id % 3 <> 0")},
       |scg AS (SELECT a.doc_id, d.source,
       |    CAST(a.n_bigrams AS BIGINT) AS n_bigrams, a.lm_fp,
       |    CAST(a.lm_fp AS DOUBLE) / a.n_bigrams AS lm_avg
@@ -1203,17 +1183,10 @@ object CurationQueries {
       // pre-trained stores never change mid-stream here; the dedup
       // signature store does, and is deliberately NOT model-cached)
       val models = new graft.operators.ModelCache
-      val drain: () => Unit = () => {
-        val snk = CP.sink(stores, gates, "doc_id", "source", "text",
-          models = Some(models))
-        val q = s.readStream.schema(stream.drop("__epoch").schema)
-          .option("maxFilesPerTrigger", "1").parquet(stage)
-          .writeStream
-          .foreachBatch((b: DataFrame, id: Long) => snk(b, id))
-          .option("checkpointLocation", ckpt)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      val drain: () => Unit = () =>
+        StoreGates.drainFileStream(s, stream.drop("__epoch").schema, stage,
+          ckpt)(CP.sink(stores, gates, "doc_id", "source", "text",
+          models = Some(models)))
       try runStream(stageSlices, drain)
       finally models.releaseAll()
       // the retention leg: drop whole ledger epochs below the cutoff
@@ -1272,8 +1245,10 @@ object CurationQueries {
     withCurationDag(s, dir, "graft_q224", ledger = true) { (stage, drain) =>
       stage(Seq(0L, 1L, 2L)); drain()
     }
-  private lazy val q224Sql = curationChainSql + """
-      |SELECT r.doc_id, r.source, CAST(r.epoch AS BIGINT) AS epoch,
+  /** Each streamed doc's first failing stage over the curation chain's
+    * survivor CTEs (q224/q243's ledger oracle). Unstripped. */
+  private lazy val ledgerStagesSelect =
+    """SELECT r.doc_id, r.source, CAST(r.epoch AS BIGINT) AS epoch,
       |  CASE WHEN d.doc_id IS NULL THEN 'dedup'
       |       WHEN g.doc_id IS NULL THEN 'quality'
       |       WHEN l.doc_id IS NULL THEN 'lm'
@@ -1283,7 +1258,9 @@ object CurationQueries {
       |LEFT JOIN ded d ON r.doc_id = d.doc_id
       |LEFT JOIN goodk g ON r.doc_id = g.doc_id
       |LEFT JOIN lmk l ON r.doc_id = l.doc_id
-      |LEFT JOIN mix m ON r.doc_id = m.doc_id
+      |LEFT JOIN mix m ON r.doc_id = m.doc_id"""
+  private lazy val q224Sql = curationChainSql + s"""
+      |$ledgerStagesSelect
       |ORDER BY r.doc_id""".stripMargin
   // ---------------------------------------------------------------
   // q243 — LEDGER RETENTION IN THE LIFECYCLE (q224's chain +
@@ -1300,18 +1277,8 @@ object CurationQueries {
       retireLedgerBelow = Some(2L)) { (stage, drain) =>
       stage(Seq(0L, 1L, 2L)); drain()
     }
-  private lazy val q243Sql = curationChainSql + """
-      |SELECT r.doc_id, r.source, CAST(r.epoch AS BIGINT) AS epoch,
-      |  CASE WHEN d.doc_id IS NULL THEN 'dedup'
-      |       WHEN g.doc_id IS NULL THEN 'quality'
-      |       WHEN l.doc_id IS NULL THEN 'lm'
-      |       WHEN m.doc_id IS NULL THEN 'mixture'
-      |       ELSE 'kept' END AS stage
-      |FROM reb r
-      |LEFT JOIN ded d ON r.doc_id = d.doc_id
-      |LEFT JOIN goodk g ON r.doc_id = g.doc_id
-      |LEFT JOIN lmk l ON r.doc_id = l.doc_id
-      |LEFT JOIN mix m ON r.doc_id = m.doc_id
+  private lazy val q243Sql = curationChainSql + s"""
+      |$ledgerStagesSelect
       |WHERE r.epoch >= 1
       |ORDER BY r.doc_id""".stripMargin
 
@@ -1365,40 +1332,9 @@ object CurationQueries {
       |    string_agg(line, chr(10) ORDER BY pos) AS text
       |  FROM skept GROUP BY 1, 2, 3, 4),
       |$dedCtes,
-      |tr AS (SELECT
-      |    CASE WHEN n_chars >= 300 THEN 'good' ELSE 'bad' END AS label,
-      |    $dTokens AS toks FROM documents),
-      |tf AS (SELECT label, ${dHash("g")} % 4096 AS bucket FROM (
-      |  SELECT label, unnest(toks) AS g FROM tr
-      |  UNION ALL
-      |  SELECT label, unnest(list_transform(generate_series(1, len(toks) - 1),
-      |    i -> toks[i] || ' ' || toks[i + 1])) AS g FROM tr)),
-      |cb AS (SELECT label, bucket, COUNT(*) AS cnt FROM tf GROUP BY 1, 2),
-      |cl AS (SELECT label, CAST(SUM(cnt) AS BIGINT) AS cl FROM cb GROUP BY 1),
-      |v AS (SELECT COUNT(DISTINCT bucket) AS v FROM cb),
-      |cls AS (SELECT label, cl, v.v AS v,
-      |    CAST(floor(CAST(1 AS DOUBLE) * 1073741824.0 / (cl + v.v))
-      |      AS BIGINT) AS floor0
-      |  FROM cl CROSS JOIN v),
+      |${nbTrainCtes("documents")}
       |ca AS (SELECT doc_id, ${dTokensOf("text")} AS toks FROM ded),
-      |cf AS (SELECT doc_id, ${dHash("g")} % 4096 AS bucket FROM (
-      |  SELECT doc_id, unnest(toks) AS g FROM ca
-      |  UNION ALL
-      |  SELECT doc_id, unnest(list_transform(generate_series(1, len(toks) - 1),
-      |    i -> toks[i] || ' ' || toks[i + 1])) AS g FROM ca)),
-      |nf AS (SELECT doc_id, COUNT(*) AS n_feats FROM cf GROUP BY 1),
-      |seen AS (SELECT f.doc_id, cb.label,
-      |    CAST(SUM(CAST(floor(CAST(cb.cnt + 1 AS DOUBLE) * 1073741824.0
-      |      / (cls.cl + cls.v)) AS BIGINT)) AS BIGINT) AS seen_fp,
-      |    COUNT(*) AS n_seen
-      |  FROM cf f JOIN cb ON f.bucket = cb.bucket
-      |  JOIN cls ON cb.label = cls.label
-      |  GROUP BY 1, 2),
-      |sc AS (SELECT nf.doc_id, cls.label,
-      |    COALESCE(seen.seen_fp, 0)
-      |      + (nf.n_feats - COALESCE(seen.n_seen, 0)) * cls.floor0 AS score_fp
-      |  FROM nf CROSS JOIN cls
-      |  LEFT JOIN seen ON seen.doc_id = nf.doc_id AND seen.label = cls.label),
+      |$nbScoreCtes
       |goodk AS (SELECT doc_id FROM (
       |  SELECT doc_id, label, row_number() OVER (PARTITION BY doc_id
       |    ORDER BY score_fp DESC, label) AS rn FROM sc)
@@ -1522,13 +1458,7 @@ object CurationQueries {
       |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
       |      AS cum_before
       |  FROM pk)
-      |SELECT shard, COUNT(*) AS n_docs,
-      |  COUNT(DISTINCT cum_before // 512) AS n_seqs,
-      |  CAST(SUM(n_tokens) AS BIGINT) AS sum_tokens,
-      |  CAST(SUM(CASE WHEN n_tokens > 0
-      |    AND (cum_before + n_tokens - 1) // 512 > cum_before // 512
-      |    THEN 1 ELSE 0 END) AS BIGINT) AS n_straddles
-      |FROM pc GROUP BY shard ORDER BY shard""".stripMargin
+      |$packStatsSelect""".stripMargin
 
   val all: Seq[QueryDef] = Seq(
     QueryDef("q241_curation_neardup", q241, Some(q241Sql)),

@@ -201,15 +201,11 @@ object LifecycleQueries {
       .orderBy(col("customer_sk"))
   }
 
-  // ---------------------------------------------------------------
-  // q79 — snapshot diff (the CDC primitive SCD2 consumes, standalone):
-  // "yesterday" = orders through 1996, "today" = orders through 1997
-  // with a deterministic hash-selected 1/37 of keys deleted and 1/11
-  // mutated. One full-outer key join classifies every key as added /
-  // removed / changed / unchanged; the gate compares per-class counts
-  // and key checksums (see [[graft.operators.SnapshotDiff]]).
-  private def q79(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.SnapshotDiff
+  /** q79/q86's scenario: "yesterday" = orders through 1996, "today" =
+    * orders through 1997 with a hash-selected 1/37 of keys deleted and
+    * 1/11 given status "X". */
+  private def orderSnapshots(s: SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
     import graft.operators.TextFunctions.hash60
     val o = Tables.orders(s, dir)
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
@@ -222,16 +218,34 @@ object LifecycleQueries {
         when(col("h") % 11 === 3, lit("X")).otherwise(col("o_orderstatus"))
           .as("o_orderstatus"),
         col("o_totalprice"))
+    (prev, next)
+  }
+
+  // ---------------------------------------------------------------
+  // q79 — snapshot diff (the CDC primitive SCD2 consumes, standalone):
+  // "yesterday" = orders through 1996, "today" = orders through 1997
+  // with a deterministic hash-selected 1/37 of keys deleted and 1/11
+  // mutated. One full-outer key join classifies every key as added /
+  // removed / changed / unchanged; the gate compares per-class counts
+  // and key checksums (see [[graft.operators.SnapshotDiff]]).
+  private def q79(s: SparkSession, dir: String): DataFrame = {
+    import graft.operators.SnapshotDiff
+    val (prev, next) = orderSnapshots(s, dir)
     SnapshotDiff.diff(prev, next, Seq("o_orderkey"),
         Seq("o_orderstatus", "o_totalprice"))
       .groupBy(col("change_type"))
       .agg(count(lit(1)).as("n_keys"), sum(col("o_orderkey")).as("key_sum"))
       .orderBy(col("change_type"))
   }
-  private val q79Sql = {
+  /** q79/q86's oracle opening: orders with their year `y` and
+    * 60-bit key hash `h`. Unstripped. */
+  private lazy val hashedOrdersCte = {
     val h = "CAST('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15) AS BIGINT)"
     s"""WITH o AS (SELECT o_orderkey, o_orderstatus, o_totalprice,
-       |    EXTRACT(YEAR FROM o_orderdate) AS y, $h AS h FROM orders),
+       |    EXTRACT(YEAR FROM o_orderdate) AS y, $h AS h FROM orders)"""
+  }
+  private lazy val q79Sql =
+    s"""$hashedOrdersCte,
        |prev AS (SELECT o_orderkey, o_orderstatus, o_totalprice FROM o WHERE y <= 1996),
        |nxt AS (SELECT o_orderkey,
        |    CASE WHEN h % 11 = 3 THEN 'X' ELSE o_orderstatus END AS o_orderstatus,
@@ -246,7 +260,6 @@ object LifecycleQueries {
        |  FROM prev p FULL OUTER JOIN nxt n ON p.o_orderkey = n.o_orderkey)
        |SELECT change_type, COUNT(*) AS n_keys, CAST(SUM(k) AS BIGINT) AS key_sum
        |FROM j GROUP BY 1 ORDER BY 1""".stripMargin
-  }
 
   // ---------------------------------------------------------------
   // q86 — MERGE round-trip on q79's exact scenario: extract the
@@ -258,34 +271,20 @@ object LifecycleQueries {
   // primitive: ship 0.1% of keys, not the table.
   private def q86(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.SnapshotDiff
-    import graft.operators.TextFunctions.hash60
-    val o = Tables.orders(s, dir)
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
-        year(col("o_orderdate")).as("y"),
-        hash60(col("o_orderkey").cast("string")).as("h"))
-    val prev = o.filter(col("y") <= 1996)
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-    val next = o.filter(col("y") <= 1997 && col("h") % 37 =!= 0)
-      .select(col("o_orderkey"),
-        when(col("h") % 11 === 3, lit("X")).otherwise(col("o_orderstatus"))
-          .as("o_orderstatus"),
-        col("o_totalprice"))
+    val (prev, next) = orderSnapshots(s, dir)
     val keys = Seq("o_orderkey")
     val tracked = Seq("o_orderstatus", "o_totalprice")
     val feed = SnapshotDiff.changeSet(prev, next, keys, tracked)
     SnapshotDiff.applyChanges(prev, feed, keys, tracked)
       .orderBy(col("o_orderkey"))
   }
-  private val q86Sql = {
-    val h = "CAST('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15) AS BIGINT)"
-    s"""WITH o AS (SELECT o_orderkey, o_orderstatus, o_totalprice,
-       |    EXTRACT(YEAR FROM o_orderdate) AS y, $h AS h FROM orders)
+  private lazy val q86Sql =
+    s"""$hashedOrdersCte
        |SELECT o_orderkey,
        |  CASE WHEN h % 11 = 3 THEN 'X' ELSE o_orderstatus END AS o_orderstatus,
        |  o_totalprice
        |FROM o WHERE y <= 1997 AND h % 37 <> 0
        |ORDER BY o_orderkey""".stripMargin
-  }
 
   val all: Seq[QueryDef] = Seq(
     QueryDef("q79_snapshot_diff", q79, Some(q79Sql)),

@@ -77,6 +77,26 @@ object SimilarityQueries {
       |   / (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(b.v, b.v))) > 0.30
       |ORDER BY a.label, id_a, id_b""".stripMargin
 
+  /** The embeddings `e` and the 8 seed centroids `c` (vectors 0..7)
+    * of the IVF/k-means oracles; opens the WITH. Unstripped. */
+  private lazy val seedCentroidsE =
+    s"""$embeddingsE
+      |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),"""
+  /** Every (vector, seed centroid) cosine: `scored(vec_id, cid, cos)`. */
+  private lazy val centroidCosCte =
+    """scored AS (
+      |  SELECT e.vec_id, c.cid,
+      |    list_inner_product(e.v, cv) / (sqrt(list_inner_product(e.v, e.v)) * sqrt(list_inner_product(cv, cv))) AS cos
+      |  FROM e CROSS JOIN c),"""
+  /** Each vector's nearest seed centroid by cosine, ties to the lower
+    * id: `assign(vec_id, cid)`. */
+  private lazy val ivfAssignCte =
+    """assign AS (SELECT vec_id, cid FROM (
+      |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY
+      |    list_inner_product(e.v, cv) / (sqrt(list_inner_product(e.v, e.v)) * sqrt(list_inner_product(cv, cv))) DESC,
+      |    c.cid) AS rn
+      |  FROM e CROSS JOIN c) WHERE rn = 1),"""
+
   // q51 — IVF coarse quantization: zero-shuffle argmax assignment of
   // every vector to its nearest of 8 centroids (vectors 0..7), then
   // per-centroid inverted-list stats. min/max cosine (order
@@ -91,13 +111,9 @@ object SimilarityQueries {
         max(col("centroid_cosine")).as("max_cosine"))
       .orderBy(col("centroid_id"))
   }
-  private val q51Sql =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-      |scored AS (
-      |  SELECT e.vec_id, c.cid,
-      |    list_inner_product(e.v, cv) / (sqrt(list_inner_product(e.v, e.v)) * sqrt(list_inner_product(cv, cv))) AS cos
-      |  FROM e CROSS JOIN c),
+  private lazy val q51Sql =
+    s"""$seedCentroidsE
+      |$centroidCosCte
       |best AS (SELECT vec_id, cid, cos,
       |  row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rn FROM scored)
       |SELECT cid AS centroid_id, COUNT(*) AS n_vectors,
@@ -113,14 +129,9 @@ object SimilarityQueries {
         e.filter(col("vec_id") < 8), "vec_id", "embedding", k = 3, nProbe = 2)
       .orderBy(col("query_id"), col("rank"))
   }
-  private val q52Sql =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-      |assign AS (SELECT vec_id, cid FROM (
-      |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY
-      |    list_inner_product(e.v, cv) / (sqrt(list_inner_product(e.v, e.v)) * sqrt(list_inner_product(cv, cv))) DESC,
-      |    c.cid) AS rn
-      |  FROM e CROSS JOIN c) WHERE rn = 1),
+  private lazy val q52Sql =
+    s"""$seedCentroidsE
+      |$ivfAssignCte
       |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
       |qs AS (SELECT query_id, qv, cid, row_number() OVER (PARTITION BY query_id ORDER BY
       |    list_inner_product(qv, cv) / (sqrt(list_inner_product(qv, qv)) * sqrt(list_inner_product(cv, cv))) DESC,
@@ -168,20 +179,15 @@ object SimilarityQueries {
           col("query_id").cast("string"))).isNull)
       .orderBy(col("query_id"))
   }
-  private val q110Sql =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
+  private lazy val q110Sql =
+    s"""$seedCentroidsE
       |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
       |brute AS (SELECT query_id, neighbor_id FROM (
       |  SELECT query_id, e.vec_id AS neighbor_id,
       |    row_number() OVER (PARTITION BY query_id ORDER BY $dCos DESC, e.vec_id) AS rank
       |  FROM q CROSS JOIN (SELECT vec_id, v AS cv FROM e) e
       |  WHERE query_id <> e.vec_id) WHERE rank <= 3),
-      |assign AS (SELECT vec_id, cid FROM (
-      |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY
-      |    list_inner_product(e.v, cv) / (sqrt(list_inner_product(e.v, e.v)) * sqrt(list_inner_product(cv, cv))) DESC,
-      |    c.cid) AS rn
-      |  FROM e CROSS JOIN c) WHERE rn = 1),
+      |$ivfAssignCte
       |qs AS (SELECT query_id, qv, cid, row_number() OVER (PARTITION BY query_id ORDER BY
       |    list_inner_product(qv, cv) / (sqrt(list_inner_product(qv, qv)) * sqrt(list_inner_product(cv, cv))) DESC,
       |    cid) AS pr
@@ -214,13 +220,9 @@ object SimilarityQueries {
     Similarity.kmeansStep(e, e.filter(col("vec_id") < 8), "vec_id", "embedding")
       .orderBy(col("centroid_id"), col("dim"))
   }
-  private val q67Sql =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-      |scored AS (
-      |  SELECT e.vec_id, c.cid,
-      |    list_inner_product(e.v, cv) / (sqrt(list_inner_product(e.v, e.v)) * sqrt(list_inner_product(cv, cv))) AS cos
-      |  FROM e CROSS JOIN c),
+  private lazy val q67Sql =
+    s"""$seedCentroidsE
+      |$centroidCosCte
       |best AS (SELECT vec_id, cid FROM (
       |  SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cid) AS rn
       |  FROM scored) WHERE rn = 1),
@@ -401,14 +403,9 @@ object SimilarityQueries {
         "vec_id", "embedding", threshold = 0.35)
       .orderBy(col("vec_id"))
   }
-  private val q123Sql =
-    s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |c AS (SELECT vec_id AS cid, v AS cv FROM e WHERE vec_id < 8),
-      |assign AS (SELECT vec_id, cid FROM (
-      |  SELECT e.vec_id, c.cid, row_number() OVER (PARTITION BY e.vec_id ORDER BY
-      |    list_inner_product(e.v, cv) / (sqrt(list_inner_product(e.v, e.v)) * sqrt(list_inner_product(cv, cv))) DESC,
-      |    c.cid) AS rn
-      |  FROM e CROSS JOIN c) WHERE rn = 1),
+  private lazy val q123Sql =
+    s"""$seedCentroidsE
+      |$ivfAssignCte
       |drops AS (SELECT DISTINCT b.vec_id
       |  FROM assign a JOIN assign b ON a.cid = b.cid AND a.vec_id < b.vec_id
       |  JOIN e ea ON ea.vec_id = a.vec_id JOIN e eb ON eb.vec_id = b.vec_id
@@ -431,7 +428,7 @@ object SimilarityQueries {
   private def u(key: String) =
     s"(CAST('0x' || substr(md5($key), 1, 15) AS BIGINT) / 576460752303423488.0 - 1.0)"
   /** The `embeddings` table as the `e` CTE (opens the WITH). */
-  private val embeddingsE =
+  private lazy val embeddingsE =
     "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),"
   /** The planted-cluster fixture ([[graft.ScaleGen.plantedEmbeddings]],
     * 50 clusters × 10, md5-derived) regenerated as the `gen` and `e`
@@ -686,23 +683,25 @@ object SimilarityQueries {
   // floor binds at 5/5) fails the run in-plan if training, PQ
   // coding, or the ADC table regresses to zero overlap.
   private val PqRecallFloorHits = 1L
+  /** q146/q176's PQ codebook trained on the seed vectors 0..7.
+    * TRAIN ONCE, SERVE MANY: the trained codebook is model state
+    * ([[graft.operators.ModelStore]]) — production trains once and
+    * serves from the persisted artifact, and the bench's timed runs
+    * measure SERVING (round-10's measured q146 medians tripled because
+    * training re-ran inside every timed query). Training is
+    * bit-reproducible, so the cached serve is value-identical to
+    * training inline, and the oracle (which retrains in SQL every run)
+    * still hash-matches. q175 gates + times the training run itself. */
+  private def q146Codebook(s: SparkSession, dir: String,
+      e: DataFrame): DataFrame =
+    graft.operators.ModelStore.cached(s, s"q146_cb:$dir") {
+      Similarity.pqTrainedCodebook(e, e.filter(col("vec_id") < 8),
+        "vec_id", "embedding", dim = 64, m = 4, iters = PqTrainIters)
+    }
   private def q146(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    val seeds = e.filter(col("vec_id") < 8)
     val queries = e.filter(col("vec_id") < 10)
-    // TRAIN ONCE, SERVE MANY: the trained codebook is model state
-    // ([[graft.operators.ModelStore]]) — production trains once and
-    // serves from the persisted artifact, and the bench's timed runs
-    // now measure SERVING (round-10's measured q146 medians tripled
-    // because training re-ran inside every timed query). Training is
-    // bit-reproducible, so the cached serve is value-identical to
-    // training inline, and the oracle (which retrains in SQL every
-    // run) still hash-matches. q175 gates + times the training run
-    // itself.
-    val cb = graft.operators.ModelStore.cached(s, s"q146_cb:$dir") {
-      Similarity.pqTrainedCodebook(e, seeds, "vec_id", "embedding",
-        dim = 64, m = 4, iters = PqTrainIters)
-    }
+    val cb = q146Codebook(s, dir, e)
     val adc = Similarity.pqAdcTopK(e, queries, cb, "vec_id", "embedding",
       dim = 64, m = 4, k = 5)
     recallAudited(e, queries, adc, PqRecallFloorHits, "PQ ADC")
@@ -899,12 +898,8 @@ object SimilarityQueries {
   // batch-independent, so store union == in-memory coding.
   private def q176(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    val seeds = e.filter(col("vec_id") < 8)
     val queries = e.filter(col("vec_id") < 10)
-    val cb = graft.operators.ModelStore.cached(s, s"q146_cb:$dir") {
-      Similarity.pqTrainedCodebook(e, seeds, "vec_id", "embedding",
-        dim = 64, m = 4, iters = PqTrainIters)
-    }
+    val cb = q146Codebook(s, dir, e)
     StoreGates.withTempStore(s, "graft_q176_pqindex") { root =>
       // independent appends (distinct batch ids) — overlap (guide §2.6)
       graft.operators.ParallelJobs.run(Seq(

@@ -114,23 +114,10 @@ object SqlQueries {
   // path, which no DSL query reaches.
   private def q103(s: SparkSession, dir: String): DataFrame = {
     registerViews(s, dir, "orders", "customer")
-    s.sql("""SELECT c_mktsegment,
-            |  COUNT(*) AS n_above_own_avg,
-            |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS above_avg_revenue
-            |FROM orders JOIN customer ON o_custkey = c_custkey
-            |WHERE CAST(o_totalprice AS DECIMAL(12,2))
-            |        * (SELECT COUNT(*) FROM orders o2
-            |           WHERE o2.o_custkey = orders.o_custkey)
-            |      > (SELECT SUM(CAST(o2.o_totalprice AS DECIMAL(12,2)))
-            |         FROM orders o2 WHERE o2.o_custkey = orders.o_custkey)
-            |  AND NOT EXISTS (SELECT 1 FROM orders o3
-            |                  WHERE o3.o_custkey = orders.o_custkey
-            |                    AND o3.o_orderstatus = 'F'
-            |                    AND o3.o_totalprice > 450000)
-            |GROUP BY c_mktsegment
-            |ORDER BY c_mktsegment""".stripMargin)
+    s.sql(q103Sql)
   }
-  private val q103Sql =
+  /** Plain SQL both engines run verbatim. */
+  private lazy val q103Sql =
     """SELECT c_mktsegment,
       |  COUNT(*) AS n_above_own_avg,
       |  CAST(SUM(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS above_avg_revenue

@@ -46,14 +46,7 @@ private[queries] object StoreGates {
     val ckpt = java.nio.file.Files.createTempDirectory(s"${prefix}_ckpt").toString
     try {
       slices.foreach(_.coalesce(1).write.mode("append").parquet(stage))
-      val snk = sink(store)
-      val q = s.readStream.schema(slices.head.schema)
-        .option("maxFilesPerTrigger", "1").parquet(stage)
-        .writeStream
-        .foreachBatch((b: DataFrame, id: Long) => snk(b, id))
-        .option("checkpointLocation", ckpt)
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      drainFileStream(s, slices.head.schema, stage, ckpt)(sink(store))
       serve(store)
     } finally {
       val fs = new org.apache.hadoop.fs.Path(store)
@@ -61,6 +54,21 @@ private[queries] object StoreGates {
       Seq(stage, store, ckpt).foreach(p =>
         fs.delete(new org.apache.hadoop.fs.Path(p), true))
     }
+  }
+
+  /** Run a one-file-per-trigger parquet file stream over `stage`
+    * through the `foreachBatch` sink `snk` until everything staged is
+    * processed, checkpointing at `ckpt` (a restart resumes from it). */
+  private[queries] def drainFileStream(s: SparkSession,
+      schema: org.apache.spark.sql.types.StructType, stage: String,
+      ckpt: String)(snk: (DataFrame, Long) => Unit): Unit = {
+    val q = s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(stage)
+      .writeStream
+      .foreachBatch((b: DataFrame, id: Long) => snk(b, id))
+      .option("checkpointLocation", ckpt)
+      .start()
+    try q.processAllAvailable() finally q.stop()
   }
 
   /** Ordered slice staging for file-source streams where ARRIVAL

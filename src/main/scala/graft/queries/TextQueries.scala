@@ -358,13 +358,9 @@ object TextQueries {
         groupCol = "lang", idCol = "doc_id", textCol = "text",
         k = 16, shingleN = 3, grounding = graft.operators.Dedup.ExactGrounding)
       .orderBy(col("ga"), col("gb"))
-  private val q102Sql = {
-    import graft.operators.Dedup.{minhashPermA, minhashPermB, MinhashPrime}
-    val mh = (0 until 16).map(j =>
-      s"min((${minhashPermA(j)} * h + ${minhashPermB(j)}) % $MinhashPrime) AS mh$j")
-      .mkString(",\n  ")
-    val matchTerms = (0 until 16).map(j =>
-      s"(CASE WHEN a.mh$j = b.mh$j THEN 1 ELSE 0 END)").mkString(" + ")
+  /** q102/q120's group-MinHash oracle, opening: each language's
+    * distinct 3-shingle hash set `s`. Unstripped. */
+  private lazy val groupShinglesCtes =
     s"""WITH t AS (SELECT doc_id, lang, $dTokens AS toks FROM documents),
       |th AS (SELECT doc_id, lang,
       |  list_transform(toks, x -> ${dHash("x")} % 4294967296) AS th FROM t),
@@ -372,21 +368,37 @@ object TextQueries {
       |  list_distinct(list_transform(range(1, len(th) - 1),
       |    i -> ((((th[i] * 65599 + th[i+1]) % 4294967311) * 65599 + th[i+2]) % 4294967311) % 4294967296)) AS hs
       |  FROM th),
-      |s AS (SELECT DISTINCT lang, unnest(hs) AS h FROM hb WHERE len(hs) > 0),
-      |sig AS (SELECT lang, $mh FROM s GROUP BY lang),
-      |n AS (SELECT lang, COUNT(*) AS n_sh FROM s GROUP BY lang),
-      |i AS (SELECT a.lang AS ga, b.lang AS gb, COUNT(*) AS ni
-      |      FROM s a JOIN s b ON a.h = b.h AND a.lang < b.lang GROUP BY 1, 2)
-      |SELECT a.lang AS ga, b.lang AS gb,
+      |s AS (SELECT DISTINCT lang, unnest(hs) AS h FROM hb WHERE len(hs) > 0),"""
+  /** The 16 MinHash columns of a group signature over `s`. */
+  private lazy val groupMh = {
+    import graft.operators.Dedup.{minhashPermA, minhashPermB, MinhashPrime}
+    (0 until 16).map(j =>
+      s"min((${minhashPermA(j)} * h + ${minhashPermB(j)}) % $MinhashPrime) AS mh$j")
+      .mkString(",\n  ")
+  }
+  /** q102/q120's group-MinHash oracle, closing: each language pair's
+    * signature agreement next to the Jaccard of the grounding set,
+    * named `jaccardCol`, from the `sig`, `n` and `i` CTEs. Unstripped. */
+  private def groupJaccardSelect(jaccardCol: String): String = {
+    val matchTerms = (0 until 16).map(j =>
+      s"(CASE WHEN a.mh$j = b.mh$j THEN 1 ELSE 0 END)").mkString(" + ")
+    s"""SELECT a.lang AS ga, b.lang AS gb,
       |  CAST($matchTerms AS BIGINT) AS sig_matches,
       |  CAST($matchTerms AS DOUBLE) / 16 AS est_jaccard,
       |  CAST(COALESCE(i.ni, 0) AS DOUBLE)
-      |    / (na.n_sh + nb.n_sh - COALESCE(i.ni, 0)) AS exact_jaccard
+      |    / (na.n_sh + nb.n_sh - COALESCE(i.ni, 0)) AS $jaccardCol
       |FROM sig a JOIN sig b ON a.lang < b.lang
       |JOIN n na ON na.lang = a.lang JOIN n nb ON nb.lang = b.lang
       |LEFT JOIN i ON i.ga = a.lang AND i.gb = b.lang
-      |ORDER BY ga, gb""".stripMargin
+      |ORDER BY ga, gb"""
   }
+  private lazy val q102Sql =
+    s"""$groupShinglesCtes
+      |sig AS (SELECT lang, $groupMh FROM s GROUP BY lang),
+      |n AS (SELECT lang, COUNT(*) AS n_sh FROM s GROUP BY lang),
+      |i AS (SELECT a.lang AS ga, b.lang AS gb, COUNT(*) AS ni
+      |      FROM s a JOIN s b ON a.h = b.h AND a.lang < b.lang GROUP BY 1, 2)
+      |${groupJaccardSelect("exact_jaccard")}""".stripMargin
 
   // q45 — BPE-ish subword token counting next to whitespace tokens:
   // alpha runs, digit runs, and single punctuation marks (the
@@ -919,7 +931,9 @@ object TextQueries {
         coalesce(col("n_common"), lit(0L)).as("n_common"))
       .orderBy(col("source_a"), col("source_b"))
   }
-  private val q141Sql =
+  /** q141/q145's oracle opening: each source's distinct 3-shingle
+    * hashes `e` and its 64-minimum KMV sketch `sk`. Unstripped. */
+  private lazy val kmvSketchCtes =
     s"""WITH t0 AS (SELECT source, $dTokens AS toks FROM documents),
       |th0 AS (SELECT source,
       |  list_transform(toks, x -> ${dHash("x")} % 4294967296) AS th FROM t0),
@@ -930,7 +944,9 @@ object TextQueries {
       |e AS (SELECT DISTINCT source, h FROM e0),
       |r AS (SELECT source, h,
       |    row_number() OVER (PARTITION BY source ORDER BY h) AS rn FROM e),
-      |sk AS (SELECT source, h FROM r WHERE rn <= 64),
+      |sk AS (SELECT source, h FROM r WHERE rn <= 64),"""
+  private lazy val q141Sql =
+    s"""$kmvSketchCtes
       |sz AS (SELECT source, COUNT(*) AS sk_n FROM sk GROUP BY source),
       |p AS (SELECT a.source AS source_a, b.source AS source_b,
       |    a.sk_n AS n_a, b.sk_n AS n_b
@@ -982,18 +998,8 @@ object TextQueries {
           .as("within_bound"))
       .orderBy(col("source"))
   }
-  private val q145Sql =
-    s"""WITH t0 AS (SELECT source, $dTokens AS toks FROM documents),
-      |th0 AS (SELECT source,
-      |  list_transform(toks, x -> ${dHash("x")} % 4294967296) AS th FROM t0),
-      |e0 AS (SELECT source, unnest(
-      |  list_transform(range(1, len(th) - 1),
-      |    i -> ((((th[i] * 65599 + th[i+1]) % 4294967311) * 65599 + th[i+2]) % 4294967311) % 4294967296)) AS h
-      |  FROM th0),
-      |e AS (SELECT DISTINCT source, h FROM e0),
-      |r AS (SELECT source, h,
-      |    row_number() OVER (PARTITION BY source ORDER BY h) AS rn FROM e),
-      |sk AS (SELECT source, h FROM r WHERE rn <= 64),
+  private lazy val q145Sql =
+    s"""$kmvSketchCtes
       |agg AS (SELECT source, COUNT(*) AS n_sk, MAX(h) AS h_max
       |  FROM sk GROUP BY source),
       |ex AS (SELECT source, COUNT(*) AS n_exact FROM e GROUP BY source)
@@ -1278,10 +1284,10 @@ object TextQueries {
       graft.operators.LanguageModel.bigramCounts(train, "doc_id", "text"),
       "doc_id", "text", k = 20)
   }
-  /** q181's Laplace bigram-LM chain with a pluggable TRAINING filter —
-    * the erasure gate (q189) trains the oracle on the remaining
-    * corpus; the store gates reuse the full-train instance. */
-  private def lmSqlFor(trainWhere: String): String =
+  /** The bigram-LM training CTEs over `documents WHERE trainWhere`:
+    * tokens `tr`, bigrams `tbg`, counts `cb`, left counts `cl`. Opens
+    * the WITH; unstripped. */
+  private def lmTrainCtes(trainWhere: String): String =
     s"""WITH tr AS (SELECT doc_id, $dTokens AS toks FROM documents
       |  WHERE $trainWhere),
       |tb AS (SELECT doc_id, unnest(list_transform(
@@ -1289,14 +1295,23 @@ object TextQueries {
       |    i -> {'w1': toks[i], 'w2': toks[i + 1]})) AS bg FROM tr),
       |tbg AS (SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2 FROM tb),
       |cb AS (SELECT w1, w2, COUNT(*) AS cnt FROM tbg GROUP BY 1, 2),
-      |cl AS (SELECT w1, CAST(SUM(cnt) AS BIGINT) AS cl FROM cb GROUP BY 1),
-      |v AS (SELECT COUNT(DISTINCT w2) AS v FROM cb),
-      |ca AS (SELECT doc_id, $dTokens AS toks FROM documents
+      |cl AS (SELECT w1, CAST(SUM(cnt) AS BIGINT) AS cl FROM cb GROUP BY 1),"""
+  /** The candidate docs' (doc_id % 3 = 0) bigrams `cbg`; unstripped. */
+  private lazy val lmCandCtes =
+    s"""ca AS (SELECT doc_id, $dTokens AS toks FROM documents
       |  WHERE doc_id % 3 = 0),
       |cab AS (SELECT doc_id, unnest(list_transform(
       |    generate_series(1, len(toks) - 1),
       |    i -> {'w1': toks[i], 'w2': toks[i + 1]})) AS bg FROM ca),
-      |cbg AS (SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2 FROM cab),
+      |cbg AS (SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2 FROM cab),"""
+  /** q181's Laplace bigram-LM chain through the per-candidate `agg`
+    * (doc_id, lm_fp, n_bigrams), with a pluggable TRAINING filter — the
+    * erasure gate (q189) trains the oracle on the remaining corpus;
+    * q211 ranks `agg` per source. Opens the WITH; unstripped. */
+  private[queries] def laplaceAggCtes(trainWhere: String): String =
+    s"""${lmTrainCtes(trainWhere)}
+      |v AS (SELECT COUNT(DISTINCT w2) AS v FROM cb),
+      |$lmCandCtes
       |sc AS (SELECT c.doc_id,
       |    CAST(floor(CAST(COALESCE(cb.cnt, 0) + 1 AS DOUBLE) * 1073741824.0
       |      / (COALESCE(cl.cl, 0) + v.v)) AS BIGINT) AS contrib
@@ -1306,7 +1321,10 @@ object TextQueries {
       |  CROSS JOIN v),
       |agg AS (SELECT doc_id, CAST(SUM(contrib) AS BIGINT) AS lm_fp,
       |    COUNT(*) AS n_bigrams
-      |  FROM sc GROUP BY 1)
+      |  FROM sc GROUP BY 1)"""
+  /** q181's oracle: the 20 lowest-scoring candidates. */
+  private def lmSqlFor(trainWhere: String): String =
+    s"""${laplaceAggCtes(trainWhere)}
       |SELECT doc_id, CAST(n_bigrams AS BIGINT) AS n_bigrams, lm_fp,
       |  CAST(lm_fp AS DOUBLE) / n_bigrams AS lm_avg
       |FROM agg ORDER BY lm_avg, doc_id LIMIT 20""".stripMargin
@@ -1394,22 +1412,10 @@ object TextQueries {
     * q190 serves the same scorer from an appended-minus-erased store,
     * so its oracle trains on the remaining slices. */
   private def backoffSqlFor(trainWhere: String): String =
-    s"""WITH tr AS (SELECT doc_id, $dTokens AS toks FROM documents
-      |  WHERE $trainWhere),
-      |tb AS (SELECT doc_id, unnest(list_transform(
-      |    generate_series(1, len(toks) - 1),
-      |    i -> {'w1': toks[i], 'w2': toks[i + 1]})) AS bg FROM tr),
-      |tbg AS (SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2 FROM tb),
-      |cb AS (SELECT w1, w2, COUNT(*) AS cnt FROM tbg GROUP BY 1, 2),
-      |cl AS (SELECT w1, CAST(SUM(cnt) AS BIGINT) AS cl FROM cb GROUP BY 1),
+    s"""${lmTrainCtes(trainWhere)}
       |cr AS (SELECT w2, CAST(SUM(cnt) AS BIGINT) AS cr FROM cb GROUP BY 1),
       |nb AS (SELECT CAST(SUM(cnt) AS BIGINT) AS nb FROM cb),
-      |ca AS (SELECT doc_id, $dTokens AS toks FROM documents
-      |  WHERE doc_id % 3 = 0),
-      |cab AS (SELECT doc_id, unnest(list_transform(
-      |    generate_series(1, len(toks) - 1),
-      |    i -> {'w1': toks[i], 'w2': toks[i + 1]})) AS bg FROM ca),
-      |cbg AS (SELECT doc_id, bg.w1 AS w1, bg.w2 AS w2 FROM cab),
+      |$lmCandCtes
       |sc AS (SELECT c.doc_id,
       |    CAST(floor(CASE WHEN cb.cnt IS NOT NULL
       |      THEN CAST(cb.cnt AS DOUBLE) * 1073741824.0 / cl.cl
@@ -2325,15 +2331,19 @@ object TextQueries {
     val docs = Tables.documents(s, dir)
     StoreGates.withTempStore(s, "graft_q163_jsonl") { tmp =>
       docs.write.mode("overwrite").json(tmp)
-      s.read.schema(docs.schema).json(tmp)
-        .groupBy(col("lang")).agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("n_chars"),
-          sum(length(col("text")).cast("long")).as("text_chars"))
-        .orderBy(col("lang"))
-        .localCheckpoint()
+      langTextStats(s.read.schema(docs.schema).json(tmp))
     }
   }
+  /** q163/q168's round-trip check: per-language doc count, summed
+    * `n_chars` and text length of a re-read corpus, pinned so the temp
+    * store can go. */
+  private def langTextStats(docs: DataFrame): DataFrame =
+    docs.groupBy(col("lang")).agg(
+        count(lit(1)).as("n_docs"),
+        sum(col("n_chars")).as("n_chars"),
+        sum(length(col("text")).cast("long")).as("text_chars"))
+      .orderBy(col("lang"))
+      .localCheckpoint()
   private val q163Sql =
     """SELECT lang, COUNT(*) AS n_docs,
       |  CAST(SUM(n_chars) AS BIGINT) AS n_chars,
@@ -2431,13 +2441,7 @@ object TextQueries {
     val docs = Tables.documents(s, dir)
     StoreGates.withTempStore(s, "graft_q168_orc") { tmp =>
       docs.write.mode("overwrite").orc(tmp)
-      s.read.orc(tmp)
-        .groupBy(col("lang")).agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("n_chars"),
-          sum(length(col("text")).cast("long")).as("text_chars"))
-        .orderBy(col("lang"))
-        .localCheckpoint()
+      langTextStats(s.read.orc(tmp))
     }
   }
   private val q168Sql = q163Sql
@@ -2456,29 +2460,37 @@ object TextQueries {
   private def q151(s: SparkSession, dir: String): DataFrame =
     graft.operators.InvertedIndex.rankedSearch(
       Tables.documents(s, dir), "doc_id", "text", q151Terms, k = 20)
-  private val q151Sql = {
-    val inList = q151Terms.map(t => s"'$t'").mkString(", ")
-    val cells = q151Terms.zipWithIndex.map { case (t, i) =>
-      s"MAX(CASE WHEN token = '$t' THEN contrib END) AS c$i" }.mkString(",\n    ")
-    // left-to-right + chain, mirroring the Scala reduce
-    val sumExpr = q151Terms.indices.map(i => s"c$i").reduce((a, b) => s"($a + $b)")
+  /** q151's terms as an SQL IN list. */
+  private lazy val q151InList = q151Terms.map(t => s"'$t'").mkString(", ")
+  /** One `c<i>` score cell per q151 term, from per-(doc, token)
+    * `contrib` rows. */
+  private lazy val q151Cells = q151Terms.zipWithIndex.map { case (t, i) =>
+    s"MAX(CASE WHEN token = '$t' THEN contrib END) AS c$i" }.mkString(",\n    ")
+  /** The cells' left-to-right + chain, mirroring the Scala reduce. */
+  private lazy val q151SumExpr =
+    q151Terms.indices.map(i => s"c$i").reduce((a, b) => s"($a + $b)")
+  /** One term's BM25 contribution; the parenthesization mirrors the
+    * Column tree of bm25Search exactly. */
+  private lazy val bm25ContribSql = "(((n_docs - df) + 0.5) / (df + 0.5)) * " +
+    "((CAST(tf AS DOUBLE) * 2.25) / (tf + 1.25 * (0.25 + 0.75 * " +
+    "(CAST(doc_len AS DOUBLE) / (CAST(total_len AS DOUBLE) / n_docs)))))"
+  private lazy val q151Sql =
     s"""WITH t AS (SELECT doc_id, $dTokens AS toks FROM documents),
       |base AS (SELECT doc_id, len(toks) AS doc_len, unnest(toks) AS token FROM t),
       |tf AS (SELECT doc_id, doc_len, token, COUNT(*) AS tf FROM base
-      |  WHERE token IN ($inList) GROUP BY 1, 2, 3),
+      |  WHERE token IN ($q151InList) GROUP BY 1, 2, 3),
       |dfreq AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
       |n AS (SELECT COUNT(*) AS n_docs FROM documents),
       |c AS (SELECT doc_id, doc_len, token,
       |    CAST(tf AS DOUBLE) * n_docs / df AS contrib
       |  FROM tf JOIN dfreq USING (token) CROSS JOIN n),
       |p AS (SELECT doc_id, doc_len, COUNT(*) AS n_terms,
-      |    $cells
+      |    $q151Cells
       |  FROM c GROUP BY 1, 2)
       |SELECT doc_id, CAST(doc_len AS BIGINT) AS doc_len,
-      |  $sumExpr / doc_len AS score
+      |  $q151SumExpr / doc_len AS score
       |FROM p WHERE n_terms = ${q151Terms.size}
       |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin
-  }
 
   // ---------------------------------------------------------------
   // q153 — BM25-shaped ranking ([[graft.operators.InvertedIndex
@@ -2500,32 +2512,23 @@ object TextQueries {
     * Since round 11 both the scan path (q153) and the store path
     * (q161, stats sidecar) count every document — zero-token docs
     * included — so both use the same all-docs stats CTE. */
-  private def bm25SqlFor(nCte: String, where: String = "") = {
-    val inList = q151Terms.map(t => s"'$t'").mkString(", ")
-    val cells = q151Terms.zipWithIndex.map { case (t, i) =>
-      s"MAX(CASE WHEN token = '$t' THEN contrib END) AS c$i" }.mkString(",\n    ")
-    val sumExpr = q151Terms.indices.map(i => s"c$i").reduce((a, b) => s"($a + $b)")
-    // parenthesization mirrors the Column tree of bm25Search exactly
-    val contrib = "(((n_docs - df) + 0.5) / (df + 0.5)) * " +
-      "((CAST(tf AS DOUBLE) * 2.25) / (tf + 1.25 * (0.25 + 0.75 * " +
-      "(CAST(doc_len AS DOUBLE) / (CAST(total_len AS DOUBLE) / n_docs)))))"
+  private def bm25SqlFor(nCte: String, where: String = "") =
     s"""WITH t AS (SELECT doc_id, $dTokens AS toks FROM documents$where),
       |base AS (SELECT doc_id, len(toks) AS doc_len, unnest(toks) AS token FROM t),
       |tf AS (SELECT doc_id, doc_len, token, COUNT(*) AS tf FROM base
-      |  WHERE token IN ($inList) GROUP BY 1, 2, 3),
+      |  WHERE token IN ($q151InList) GROUP BY 1, 2, 3),
       |dfreq AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
       |n AS ($nCte),
       |c AS (SELECT doc_id, doc_len, token,
-      |    $contrib AS contrib
+      |    $bm25ContribSql AS contrib
       |  FROM tf JOIN dfreq USING (token) CROSS JOIN n),
       |p AS (SELECT doc_id, doc_len, COUNT(*) AS n_terms,
-      |    $cells
+      |    $q151Cells
       |  FROM c GROUP BY 1, 2)
       |SELECT doc_id, CAST(doc_len AS BIGINT) AS doc_len,
-      |  $sumExpr AS score
+      |  $q151SumExpr AS score
       |FROM p WHERE n_terms = ${q151Terms.size}
       |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin
-  }
   private val q153Sql = bm25SqlFor(
     "SELECT COUNT(*) AS n_docs, SUM(len(toks)) AS total_len FROM t")
 
@@ -2574,46 +2577,38 @@ object TextQueries {
         fbDocs = 5, fbTerms = 3, k = 20)
     }
   }
-  private lazy val q215Sql = {
-    val inList = q151Terms.map(t => s"'$t'").mkString(", ")
-    val cells = q151Terms.zipWithIndex.map { case (t, i) =>
-      s"MAX(CASE WHEN token = '$t' THEN contrib END) AS c$i" }.mkString(",\n    ")
-    val sumExpr = q151Terms.indices.map(i => s"c$i").reduce((a, b) => s"($a + $b)")
-    val contrib = "(((n_docs - df) + 0.5) / (df + 0.5)) * " +
-      "((CAST(tf AS DOUBLE) * 2.25) / (tf + 1.25 * (0.25 + 0.75 * " +
-      "(CAST(doc_len AS DOUBLE) / (CAST(total_len AS DOUBLE) / n_docs)))))"
+  private lazy val q215Sql =
     s"""WITH t AS (SELECT doc_id, $dTokens AS toks FROM documents),
       |base AS (SELECT doc_id, len(toks) AS doc_len, unnest(toks) AS token FROM t),
       |n AS (SELECT COUNT(*) AS n_docs, SUM(len(toks)) AS total_len FROM t),
       |tf1 AS (SELECT doc_id, doc_len, token, COUNT(*) AS tf FROM base
-      |  WHERE token IN ($inList) GROUP BY 1, 2, 3),
+      |  WHERE token IN ($q151InList) GROUP BY 1, 2, 3),
       |df1 AS (SELECT token, COUNT(*) AS df FROM tf1 GROUP BY token),
-      |c1 AS (SELECT doc_id, doc_len, token, $contrib AS contrib
+      |c1 AS (SELECT doc_id, doc_len, token, $bm25ContribSql AS contrib
       |  FROM tf1 JOIN df1 USING (token) CROSS JOIN n),
       |p1 AS (SELECT doc_id, doc_len, COUNT(*) AS n_terms,
-      |    $cells
+      |    $q151Cells
       |  FROM c1 GROUP BY 1, 2),
       |fb AS (SELECT doc_id FROM (
-      |  SELECT doc_id, $sumExpr AS score FROM p1
+      |  SELECT doc_id, $q151SumExpr AS score FROM p1
       |  WHERE n_terms = ${q151Terms.size}
       |  ORDER BY score DESC, doc_id LIMIT 5)),
       |exp AS (SELECT token FROM (
       |  SELECT b.token, COUNT(*) AS cnt FROM base b JOIN fb USING (doc_id)
-      |  WHERE b.token NOT IN ($inList) GROUP BY 1
+      |  WHERE b.token NOT IN ($q151InList) GROUP BY 1
       |  ORDER BY cnt DESC, token LIMIT 3)),
       |allt AS (SELECT token FROM exp
-      |  UNION ALL SELECT unnest([$inList]) AS token),
+      |  UNION ALL SELECT unnest([$q151InList]) AS token),
       |tf2 AS (SELECT doc_id, doc_len, token, COUNT(*) AS tf FROM base
       |  WHERE token IN (SELECT token FROM allt) GROUP BY 1, 2, 3),
       |df2 AS (SELECT token, COUNT(*) AS df FROM tf2 GROUP BY token),
       |c2 AS (SELECT doc_id, doc_len,
-      |    CAST(floor(($contrib) * 1048576.0) AS BIGINT) AS fp
+      |    CAST(floor(($bm25ContribSql) * 1048576.0) AS BIGINT) AS fp
       |  FROM tf2 JOIN df2 USING (token) CROSS JOIN n)
       |SELECT doc_id, CAST(doc_len AS BIGINT) AS doc_len,
       |  COUNT(*) AS n_terms_hit, CAST(SUM(fp) AS BIGINT) AS prf_fp
       |FROM c2 GROUP BY 1, 2
       |ORDER BY prf_fp DESC, doc_id LIMIT 20""".stripMargin
-  }
 
   // ---------------------------------------------------------------
   // q60 — benchmark decontamination: training docs sharing any word
@@ -2983,6 +2978,25 @@ object TextQueries {
       |SELECT doc_id, rank, token, tf, df, score FROM ranked
       |WHERE rank <= 3 ORDER BY doc_id, rank""".stripMargin
 
+  /** Per-doc media fixture parameters: `id` and the text's UTF-8
+    * byte length `tlen`. */
+  private def mediaParams(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir).select(
+      col("doc_id").as("id"),
+      octet_length(encode(col("text"), "UTF-8")).cast("long").as("tlen"))
+
+  /** q111/q171's image fixtures: a closed-form PNG ramp per doc, every
+    * 7th payload a non-image. */
+  private def pngFixtures(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    Tables.documents(s, dir).select(col("doc_id").as("id")).as[Long].map { id =>
+      if (id % 7 == 0)
+        Multimodal.MediaRecord(id, "image", s"img-$id".getBytes("UTF-8"))
+      else Multimodal.MediaRecord(id, "image", Multimodal.pngBytes(
+        w = (8 + id % 5 * 4).toInt, h = (6 + id % 3 * 4).toInt, seed = id))
+    }.toDF()
+  }
+
   // ---------------------------------------------------------------
   // q108 — REAL audio/video container parsing ([[Multimodal
   // .tryDecodeWav]] / [[Multimodal.tryDecodeMp4]]): fixture WAV and
@@ -2994,9 +3008,7 @@ object TextQueries {
   // non-container payload and must take the stub path.
   private def q108(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val params = Tables.documents(s, dir).select(
-      col("doc_id").as("id"),
-      octet_length(encode(col("text"), "UTF-8")).cast("long").as("tlen"))
+    val params = mediaParams(s, dir)
     val media = params.as[(Long, Long)].map { case (id, tlen) =>
       if (id % 5 == 0)
         Multimodal.MediaRecord(id, "audio", s"xx-$id".getBytes("UTF-8"))
@@ -3067,9 +3079,7 @@ object TextQueries {
   // the hash.
   private def q240(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val params = Tables.documents(s, dir).select(
-      col("doc_id").as("id"),
-      octet_length(encode(col("text"), "UTF-8")).cast("long").as("tlen"))
+    val params = mediaParams(s, dir)
     params.as[(Long, Long)].map { case (id, tlen) =>
       val bytes =
         if (id % 5 == 0)
@@ -3128,9 +3138,7 @@ object TextQueries {
   // recomputes every aggregate exactly.
   private def q242(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val params = Tables.documents(s, dir).select(
-      col("doc_id").as("id"),
-      octet_length(encode(col("text"), "UTF-8")).cast("long").as("tlen"))
+    val params = mediaParams(s, dir)
     params.as[(Long, Long)].map { case (id, tlen) =>
       val (bytes, thr) =
         if (id % 5 == 0)
@@ -3193,14 +3201,7 @@ object TextQueries {
   // the oracle recomputes the ramp sums arithmetically per pixel
   // grid. Every 7th payload is a non-image and must take the stub.
   private def q111(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ids = Tables.documents(s, dir).select(col("doc_id").as("id"))
-    val media = ids.as[Long].map { id =>
-      if (id % 7 == 0)
-        Multimodal.MediaRecord(id, "image", s"img-$id".getBytes("UTF-8"))
-      else Multimodal.MediaRecord(id, "image", Multimodal.pngBytes(
-        w = (8 + id % 5 * 4).toInt, h = (6 + id % 3 * 4).toInt, seed = id))
-    }.toDF()
+    val media = pngFixtures(s, dir)
     Multimodal.imageStats(s, media)
       .select(col("media_id"), col("codec"), col("width"), col("height"),
         col("mean_r"), col("mean_g"), col("mean_b"))
@@ -3243,14 +3244,7 @@ object TextQueries {
   // closed-form ramps; every 7th payload is a non-image and must
   // take the stub.
   private def q171(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val ids = Tables.documents(s, dir).select(col("doc_id").as("id"))
-    val media = ids.as[Long].map { id =>
-      if (id % 7 == 0)
-        Multimodal.MediaRecord(id, "image", s"img-$id".getBytes("UTF-8"))
-      else Multimodal.MediaRecord(id, "image", Multimodal.pngBytes(
-        w = (8 + id % 5 * 4).toInt, h = (6 + id % 3 * 4).toInt, seed = id))
-    }.toDF()
+    val media = pngFixtures(s, dir)
     Multimodal.imageResize(s, media, outW = 5, outH = 4)
       .select(col("media_id"), col("codec"), col("src_w"), col("src_h"),
         col("out_w"), col("out_h"),
@@ -3296,9 +3290,7 @@ object TextQueries {
   // oracle recomputes the whole index/offset grid arithmetically.
   private def q114(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val params = Tables.documents(s, dir).select(
-      col("doc_id").as("id"),
-      octet_length(encode(col("text"), "UTF-8")).cast("long").as("tlen"))
+    val params = mediaParams(s, dir)
     val media = params.as[(Long, Long)].flatMap { case (id, tlen) =>
       if (id % 5 == 0)
         Some(Multimodal.MediaRecord(id, "video", s"xx-$id".getBytes("UTF-8")))
@@ -3352,9 +3344,7 @@ object TextQueries {
   // non-container and must take the uniform stub model.
   private def q115(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val params = Tables.documents(s, dir).select(
-      col("doc_id").as("id"),
-      octet_length(encode(col("text"), "UTF-8")).cast("long").as("tlen"))
+    val params = mediaParams(s, dir)
     val media = params.as[(Long, Long)].flatMap { case (id, tlen) =>
       if (id % 5 == 0)
         Some(Multimodal.MediaRecord(id, "video", s"xx-$id".getBytes("UTF-8")))
@@ -3422,9 +3412,7 @@ object TextQueries {
   // carries a non-container payload and must take the stub path.
   private def q116(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val params = Tables.documents(s, dir).select(
-      col("doc_id").as("id"),
-      octet_length(encode(col("text"), "UTF-8")).cast("long").as("tlen"))
+    val params = mediaParams(s, dir)
     val media = params.as[(Long, Long)].map { case (id, tlen) =>
       if (id % 5 == 0)
         Multimodal.MediaRecord(id, "audio", s"au-$id".getBytes("UTF-8"))
@@ -3609,37 +3597,15 @@ object TextQueries {
         k = 16, shingleN = 3,
         grounding = graft.operators.Dedup.SampledGrounding(1, 4))
       .orderBy(col("ga"), col("gb"))
-  private val q120Sql = {
-    import graft.operators.Dedup.{minhashPermA, minhashPermB, MinhashPrime}
-    val mh = (0 until 16).map(j =>
-      s"min((${minhashPermA(j)} * h + ${minhashPermB(j)}) % $MinhashPrime) AS mh$j")
-      .mkString(",\n  ")
-    val matchTerms = (0 until 16).map(j =>
-      s"(CASE WHEN a.mh$j = b.mh$j THEN 1 ELSE 0 END)").mkString(" + ")
-    s"""WITH t AS (SELECT doc_id, lang, $dTokens AS toks FROM documents),
-      |th AS (SELECT doc_id, lang,
-      |  list_transform(toks, x -> ${dHash("x")} % 4294967296) AS th FROM t),
-      |hb AS (SELECT doc_id, lang,
-      |  list_distinct(list_transform(range(1, len(th) - 1),
-      |    i -> ((((th[i] * 65599 + th[i+1]) % 4294967311) * 65599 + th[i+2]) % 4294967311) % 4294967296)) AS hs
-      |  FROM th),
-      |s AS (SELECT DISTINCT lang, unnest(hs) AS h FROM hb WHERE len(hs) > 0),
+  private lazy val q120Sql =
+    s"""$groupShinglesCtes
       |ss AS (SELECT lang, h FROM s
       |       WHERE ${dHash("CAST(h AS VARCHAR)")} % 4 < 1),
-      |sig AS (SELECT lang, $mh FROM s GROUP BY lang),
+      |sig AS (SELECT lang, $groupMh FROM s GROUP BY lang),
       |n AS (SELECT lang, COUNT(*) AS n_sh FROM ss GROUP BY lang),
       |i AS (SELECT a.lang AS ga, b.lang AS gb, COUNT(*) AS ni
       |      FROM ss a JOIN ss b ON a.h = b.h AND a.lang < b.lang GROUP BY 1, 2)
-      |SELECT a.lang AS ga, b.lang AS gb,
-      |  CAST($matchTerms AS BIGINT) AS sig_matches,
-      |  CAST($matchTerms AS DOUBLE) / 16 AS est_jaccard,
-      |  CAST(COALESCE(i.ni, 0) AS DOUBLE)
-      |    / (na.n_sh + nb.n_sh - COALESCE(i.ni, 0)) AS sampled_jaccard
-      |FROM sig a JOIN sig b ON a.lang < b.lang
-      |JOIN n na ON na.lang = a.lang JOIN n nb ON nb.lang = b.lang
-      |LEFT JOIN i ON i.ga = a.lang AND i.gb = b.lang
-      |ORDER BY ga, gb""".stripMargin
-  }
+      |${groupJaccardSelect("sampled_jaccard")}""".stripMargin
 
   // q121 — substring-level dedup: per-doc duplicated 5-gram span
   // coverage (Dedup.substringDupSpans). The third dedup granularity:
@@ -3712,13 +3678,39 @@ object TextQueries {
     FH.cosineTopK(corpusFeats, queryFeats, "chunk_key", "query_id", k = 3)
       .orderBy(col("query_id"), col("rank"))
   }
-  private[queries] val q230Sql = {
+  /** q230/q231's hashed-cosine retrieval tail, given `toks(doc_id, t)`
+    * and the corpus tokens `ctok(key, tok)`: queries = docs < 3, signed
+    * hashed tf (dim 512), cosine top-`k` per query. Unstripped. */
+  private def hashedCosineTopKCtes(key: String, k: Int): String = {
     def feats(tokSrc: String, keyCol: String) =
       s"""SELECT $keyCol, bucket, w FROM (
          |  SELECT $keyCol, ${dHash("tok")} % 512 AS bucket,
          |    CAST(SUM(CASE WHEN ${dHash("'s:' || tok")} % 2 = 0
          |      THEN 1 ELSE -1 END) AS BIGINT) AS w
          |  FROM $tokSrc GROUP BY 1, 2) WHERE w <> 0""".stripMargin
+    s"""qtok AS (SELECT doc_id AS query_id, unnest(t) AS tok
+       |  FROM toks WHERE doc_id < 3),
+       |cf AS (${feats("ctok", key)}),
+       |qf AS (${feats("qtok", "query_id")}),
+       |cn AS (SELECT $key, CAST(SUM(w * w) AS BIGINT) AS cn2
+       |  FROM cf GROUP BY 1),
+       |qn AS (SELECT query_id, CAST(SUM(w * w) AS BIGINT) AS qn2
+       |  FROM qf GROUP BY 1),
+       |dots AS (SELECT q.query_id, c.$key,
+       |    CAST(SUM(c.w * q.w) AS BIGINT) AS dot
+       |  FROM cf c JOIN qf q ON c.bucket = q.bucket GROUP BY 1, 2),
+       |sc AS (SELECT d.query_id, d.$key, CAST(dot AS DOUBLE)
+       |      / (sqrt(CAST(cn2 AS DOUBLE)) * sqrt(CAST(qn2 AS DOUBLE)))
+       |      AS cosine
+       |  FROM dots d JOIN cn ON d.$key = cn.$key
+       |  JOIN qn ON d.query_id = qn.query_id),
+       |rk AS (SELECT query_id, $key, cosine, row_number() OVER (
+       |    PARTITION BY query_id ORDER BY cosine DESC, $key) AS rank
+       |  FROM sc)
+       |SELECT query_id, rank, $key, cosine FROM rk
+       |WHERE rank <= $k ORDER BY query_id, rank"""
+  }
+  private[queries] lazy val q230Sql =
     s"""WITH toks AS (SELECT doc_id, $dTokens AS t FROM documents),
        |ch AS (SELECT doc_id, CAST((u.s - 1) // 64 AS BIGINT) AS chunk_id,
        |    t[u.s : u.s + 63] AS ct
@@ -3726,64 +3718,16 @@ object TextQueries {
        |  WHERE doc_id >= 3),
        |ctok AS (SELECT doc_id * 1000000 + chunk_id AS chunk_key,
        |    unnest(ct) AS tok FROM ch),
-       |qtok AS (SELECT doc_id AS query_id, unnest(t) AS tok
-       |  FROM toks WHERE doc_id < 3),
-       |cf AS (${feats("ctok", "chunk_key")}),
-       |qf AS (${feats("qtok", "query_id")}),
-       |cn AS (SELECT chunk_key, CAST(SUM(w * w) AS BIGINT) AS cn2
-       |  FROM cf GROUP BY 1),
-       |qn AS (SELECT query_id, CAST(SUM(w * w) AS BIGINT) AS qn2
-       |  FROM qf GROUP BY 1),
-       |dots AS (SELECT q.query_id, c.chunk_key,
-       |    CAST(SUM(c.w * q.w) AS BIGINT) AS dot
-       |  FROM cf c JOIN qf q ON c.bucket = q.bucket GROUP BY 1, 2),
-       |sc AS (SELECT d.query_id, d.chunk_key, CAST(dot AS DOUBLE)
-       |      / (sqrt(CAST(cn2 AS DOUBLE)) * sqrt(CAST(qn2 AS DOUBLE)))
-       |      AS cosine
-       |  FROM dots d JOIN cn ON d.chunk_key = cn.chunk_key
-       |  JOIN qn ON d.query_id = qn.query_id),
-       |rk AS (SELECT query_id, chunk_key, cosine, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY cosine DESC, chunk_key) AS rank
-       |  FROM sc)
-       |SELECT query_id, rank, chunk_key, cosine FROM rk
-       |WHERE rank <= 3 ORDER BY query_id, rank""".stripMargin
-  }
+       |${hashedCosineTopKCtes("chunk_key", 3)}""".stripMargin
 
   /** q231/q232 shared oracle: doc-level hashed-cosine retrieval over
     * the surviving corpus (`corpusWhere`), queries = docs < 3, k = 5,
     * dim = 512 — the q230 chain minus the chunking. */
-  private def hashedStoreSqlFor(corpusWhere: String) = {
-    def feats(tokSrc: String, keyCol: String) =
-      s"""SELECT $keyCol, bucket, w FROM (
-         |  SELECT $keyCol, ${dHash("tok")} % 512 AS bucket,
-         |    CAST(SUM(CASE WHEN ${dHash("'s:' || tok")} % 2 = 0
-         |      THEN 1 ELSE -1 END) AS BIGINT) AS w
-         |  FROM $tokSrc GROUP BY 1, 2) WHERE w <> 0""".stripMargin
+  private def hashedStoreSqlFor(corpusWhere: String) =
     s"""WITH toks AS (SELECT doc_id, $dTokens AS t FROM documents),
        |ctok AS (SELECT doc_id, unnest(t) AS tok FROM toks
        |  WHERE $corpusWhere),
-       |qtok AS (SELECT doc_id AS query_id, unnest(t) AS tok
-       |  FROM toks WHERE doc_id < 3),
-       |cf AS (${feats("ctok", "doc_id")}),
-       |qf AS (${feats("qtok", "query_id")}),
-       |cn AS (SELECT doc_id, CAST(SUM(w * w) AS BIGINT) AS cn2
-       |  FROM cf GROUP BY 1),
-       |qn AS (SELECT query_id, CAST(SUM(w * w) AS BIGINT) AS qn2
-       |  FROM qf GROUP BY 1),
-       |dots AS (SELECT q.query_id, c.doc_id,
-       |    CAST(SUM(c.w * q.w) AS BIGINT) AS dot
-       |  FROM cf c JOIN qf q ON c.bucket = q.bucket GROUP BY 1, 2),
-       |sc AS (SELECT d.query_id, d.doc_id, CAST(dot AS DOUBLE)
-       |      / (sqrt(CAST(cn2 AS DOUBLE)) * sqrt(CAST(qn2 AS DOUBLE)))
-       |      AS cosine
-       |  FROM dots d JOIN cn ON d.doc_id = cn.doc_id
-       |  JOIN qn ON d.query_id = qn.query_id),
-       |rk AS (SELECT query_id, doc_id, cosine, row_number() OVER (
-       |    PARTITION BY query_id ORDER BY cosine DESC, doc_id) AS rank
-       |  FROM sc)
-       |SELECT query_id, rank, doc_id, cosine FROM rk
-       |WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
-  }
+       |${hashedCosineTopKCtes("doc_id", 5)}""".stripMargin
 
   // ---------------------------------------------------------------
   // q231 — HASHED-FEATURE STORE LIFECYCLE ([[graft.operators
@@ -3955,17 +3899,11 @@ object TextQueries {
       val stager = new StoreGates.PinnedMtimeStager(s, p("stage"))
       (0L to 2L).foreach(e =>
         stager.stageSlice(docs.filter(col("__epoch") === e).drop("__epoch")))
-      val snk = graft.operators.Dedup.nearDupAdmitSink("doc_id", "text",
-        k = 16, shingleN = 3, bands = 8, threshold = 0.5,
-        sigRoot = p("sig"), keptRoot = p("kept"))
-      val q = s.readStream.schema(docs.drop("__epoch").schema)
-        .option("maxFilesPerTrigger", "1").parquet(stager.stage)
-        .writeStream
-        .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
-          snk(b, id))
-        .option("checkpointLocation", p("ckpt"))
-        .start()
-      try q.processAllAvailable() finally q.stop()
+      StoreGates.drainFileStream(s, docs.drop("__epoch").schema,
+          stager.stage, p("ckpt"))(
+        graft.operators.Dedup.nearDupAdmitSink("doc_id", "text",
+          k = 16, shingleN = 3, bands = 8, threshold = 0.5,
+          sigRoot = p("sig"), keptRoot = p("kept")))
       graft.operators.BatchStore.read(s, p("kept"))
         .select(col("doc_id"), (col("batch") - 1).cast("long").as("epoch"))
         .orderBy(col("doc_id"))

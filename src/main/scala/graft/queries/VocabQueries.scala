@@ -202,6 +202,16 @@ object VocabQueries {
     Tokenizer.bpeSegmentStats(Tables.documents(s, dir), "text",
         Seq("lang"), nMerges = BpeMerges)
       .orderBy(col("lang"))
+  /** Per-language BPE segmentation stats over the words `docw(lang,
+    * word)` and their symbol counts `seg(word, n_syms)` (q158, q178).
+    * Unstripped. */
+  private lazy val bpeStatsSelect =
+    """SELECT d.lang, COUNT(*) AS n_words,
+      |  CAST(SUM(len(d.word)) AS BIGINT) AS total_chars,
+      |  CAST(SUM(s.n_syms) AS BIGINT) AS total_bpe_tokens,
+      |  CAST(SUM(len(d.word)) AS DOUBLE) / SUM(s.n_syms) AS chars_per_token
+      |FROM docw d JOIN seg s USING (word)
+      |GROUP BY d.lang ORDER BY d.lang"""
   private val q158Sql = {
     val sep = "chr(31)"
     s"""WITH ${bpeCtes()},
@@ -209,12 +219,7 @@ object VocabQueries {
       |    len(list_filter(string_split(str, $sep), x -> x <> '')) AS n_syms
       |  FROM v$BpeMerges),
       |docw AS (SELECT lang, unnest($dTokens) AS word FROM documents)
-      |SELECT d.lang, COUNT(*) AS n_words,
-      |  CAST(SUM(len(d.word)) AS BIGINT) AS total_chars,
-      |  CAST(SUM(s.n_syms) AS BIGINT) AS total_bpe_tokens,
-      |  CAST(SUM(len(d.word)) AS DOUBLE) / SUM(s.n_syms) AS chars_per_token
-      |FROM docw d JOIN seg s USING (word)
-      |GROUP BY d.lang ORDER BY d.lang""".stripMargin
+      |$bpeStatsSelect""".stripMargin
   }
 
   // ---------------------------------------------------------------
@@ -318,12 +323,7 @@ object VocabQueries {
       |  FROM w$BpeMerges),
       |docw AS (SELECT lang, unnest($dTokens) AS word FROM documents
       |         WHERE doc_id % 2 = 1)
-      |SELECT d.lang, COUNT(*) AS n_words,
-      |  CAST(SUM(len(d.word)) AS BIGINT) AS total_chars,
-      |  CAST(SUM(s.n_syms) AS BIGINT) AS total_bpe_tokens,
-      |  CAST(SUM(len(d.word)) AS DOUBLE) / SUM(s.n_syms) AS chars_per_token
-      |FROM docw d JOIN seg s USING (word)
-      |GROUP BY d.lang ORDER BY d.lang""".stripMargin
+      |$bpeStatsSelect""".stripMargin
   }
 
   // ---------------------------------------------------------------

@@ -69,13 +69,16 @@ object WindowQueries {
         ((col("session_end_us") - col("session_start_us")) / 1000000L).cast("long"))
       .orderBy(col("user_id"), col("session_id"))
   }
-  private val q22Sql =
-    """WITH flagged AS (
+  /** q22's 30-minute-gap sessionization over the events `from`
+    * (a table, optionally with its WHERE) — q124/q133 replay the
+    * streamed user slice. */
+  private def sessionsSql(from: String): String =
+    s"""WITH flagged AS (
       |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
       |    CASE WHEN lag(epoch_us(ts), 1) OVER w IS NULL
       |           OR epoch_us(ts) - lag(epoch_us(ts), 1) OVER w > 1800000000
       |         THEN 1 ELSE 0 END AS is_new_session
-      |  FROM events
+      |  FROM $from
       |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
       |sessions AS (
       |  SELECT user_id, event_id, ts_us,
@@ -89,6 +92,7 @@ object WindowQueries {
       |  CAST((MAX(ts_us) - MIN(ts_us)) // 1000000 AS BIGINT) AS session_seconds
       |FROM sessions GROUP BY user_id, session_id
       |ORDER BY user_id, session_id""".stripMargin
+  private val q22Sql = sessionsSql("events")
 
   // q23 — hourly tumbling-window aggregation (batch form of the
   // Structured Streaming windowed agg in `graft.streaming`).
@@ -733,13 +737,17 @@ object WindowQueries {
   // future keys advance the watermark to flush all state before stop
   // and are dropped by `finish`.
   private def q122(s: SparkSession, dir: String): DataFrame =
-    streamedGate(s, dir, "q122")(stream =>
-      graft.streaming.EventStream.dedupedStream(
-          stream.withColumn("day", to_date(col("ts"))),
-          watermark = "1 day", idCols = Seq("user_id", "event_type", "day"))
-        .select(col("user_id"), col("event_type"), col("day")))(
-      _.filter(col("user_id") >= 0)
-        .orderBy(col("user_id"), col("event_type"), col("day")))
+    streamedGate(s, dir, "q122")(dedupedDays)(dedupedDaysOut)
+  /** q122/q132's streamed dedup of (user, type, day) keys (1-day
+    * watermark) and its read-back without the sentinel user. */
+  private def dedupedDays(stream: DataFrame): DataFrame =
+    graft.streaming.EventStream.dedupedStream(
+        stream.withColumn("day", to_date(col("ts"))),
+        watermark = "1 day", idCols = Seq("user_id", "event_type", "day"))
+      .select(col("user_id"), col("event_type"), col("day"))
+  private def dedupedDaysOut(out: DataFrame): DataFrame =
+    out.filter(col("user_id") >= 0)
+      .orderBy(col("user_id"), col("event_type"), col("day"))
   private val q122Sql =
     """SELECT user_id, event_type, CAST(ts AS DATE) AS day
       |FROM events WHERE user_id < 40
@@ -766,37 +774,23 @@ object WindowQueries {
   // timeouts) before the stream stops. Session ids then count 1..k
   // per user in time order, exactly like the batch cumulative sum.
   private def q124(s: SparkSession, dir: String): DataFrame =
-    streamedGate(s, dir, "q124")(stream => {
-      import s.implicits._
-      graft.streaming.EventStream.sessionize(
-        s, stream.as[graft.streaming.EventStream.Event],
-        gapSeconds = 1800, watermark = "1 hour").toDF()
-    })(
-      _.filter(col("user_id") >= 0)
-        .withColumn("session_seconds",
-          ((col("session_end_us") - col("session_start_us")) / 1000000L)
-            .cast("long"))
-        .orderBy(col("user_id"), col("session_id")))
-  private val q124Sql =
-    """WITH flagged AS (
-      |  SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-      |    CASE WHEN lag(epoch_us(ts), 1) OVER w IS NULL
-      |           OR epoch_us(ts) - lag(epoch_us(ts), 1) OVER w > 1800000000
-      |         THEN 1 ELSE 0 END AS is_new_session
-      |  FROM events WHERE user_id < 40
-      |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-      |sessions AS (
-      |  SELECT user_id, event_id, ts_us,
-      |    SUM(is_new_session) OVER (
-      |      PARTITION BY user_id ORDER BY ts_us, event_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-      |  FROM flagged)
-      |SELECT user_id, CAST(session_id AS BIGINT) AS session_id,
-      |  COUNT(*) AS n_events,
-      |  MIN(ts_us) AS session_start_us, MAX(ts_us) AS session_end_us,
-      |  CAST((MAX(ts_us) - MIN(ts_us)) // 1000000 AS BIGINT) AS session_seconds
-      |FROM sessions GROUP BY user_id, session_id
-      |ORDER BY user_id, session_id""".stripMargin
+    streamedGate(s, dir, "q124")(sessionized(s))(sessionsOut)
+  /** q124/q133's streamed sessionization (30-minute gap, 1-hour
+    * watermark) and its read-back: the sentinel user dropped, session
+    * length in whole seconds. */
+  private def sessionized(s: SparkSession)(stream: DataFrame): DataFrame = {
+    import s.implicits._
+    graft.streaming.EventStream.sessionize(
+      s, stream.as[graft.streaming.EventStream.Event],
+      gapSeconds = 1800, watermark = "1 hour").toDF()
+  }
+  private def sessionsOut(out: DataFrame): DataFrame =
+    out.filter(col("user_id") >= 0)
+      .withColumn("session_seconds",
+        ((col("session_end_us") - col("session_start_us")) / 1000000L)
+          .cast("long"))
+      .orderBy(col("user_id"), col("session_id"))
+  private val q124Sql = sessionsSql("events WHERE user_id < 40")
 
   // ---------------------------------------------------------------
   // q132 — q122's streaming dedup KILLED AND RESTARTED mid-stream:
@@ -812,13 +806,7 @@ object WindowQueries {
   // q122 — restart must be INVISIBLE in the result.
   private def q132(s: SparkSession, dir: String): DataFrame =
     streamedGateRestart(s, dir, "q132", phases = Seq(1, 3),
-        cutOverride = stateStraddlingCut(s, dir))(stream =>
-      graft.streaming.EventStream.dedupedStream(
-          stream.withColumn("day", to_date(col("ts"))),
-          watermark = "1 day", idCols = Seq("user_id", "event_type", "day"))
-        .select(col("user_id"), col("event_type"), col("day")))(
-      _.filter(col("user_id") >= 0)
-        .orderBy(col("user_id"), col("event_type"), col("day")))
+        cutOverride = stateStraddlingCut(s, dir))(dedupedDays)(dedupedDaysOut)
   private val q132Sql = q122Sql
 
   // ---------------------------------------------------------------
@@ -834,17 +822,7 @@ object WindowQueries {
   // watermark. Same oracle as q124.
   private def q133(s: SparkSession, dir: String): DataFrame =
     streamedGateRestart(s, dir, "q133", phases = Seq(1, 3),
-        cutOverride = stateStraddlingCut(s, dir))(stream => {
-      import s.implicits._
-      graft.streaming.EventStream.sessionize(
-        s, stream.as[graft.streaming.EventStream.Event],
-        gapSeconds = 1800, watermark = "1 hour").toDF()
-    })(
-      _.filter(col("user_id") >= 0)
-        .withColumn("session_seconds",
-          ((col("session_end_us") - col("session_start_us")) / 1000000L)
-            .cast("long"))
-        .orderBy(col("user_id"), col("session_id")))
+        cutOverride = stateStraddlingCut(s, dir))(sessionized(s))(sessionsOut)
   private val q133Sql = q124Sql
 
   // ---------------------------------------------------------------

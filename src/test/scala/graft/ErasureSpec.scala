@@ -133,4 +133,29 @@ class ErasureSpec extends AnyFunSuite {
       s"StoreRef kinds without q237 coverage: ${declared -- gated}; " +
         s"gated but no longer declared: ${gated -- declared}")
   }
+
+  test("the erasure gate releases its document and codebook pins when a store build throws") {
+    import spark.implicits._
+    // id-set delta, not a count: the ContextCleaner may async-drop a
+    // dead pin from an earlier test between captures
+    withRoot { dir =>
+      docs.withColumn("n_chars", length(col("text")).cast("long"))
+        .write.parquet(s"$dir/documents.parquet")
+      (0L until 40L).map(i => (i, Array.tabulate(64)(j => ((i * 7 + j * 3) % 11).toFloat)))
+        .toDF("vec_id", "embedding").write.parquet(s"$dir/embeddings.parquet")
+      // a store root under a regular FILE cannot be created: that build throws
+      val blocker = java.nio.file.Files.createFile(
+        java.nio.file.Paths.get(dir, "blocker")).toString
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      intercept[Exception] {
+        graft.queries.ErasureQueries.forgetGate(spark, dir, "graft_erasure_leak",
+          p => Seq(Erasure.LmStore(p("lm")), Erasure.PqStore(p("pq")),
+            Erasure.KeptStore(s"$blocker/kept")))
+      }
+      val leaked = spark.sparkContext.getPersistentRDDs
+        .filter { case (id, _) => !before.contains(id) }.values
+      assert(leaked.isEmpty, "a failed build must not leak the document " +
+        s"or codebook pin: ${leaked.map(r => r.toDebugString)}")
+    }
+  }
 }

@@ -145,8 +145,8 @@ class Round9OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("vacuumSignatureStaging removes crashed stagings, never committed batches") {
-    import graft.operators.Dedup
+  test("BatchStore.vacuumStaging removes a signature store's crashed stagings, never committed batches") {
+    import graft.operators.{BatchStore, Dedup}
     val docs = Tables.documents(spark, sf).limit(50)
     val root = java.nio.file.Files.createTempDirectory("graft_vac").toString
     Dedup.writeSignatureStore(docs, "doc_id", "text", 16, 3, root, 1L)
@@ -156,8 +156,8 @@ class Round9OpsSpec extends AnyFunSuite {
       java.nio.file.Files.writeString(d.toPath.resolve("part-0.parquet"), "x")
     }
     val before = Dedup.readSignatureStore(spark, root).count()
-    assert(Dedup.vacuumSignatureStaging(spark, root) == 2)
-    assert(Dedup.vacuumSignatureStaging(spark, root) == 0) // idempotent
+    assert(BatchStore.vacuumStaging(spark, root) == 2)
+    assert(BatchStore.vacuumStaging(spark, root) == 0) // idempotent
     assert(Dedup.readSignatureStore(spark, root).count() == before)
     assert(new java.io.File(root, "batch=1").isDirectory)
   }
