@@ -145,7 +145,8 @@ class Round9OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("BatchStore.vacuumStaging removes a signature store's crashed stagings, never committed batches") {
+  // the signature store's staging vacuum is BatchStore.vacuumStaging
+  test("vacuumSignatureStaging removes crashed stagings, never committed batches") {
     import graft.operators.{BatchStore, Dedup}
     val docs = Tables.documents(spark, sf).limit(50)
     val root = java.nio.file.Files.createTempDirectory("graft_vac").toString
