@@ -348,23 +348,13 @@ object Bench {
       .asScala.map(_.getCollectionTime).filter(_ >= 0).sum
   }
 
-  /** Release persisted blocks between timed runs. clearCache() frees
-    * only catalog-cached tables — localCheckpoint blocks (ScdType2's
-    * diff join and re-key, SurrogateKeys' re-key, Dedup.materialize,
-    * RcmModeling's dimensions and transactions join) wait for GC +
-    * ContextCleaner otherwise, and a full bench session would pin
-    * dozens of dead block sets of storage memory. Each timed run builds
-    * its frames from scratch, so no prior run's checkpoint is ever
-    * re-read: unpersisting them is safe. It is a session-wide sweep:
-    * never call it while another job on the session still reads a
-    * pinned frame (streams release per frame with
-    * [[graft.operators.Checkpoints.releasePinned]] instead).
-    *
-    * This is the release half of the checkpoint lifecycle contract
-    * documented on [[graft.operators.ScdType2]],
-    * [[graft.operators.SurrogateKeys]] and
-    * [[graft.operators.Dedup.materialize]]; CheckpointLifecycleSpec
-    * pins that repeated operator runs stay block-stable under it. */
+  /** Release persisted blocks between timed runs: clearCache() frees
+    * only catalog-cached tables, and each timed run's result still
+    * holds the pins it reaches. Each timed run builds its frames from
+    * scratch, so no prior run's checkpoint is ever re-read:
+    * unpersisting them is safe. It is a session-wide sweep: never call
+    * it while another job on the session still reads a pinned frame.
+    * Lifecycle: [[graft.operators.Checkpoints]]. */
   def releaseBlocks(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values

@@ -44,12 +44,15 @@ import graft.queries._
   */
 object SparkEntry {
 
+  /** Each query runs in its own pin scope ([[graft.operators.Checkpoints]]):
+    * pins its result does not reach are released when `run` returns. */
   val registry: Seq[QueryDef] =
-    RelationalQueries.all ++ LifecycleQueries.all ++ WindowQueries.all ++
+    (RelationalQueries.all ++ LifecycleQueries.all ++ WindowQueries.all ++
       TextQueries.all ++ SimilarityQueries.all ++ ExtendedQueries.all ++
       SqlQueries.all ++ CurationQueries.all ++ VocabQueries.all ++
       EventQueries.all ++ ScaleQueries.all ++ ImageQueries.all ++
-      ErasureQueries.all
+      ErasureQueries.all).map(q =>
+      q.copy(run = (s, dir) => graft.operators.Checkpoints.scoped(q.run(s, dir))))
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

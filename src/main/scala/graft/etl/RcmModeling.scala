@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.functions.Cleaning
-import graft.operators.{ParallelJobs, SurrogateKeys}
+import graft.operators.{Checkpoints, ParallelJobs, SurrogateKeys}
 
 /** Phase-4 star-schema assembly — re-expression of
   * `/root/reference/python/dimensional_modeling.py`.
@@ -39,11 +39,7 @@ import graft.operators.{ParallelJobs, SurrogateKeys}
   * read; the broadcasts, the CSV scans and the dense-key passes
   * ([[graft.operators.SurrogateKeys.surrogateKeys]]) then never re-run
   * per consumer. The pins are small (dimensions plus one fact-sized
-  * frame) and their lifecycle belongs to the caller, as for
-  * [[graft.operators.ScdType2]]'s output: release them with
-  * [[graft.operators.Checkpoints.releasePinned]] once the star is
-  * written, or let the ContextCleaner drop them when the frames become
-  * unreachable.
+  * frame). Lifecycle: [[graft.operators.Checkpoints]].
   */
 object RcmModeling {
 
@@ -105,7 +101,7 @@ object RcmModeling {
       "dim_procedures" -> dimProcedures,
       "dim_date" -> dimDate,
       "dim_departments" -> dimDepartments).map { case (name, df) =>
-        () => name -> df.localCheckpoint() })
+        () => name -> df.transform(Checkpoints.pin) })
     pinned.toMap + ("dim_patients" -> dimPatients)
   }
 
@@ -139,7 +135,7 @@ object RcmModeling {
         col("TransactionID"), col("EncounterID"), col("patient_sk"),
         col("provider_sk"), col("procedure_sk"), col("date_sk"),
         col("Amount"), col("PaidAmount"), col("source_hospital"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     val factTransactions = mergedTrans.drop("source_hospital")
 
     // fact_claims: inherit patient_sk through the transactions lookup

@@ -5,7 +5,7 @@ import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.{DataQuality, ParallelJobs, ScdType2}
+import graft.operators.{Checkpoints, DataQuality, ParallelJobs, ScdType2}
 
 /** End-to-end pipeline — the Spark re-expression of the reference's
   * entry point (`/root/reference/python/scd_implementation.py:102-132`):
@@ -35,10 +35,12 @@ object RcmPipeline {
     * JDBC deployment uses after [[RcmExtraction.run]] with
     * [[RcmExtraction.JdbcSource]]s (exercised in JdbcSourceSpec).
     *
-    * The result's star holds pinned frames (see [[RcmModeling]]); a
-    * long-lived session releases them once the star is written. */
+    * The night runs in one pin scope: the star keeps the pins it
+    * reaches, which the caller releases once the star is written, and
+    * every other pin (e.g. a dense-key pass a pinned dimension
+    * consumed) is released on return ([[graft.operators.Checkpoints]]). */
   def runRaw(raw: RcmExtraction.RawData, asOf: LocalDate,
-      existingDimPatients: Option[DataFrame] = None): Result = {
+      existingDimPatients: Option[DataFrame] = None): Result = Checkpoints.scoped {
     val asOfCol = lit(java.sql.Date.valueOf(asOf))
     val (tables, claims) = RcmTransform.run(raw, asOfCol)
 

@@ -4,6 +4,7 @@ import java.time.LocalDate
 
 import graft.Sessions
 import graft.analytics.RcmAnalytics
+import graft.operators.Checkpoints
 
 /** User-facing pipeline entry point — the Spark analog of
   * `python scd_implementation.py` followed by the analysis queries:
@@ -24,11 +25,11 @@ object RcmRun {
     // Prior SCD state, if a previous run wrote it (the reference reads
     // staging/dim_patients.parquet the same way).
     val existingPath = new java.io.File(s"$outDir/dim_patients.parquet")
-    // localCheckpoint: materialize prior state BEFORE the pipeline
+    // pin: materialize prior state BEFORE the pipeline
     // overwrites the same path (lazy read + overwrite of the input
     // path would otherwise race).
     val existing = if (existingPath.exists())
-      Some(spark.read.parquet(existingPath.toString).localCheckpoint()) else None
+      Some(spark.read.parquet(existingPath.toString).transform(Checkpoints.pin)) else None
 
     val t0 = System.nanoTime()
     val result = RcmPipeline.run(spark, dataDir, asOf, existing)

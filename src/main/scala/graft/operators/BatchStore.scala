@@ -44,16 +44,17 @@ object BatchStore {
     * shares: epoch `e` commits as batch id `1 + e`, and an epoch whose
     * `root/batch=<id>` is already committed is a replay that writes
     * nothing — the stage-and-rename commit means that dir is either
-    * complete or absent. `write(batch, id)` commits one epoch. Requires
-    * the replayed epoch to carry the same rows, which the checkpointed
-    * file/kafka sources guarantee. */
+    * complete or absent. `write(batch, id)` commits one epoch in its
+    * own pin scope ([[Checkpoints]]), so an epoch's pins are released
+    * when it ends. Requires the replayed epoch to carry the same rows,
+    * which the checkpointed file/kafka sources guarantee. */
   private[graft] def epochSink(root: String)(
       write: (DataFrame, Long) => Unit): (DataFrame, Long) => Unit =
     (batch, epochId) => {
       val id = 1L + epochId
       val dest = new org.apache.hadoop.fs.Path(root, s"batch=$id")
       val fs = dest.getFileSystem(batch.sparkSession.sessionState.newHadoopConf())
-      if (!fs.exists(dest)) write(batch, id)
+      if (!fs.exists(dest)) Checkpoints.scoped(write(batch, id))
     }
 
   /** All committed batches as one frame; the `batch` partition column

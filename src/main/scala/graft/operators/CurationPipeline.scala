@@ -120,254 +120,245 @@ object CurationPipeline {
     val keptDir = new org.apache.hadoop.fs.Path(st.kept, s"batch=$batchId")
     if (existsAt(keptDir)) return // replayed epoch: already committed
 
-    // adaptive parallelism floor (guide §2.5, r19), NEAR MODE ONLY —
-    // measured: a micro-batch arrives as one staged file = one scan
-    // task, and near mode's MinHash signing is the epoch's one
-    // corpus-grade map chain above it (the spread took the signing
-    // pass 889 ms → 213 ms per run, q241 1.6×). Exact mode has no
-    // such chain — there the spread only fanned every later slice-
-    // sized stage (pins, ledger diff, appends) across cores-many
-    // kilobyte tasks and cost more than its md5 saved (q243 +1.3 s) —
-    // so it keeps the arrival layout.
-    val spreadBatch =
-      if (gates.nearDup.isDefined) Parallelism.spread(batch, idCol)
-      else batch
+    // the epoch runs in one pin scope: every slice-sized pin it takes
+    // (its own, the gates', the signature writer's) is released when
+    // it ends — an exception mid-epoch (classifier/LM failure, append
+    // race) included, so a long-running stream never leaks one pinned
+    // slice per epoch
+    Checkpoints.scoped {
+      // adaptive parallelism floor (guide §2.5, r19), NEAR MODE ONLY —
+      // measured: a micro-batch arrives as one staged file = one scan
+      // task, and near mode's MinHash signing is the epoch's one
+      // corpus-grade map chain above it (the spread took the signing
+      // pass 889 ms → 213 ms per run, q241 1.6×). Exact mode has no
+      // such chain — there the spread only fanned every later slice-
+      // sized stage (pins, ledger diff, appends) across cores-many
+      // kilobyte tasks and cost more than its md5 saved (q243 +1.3 s) —
+      // so it keeps the arrival layout.
+      val spreadBatch =
+        if (gates.nearDup.isDefined) Parallelism.spread(batch, idCol)
+        else batch
 
-    // 1. markup + boilerplate strip served from the line-df store
-    // (cached: the above-threshold frame is batch-independent, so one
-    // store re-aggregate serves every epoch until the store changes)
-    val marked = spreadBatch.withColumn(textCol,
-      Boilerplate.stripMarkup(col(textCol)))
-    val stripped = models match {
-      case Some(mc) => Boilerplate.stripAgainst(marked,
-        mc.cached(spark, st.lineDf, s"boiler-minDf=${gates.minDf}")(
-          Boilerplate.repeatedLinesFromStore(spark, st.lineDf, domainCol,
-            gates.minDf)),
-        idCol, domainCol, textCol)
-      case None => Boilerplate.stripRepeatedLinesFromStore(spark, st.lineDf,
-        marked, idCol, domainCol, textCol, gates.minDf)
-    }
-
-    // 2. exact dedup: against the signature store (history = all
-    // prior epochs), then first-min-id within the batch; the batch
-    // pins once — it feeds the store anti-join, the window, and the
-    // downstream gates
-    val ledgerOn = st.ledger.isDefined
-    val hashed = labeled(spark, "strip+hash") {
-      stripped.withColumn("__chash", md5(col(textCol)))
-        .localCheckpoint()
-    }
-    // every slice-sized pin taken past this point is registered here
-    // and released in the finally below — an exception mid-epoch
-    // (classifier/LM failure, append race) must not leak one pinned
-    // slice per failed epoch in a long-running stream (release is
-    // idempotent unpersist, so the happy path pays nothing extra)
-    val pins = scala.collection.mutable.ListBuffer[DataFrame](hashed)
-    try {
-    // history = batches STRICTLY BEFORE this epoch: a replay in the
-    // crash window (signatures committed, kept batch not) would
-    // otherwise dedup the slice against its OWN just-committed
-    // signatures and re-commit an EMPTY kept batch — silent loss of
-    // the whole slice (spec-pinned: the retry must re-commit the
-    // full survivor set)
-    // the [[Dedup.incrementalDedupFromStore]] exact-pass shape: the
-    // history's digests stream MAP-SIDE against the broadcast batch
-    // digest set (the matched set is ≤ batch-sized by the distinct),
-    // then the batch anti-joins the broadcast matched set — the
-    // signature store contributes ~zero shuffle bytes per epoch at
-    // ANY history depth (MetricsSpec pins it measured; the naive
-    // `store.distinct()` anti-join this replaced shuffled the whole
-    // history's digests every micro-batch). The digest SCAN is
-    // Bloom-pruned too ([[Dedup.storeDigestsPruned]]): only the
-    // strictly-prior batches whose sidecar sketch might contain one
-    // of the slice's digests are read, so per-epoch store input
-    // scales with the slice's collisions, not corpus age (the last
-    // history-proportional term in this stage).
-    // near mode signs the slice ONCE (r18): the pinned signature frame
-    // feeds BOTH the dedup verdicts and the epoch's signature-store
-    // append below — the text-fed path shingled + hashed the slice
-    // twice per epoch (once inside the serve, once inside the store
-    // write), and the signing pass is the stage's dominant map cost
-    // at any scale. chash reuses the already-computed __chash.
-    val signedNd = gates.nearDup.map { nd =>
-      labeled(spark, "slice signing") {
-        Dedup.dedupSignaturesFromHashed(hashed, idCol, "__chash",
-          textCol, nd.k, nd.shingleN)
+      // 1. markup + boilerplate strip served from the line-df store
+      // (cached: the above-threshold frame is batch-independent, so one
+      // store re-aggregate serves every epoch until the store changes)
+      val marked = spreadBatch.withColumn(textCol,
+        Boilerplate.stripMarkup(col(textCol)))
+      val stripped = models match {
+        case Some(mc) => Boilerplate.stripAgainst(marked,
+          mc.cached(spark, st.lineDf, s"boiler-minDf=${gates.minDf}")(
+            Boilerplate.repeatedLinesFromStore(spark, st.lineDf, domainCol,
+              gates.minDf)),
+          idCol, domainCol, textCol)
+        case None => Boilerplate.stripRepeatedLinesFromStore(spark, st.lineDf,
+          marked, idCol, domainCol, textCol, gates.minDf)
       }
-    }
-    signedNd.foreach(pins += _)
-    val vsStore =
-      if (!hasBatches(spark, st.signatures)) hashed
-      else gates.nearDup match {
-        case Some(nd) =>
-          // exact + near verdicts against prior epochs' kept content
-          // ([[Dedup.incrementalDedupFromStoreAtSigned]] — Bloom-
-          // pruned, broadcast-batch-only joins, history never
-          // shuffles; fed the pre-signed slice)
-          val verd = labeled(spark, "dedup near serve") {
-            Dedup.incrementalDedupFromStoreAtSigned(spark,
-              st.signatures, signedNd.get, idCol, nd.k,
-              nd.bands, nd.threshold, beforeBatch = Some(batchId))
-          }
-          pins += verd
-          val clean = verd
-            .filter(!col("is_exact_dup") && col("n_near_dups") === 0)
-            .select(col(idCol))
-          hashed.join(broadcast(clean), Seq(idCol))
-        case None =>
-          val matched = labeled(spark, "dedup exact serve") {
-            Dedup.storeDigestsPruned(spark, st.signatures,
-              hashed.select(col("__chash")), beforeBatch = Some(batchId))
-            .select(col("chash").as("__chash"))
-            .join(broadcast(hashed.select(col("__chash")).distinct()),
-              Seq("__chash"))
-            .distinct()
-          }
-          hashed.join(broadcast(matched), Seq("__chash"), "left_anti")
-      }
-    val keeper = Window.partitionBy(col("__chash"))
-    val kept0 = vsStore
-      .withColumn("__keep", min(col(idCol)).over(keeper))
-      .filter(col(idCol) === col("__keep"))
-      .drop("__chash", "__keep")
-    // the dedup survivors feed THREE consumers (the signature append,
-    // the classifier gate, the keptGood join — plus the disposition
-    // diff with the ledger on): pin once so the window + store joins
-    // run once per epoch, not once per consumer (r19; r18 pinned only
-    // under the ledger)
-    val kept = labeled(spark, "kept pin") { kept0.localCheckpoint() }
-    pins += kept
 
-    // 3 ∥ 4 (r19, guide §2.6): the signature append and the
-    // classifier gate are INDEPENDENT legs over the pinned survivors
-    // (the append writes the dedup store; the classifier only reads
-    // the quality store), so they overlap — each leg's job tail
-    // back-fills the other's idle cores. Commit-order discipline is
-    // unchanged: signatures still commit before the ledger and the
-    // kept batch.
-    //
-    // 3. the new content's signatures join the store BEFORE the
-    // quality gates — dedup is about having SEEN content, not about
-    // having kept it (a rejected doc's re-crawl must not re-enter).
-    // Guarded for the crash-between-commits replay window: a retry
-    // that already committed its signatures but not its kept batch
-    // must no-op here and still commit the kept batch below.
-    val sigDir = new org.apache.hadoop.fs.Path(st.signatures,
-      s"batch=$batchId")
-    val signatureAppend: () => DataFrame = () => {
-      if (!existsAt(sigDir)) labeled(spark, "signature append") {
-        gates.nearDup match {
-          case Some(nd) => Dedup.writeSignatureStoreBandedSigned(
-            signedNd.get.join(broadcast(kept.select(col(idCol))), Seq(idCol)),
-            idCol, nd.k, nd.bands, st.signatures, batchId)
-          case None => Dedup.writeSignatureStore(kept, idCol, textCol,
-            k = 4, shingleN = 3, root = st.signatures, batchId = batchId)
+      // 2. exact dedup: against the signature store (history = all
+      // prior epochs), then first-min-id within the batch; the batch
+      // pins once — it feeds the store anti-join, the window, and the
+      // downstream gates
+      val ledgerOn = st.ledger.isDefined
+      val hashed = labeled(spark, "strip+hash") {
+        stripped.withColumn("__chash", md5(col(textCol)))
+          .transform(Checkpoints.pin)
+      }
+      // history = batches STRICTLY BEFORE this epoch: a replay in the
+      // crash window (signatures committed, kept batch not) would
+      // otherwise dedup the slice against its OWN just-committed
+      // signatures and re-commit an EMPTY kept batch — silent loss of
+      // the whole slice (spec-pinned: the retry must re-commit the
+      // full survivor set)
+      // the [[Dedup.incrementalDedupFromStore]] exact-pass shape: the
+      // history's digests stream MAP-SIDE against the broadcast batch
+      // digest set (the matched set is ≤ batch-sized by the distinct),
+      // then the batch anti-joins the broadcast matched set — the
+      // signature store contributes ~zero shuffle bytes per epoch at
+      // ANY history depth (MetricsSpec pins it measured; the naive
+      // `store.distinct()` anti-join this replaced shuffled the whole
+      // history's digests every micro-batch). The digest SCAN is
+      // Bloom-pruned too ([[Dedup.storeDigestsPruned]]): only the
+      // strictly-prior batches whose sidecar sketch might contain one
+      // of the slice's digests are read, so per-epoch store input
+      // scales with the slice's collisions, not corpus age (the last
+      // history-proportional term in this stage).
+      // near mode signs the slice ONCE (r18): the pinned signature frame
+      // feeds BOTH the dedup verdicts and the epoch's signature-store
+      // append below — the text-fed path shingled + hashed the slice
+      // twice per epoch (once inside the serve, once inside the store
+      // write), and the signing pass is the stage's dominant map cost
+      // at any scale. chash reuses the already-computed __chash.
+      val signedNd = gates.nearDup.map { nd =>
+        labeled(spark, "slice signing") {
+          Dedup.dedupSignaturesFromHashed(hashed, idCol, "__chash",
+            textCol, nd.k, nd.shingleN)
         }
       }
-      null
-    }
+      val vsStore =
+        if (!hasBatches(spark, st.signatures)) hashed
+        else gates.nearDup match {
+          case Some(nd) =>
+            // exact + near verdicts against prior epochs' kept content
+            // ([[Dedup.incrementalDedupFromStoreAtSigned]] — Bloom-
+            // pruned, broadcast-batch-only joins, history never
+            // shuffles; fed the pre-signed slice)
+            val verd = labeled(spark, "dedup near serve") {
+              Dedup.incrementalDedupFromStoreAtSigned(spark,
+                st.signatures, signedNd.get, idCol, nd.k,
+                nd.bands, nd.threshold, beforeBatch = Some(batchId))
+            }
+            val clean = verd
+              .filter(!col("is_exact_dup") && col("n_near_dups") === 0)
+              .select(col(idCol))
+            hashed.join(broadcast(clean), Seq(idCol))
+          case None =>
+            val matched = labeled(spark, "dedup exact serve") {
+              Dedup.storeDigestsPruned(spark, st.signatures,
+                hashed.select(col("__chash")), beforeBatch = Some(batchId))
+              .select(col("chash").as("__chash"))
+              .join(broadcast(hashed.select(col("__chash")).distinct()),
+                Seq("__chash"))
+              .distinct()
+            }
+            hashed.join(broadcast(matched), Seq("__chash"), "left_anti")
+        }
+      val keeper = Window.partitionBy(col("__chash"))
+      val kept0 = vsStore
+        .withColumn("__keep", min(col(idCol)).over(keeper))
+        .filter(col(idCol) === col("__keep"))
+        .drop("__chash", "__keep")
+      // the dedup survivors feed THREE consumers (the signature append,
+      // the classifier gate, the keptGood join — plus the disposition
+      // diff with the ledger on): pin once so the window + store joins
+      // run once per epoch, not once per consumer (r19; r18 pinned only
+      // under the ledger)
+      val kept = labeled(spark, "kept pin") { kept0.transform(Checkpoints.pin) }
 
-    // 4. classifier gate (model re-aggregated from the store's deltas
-    // — cached across epochs when `models` is wired). `classified` is
-    // classify's pinned output; released at the end of the epoch (it
-    // previously leaked to the ContextCleaner, one slice-sized pin
-    // per micro-batch).
-    val classifierGate: () => DataFrame = () =>
-      labeled(spark, "classifier gate") { models match {
-      case Some(mc) =>
-        // counts AND the model-derived classes frame are both cached
-        // per store version — a steady-state epoch pays zero
-        // model-sized aggregations here (r18; classify() used to
-        // re-run the per-class totals + vocab size every micro-batch).
-        // ONE cachedDerived entry (r19): base counts and the classes
-        // frame share one fingerprint taken at one instant, so a store
-        // change landing mid-epoch can never pair fresh counts with a
-        // stale derived frame (or vice versa).
-        val (cb, derived) = mc.cachedDerived(spark, st.quality,
-          s"quality-b=${gates.buckets}")(
-          LanguageModel.mergedStoreCounts(spark, st.quality,
-            Seq("label", "bucket")))(
-          b => Seq(QualityClassifier.classModel(b)))
-        QualityClassifier.classifyWith(kept, cb, derived.head, idCol,
-          textCol, gates.buckets)
-      case None => QualityClassifier.classifyFromStore(spark, st.quality,
-        kept, idCol, textCol, gates.buckets)
-    } }
-    val classified = ParallelJobs.map(
-      Seq(signatureAppend, classifierGate), parallelism = 2)(1)
-    val good0 = classified
-      .filter(col("label_pred") === gates.keepLabel)
-      .select(col(idCol))
-    pins += classified
-    val good = if (ledgerOn) labeled(spark, "good pin") {
-      good0.localCheckpoint() } else good0
-    if (ledgerOn) pins += good
-    val keptGood = kept.join(good, Seq(idCol))
+      // 3 ∥ 4 (r19, guide §2.6): the signature append and the
+      // classifier gate are INDEPENDENT legs over the pinned survivors
+      // (the append writes the dedup store; the classifier only reads
+      // the quality store), so they overlap — each leg's job tail
+      // back-fills the other's idle cores. Commit-order discipline is
+      // unchanged: signatures still commit before the ledger and the
+      // kept batch.
+      //
+      // 3. the new content's signatures join the store BEFORE the
+      // quality gates — dedup is about having SEEN content, not about
+      // having kept it (a rejected doc's re-crawl must not re-enter).
+      // Guarded for the crash-between-commits replay window: a retry
+      // that already committed its signatures but not its kept batch
+      // must no-op here and still commit the kept batch below.
+      val sigDir = new org.apache.hadoop.fs.Path(st.signatures,
+        s"batch=$batchId")
+      val signatureAppend: () => DataFrame = () => {
+        if (!existsAt(sigDir)) labeled(spark, "signature append") {
+          gates.nearDup match {
+            case Some(nd) => Dedup.writeSignatureStoreBandedSigned(
+              signedNd.get.join(broadcast(kept.select(col(idCol))), Seq(idCol)),
+              idCol, nd.k, nd.bands, st.signatures, batchId)
+            case None => Dedup.writeSignatureStore(kept, idCol, textCol,
+              k = 4, shingleN = 3, root = st.signatures, batchId = batchId)
+          }
+        }
+        null
+      }
 
-    // 5. LM perplexity gate at the absolute cut
-    val lmOk = labeled(spark, "lm gate") { models match {
-      case Some(mc) =>
-        // same discipline as the classifier: per-context totals and
-        // vocab size cached per store version (r18), all three frames
-        // under ONE cachedDerived entry / fingerprint (r19 coherence)
-        val (cb, derived) = mc.cachedDerived(spark, st.lm, "lm-bigrams")(
-          LanguageModel.mergedStoreCounts(spark, st.lm, Seq("w1", "w2")))(
-          b => Seq(LanguageModel.lmContextTotals(b),
-            LanguageModel.lmVocabSize(b)))
-        LanguageModel.lmThresholdFilterWith(keptGood, cb, derived(0),
-          derived(1), idCol, textCol, gates.lmCutAvgFp)
-      case None => LanguageModel.lmThresholdFilterFromStore(spark, st.lm,
-        keptGood, idCol, textCol, gates.lmCutAvgFp)
-    } }
-    pins += lmOk
-    val survivors = keptGood.join(lmOk.select(col(idCol)), Seq(idCol))
+      // 4. classifier gate (model re-aggregated from the store's deltas
+      // — cached across epochs when `models` is wired). `classified` is
+      // classify's pinned output, released when the epoch's scope ends.
+      val classifierGate: () => DataFrame = () =>
+        labeled(spark, "classifier gate") { models match {
+        case Some(mc) =>
+          // counts AND the model-derived classes frame are both cached
+          // per store version — a steady-state epoch pays zero
+          // model-sized aggregations here (r18; classify() used to
+          // re-run the per-class totals + vocab size every micro-batch).
+          // ONE cachedDerived entry (r19): base counts and the classes
+          // frame share one fingerprint taken at one instant, so a store
+          // change landing mid-epoch can never pair fresh counts with a
+          // stale derived frame (or vice versa).
+          val (cb, derived) = mc.cachedDerived(spark, st.quality,
+            s"quality-b=${gates.buckets}")(
+            LanguageModel.mergedStoreCounts(spark, st.quality,
+              Seq("label", "bucket")))(
+            b => Seq(QualityClassifier.classModel(b)))
+          QualityClassifier.classifyWith(kept, cb, derived.head, idCol,
+            textCol, gates.buckets)
+        case None => QualityClassifier.classifyFromStore(spark, st.quality,
+          kept, idCol, textCol, gates.buckets)
+      } }
+      val classified = ParallelJobs.map(
+        Seq(signatureAppend, classifierGate), parallelism = 2)(1)
+      val good0 = classified
+        .filter(col("label_pred") === gates.keepLabel)
+        .select(col(idCol))
+      val good = if (ledgerOn) labeled(spark, "good pin") {
+        good0.transform(Checkpoints.pin) } else good0
+      val keptGood = kept.join(good, Seq(idCol))
 
-    // 6. deterministic mixture coin; the final kept slice
-    val finalKept = survivors.filter(gates.mixKeep)
+      // 5. LM perplexity gate at the absolute cut
+      val lmOk = labeled(spark, "lm gate") { models match {
+        case Some(mc) =>
+          // same discipline as the classifier: per-context totals and
+          // vocab size cached per store version (r18), all three frames
+          // under ONE cachedDerived entry / fingerprint (r19 coherence)
+          val (cb, derived) = mc.cachedDerived(spark, st.lm, "lm-bigrams")(
+            LanguageModel.mergedStoreCounts(spark, st.lm, Seq("w1", "w2")))(
+            b => Seq(LanguageModel.lmContextTotals(b),
+              LanguageModel.lmVocabSize(b)))
+          LanguageModel.lmThresholdFilterWith(keptGood, cb, derived(0),
+            derived(1), idCol, textCol, gates.lmCutAvgFp)
+        case None => LanguageModel.lmThresholdFilterFromStore(spark, st.lm,
+          keptGood, idCol, textCol, gates.lmCutAvgFp)
+      } }
+      val survivors = keptGood.join(lmOk.select(col(idCol)), Seq(idCol))
 
-    // 7. the disposition ledger: one row per INPUT doc — the first
-    // gate that dropped it, or `kept`, computed as ONE pass over the
-    // pinned slice with four broadcast membership flags and a CASE
-    // (r18: replaced five unioned anti-join branches that re-scanned
-    // the stage sets — same rows, the oracle's own CASE shape, one
-    // slice scan + 4 broadcast joins instead of 5 scans + a union
-    // exchange). The stage sets partition the slice because each gate
-    // filters the previous gate's survivors: absent-from-kept ⇒
-    // dedup, else absent-from-good ⇒ quality, else absent-from-lmOk
-    // ⇒ lm, else absent-from-finalKept ⇒ mixture, else kept.
-    // Committed BEFORE the kept batch so the crash-between-commits
-    // replay window stays covered (a retry that committed the ledger
-    // but not the kept batch skips here and still commits below —
-    // the signature-store discipline).
-    st.ledger.foreach { lroot =>
-      val ldir = new org.apache.hadoop.fs.Path(lroot, s"batch=$batchId")
-      if (!existsAt(ldir)) {
-        def flag(f: DataFrame, name: String) =
-          broadcast(f.select(col(idCol)).withColumn(name, lit(true)))
-        val disposition = hashed.select(col(idCol), col(domainCol))
-          .join(flag(kept, "__k"), Seq(idCol), "left")
-          .join(flag(good, "__g"), Seq(idCol), "left")
-          .join(flag(lmOk, "__l"), Seq(idCol), "left")
-          .join(flag(finalKept, "__f"), Seq(idCol), "left")
-          .withColumn("stage",
-            when(col("__k").isNull, "dedup")
-              .when(col("__g").isNull, "quality")
-              .when(col("__l").isNull, "lm")
-              .when(col("__f").isNull, "mixture")
-              .otherwise("kept"))
-          .select(col(idCol), col(domainCol), col("stage"))
-        labeled(spark, "ledger append") {
-          BatchStore.append(disposition, lroot, batchId) }
+      // 6. deterministic mixture coin; the final kept slice
+      val finalKept = survivors.filter(gates.mixKeep)
+
+      // 7. the disposition ledger: one row per INPUT doc — the first
+      // gate that dropped it, or `kept`, computed as ONE pass over the
+      // pinned slice with four broadcast membership flags and a CASE
+      // (r18: replaced five unioned anti-join branches that re-scanned
+      // the stage sets — same rows, the oracle's own CASE shape, one
+      // slice scan + 4 broadcast joins instead of 5 scans + a union
+      // exchange). The stage sets partition the slice because each gate
+      // filters the previous gate's survivors: absent-from-kept ⇒
+      // dedup, else absent-from-good ⇒ quality, else absent-from-lmOk
+      // ⇒ lm, else absent-from-finalKept ⇒ mixture, else kept.
+      // Committed BEFORE the kept batch so the crash-between-commits
+      // replay window stays covered (a retry that committed the ledger
+      // but not the kept batch skips here and still commits below —
+      // the signature-store discipline).
+      st.ledger.foreach { lroot =>
+        val ldir = new org.apache.hadoop.fs.Path(lroot, s"batch=$batchId")
+        if (!existsAt(ldir)) {
+          def flag(f: DataFrame, name: String) =
+            broadcast(f.select(col(idCol)).withColumn(name, lit(true)))
+          val disposition = hashed.select(col(idCol), col(domainCol))
+            .join(flag(kept, "__k"), Seq(idCol), "left")
+            .join(flag(good, "__g"), Seq(idCol), "left")
+            .join(flag(lmOk, "__l"), Seq(idCol), "left")
+            .join(flag(finalKept, "__f"), Seq(idCol), "left")
+            .withColumn("stage",
+              when(col("__k").isNull, "dedup")
+                .when(col("__g").isNull, "quality")
+                .when(col("__l").isNull, "lm")
+                .when(col("__f").isNull, "mixture")
+                .otherwise("kept"))
+            .select(col(idCol), col(domainCol), col("stage"))
+          labeled(spark, "ledger append") {
+            BatchStore.append(disposition, lroot, batchId) }
+        }
+      }
+
+      // 8. the exactly-once kept commit
+      labeled(spark, "kept append") {
+        BatchStore.append(
+          finalKept.select(col(idCol), col(domainCol), col(textCol)),
+          st.kept, batchId)
       }
     }
-
-    // 8. the exactly-once kept commit
-    labeled(spark, "kept append") {
-      BatchStore.append(
-        finalKept.select(col(idCol), col(domainCol), col(textCol)),
-        st.kept, batchId)
-    }
-    } finally pins.foreach(Checkpoints.releasePinned)
   }
 
   /** Masked KEPT-CORPUS read: the committed survivors minus tombstoned

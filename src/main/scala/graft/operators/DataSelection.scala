@@ -86,21 +86,17 @@ object DataSelection {
     * with zero tokens have no features and are absent (nothing to
     * judge). */
   def dsirTopK(candidates: DataFrame, target: DataFrame, idCol: String,
-      textCol: String, buckets: Int, k: Int): DataFrame = {
-    val (scored, pins) = dsirScored(candidates, target, idCol, textCol, buckets, k)
-    val out = scored.localCheckpoint()
-    pins.foreach(Checkpoints.releasePinned)
-    out
-  }
+      textCol: String, buckets: Int, k: Int): DataFrame =
+    Checkpoints.scoped(Checkpoints.pin(
+      dsirScored(candidates, target, idCol, textCol, buckets, k)))
 
   /** [[dsirTopK]] minus the result checkpoint — the pre-checkpoint
     * plan stays inspectable (PlanSpec pins the broadcast weight join
     * and the product-free shape; a checkpointed frame's plan is just
-    * a block scan). Returns the scored frame plus the internal pins
-    * the caller must release after consuming it. */
+    * a block scan). Its internal pins live in the caller's scope. */
   private[graft] def dsirScored(candidates: DataFrame, target: DataFrame,
       idCol: String, textCol: String, buckets: Int,
-      k: Int): (DataFrame, Seq[DataFrame]) =
+      k: Int): DataFrame =
     dsirScoredFromCounts(candidates,
       targetBucketCounts(target, idCol, textCol, buckets)
         .select(col("bucket"), col("cnt").as("t_cnt")),
@@ -118,16 +114,16 @@ object DataSelection {
 
   private def dsirScoredFromCounts(candidates: DataFrame, targetCounts: DataFrame,
       idCol: String, textCol: String, buckets: Int,
-      k: Int): (DataFrame, Seq[DataFrame]) = {
+      k: Int): DataFrame = {
     require(buckets >= 2, s"need buckets >= 2, got $buckets")
     require(k >= 1, s"need k >= 1, got $k")
     // pin: feeds the raw distribution AND the per-doc scoring
     val feats = hashedFeatures(candidates, idCol, textCol, buckets)
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     // pin: each B-row count frame feeds its weight join AND a totals agg
     val rc = feats.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("r_cnt")).localCheckpoint()
-    val tc = targetCounts.localCheckpoint()
+      .agg(count(lit(1)).as("r_cnt")).transform(Checkpoints.pin)
+    val tc = Checkpoints.pin(targetCounts)
     // empty (or fully-erased, all-net-zero) distributions sum to NULL
     // — coalesce to 0: add-one smoothing still defines every ratio
     // (an empty target scores all candidates by uniform weights)
@@ -145,7 +141,7 @@ object DataSelection {
           / ((coalesce(col("r_cnt"), lit(0L)) + lit(1L)).cast("double")
             * (col("nt") + buckets))).cast("long"))
       .select(col("bucket"), col("w"))
-    val out = feats.groupBy(col(idCol), col("bucket"))
+    feats.groupBy(col(idCol), col("bucket"))
       .agg(count(lit(1)).as("__c"))
       .join(broadcast(weights), Seq("bucket"))
       .groupBy(col(idCol))
@@ -155,7 +151,6 @@ object DataSelection {
       .select(col(idCol), col("n_feats"), col("dsir_fp"), col("dsir_avg"))
       .orderBy(desc("dsir_avg"), col(idCol))
       .limit(k)
-    (out, Seq(feats, rc, tc))
   }
 
   // ------------------------------------- persisted target distribution
@@ -215,10 +210,7 @@ object DataSelection {
     val tc = BatchStore.read(spark, root)
       .groupBy(col("bucket")).agg(sum(col("cnt")).as("t_cnt"))
       .filter(col("t_cnt") =!= 0)
-    val (scored, pins) = dsirScoredFromCounts(candidates, tc,
-      idCol, textCol, buckets, k)
-    val out = scored.localCheckpoint()
-    pins.foreach(Checkpoints.releasePinned)
-    out
+    Checkpoints.scoped(Checkpoints.pin(dsirScoredFromCounts(candidates, tc,
+      idCol, textCol, buckets, k)))
   }
 }

@@ -76,22 +76,17 @@ object Dedup {
     *     length L ≥ gramN is exactly a run of duplicated grams, so
     *     span recall is complete above the gram size. */
   def substringDupSpans(df: DataFrame, idCol: String, textCol: String,
-      gramN: Int, stagingDir: Option[String] = None): DataFrame = {
+      gramN: Int): DataFrame = {
     require(gramN >= 1, s"gramN must be >= 1, got $gramN")
     val base = df.select(col(idCol),
       gramHashes(tokens(col(textCol)), gramN).as("gh_arr"))
     // The gram frame feeds BOTH the duplicated-gram aggregate and the
-    // position join. Default: re-derive it on each side — two corpus
+    // position join; it is re-derived on each side — two corpus
     // tokenize+explode passes, zero staging I/O (the right call while
-    // scans are cheap relative to writing the (id, pos, gh) frame,
-    // which is ~3× the text bytes). At production scale, when corpus
-    // passes dominate, pass `stagingDir` to tokenize ONCE and stage
-    // through parquet — the same barrier contract as
-    // [[minhashSignatures]] ([[materialize]]).
-    val grams0 = base.select(col(idCol),
+    // scans are cheap relative to pinning the (id, pos, gh) frame,
+    // which is ~3× the text bytes).
+    val grams = base.select(col(idCol),
       posexplode(col("gh_arr")).as(Seq("pos", "gh")))
-    val grams =
-      if (stagingDir.isDefined) materialize(grams0, stagingDir) else grams0
     val dupGrams = grams.groupBy(col("gh"))
       .agg(countDistinct(col(idCol)).as("n_docs"))
       .filter(col("n_docs") > 1)
@@ -123,43 +118,12 @@ object Dedup {
           .otherwise(lit(0.0)).as("dup_fraction"))
   }
 
-  /** Materialization barrier for a frame that is re-read several times
-    * and must NOT be re-derived (see [[withShingleSignatures]]).
-    *  - `stagingDir = None` (default): `localCheckpoint` — blocks live
-    *    in executor storage; right for single-job corpora that fit the
-    *    cluster's storage memory+disk.
-    *  - `stagingDir = Some(dir)`: write-then-read a parquet staging
-    *    table — the 100 TB path. Storage is the DFS, the frame
-    *    survives executor loss, and downstream stages get columnar
-    *    pruning + split-sized partitions instead of pinned blocks.
-    *    Each call stages under a fresh unique subdirectory of `dir`,
-    *    so two operators (or two runs) sharing a staging namespace
-    *    can never silently alias each other's data through the lazy
-    *    read; the caller owns cleanup of the namespace.
-    *
-    * Lifecycle (localCheckpoint path): the blocks stay pinned until JVM
-    * GC + ContextCleaner reclaim the RDD — `spark.catalog.clearCache()`
-    * does NOT free them. A long-lived session that calls this operator
-    * repeatedly should release dead blocks between calls once the
-    * returned frame is consumed:
-    * `sc.getPersistentRDDs.values.foreach(_.unpersist(false))` (see
-    * [[graft.Bench.releaseBlocks]]; CheckpointLifecycleSpec pins
-    * block-count stability under that contract). */
-  private def materialize(df: DataFrame, stagingDir: Option[String]): DataFrame =
-    stagingDir match {
-      case Some(dir) =>
-        val unique = s"$dir/stage-${java.util.UUID.randomUUID()}"
-        df.write.mode("error").parquet(unique)
-        df.sparkSession.read.parquet(unique)
-      case None => df.localCheckpoint()
-    }
-
   /** Per-doc MinHash signature: k permuted mins over the document's
     * hashed word-`n`-gram shingle set. Rows for docs shorter than n
     * tokens are dropped — they cannot near-dup at shingle granularity. */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-      k: Int, shingleN: Int, stagingDir: Option[String] = None): DataFrame =
-    withShingleSignatures(df, idCol, textCol, k, shingleN, stagingDir).drop("hs")
+      k: Int, shingleN: Int): DataFrame =
+    withShingleSignatures(df, idCol, textCol, k, shingleN).drop("hs")
 
   /** Universal-hash permutation family over a 32-bit base hash:
     * `h_j(x) = (a_j * h32(x) + b_j) mod P32` with P32 prime > 2^32.
@@ -185,23 +149,20 @@ object Dedup {
     * mirrors the same hashing). */
   private[operators] def withShingleSignatures(df: DataFrame, idCol: String,
       textCol: String, k: Int, shingleN: Int,
-      stagingDir: Option[String] = None,
       carry: Seq[String] = Nil): DataFrame = {
-    // The materialize() below is a MATERIALIZATION BARRIER, not just
-    // a reuse cache: without it, CollapseProject inlines the
-    // shingle+hash arrays into every one of the k minhash projections
-    // and the corpus is re-tokenized and re-hashed k times per row
-    // (measured 10×+ slowdown). Local checkpoint by default; pass
-    // `stagingDir` to stage through parquet at production scale.
+    // The pin below is a MATERIALIZATION BARRIER, not just a reuse
+    // cache: without it, CollapseProject inlines the shingle+hash
+    // arrays into every one of the k minhash projections and the
+    // corpus is re-tokenized and re-hashed k times per row (measured
+    // 10×+ slowdown).
     // NOTE r19: deliberately NOT Parallelism.spread here — this seam
     // signs the RECOMPUTE-path history (q128/q131), whose shuffle
     // budget is pinned at "history never shuffles" (MetricsSpec); the
     // store writers and the delta-side serves spread at their own
     // entry points instead.
-    val withBase = materialize(
+    val withBase = Checkpoints.pin(
       df.select(col(idCol) +: carry.map(col) :+
-        hashedShingles(tokens(col(textCol)), shingleN).as("hs"): _*),
-      stagingDir)
+        hashedShingles(tokens(col(textCol)), shingleN).as("hs"): _*))
     withBase.select(
       (col(idCol) +: carry.map(col)) ++ (col("hs") +:
         (0 until k).map(j =>
@@ -216,15 +177,14 @@ object Dedup {
     * pair, then pairs are verified with exact shingle Jaccard >=
     * `threshold`. Returns (idA, idB, jaccard), idA < idB. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
-      k: Int, shingleN: Int, bands: Int, threshold: Double,
-      stagingDir: Option[String] = None): DataFrame = {
+      k: Int, shingleN: Int, bands: Int, threshold: Double): DataFrame = {
     require(k % bands == 0, s"k=$k must divide into bands=$bands")
     // The shingle+hash base frame inside withShingleSignatures is the
     // single materialization; signatures re-derive from it with cheap
     // arithmetic on each of the four references below (both self-join
     // sides, both verification sides). A second persist here would pin
     // the dominant payload (the shingle arrays) twice.
-    val sigs = withShingleSignatures(df, idCol, textCol, k, shingleN, stagingDir)
+    val sigs = withShingleSignatures(df, idCol, textCol, k, shingleN)
     val candidates = bandCandidates(sigs, idCol, k, bands)
     verifyJaccard(candidates, sigs.select(col(idCol), col("hs").as("sh")), idCol, threshold)
   }
@@ -279,12 +239,11 @@ object Dedup {
     * verify joins); only the verification arithmetic differs.
     * Returns `(id_a, id_b, containment_a, containment_b)`. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
-      k: Int, shingleN: Int, bands: Int, threshold: Double,
-      stagingDir: Option[String] = None): DataFrame = {
+      k: Int, shingleN: Int, bands: Int, threshold: Double): DataFrame = {
     require(k % bands == 0, s"k=$k must divide into bands=$bands")
     require(threshold > 0 && threshold <= 1,
       s"need 0 < threshold <= 1, got $threshold")
-    val sigs = withShingleSignatures(df, idCol, textCol, k, shingleN, stagingDir)
+    val sigs = withShingleSignatures(df, idCol, textCol, k, shingleN)
     val candidates = bandCandidates(sigs, idCol, k, bands)
     val sa = sigs.select(col(idCol).as("id_a"), col("hs").as("sh_a"))
     val sb = sigs.select(col(idCol).as("id_b"), col("hs").as("sh_b"))
@@ -306,14 +265,12 @@ object Dedup {
     * (mh columns null for sub-`shingleN`-token docs, which cannot
     * near-dup). The hs/mh computation reads the shingle array k+1
     * times, so the frame is built behind the same materialization
-    * barrier as [[withShingleSignatures]] (`stagingDir` = the parquet
-    * path at production scale). */
+    * barrier as [[withShingleSignatures]]. */
   def dedupSignatures(df: DataFrame, idCol: String, textCol: String,
-      k: Int, shingleN: Int, stagingDir: Option[String] = None): DataFrame = {
-    val base = materialize(
+      k: Int, shingleN: Int): DataFrame = {
+    val base = Checkpoints.pin(
       df.select(col(idCol), md5(col(textCol)).as("chash"),
-        hashedShingles(tokens(col(textCol)), shingleN).as("hs")),
-      stagingDir)
+        hashedShingles(tokens(col(textCol)), shingleN).as("hs")))
     base.select(col(idCol) +: col("chash") +: col("hs") +:
       (0 until k).map(j =>
         array_min(transform(col("hs"),
@@ -324,20 +281,17 @@ object Dedup {
   /** [[dedupSignatures]] over a frame that ALREADY carries the content
     * digest (`chashCol` — MUST equal `md5(textCol)`; the curation DAG's
     * pinned slice computes it once at epoch start): same output shape
-    * and values, one md5-per-doc pass saved, and the returned frame's
-    * materialization barrier is the caller's to release
-    * ([[Checkpoints.releasePinned]]). The r18 sign-once hook: a near-
+    * and values, one md5-per-doc pass saved; the returned frame reaches
+    * its materialization barrier ([[Checkpoints]]). The r18 sign-once hook: a near-
     * mode epoch derives BOTH its dedup verdicts and its signature-store
     * append from this one frame instead of shingling + hashing the
     * slice twice ([[incrementalDedupFromStoreAtSigned]] /
     * [[writeSignatureStoreBandedSigned]]). */
   def dedupSignaturesFromHashed(hashed: DataFrame, idCol: String,
-      chashCol: String, textCol: String, k: Int, shingleN: Int,
-      stagingDir: Option[String] = None): DataFrame = {
-    val base = materialize(
+      chashCol: String, textCol: String, k: Int, shingleN: Int): DataFrame = {
+    val base = Checkpoints.pin(
       hashed.select(col(idCol), col(chashCol).as("chash"),
-        hashedShingles(tokens(col(textCol)), shingleN).as("hs")),
-      stagingDir)
+        hashedShingles(tokens(col(textCol)), shingleN).as("hs")))
     base.select(col(idCol) +: col("chash") +: col("hs") +:
       (0 until k).map(j =>
         array_min(transform(col("hs"),
@@ -355,10 +309,10 @@ object Dedup {
     * dot-dir (ignored by readers) and renamed in atomically, so a
     * reader never sees a half-written batch and a crashed write leaves
     * only invisible garbage; a retry of a committed batch fails fast
-    * on the existing dir instead of duplicating signatures. */
+    * on the existing dir instead of duplicating signatures. The
+    * signing barrier is pinned in a scope and released on return. */
   def writeSignatureStore(df: DataFrame, idCol: String, textCol: String,
-      k: Int, shingleN: Int, root: String, batchId: Long,
-      stagingDir: Option[String] = None): Unit = {
+      k: Int, shingleN: Int, root: String, batchId: Long): Unit = {
     // drop any STALE sidecar for this id BEFORE the batch commits
     // (re-append of a compacted-away id after a crashed
     // refresh/sweep): the commit→fresh-sidecar window must leave a
@@ -368,13 +322,13 @@ object Dedup {
     val sfs = sidecar.getFileSystem(
       df.sparkSession.sessionState.newHadoopConf())
     if (sfs.exists(sidecar)) sfs.delete(sidecar, false)
-    BatchStore.append(
+    Checkpoints.scoped(BatchStore.append(
       // adaptive parallelism floor (guide §2.5, r19): the batch's
       // shingle+MinHash signing inherits the scan's task count — one
       // task on single-row-group inputs; no-op on parallel inputs
       dedupSignatures(Parallelism.spread(df, idCol), idCol, textCol, k,
-        shingleN, stagingDir),
-      root, batchId)
+        shingleN),
+      root, batchId))
     // sidecar AFTER the batch commit: a crash in between leaves a
     // committed batch that is simply always scanned (sound); the
     // sketches themselves cost two delta-sized aggregations
@@ -412,10 +366,9 @@ object Dedup {
 
   def writeSignatureStoreBanded(df: DataFrame, idCol: String,
       textCol: String, k: Int, shingleN: Int, bands: Int, root: String,
-      batchId: Long, stagingDir: Option[String] = None): Unit = {
+      batchId: Long): Unit = {
     ensureBandsPin(df.sparkSession, root, k, bands)
-    writeSignatureStore(df, idCol, textCol, k, shingleN, root, batchId,
-      stagingDir)
+    writeSignatureStore(df, idCol, textCol, k, shingleN, root, batchId)
   }
 
   /** [[writeSignatureStoreBanded]] fed an ALREADY-SIGNED frame (a
@@ -678,9 +631,8 @@ object Dedup {
     * This entry point recomputes the history's signatures from text:
     * map-side, zero history shuffles, but it IS a history-sized
     * materialization per run — [[dedupSignatures]] stages the full
-    * history's digest+shingle+signature frame (localCheckpoint to
-    * executor storage by default; pass `stagingDir` to stage through
-    * parquet at production scale), and at 100 TB that scan+hash is
+    * history's digest+shingle+signature frame (pinned to executor
+    * storage), and at 100 TB that scan+hash is
     * the daily bill. The production path persists the signatures
     * ONCE and appends each day's delta: [[writeSignatureStore]] →
     * [[incrementalDedupFromStore]] → append the batch's own
@@ -689,9 +641,9 @@ object Dedup {
     * path in Round9OpsSpec). */
   def incrementalDedup(history: DataFrame, batch: DataFrame, idCol: String,
       textCol: String, k: Int, shingleN: Int, bands: Int,
-      threshold: Double, stagingDir: Option[String] = None): DataFrame =
+      threshold: Double): DataFrame =
     incrementalDedupFromStore(
-      dedupSignatures(history, idCol, textCol, k, shingleN, stagingDir),
+      dedupSignatures(history, idCol, textCol, k, shingleN),
       batch, idCol, textCol, k, shingleN, bands, threshold)
 
   /** The incremental-dedup core over a PERSISTED history: `store` is a
@@ -757,12 +709,11 @@ object Dedup {
   def incrementalDedupFromStoreAt(spark: org.apache.spark.sql.SparkSession,
       root: String, batch: DataFrame, idCol: String, textCol: String,
       k: Int, shingleN: Int, bands: Int, threshold: Double,
-      beforeBatch: Option[Long] = None, masked: Boolean = false,
-      stagingDir: Option[String] = None): DataFrame = {
+      beforeBatch: Option[Long] = None, masked: Boolean = false): DataFrame = {
     require(k % bands == 0, s"k=$k must divide into bands=$bands")
     // delta-side spread before signing (see incrementalDedupFromStore)
     val bSigs = withShingleSignatures(Parallelism.spread(batch, idCol),
-      idCol, textCol, k, shingleN, stagingDir)
+      idCol, textCol, k, shingleN)
     def base(hits: Option[Seq[Long]]): DataFrame = {
       val raw = hits match {
         case Some(ids) => readBatchesPruned(spark, root, ids)
@@ -945,7 +896,7 @@ object Dedup {
       .filter(size(col("sh")) > 0)
       .withColumn("hsh", array_distinct(transform(col("sh"), s => hash60(s))))
       .drop("sh")
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     val a = shingled.select(
       col(idCol).as("id_a") +: col("hsh").as("sh_a") +: bucketCols.map(col): _*)
     val b = shingled.select(
@@ -981,9 +932,8 @@ object Dedup {
     * as the convergence probe (the materializing action for the next
     * round) completes, and the edge frame is released on return — a
     * call pins O(1) block sets while running and exactly ONE (the
-    * returned labels) after it returns, not O(rounds). That final
-    * checkpoint follows the lifecycle contract on [[materialize]]:
-    * the caller releases it (e.g. [[graft.Bench.releaseBlocks]]).
+    * returned labels) after it returns, not O(rounds). Lifecycle:
+    * [[Checkpoints]].
     *
     * Returns (node, component): every id that appears in `pairs`,
     * labeled with the min id of its component. Singletons (ids never
@@ -991,45 +941,43 @@ object Dedup {
     * `coalesce(component, id)`.
     */
   def connectedComponents(pairs: DataFrame, idA: String = "id_a",
-      idB: String = "id_b", maxRounds: Int = 30): DataFrame = {
+      idB: String = "id_b", maxRounds: Int = 30): DataFrame = Checkpoints.scoped {
     val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .union(pairs.select(col(idB).as("src"), col(idA).as("dst")))
       .distinct()
-      .localCheckpoint() // re-read every round; one shuffle, once
+      .transform(Checkpoints.pin) // re-read every round; one shuffle, once
     var labels = edges.groupBy(col("src")).agg(min(col("dst")).as("nmin"))
       .select(col("src").as("node"), least(col("src"), col("nmin")).as("label"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     var rounds = 0
     var converged = false
-    try {
-      while (!converged && rounds < maxRounds) {
-        // The previous label rides through the union as `prev` (null on
-        // neighbor rows; max() ignores nulls and each node contributes
-        // exactly one non-null prev via its self row), so convergence
-        // is read off the SAME aggregation that builds the round — the
-        // old separate next⋈labels probe join was a whole extra
-        // shuffle stage per round at any scale.
-        val neighborLabels = edges
-          .join(labels, edges("dst") === labels("node"))
-          .select(edges("src").as("node"), col("label"),
-            lit(null).cast("long").as("prev"))
-        val self = labels.select(col("node"), col("label"),
-          col("label").as("prev"))
-        val next = neighborLabels.union(self)
-          .groupBy(col("node")).agg(min(col("label")).as("label"),
-            max(col("prev")).as("prev"))
-          .localCheckpoint()
-        val changed = next.filter(col("label") < col("prev")).count()
-        // `next` is fully materialized (eager checkpoint) and `changed`
-        // no longer needs the previous round — release its blocks NOW,
-        // not at caller cleanup: near maxRounds the superseded rounds
-        // would otherwise pin ~30 copies of the node set simultaneously.
-        releasePinned(labels)
-        labels = next.select(col("node"), col("label"))
-        converged = changed == 0
-        rounds += 1
-      }
-    } finally releasePinned(edges)
+    while (!converged && rounds < maxRounds) {
+      // The previous label rides through the union as `prev` (null on
+      // neighbor rows; max() ignores nulls and each node contributes
+      // exactly one non-null prev via its self row), so convergence
+      // is read off the SAME aggregation that builds the round — the
+      // old separate next⋈labels probe join was a whole extra
+      // shuffle stage per round at any scale.
+      val neighborLabels = edges
+        .join(labels, edges("dst") === labels("node"))
+        .select(edges("src").as("node"), col("label"),
+          lit(null).cast("long").as("prev"))
+      val self = labels.select(col("node"), col("label"),
+        col("label").as("prev"))
+      val next = neighborLabels.union(self)
+        .groupBy(col("node")).agg(min(col("label")).as("label"),
+          max(col("prev")).as("prev"))
+        .transform(Checkpoints.pin)
+      val changed = next.filter(col("label") < col("prev")).count()
+      // `next` is fully materialized (eager checkpoint) and `changed`
+      // no longer needs the previous round — release its blocks NOW,
+      // not at scope end: near maxRounds the superseded rounds would
+      // otherwise pin ~30 copies of the node set simultaneously.
+      Checkpoints.releasePinned(labels)
+      labels = next.select(col("node"), col("label"))
+      converged = changed == 0
+      rounds += 1
+    }
     require(converged,
       s"connectedComponents: no fixpoint after $maxRounds rounds — graph diameter exceeds the bound; raise maxRounds or use a star-contraction variant")
     labels.select(col("node"), col("label").as("component"))
@@ -1061,9 +1009,6 @@ object Dedup {
       .select(col(groupCol), col("n_docs"),
         col(idCol).as("canonical_id"), col(scoreCol).as("canonical_score"))
   }
-
-  private def releasePinned(df: DataFrame): Unit =
-    Checkpoints.releasePinned(df)
 
   /** Per-doc SimHash over token hashes: bit b of the sketch is set
     * when the b-th bit is set in more token hashes than not.
@@ -1164,47 +1109,39 @@ object Dedup {
         st.isDirectory && st.getPath.getName.startsWith("batch="))
     }
     if (committed(keptRoot)) return // replayed epoch: already committed
-    // pin: the slice feeds the verdict join, the keeper window, and
-    // both commits. Released in the finally — a failure between the
-    // pin and the kept append (e.g. a racing batch-id require in
-    // BatchStore.append) must not leak one pinned slice per failed
-    // epoch in a long-running stream.
-    val hashed = batch
-      .withColumn("__chash", md5(col(textCol))).localCheckpoint()
-    // the verdict frame pins the slice's signature checkpoint (the
-    // withShingleSignatures barrier inside the serve) — released with
-    // the epoch's other pins so a long-running stream stays flat
-    var verdict: Option[DataFrame] = None
-    try {
-    val vsStore =
-      if (!hasBatches(sigRoot)) hashed
-      else {
-        // Bloom-pruned serve: exact + near passes each scan only the
-        // strictly-prior batches whose sidecar sketch might collide
-        // with THIS slice — per-epoch store input scales with the
-        // slice's collisions, not the admitted history's depth
-        val verd = incrementalDedupFromStoreAt(
-          spark, sigRoot, hashed, idCol, textCol, k, shingleN, bands,
-          threshold, beforeBatch = Some(batchId))
-        verdict = Some(verd)
-        val clean = verd
-          .filter(!col("is_exact_dup") && col("n_near_dups") === 0)
-          .select(col(idCol))
-        hashed.join(clean, Seq(idCol))
-      }
-    val keeper = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__chash"))
-    val admitted = vsStore
-      .withColumn("__keep", min(col(idCol)).over(keeper))
-      .filter(col(idCol) === col("__keep"))
-      .drop("__chash", "__keep")
-    if (!committed(sigRoot))
-      writeSignatureStoreBanded(admitted, idCol, textCol, k, shingleN,
-        bands, sigRoot, batchId)
-    BatchStore.append(admitted, keptRoot, batchId)
-    } finally {
-      Checkpoints.releasePinned(hashed)
-      verdict.foreach(Checkpoints.releasePinned)
+    // the epoch's pins (the slice, and the verdict serve's signature
+    // barrier) are released when its scope ends, a failed epoch
+    // included — a long-running stream stays flat
+    Checkpoints.scoped {
+      // pin: the slice feeds the verdict join, the keeper window, and
+      // both commits
+      val hashed = batch
+        .withColumn("__chash", md5(col(textCol))).transform(Checkpoints.pin)
+      val vsStore =
+        if (!hasBatches(sigRoot)) hashed
+        else {
+          // Bloom-pruned serve: exact + near passes each scan only the
+          // strictly-prior batches whose sidecar sketch might collide
+          // with THIS slice — per-epoch store input scales with the
+          // slice's collisions, not the admitted history's depth
+          val verd = incrementalDedupFromStoreAt(
+            spark, sigRoot, hashed, idCol, textCol, k, shingleN, bands,
+            threshold, beforeBatch = Some(batchId))
+          val clean = verd
+            .filter(!col("is_exact_dup") && col("n_near_dups") === 0)
+            .select(col(idCol))
+          hashed.join(clean, Seq(idCol))
+        }
+      val keeper = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("__chash"))
+      val admitted = vsStore
+        .withColumn("__keep", min(col(idCol)).over(keeper))
+        .filter(col(idCol) === col("__keep"))
+        .drop("__chash", "__keep")
+      if (!committed(sigRoot))
+        writeSignatureStoreBanded(admitted, idCol, textCol, k, shingleN,
+          bands, sigRoot, batchId)
+      BatchStore.append(admitted, keptRoot, batchId)
     }
   }
 
@@ -1434,10 +1371,9 @@ object Dedup {
     * shuffle and join both shrink by num/denom) or not at all. */
   def groupMinhashJaccard(df: DataFrame, groupCol: String, idCol: String,
       textCol: String, k: Int, shingleN: Int,
-      grounding: Grounding = NoGrounding,
-      stagingDir: Option[String] = None): DataFrame = {
+      grounding: Grounding = NoGrounding): DataFrame = {
     val s = withShingleSignatures(df, idCol, textCol, k, shingleN,
-      stagingDir, carry = Seq(groupCol))
+      carry = Seq(groupCol))
     val sigArr = array((0 until k).map(j => col(s"mh$j")): _*)
     val minAgg = udaf(new SignatureMin(k))
     val groupSigs = s.groupBy(col(groupCol))

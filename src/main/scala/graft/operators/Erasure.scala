@@ -95,7 +95,7 @@ object Erasure {
     * guards fail fast from the registry and re-run the same batchId. */
   def forget(docs: DataFrame, idCol: String, textCol: String,
       stores: Seq[StoreRef], batchId: Long,
-      vecIds: Option[(DataFrame, String)] = None): Unit = {
+      vecIds: Option[(DataFrame, String)] = None): Unit = Checkpoints.scoped {
     require(stores.nonEmpty, "empty store registry")
     require(stores.map(_.root).distinct.size == stores.size,
       "duplicate store roots in the registry — one ref per store")
@@ -106,14 +106,14 @@ object Erasure {
       "a PqStore/IvfPqStore/HammingStore is registered but vecIds was " +
         "not supplied")
     // one pin: every store's delta derives from the same erased rows
-    val pinned = docs.localCheckpoint()
+    val pinned = Checkpoints.pin(docs)
     val pinnedVecs = vecIds.map { case (vf, vc) =>
-      (vf.select(col(vc)).localCheckpoint(), vc) }
+      (vf.select(col(vc)).transform(Checkpoints.pin), vc) }
     // independent stores (distinct roots, one tombstone append each) —
     // run the fan-out CONCURRENTLY (guide §2.6: the next store's jobs
     // back-fill the previous one's straggler tail; r18 — the composed
     // takedown was paying 14 sequential job tails)
-    try ParallelJobs.run(stores.map(ref => () => (ref: @unchecked) match {
+    ParallelJobs.run(stores.map(ref => () => (ref: @unchecked) match {
       case SignatureStore(r) =>
         Dedup.deleteFromSignatureStore(pinned.select(col(idCol)),
           idCol, r, batchId)
@@ -155,10 +155,7 @@ object Erasure {
       case HashedTfStore(r) =>
         FeatureHashing.deleteFromHashedStore(pinned.select(col(idCol)),
           idCol, r, batchId)
-    })) finally {
-      Checkpoints.releasePinned(pinned)
-      pinnedVecs.foreach { case (vf, _) => Checkpoints.releasePinned(vf) }
-    }
+    }))
   }
 
   /** Physically drop the forgotten rows in every registered store —

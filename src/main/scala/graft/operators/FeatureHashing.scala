@@ -174,9 +174,8 @@ object FeatureHashing {
       BatchStore.read(spark, root)
         .select(col(corpusIdCol), col("bucket"), col("weight")),
       corpusIdCol)
-    val out = cosineTopK(feats,
+    cosineTopK(feats,
       hashedTf(queries, queryIdCol, textCol, dim),
-      corpusIdCol, queryIdCol, k).localCheckpoint()
-    out
+      corpusIdCol, queryIdCol, k).transform(Checkpoints.pin)
   }
 }

@@ -72,17 +72,16 @@ object Incremental {
     val spark = partials.sparkSession
     SnapshotCommit.latestBelow(spark, root, version) match {
       case None => SnapshotCommit.write(partials, root, version)
-      case Some(prev) =>
+      case Some(prev) => Checkpoints.scoped {
         // the incoming plan is referenced twice (day-distinct probe +
         // union); materialize it once so the upstream fact scan that
         // produced the partials doesn't execute twice per commit
-        val p = partials.localCheckpoint()
-        try {
-          val merged = SnapshotCommit.read(spark, root, prev)
-            .join(p.select(col("day")).distinct(), Seq("day"), "left_anti")
-            .unionByName(p)
-          SnapshotCommit.write(merged, root, version)
-        } finally Checkpoints.releasePinned(p)
+        val p = Checkpoints.pin(partials)
+        val merged = SnapshotCommit.read(spark, root, prev)
+          .join(p.select(col("day")).distinct(), Seq("day"), "left_anti")
+          .unionByName(p)
+        SnapshotCommit.write(merged, root, version)
+      }
     }
   }
 }

@@ -195,18 +195,9 @@ object InvertedIndex {
     // it the corpus is read once and both consumers read the small
     // materialized tf rows (the q141 multi-consumer discipline;
     // Round11Spec pins the served read at one store pass). The
-    // pinned blocks are bounded by the query terms' posting volume;
-    // callers release per the materialize contract (the bench
-    // sweeps between runs). [[prfSearchFromStore]] pins its own tf
-    // and calls [[bm25RankPinned]] directly so it can release.
-    val tf = tf0.localCheckpoint()
-    bm25RankPinned(tf, stats, idCol, terms, k)
-  }
-
-  /** [[bm25Rank]] over an ALREADY-PINNED tf frame — the caller owns
-    * (and releases) the pin. */
-  private def bm25RankPinned(tf: DataFrame, stats: DataFrame, idCol: String,
-      terms: Seq[String], k: Int): DataFrame = {
+    // pinned blocks are bounded by the query terms' posting volume.
+    // Lifecycle: [[Checkpoints]].
+    val tf = Checkpoints.pin(tf0)
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val idf = (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))
     val dlRatio = col("doc_len").cast("double") /
@@ -290,18 +281,18 @@ object InvertedIndex {
     * N ≈ 10¹¹; the runtime require below fails loudly (rather than
     * letting the non-ANSI sum wrap) if a caller exceeds it.
     * Returns `(id, doc_len, n_terms_hit, prf_fp)`, prf_fp descending,
-    * id tiebreak; internal pins released (the result is
+    * id tiebreak; the scope releases the tf pin (the result is
     * materialized). */
   private def bm25AnyFpRank(tf0: DataFrame, stats: DataFrame, idCol: String,
-      k: Int): DataFrame = {
-    val tf = tf0.localCheckpoint() // feeds df AND the scoring join
+      k: Int): DataFrame = Checkpoints.scoped {
+    val tf = Checkpoints.pin(tf0) // feeds df AND the scoring join
     val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val idf = (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))
     val dlRatio = col("doc_len").cast("double") /
       (col("total_len").cast("double") / col("n_docs"))
     val tfSat = (col("tf").cast("double") * lit(2.25)) /
       (col("tf") + lit(1.25) * (lit(0.25) + lit(0.75) * dlRatio))
-    val out = tf.join(broadcast(dfreq), "token").crossJoin(broadcast(stats))
+    tf.join(broadcast(dfreq), "token").crossJoin(broadcast(stats))
       .withColumn("__fp", floor(idf * tfSat * lit(1048576.0)).cast("long"))
       .groupBy(col(idCol), col("doc_len"))
       .agg(count(lit(1)).as("n_terms_hit"), sum(col("__fp")).as("prf_fp"),
@@ -321,9 +312,7 @@ object InvertedIndex {
         col("n_terms_hit"), col("prf_fp"))
       .orderBy(desc("prf_fp"), col(idCol))
       .limit(k)
-      .localCheckpoint()
-    Checkpoints.releasePinned(tf)
-    out
+      .transform(Checkpoints.pin)
   }
 
   /** The top expansion terms of a feedback-document set: occurrence
@@ -366,18 +355,16 @@ object InvertedIndex {
       s"need fbDocs/fbTerms/k >= 1, got $fbDocs/$fbTerms/$k")
     require(terms.nonEmpty && terms.distinct == terms,
       s"terms must be non-empty and distinct, got $terms")
-    // pass 1 with a locally-owned tf pin (released after the
-    // feedback ids collect — bm25SearchFromStore's internal pin
-    // would be unreachable)
-    val tf1 = applyTombstones(spark, root,
-        BatchStore.read(spark, root).filter(col("token").isin(terms: _*)),
-        idCol)
-      .select(col(idCol), col("doc_len"), col("token"), col("tf"))
-      .localCheckpoint()
-    val fbIds = bm25RankPinned(tf1, postingStoreStats(spark, root),
-        idCol, terms, fbDocs)
-      .select(col(idCol)).collect().map(_.get(0)).toSeq
-    Checkpoints.releasePinned(tf1)
+    // pass 1 in its own scope: its tf pin is released once the
+    // feedback ids are collected
+    val fbIds = Checkpoints.scoped {
+      bm25Rank(applyTombstones(spark, root,
+          BatchStore.read(spark, root).filter(col("token").isin(terms: _*)),
+          idCol)
+        .select(col(idCol), col("doc_len"), col("token"), col("tf")),
+        postingStoreStats(spark, root), idCol, terms, fbDocs)
+        .select(col(idCol)).collect().map(_.get(0)).toSeq
+    }
     val expansion = prfExpansionTerms(corpus, idCol, textCol,
       fbIds, terms, fbTerms).collect().map(_.getString(0)).toSeq
     val allTerms = terms ++ expansion

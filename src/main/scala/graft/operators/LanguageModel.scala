@@ -42,15 +42,7 @@ import TextFunctions.tokens
   * does, from the same count frame, and [[trigramBackoffScore]]
   * extends the chain to n=3.
   *
-  * Checkpoint lifecycle: each scorer pins its counts frame once (it
-  * feeds every derived aggregate AND the join — the q141
-  * multi-consumer discipline), materializes the result as its own
-  * checkpoint, and RELEASES the counts pin before returning — a
-  * long-lived service scoring daily batches holds only the k-row
-  * (or candidate-sized, for lang-id) result per call, never a
-  * counts-frame per call. Callers release the returned frame when
-  * done ([[Checkpoints.releasePinned]]; the bench's sweep handles it
-  * between runs).
+  * Lifecycle: [[Checkpoints]].
   *
   * Scale (100 TB): the counts frame is bigram-TYPE-sized (Heaps-law
   * sublinear), built by one shuffle with map-side partial counts; the
@@ -124,18 +116,16 @@ object LanguageModel {
     * The returned frame is the call's only live checkpoint (k rows);
     * the counts pin is released before return. */
   def bigramLmScore(candidates: DataFrame, counts: DataFrame,
-      idCol: String, textCol: String, k: Int): DataFrame = {
+      idCol: String, textCol: String, k: Int): DataFrame = Checkpoints.scoped {
     require(k >= 1, s"need k >= 1, got $k")
     // barrier: counts feeds the (w1,w2) join, the left-count re-agg,
     // AND the V aggregate — without it each consumer re-runs the
     // training scan (the q141 multi-consumer discipline).
-    val cb = counts.localCheckpoint()
-    val out = scoredAll(candidates, cb, idCol, textCol)
+    val cb = Checkpoints.pin(counts)
+    scoredAll(candidates, cb, idCol, textCol)
       .orderBy(col("lm_avg"), col(idCol))
       .limit(k)
-      .localCheckpoint() // the k-row result owns the data now
-    Checkpoints.releasePinned(cb)
-    out
+      .transform(Checkpoints.pin) // the k-row result owns the data now
   }
 
   /** The Laplace fixed-point scoring chain over a PINNED counts frame,
@@ -210,25 +200,22 @@ object LanguageModel {
     * frame; everything downstream reads that. */
   def lmQualityFilter(candidates: DataFrame, counts: DataFrame,
       idCol: String, textCol: String, groupCol: String,
-      cutQ: Double): DataFrame = {
+      cutQ: Double): DataFrame = Checkpoints.scoped {
     require(cutQ > 0 && cutQ < 1, s"cutQ must be in (0,1), got $cutQ")
-    val cb = counts.localCheckpoint()
+    val cb = Checkpoints.pin(counts)
     // pin: the scored frame feeds the quantile's passes AND the keep
     // join (the q141 multi-consumer discipline); groupCol rides the
     // one candidate scan inside scoredAll — no second corpus join.
     val scored = scoredAll(candidates, cb, idCol, textCol,
         carryCols = Seq(groupCol))
-      .localCheckpoint()
-    val (cutRaw, cutPins) = Sampling.groupQuantileDiscPinned(
-      scored, groupCol, "lm_avg", q = cutQ)
-    val cut = cutRaw.select(col(groupCol), col("quantile").as("__cut"))
-    val out = scored.join(broadcast(cut), Seq(groupCol))
+      .transform(Checkpoints.pin)
+    val cut = Sampling.groupQuantileDisc(scored, groupCol, "lm_avg", q = cutQ)
+      .select(col(groupCol), col("quantile").as("__cut"))
+    scored.join(broadcast(cut), Seq(groupCol))
       .filter(col("lm_avg") >= col("__cut"))
       .select(col(idCol), col(groupCol), col("n_bigrams"),
         col("lm_fp"), col("lm_avg"))
-      .localCheckpoint()
-    (Seq(cb, scored) ++ cutPins).foreach(Checkpoints.releasePinned)
-    out
+      .transform(Checkpoints.pin)
   }
 
   /** The ABSOLUTE-threshold perplexity gate served from the persisted
@@ -246,12 +233,10 @@ object LanguageModel {
     * call's only live checkpoint. */
   def lmThresholdFilterFromStore(spark: SparkSession, root: String,
       candidates: DataFrame, idCol: String, textCol: String,
-      minAvgFp: Double): DataFrame = {
+      minAvgFp: Double): DataFrame = Checkpoints.scoped {
     val cb = mergedStoreCounts(spark, root, Seq("w1", "w2"))
-      .localCheckpoint()
-    val out = lmThresholdFilter(candidates, cb, idCol, textCol, minAvgFp)
-    Checkpoints.releasePinned(cb)
-    out
+      .transform(Checkpoints.pin)
+    lmThresholdFilter(candidates, cb, idCol, textCol, minAvgFp)
   }
 
   /** [[lmThresholdFilterFromStore]] against an ALREADY-MATERIALIZED
@@ -264,7 +249,7 @@ object LanguageModel {
       idCol: String, textCol: String, minAvgFp: Double): DataFrame =
     scoredAll(candidates, counts, idCol, textCol)
       .filter(col("lm_avg") >= minAvgFp)
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
 
   /** [[lmThresholdFilter]] against caller-owned model frames (the
     * [[ModelCache]] hook: `cb` counts + [[lmContextTotals]] +
@@ -275,7 +260,7 @@ object LanguageModel {
       minAvgFp: Double): DataFrame =
     scoredAllWith(candidates, cb, cl, v, idCol, textCol)
       .filter(col("lm_avg") >= minAvgFp)
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
 
   /** [[lmQualityFilter]] with counts summed from the persisted LM
     * store — the production composition: the store is maintained by
@@ -310,9 +295,9 @@ object LanguageModel {
     * shape as [[bigramLmScore]] plus one more vocab-sized
     * re-aggregate (the continuation counts). */
   def stupidBackoffScore(candidates: DataFrame, counts: DataFrame,
-      idCol: String, textCol: String, k: Int): DataFrame = {
+      idCol: String, textCol: String, k: Int): DataFrame = Checkpoints.scoped {
     require(k >= 1, s"need k >= 1, got $k")
-    val cb = counts.localCheckpoint() // feeds 3 derived frames + the join
+    val cb = Checkpoints.pin(counts) // feeds 3 derived frames + the join
     val cl = cb.groupBy(col("w1")).agg(sum(col("cnt")).as("cl"))
     val cr = cb.groupBy(col("w2")).agg(sum(col("cnt")).as("cr"))
     val nb = cb.agg(sum(col("cnt")).as("nb"))
@@ -320,7 +305,7 @@ object LanguageModel {
     val backoff = lit(0.4) *
       (coalesce(col("cr"), lit(0L)).cast("double") * lit(1073741824.0)
         / col("nb"))
-    val out = bigrams(candidates, idCol, textCol)
+    bigrams(candidates, idCol, textCol)
       .join(cb, Seq("w1", "w2"), "left")
       .join(cl, Seq("w1"), "left")
       .join(cr, Seq("w2"), "left")
@@ -335,9 +320,7 @@ object LanguageModel {
       .select(col(idCol), col("n_bigrams"), col("sb_fp"), col("sb_avg"))
       .orderBy(col("sb_avg"), col(idCol))
       .limit(k)
-      .localCheckpoint()
-    Checkpoints.releasePinned(cb)
-    out
+      .transform(Checkpoints.pin)
   }
 
   /** TRIGRAM stupid backoff — the recursive chain of Brants et al.
@@ -362,9 +345,9 @@ object LanguageModel {
     * all-pairs. Returns `(id, n_trigrams, sb3_fp, sb3_avg)` ascending
     * (id tiebreak), k rows. */
   def trigramBackoffScore(candidates: DataFrame, triCounts: DataFrame,
-      biCounts: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = {
+      biCounts: DataFrame, idCol: String, textCol: String, k: Int): DataFrame = Checkpoints.scoped {
     require(k >= 1, s"need k >= 1, got $k")
-    val bb = biCounts.localCheckpoint() // feeds 2 joins + 3 re-aggs
+    val bb = Checkpoints.pin(biCounts) // feeds 2 joins + 3 re-aggs
     val tc = triCounts.select(col("w1"), col("w2"), col("w3"),
       col("cnt").as("c123"))
     val b12 = bb.select(col("w1"), col("w2"), col("cnt").as("c12"))
@@ -379,7 +362,7 @@ object LanguageModel {
     val uni = lit(0.4) * (lit(0.4) *
       (coalesce(col("cr3"), lit(0L)).cast("double") * lit(1073741824.0)
         / col("nb")))
-    val out = trigrams(candidates, idCol, textCol)
+    trigrams(candidates, idCol, textCol)
       .join(tc, Seq("w1", "w2", "w3"), "left")
       .join(b12, Seq("w1", "w2"), "left")
       .join(b23, Seq("w2", "w3"), "left")
@@ -397,9 +380,7 @@ object LanguageModel {
       .select(col(idCol), col("n_trigrams"), col("sb3_fp"), col("sb3_avg"))
       .orderBy(col("sb3_avg"), col(idCol))
       .limit(k)
-      .localCheckpoint()
-    Checkpoints.releasePinned(bb)
-    out
+      .transform(Checkpoints.pin)
   }
 
   // ------------------------------------- trained language identification
@@ -449,8 +430,8 @@ object LanguageModel {
     * live checkpoint (candidate-sized); the counts pin is released
     * before return. */
   def classifyLangByTrigrams(cand: DataFrame, counts: DataFrame,
-      idCol: String, textCol: String): DataFrame = {
-    val cb = counts.localCheckpoint() // feeds cl, V, and the seen join
+      idCol: String, textCol: String): DataFrame = Checkpoints.scoped {
+    val cb = Checkpoints.pin(counts) // feeds cl, V, and the seen join
     val cl = cb.groupBy(col("lang")).agg(sum(col("cnt")).as("cl"))
     val v = cb.agg(countDistinct(col("tri")).as("v"))
     val classes = cl.crossJoin(broadcast(v))
@@ -471,7 +452,7 @@ object LanguageModel {
         count(lit(1)).as("n_seen"))
     val byDoc = Window.partitionBy(col(idCol))
       .orderBy(desc("score_fp"), col("lang"))
-    val out = nTri
+    nTri
       .crossJoin(broadcast(classes.select(col("lang"), col("floor0"))))
       .join(seen, Seq(idCol, "lang"), "left")
       .withColumn("score_fp",
@@ -480,9 +461,7 @@ object LanguageModel {
       .withColumn("__rn", row_number().over(byDoc))
       .filter(col("__rn") === 1)
       .select(col(idCol), col("lang").as("lang_pred"), col("score_fp"))
-      .localCheckpoint()
-    Checkpoints.releasePinned(cb)
-    out
+      .transform(Checkpoints.pin)
   }
 
   // ----------------------------------------------- persisted LM store

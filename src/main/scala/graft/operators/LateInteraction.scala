@@ -41,14 +41,15 @@ object LateInteraction {
   /** Query POSITIONS with candidates: `(queryCol, __qpos, __tok)` —
     * positions kept (ColBERT sums per position), the token window
     * bounded, queries without candidates dropped. Returned PINNED
-    * (feeds the vocabulary and the embedding join); callers release. */
+    * (feeds the vocabulary and the embedding join) in the caller's
+    * scope. */
   private def queryPositions(queries: DataFrame, cb: DataFrame,
       queryCol: String, textCol: String, maxQueryTokens: Int): DataFrame =
     queries.join(cb.select(col(queryCol)).distinct(), Seq(queryCol))
       .select(col(queryCol), posexplode(
         slice(TextFunctions.tokens(col(textCol)), 1, maxQueryTokens)))
       .select(col(queryCol), col("pos").as("__qpos"), col("col").as("__tok"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
 
   /** Embed a distinct-token frame (`__tok`): adds the float vector
     * `__tv` and its norm `__tn`, zero-norm tokens dropped (cosine
@@ -88,14 +89,14 @@ object LateInteraction {
     * a candidate whose passage has NO embeddable token drops out. */
   def maxSimRerank(cands: DataFrame, queries: DataFrame, passages: DataFrame,
       queryCol: String, passageCol: String, textCol: String,
-      dim: Int, maxQueryTokens: Int, k: Int): DataFrame = {
+      dim: Int, maxQueryTokens: Int, k: Int): DataFrame = Checkpoints.scoped {
     require(k >= 1, s"need k >= 1, got $k")
     require(maxQueryTokens >= 1, s"need maxQueryTokens >= 1, got $maxQueryTokens")
     // pin: the candidate list feeds both occurrence joins; both
     // occurrence frames feed the vocabulary AND their own embedding
     // join — pinned once (the q141 multi-consumer discipline; dt's
     // upstream is a corpus-chunk-scale scan)
-    val cb = cands.select(col(queryCol), col(passageCol)).localCheckpoint()
+    val cb = cands.select(col(queryCol), col(passageCol)).transform(Checkpoints.pin)
     val qt = queryPositions(queries, cb, queryCol, textCol, maxQueryTokens)
     // passage tokens: distinct per passage (max over occurrences ==
     // max over distinct tokens — the pair join shrinks for free)
@@ -103,19 +104,17 @@ object LateInteraction {
       .select(col(passageCol),
         explode(TextFunctions.tokens(col(textCol))).as("__tok"))
       .distinct()
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     // vocabulary-sized embedding: every distinct token ONCE
     val vocab = embedVocab(
         qt.select(col("__tok")).union(dt.select(col("__tok"))).distinct(), dim)
-      .localCheckpoint() // feeds both occurrence joins
+      .transform(Checkpoints.pin) // feeds both occurrence joins
     val qe = qt.join(vocab, Seq("__tok"))
       .select(col(queryCol), col("__qpos"),
         col("__tv").as("__qv"), col("__tn").as("__qn"))
     val de = dt.join(vocab, Seq("__tok"))
       .select(col(passageCol), col("__tv").as("__dv"), col("__tn").as("__dn"))
-    val out = scoreTail(cb, qe, de, queryCol, passageCol, k)
-    Seq(cb, qt, dt, vocab).foreach(Checkpoints.releasePinned)
-    out
+    scoreTail(cb, qe, de, queryCol, passageCol, k)
   }
 
   /** The MaxSim scoring tail shared by the in-memory and the
@@ -143,7 +142,7 @@ object LateInteraction {
       .filter(col("rank") <= k)
       .select(col(queryCol), col("rank").cast("long").as("rank"),
         col(passageCol), col("n_qtoks"), col("ms_fp"), col("ms_avg"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
   }
 
   // -------------------------------------------- persisted token index
@@ -286,7 +285,7 @@ object LateInteraction {
     * (`__tok` + value columns), `values` are the stored value columns. */
   private def appendTokenIndex(passages: DataFrame, passageCol: String,
       textCol: String, root: String, batchId: Long, buckets: Int,
-      vocabOf: DataFrame => DataFrame, values: Seq[Column]): Unit = {
+      vocabOf: DataFrame => DataFrame, values: Seq[Column]): Unit = Checkpoints.scoped {
     // pinned: the (passage, token) pairs feed the vocabulary AND the
     // join back — and the slice's DISTINCT tokens embed exactly once
     // (vocabulary-sized md5 work, not corpus-token-sized: the same
@@ -297,12 +296,11 @@ object LateInteraction {
       .select(col(passageCol),
         explode(TextFunctions.tokens(col(textCol))).as("__tok"))
       .distinct()
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     // parallel embed + bucket-aligned join/write — the slice writers'
     // discipline (AQE pins the distinct at ~1 partition at gate scale)
-    val toks = pairs.select(col("__tok")).distinct().localCheckpoint()
-    val vocab = vocabOf(Parallelism.spread(toks, "__tok")).localCheckpoint()
-    Checkpoints.releasePinned(toks)
+    val toks = pairs.select(col("__tok")).distinct().transform(Checkpoints.pin)
+    val vocab = vocabOf(Parallelism.spread(toks, "__tok")).transform(Checkpoints.pin)
     val rows = pairs
       .withColumn("__pb", passageBucket(passageCol, buckets))
       .repartition(buckets, col("__pb"))
@@ -311,7 +309,6 @@ object LateInteraction {
     dropStaleSidecar(passages.sparkSession, root, batchId)
     BatchStore.append(rows, root, batchId, partitionBy = Seq("__pb"))
     writeBatchIdBloom(passages.sparkSession, root, batchId, passageCol)
-    Seq(pairs, vocab).foreach(Checkpoints.releasePinned)
   }
 
   /** The stale-sidecar pre-delete ([[Dedup.writeSignatureStore]]'s
@@ -388,7 +385,7 @@ object LateInteraction {
   private def appendTokenIndexSlices(passages: DataFrame,
       passageCol: String, textCol: String, root: String,
       slices: Seq[(Long, Column)], buckets: Int,
-      vocabOf: DataFrame => DataFrame, values: Seq[Column]): Unit = {
+      vocabOf: DataFrame => DataFrame, values: Seq[Column]): Unit = Checkpoints.scoped {
     require(slices.nonEmpty, "need at least one slice")
     require(slices.map(_._1).distinct.size == slices.size,
       "duplicate batch ids across slices")
@@ -398,16 +395,15 @@ object LateInteraction {
       .select(col(passageCol),
         explode(TextFunctions.tokens(col(textCol))).as("__tok"))
       .distinct()
-      .localCheckpoint() // feeds the vocabulary AND every slice join
+      .transform(Checkpoints.pin) // feeds the vocabulary AND every slice join
     // the distinct's AQE-coalesced layout pins at ~1 partition at gate
     // scale (bytes are tiny, the per-token md5-gram embedding is not —
     // byte-based coalescing can't see compute cost): pin the tiny
     // token frame, spread it, embed parallel
-    val toks = pairs.select(col("__tok")).distinct().localCheckpoint()
+    val toks = pairs.select(col("__tok")).distinct().transform(Checkpoints.pin)
     val vocab = vocabOf(Parallelism.spread(toks, "__tok"))
-      .localCheckpoint() // embedded ONCE, joined per slice
-    Checkpoints.releasePinned(toks)
-    try ParallelJobs.run(slices.map { case (batchId, pred) => () => {
+      .transform(Checkpoints.pin) // embedded ONCE, joined per slice
+    ParallelJobs.run(slices.map { case (batchId, pred) => () => {
       // bucket-align BEFORE the vector join (the [[Boilerplate]]
       // bucketAligned discipline): one exchange of the tiny
       // (passage, token) rows buys a buckets-way parallel join +
@@ -426,7 +422,6 @@ object LateInteraction {
       BatchStore.append(rows, root, batchId, partitionBy = Seq("__pb"))
       writeBatchIdBloom(spark, root, batchId, passageCol)
     }})
-    finally Seq(pairs, vocab).foreach(Checkpoints.releasePinned)
   }
 
   /** The QUANTIZED token index — [[writeTokenIndex]] with the real
@@ -468,17 +463,17 @@ object LateInteraction {
   def maxSimFromTokenIndexInt8(spark: org.apache.spark.sql.SparkSession,
       root: String, cands: DataFrame, queries: DataFrame,
       queryCol: String, passageCol: String, textCol: String,
-      dim: Int, maxQueryTokens: Int, k: Int): DataFrame = {
+      dim: Int, maxQueryTokens: Int, k: Int): DataFrame = Checkpoints.scoped {
     require(k >= 1, s"need k >= 1, got $k")
     require(maxQueryTokens >= 1, s"need maxQueryTokens >= 1, got $maxQueryTokens")
-    val cb = cands.select(col(queryCol), col(passageCol)).localCheckpoint()
+    val cb = cands.select(col(queryCol), col(passageCol)).transform(Checkpoints.pin)
     val qt = queryPositions(queries, cb, queryCol, textCol, maxQueryTokens)
     val vocab = embedVocabInt8(qt.select(col("__tok")).distinct(), dim)
       .select(col("__tok"), col("__qv"), col("__qn"))
     val qe = qt.join(vocab, Seq("__tok"))
       .select(col(queryCol), col("__qpos"), col("__qv"), col("__qn"))
     // pinned: feeds the bucket collect AND the candidate join
-    val candIds = cb.select(col(passageCol)).distinct().localCheckpoint()
+    val candIds = cb.select(col(passageCol)).distinct().transform(Checkpoints.pin)
     val de = Tombstones.apply(spark, root,
         prunedStoreRead(spark, root, candIds, passageCol)
           .join(candIds, Seq(passageCol)),
@@ -488,9 +483,7 @@ object LateInteraction {
       .withColumn("__dn", sqrt(aggregate(
         transform(col("__dv"), x => x * x), lit(0.0), (a, v) => a + v)))
       .select(col(passageCol), col("__dv"), col("__dn"))
-    val out = scoreTail(cb, qe, de, queryCol, passageCol, k)
-    Seq(cb, qt, candIds).foreach(Checkpoints.releasePinned)
-    out
+    scoreTail(cb, qe, de, queryCol, passageCol, k)
   }
 
   /** Maintain the token index FROM A STREAM — the
@@ -549,10 +542,10 @@ object LateInteraction {
   def maxSimFromTokenIndex(spark: org.apache.spark.sql.SparkSession,
       root: String, cands: DataFrame, queries: DataFrame,
       queryCol: String, passageCol: String, textCol: String,
-      dim: Int, maxQueryTokens: Int, k: Int): DataFrame = {
+      dim: Int, maxQueryTokens: Int, k: Int): DataFrame = Checkpoints.scoped {
     require(k >= 1, s"need k >= 1, got $k")
     require(maxQueryTokens >= 1, s"need maxQueryTokens >= 1, got $maxQueryTokens")
-    val cb = cands.select(col(queryCol), col(passageCol)).localCheckpoint()
+    val cb = cands.select(col(queryCol), col(passageCol)).transform(Checkpoints.pin)
     val qt = queryPositions(queries, cb, queryCol, textCol, maxQueryTokens)
     // query-side vocabulary embedded at serve time (queries are
     // ephemeral); vectors are per-token deterministic, so the split
@@ -562,13 +555,11 @@ object LateInteraction {
       .select(col(queryCol), col("__qpos"),
         col("__tv").as("__qv"), col("__tn").as("__qn"))
     // pinned: feeds the bucket collect AND the candidate join
-    val candIds = cb.select(col(passageCol)).distinct().localCheckpoint()
+    val candIds = cb.select(col(passageCol)).distinct().transform(Checkpoints.pin)
     val de = Tombstones.apply(spark, root,
       prunedStoreRead(spark, root, candIds, passageCol)
         .join(candIds, Seq(passageCol)),
       passageCol)
-    val out = scoreTail(cb, qe, de, queryCol, passageCol, k)
-    Seq(cb, qt, candIds).foreach(Checkpoints.releasePinned)
-    out
+    scoreTail(cb, qe, de, queryCol, passageCol, k)
   }
 }

@@ -15,12 +15,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the store's committed-batch FINGERPRINT — the `batch=` dir names
   * plus their modification times, so an append, a purge, a compaction,
   * or even a delete-and-recreate at the same path invalidates it
-  * (mtime moves). On a hit the pinned frame (`localCheckpoint` — the
-  * blocks are the data, no store re-scan, no lineage back to the
+  * (mtime moves). On a hit the pinned frame ([[Checkpoints.keep]] —
+  * the blocks are the data, no store re-scan, no lineage back to the
   * deleted-able dirs) serves directly; on a miss the stale pin is
   * released, `compute` runs once, and the fresh frame pins.
   *
-  * Lifecycle: an instance is scoped to its pipeline run (the
+  * Lifecycle: entries are the one kind of pin no scope owns
+  * ([[Checkpoints]]). An instance is scoped to its pipeline run (the
   * [[CurationPipeline.sink]] wiring creates one per stream) —
   * [[releaseAll]] when the run ends; entries hold executor-memory
   * blocks until then. Model frames are model-sized (counts, not
@@ -117,8 +118,8 @@ final class ModelCache {
         case Some(e) if e.fingerprint == fp => (e.frames.head, e.frames.tail)
         case stale =>
           stale.foreach(e => e.frames.foreach(Checkpoints.releasePinned))
-          val base = compute.localCheckpoint()
-          val derived = derive(base).map(_.localCheckpoint())
+          val base = Checkpoints.keep(compute)
+          val derived = derive(base).map(Checkpoints.keep)
           entries.update(key, Entry(fp, base +: derived))
           (base, derived)
       }

@@ -27,7 +27,9 @@ private[graft] object ParallelJobs {
   val DefaultParallelism: Int = 4
 
   /** Spark job-scoped thread-local properties a pooled task must
-    * inherit from the CALLER: the job group (so a composite gate's
+    * inherit from the CALLER (as it inherits the caller's
+    * [[Checkpoints]] scope, so its pins belong to the caller's unit of
+    * work): the job group (so a composite gate's
     * concurrent jobs cancel as a unit — `cancelJobGroup` on the
     * caller's group must reach jobs submitted from pool threads; guide
     * §1.5 notes the thread-local pitfall) and the job description
@@ -68,6 +70,7 @@ private[graft] object ParallelJobs {
     val callerProps: Seq[(String, String)] = context.toSeq.flatMap { sc =>
       inheritedKeys.flatMap(k => Option(sc.getLocalProperty(k)).map(k -> _))
     }
+    val callerScope = Checkpoints.current
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(parallelism, tasks.size),
       new java.util.concurrent.ThreadFactory {
@@ -85,13 +88,13 @@ private[graft] object ParallelJobs {
             // explicit (not inheritance-dependent): pool threads are
             // created lazily at first submit, so InheritableThreadLocal
             // snapshots are an accident of submission order — set the
-            // caller's job group/description on every task
+            // caller's job group/description and pin scope on every task
             org.apache.spark.sql.SparkSession.getActiveSession
               .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
               .map(_.sparkContext).foreach { sc =>
                 callerProps.foreach { case (k, v) => sc.setLocalProperty(k, v) }
               }
-            t()
+            Checkpoints.within(callerScope)(t())
           }
         }))
       var err: Throwable = null

@@ -56,11 +56,9 @@ object QualityClassifier {
     * the call's only live checkpoint; the counts pin is released
     * before return. */
   def classify(cand: DataFrame, counts: DataFrame, idCol: String,
-      textCol: String, buckets: Int): DataFrame = {
-    val cb = counts.localCheckpoint() // feeds cl, V, and the seen join
-    val out = classifyWith(cand, cb, classModel(cb), idCol, textCol, buckets)
-    Checkpoints.releasePinned(cb)
-    out
+      textCol: String, buckets: Int): DataFrame = Checkpoints.scoped {
+    val cb = Checkpoints.pin(counts) // feeds cl, V, and the seen join
+    classifyWith(cand, cb, classModel(cb), idCol, textCol, buckets)
   }
 
   /** The classifier's model-DERIVED constants — per-class totals,
@@ -117,7 +115,7 @@ object QualityClassifier {
       .withColumn("__rn", row_number().over(byDoc))
       .filter(col("__rn") === 1)
       .select(col(idCol), col("label").as("label_pred"), col("score_fp"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
   }
 
   // ------------------------------------------ persisted model store

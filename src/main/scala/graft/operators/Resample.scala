@@ -39,7 +39,7 @@ object Resample {
     val observed = df
       .groupBy((to_date(tsCol).as("day") +: dims.map(col)): _*)
       .agg(count(when(countCond, lit(1))).as("__n"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
 
     val calendar = observed
       .agg(min(col("day")).as("__lo"), max(col("day")).as("__hi"))

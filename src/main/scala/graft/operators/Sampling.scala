@@ -271,32 +271,21 @@ object Sampling {
     * callers passing a q whose decimal literal is not the fraction
     * they mean, e.g. 1/3, get the literal's rank). Returns one row
     * per group: `(group, n_rows, quantile)`. NULL values are excluded
-    * from ranks (the [[quantileBins]] discipline). */
+    * from ranks (the [[quantileBins]] discipline). Lifecycle: the
+    * per-level `targets` pins live in the caller's scope
+    * ([[Checkpoints]]). */
   def groupQuantileDisc(df: DataFrame, groupCol: String, valueCol: String,
       q: Double, buckets: Int = 256, maxBucketRows: Long = 1L << 20,
-      maxDepth: Int = 64): DataFrame =
-    groupQuantileDiscPinned(df, groupCol, valueCol, q, buckets,
-      maxBucketRows, maxDepth)._1
-
-  /** [[groupQuantileDisc]] plus the internal per-level `targets`
-    * checkpoints the returned frame reads — callers that MATERIALIZE
-    * the result (e.g. [[LanguageModel.lmQualityFilter]]) release them
-    * ([[Checkpoints.releasePinned]]); the public method leaves them
-    * live because its lazily-returned frame still needs them. */
-  private[operators] def groupQuantileDiscPinned(df: DataFrame,
-      groupCol: String, valueCol: String, q: Double, buckets: Int = 256,
-      maxBucketRows: Long = 1L << 20,
-      maxDepth: Int = 64): (DataFrame, Seq[DataFrame]) = {
+      maxDepth: Int = 64): DataFrame = {
     require(q > 0 && q <= 1, s"q must be in (0,1], got $q")
     require(buckets >= 1, s"need buckets >= 1, got $buckets")
-    val pins = scala.collection.mutable.ListBuffer.empty[DataFrame]
     val vals = df.select(col(groupCol), col(valueCol).cast("double").as("__v"))
       .filter(col("__v").isNotNull)
     val bounds = vals.agg(min(col("__v")), max(col("__v"))).head()
     if (bounds.isNullAt(0))
-      return (vals.groupBy(col(groupCol))
+      return vals.groupBy(col(groupCol))
         .agg(count(lit(1)).as("n_rows"), first(col("__v")).as("quantile"))
-        .limit(0), pins.toSeq)
+        .limit(0)
     // exact rank: decimal(q's shortest literal) × long, ceil'd — never
     // a double product (0.9 * 10 = 9.000000000000002 → rank 10)
     val decQ = BigDecimal(java.math.BigDecimal.valueOf(q))
@@ -327,8 +316,7 @@ object Sampling {
       .select(col(groupCol), col("__n"), col("__r"), col("__bmin"),
         col("__bmax"), col("__c"),
         (col("__r") - (col("__cum") - col("__c"))).as("__off"))
-      .localCheckpoint() // tiny (≤ groups rows); read 2-3× per level
-    pins += targets
+      .transform(Checkpoints.pin) // tiny (≤ groups rows); read 2-3× per level
 
     // Refinement loop: re-histogram oversized targets within their own
     // interval. The rank is GLOBAL (__r) and re-anchored per level by
@@ -364,8 +352,7 @@ object Sampling {
         .select(col(groupCol), col("__n"), col("__r"), col("__bmin"),
           col("__bmax"), col("__c"),
           (col("__r") - (col("__cum") - col("__c"))).as("__off"))
-      targets = done.unionByName(refined).localCheckpoint()
-      pins += targets
+      targets = done.unionByName(refined).transform(Checkpoints.pin)
       depth += 1
     }
 
@@ -383,7 +370,7 @@ object Sampling {
       .filter(col("__rn") === col("__off"))
       .select(col(groupCol), col("__n").as("n_rows"),
         col("__v").as("quantile"))
-    (direct.unionByName(ranked), pins.toSeq)
+    direct.unionByName(ranked)
   }
 
   /** Leakage-safe dataset split: every row of a GROUP lands in the same

@@ -40,14 +40,7 @@ import org.apache.spark.sql.types.{DateType, StringType}
   * cross-run keys swap [[SurrogateKeys.stableHashKeyChecked]] — the
   * trade-off is documented there.
   *
-  * Lifecycle: the diff join and (above the broadcast threshold) the
-  * re-key are `localCheckpoint`s, not cached plans, so the
-  * ContextCleaner drops their blocks once unreachable. The operator
-  * releases the diff pin itself when the re-key's checkpoint strands
-  * it; the output's own pin belongs to the caller (release with
-  * [[Checkpoints.releasePinned]] after the write, or between calls
-  * with [[graft.Bench.releaseBlocks]]; CheckpointLifecycleSpec pins
-  * block stability under that pattern).
+  * Lifecycle: [[Checkpoints]].
   */
 object ScdType2 {
 
@@ -129,7 +122,7 @@ object ScdType2 {
         // First run (`scd_implementation.py:21-30`).
         rekey(stamped(snap.select((idCol +: attrCols).map(col): _*), lit(1)))
 
-      case Some(existingDim) =>
+      case Some(existingDim) => Checkpoints.scoped {
         val cur0 = existingDim.filter(col("is_current"))
         val cur = (if (!changedOnly) cur0
           else cur0.join(snap.select(col(idCol)).distinct(), Seq(idCol), "left_semi"))
@@ -140,7 +133,7 @@ object ScdType2 {
 
         // Full-outer diff join on the business id (J5); materialized
         // once — read by all four row classes below.
-        val joined = cur.join(newP, Seq(idCol), "full_outer").localCheckpoint()
+        val joined = cur.join(newP, Seq(idCol), "full_outer").transform(Checkpoints.pin)
 
         // `fillna('')`-style null-safe inequality for strings, <=> else.
         val changePred = tracked.map { a =>
@@ -189,13 +182,10 @@ object ScdType2 {
           .unionByName(expiredOld)
           .unionByName(newVersion)
           .unionByName(brandNew)
-        // Release the diff pin once the result no longer reaches it:
-        // when the re-key takes the checkpointing path its output is a
-        // fresh LogicalRDD, stranding `joined` beyond any release the
-        // caller could express (see Checkpoints.releaseConsumed).
-        val result = rekey(assembled)
-        Checkpoints.releaseConsumed(result, Seq(joined))
-        result
+        // the scope releases the diff pin when the re-key's own
+        // checkpoint no longer reaches it
+        rekey(assembled)
+      }
     }
   }
 

@@ -280,13 +280,12 @@ object Similarity {
       // empty clusters keep their previous centroid
       val updated = cents.join(next, Seq("centroid_id"), "left")
         .select(col("centroid_id"), coalesce(col("__next"), col("__vec")).as("__vec"))
-        .localCheckpoint() // bound the per-round plan growth
+        .transform(Checkpoints.pin) // bound the per-round plan growth
       // the eager checkpoint materialized `updated` — the superseded
       // round's blocks are dead now; release them so a long training
       // run pins O(1) centroid frames, not O(iters). (The seed frame
       // has no checkpoint — round 1's release is a no-op.) The FINAL
-      // round's checkpoint ships with the returned frame; the caller
-      // releases it per the materialize contract.
+      // round's checkpoint ships with the returned frame.
       Checkpoints.releasePinned(cents)
       updated
     }.select(col("centroid_id"), col("__vec").as(vecCol))
@@ -567,14 +566,14 @@ object Similarity {
     val (base, nBits) =
       if (bits > 0) (base0, bits)
       else {
-        val pinned = base0.localCheckpoint() // probe + signatures: one scan
+        val pinned = Checkpoints.pin(base0) // probe + signatures: one scan
         (pinned, derivedRpBits(pinned.count()))
       }
     val sig0 = rpSignatures(base, vecCol, dim, nBits, tables)
     val sig =
       if (maxCellSize == 0) sig0
       else {
-        val pinned = sig0.localCheckpoint()
+        val pinned = Checkpoints.pin(sig0)
         val cap =
           if (maxCellSize > 0) maxCellSize.toLong
           else {
@@ -691,12 +690,12 @@ object Similarity {
     * `(queryCol, pick_rank, idCol, rel, mmr)`. */
   def mmrRerank(cands: DataFrame, queryCol: String, idCol: String,
       relCol: String, vecCol: String, k: Int,
-      lam: Double = 0.5): DataFrame = {
+      lam: Double = 0.5): DataFrame = Checkpoints.scoped {
     require(k >= 1, s"need k >= 1, got $k")
     require(lam >= 0 && lam <= 1, s"need 0 <= lambda <= 1, got $lam")
     val base = cands.select(col(queryCol), col(idCol), col(relCol),
         col(vecCol), l2Norm(col(vecCol)).as("__n"))
-      .localCheckpoint() // feeds the sim self-join and every step
+      .transform(Checkpoints.pin) // feeds the sim self-join and every step
     val a = base.select(col(queryCol), col(idCol).as("__cid_a"),
       col(vecCol).as("__va"), col("__n").as("__na"))
     val b = base.select(col(queryCol), col(idCol).as("__cid_b"),
@@ -705,7 +704,7 @@ object Similarity {
       .filter(col("__cid_a") =!= col("__cid_b"))
       .select(col(queryCol), col("__cid_a"), col("__cid_b"),
         (dot(col("__va"), col("__vb")) / (col("__na") * col("__nb"))).as("__sim"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     val w = Window.partitionBy(col(queryCol))
       .orderBy(col("__mmr").desc, col(idCol))
     val empty = base.select(col(queryCol), col(idCol), col(relCol),
@@ -731,7 +730,7 @@ object Similarity {
       // selected stays tiny (t rows/query); the checkpoint keeps the
       // k-step plan linear instead of doubling per step (sel feeds
       // both the anti join and the max-sim join)
-      val next = sel.unionByName(pick).localCheckpoint()
+      val next = sel.unionByName(pick).transform(Checkpoints.pin)
       // the superseded step's checkpoint is dead once `next` is
       // materialized — release it so a long-lived session pins O(1)
       // selection frames, not O(k) per call (the bpeTrainCore
@@ -740,15 +739,10 @@ object Similarity {
       if (t > 1) Checkpoints.releasePinned(sel)
       next
     }
-    val out = selected.select(col(queryCol), col("pick_rank"), col(idCol),
+    // `selected` is itself checkpointed, so the scope releases the
+    // consumed base and sims
+    selected.select(col(queryCol), col("pick_rank"), col(idCol),
       col(relCol), col("mmr"))
-    // `selected` is itself checkpointed, so base and sims are fully
-    // consumed — release them here; the caller owns only the final
-    // selection checkpoint (Bench.releaseBlocks sweeps it, or
-    // releasePinned(result) for long-lived services)
-    Checkpoints.releasePinned(base)
-    Checkpoints.releasePinned(sims)
-    out
   }
 
   /** The SERVING retrieval chain: [[rpLshTopK]] candidate generation
@@ -771,16 +765,15 @@ object Similarity {
     * offline (oracle-gated, q193).
     *
     * Checkpoint lifecycle: the candidate frame is pinned once (it
-    * feeds the MMR build and the optional recall gate), and every
-    * intermediate pin is released before return — the caller owns
-    * only the returned k-row selection. Returns
+    * feeds the MMR build and the optional recall gate); the scope
+    * releases every intermediate pin ([[Checkpoints]]). Returns
     * `(query_id, pick_rank, neighbor_id, rel, mmr)`. */
   def rpLshMmrTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, dim: Int, bits: Int, tables: Int, topN: Int, k: Int,
-      lam: Double = 0.5, meanRecallFloor: Double = 0.0): DataFrame = {
+      lam: Double = 0.5, meanRecallFloor: Double = 0.0): DataFrame = Checkpoints.scoped {
     require(topN >= k, s"need topN >= k, got topN=$topN k=$k")
     val cands = rpLshTopK(corpus, queries, idCol, vecCol, dim, bits, tables, topN)
-      .localCheckpoint() // feeds the MMR build AND the recall gate
+      .transform(Checkpoints.pin) // feeds the MMR build AND the recall gate
     val emb = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__emb"))
     val withVec = cands.join(emb, Seq("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
@@ -789,10 +782,8 @@ object Similarity {
     // consumed on the MMR side as soon as this returns
     val sel = mmrRerank(withVec, "query_id", "neighbor_id", "rel", "__emb",
       k, lam)
-    if (meanRecallFloor <= 0) {
-      Checkpoints.releasePinned(cands)
-      sel
-    } else {
+    if (meanRecallFloor <= 0) sel
+    else {
       val brute = bruteForceTopK(corpus, queries, idCol, vecCol, topN)
         .select(col("query_id"), col("neighbor_id"))
       val per = brute.join(
@@ -800,20 +791,16 @@ object Similarity {
           Seq("query_id", "neighbor_id"), "left")
         .groupBy(col("query_id"))
         .agg(sum(coalesce(col("__hit"), lit(0L))).as("__nh"))
-        .localCheckpoint() // consumes cands on the gate side
-      Checkpoints.releasePinned(cands)
+        .transform(Checkpoints.pin) // consumes cands on the gate side
       val mean = per.agg(
         (sum(col("__nh")).cast("double") /
           (count(lit(1)) * topN)).as("__mean"))
-      val out = sel.crossJoin(broadcast(mean))
+      sel.crossJoin(broadcast(mean))
         .filter(assert_true(col("__mean") >= meanRecallFloor,
           concat(lit(s"LSH→MMR mean candidate recall@$topN below floor " +
             s"$meanRecallFloor: "), col("__mean").cast("string"))).isNull)
         .select(sel.columns.map(col): _*)
-        .localCheckpoint()
-      Checkpoints.releasePinned(sel)
-      Checkpoints.releasePinned(per)
-      out
+        .transform(Checkpoints.pin)
     }
   }
 
@@ -914,37 +901,37 @@ object Similarity {
       .select(col("sub"), col("code"), col("cv").cast("array<double>").as("cv"))
     if (iters == 0) return seed
     val scale = math.pow(2.0, fracBits) // exact power of two
-    val slices = subSlices(vectors, idCol, "__vid", vecCol, dim, m)
-      .localCheckpoint() // scanned once per iteration — never recompute
-    val trained = (1 to iters).foldLeft(seed) { case (cb, round) =>
-      val assigned = slices.join(broadcast(cb), Seq("sub"))
-        .withColumn("d2", sqDist(col("sv"), col("cv")))
-        .groupBy(col("__vid"), col("sub"))
-        .agg(min(struct(col("d2"), col("code"))).as("b"),
-          first(col("sv")).as("sv"))
-        .select(col("sub"), col("b.code").as("code"), col("sv"))
-      val means = assigned
-        .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("dim", "v")))
-        .groupBy(col("sub"), col("code"), col("dim"))
-        .agg(count(lit(1)).as("__n"),
-          sum(floor(col("v").cast("double") * scale).cast("decimal(38,0)")).as("__q"))
-        .select(col("sub"), col("code"), col("dim"),
-          (col("__q").cast("double") / scale / col("__n")).as("mean"))
-      val tv = means.groupBy(col("sub"), col("code"))
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("mean")))),
-          s => s.getField("mean")).as("tv"))
-      val next = cb.join(tv, Seq("sub", "code"), "left")
-        .select(col("sub"), col("code"), coalesce(col("tv"), col("cv")).as("cv"))
-        .localCheckpoint() // bound per-round plan growth (kmeans discipline)
-      // release only checkpoints THIS loop created: the round-1 seed's
-      // plan may reach a CALLER-owned checkpoint (ivfPqTopK's residual
-      // frame feeds the seed codebook), and releasing it would kill
-      // blocks the caller still reads
-      if (round > 1) Checkpoints.releasePinned(cb)
-      next
+    Checkpoints.scoped {
+      val slices = subSlices(vectors, idCol, "__vid", vecCol, dim, m)
+        .transform(Checkpoints.pin) // scanned once per iteration — never recompute
+      (1 to iters).foldLeft(seed) { case (cb, round) =>
+        val assigned = slices.join(broadcast(cb), Seq("sub"))
+          .withColumn("d2", sqDist(col("sv"), col("cv")))
+          .groupBy(col("__vid"), col("sub"))
+          .agg(min(struct(col("d2"), col("code"))).as("b"),
+            first(col("sv")).as("sv"))
+          .select(col("sub"), col("b.code").as("code"), col("sv"))
+        val means = assigned
+          .select(col("sub"), col("code"), posexplode(col("sv")).as(Seq("dim", "v")))
+          .groupBy(col("sub"), col("code"), col("dim"))
+          .agg(count(lit(1)).as("__n"),
+            sum(floor(col("v").cast("double") * scale).cast("decimal(38,0)")).as("__q"))
+          .select(col("sub"), col("code"), col("dim"),
+            (col("__q").cast("double") / scale / col("__n")).as("mean"))
+        val tv = means.groupBy(col("sub"), col("code"))
+          .agg(transform(array_sort(collect_list(struct(col("dim"), col("mean")))),
+            s => s.getField("mean")).as("tv"))
+        val next = cb.join(tv, Seq("sub", "code"), "left")
+          .select(col("sub"), col("code"), coalesce(col("tv"), col("cv")).as("cv"))
+          .transform(Checkpoints.pin) // bound per-round plan growth (kmeans discipline)
+        // release only checkpoints THIS loop created: the round-1 seed's
+        // plan may reach a CALLER-owned checkpoint (ivfPqTopK's residual
+        // frame feeds the seed codebook), and releasing it would kill
+        // blocks the caller still reads; the scope releases `slices`
+        if (round > 1) Checkpoints.releasePinned(cb)
+        next
+      }
     }
-    Checkpoints.releasePinned(slices) // trained is materialized; slices are dead
-    trained
   }
 
   /** Mean PQ quantization distortion: the per-vector sum over
@@ -1030,20 +1017,17 @@ object Similarity {
     * uses — residuals are list-relative coordinates. */
   def ivfPqResidualCodebook(vectors: DataFrame, coarse: DataFrame,
       residualSeeds: DataFrame, idCol: String, vecCol: String,
-      dim: Int, m: Int, trainIters: Int): DataFrame = {
+      dim: Int, m: Int, trainIters: Int): DataFrame = Checkpoints.scoped {
     // barrier: the residual frame feeds the seed join AND the
     // training slices — without it each re-runs the coarse argmin
-    val res = ivfResiduals(vectors, coarse, idCol, vecCol).localCheckpoint()
+    val res = ivfResiduals(vectors, coarse, idCol, vecCol).transform(Checkpoints.pin)
     val seedIds = residualSeeds.select(col(idCol)).distinct()
     val rcb =
       if (trainIters == 0) pqCodebook(
         res.join(broadcast(seedIds), Seq(idCol)), idCol, "rv", dim, m)
       else pqTrainedCodebook(res,
         res.join(broadcast(seedIds), Seq(idCol)), idCol, "rv", dim, m, trainIters)
-    val out = rcb.localCheckpoint()
-    Checkpoints.releasePinned(res)
-    Checkpoints.releasePinned(rcb)
-    out
+    Checkpoints.pin(rcb)
   }
 
   def ivfPqTopK(vectors: DataFrame, queries: DataFrame, coarse: DataFrame,
@@ -1055,7 +1039,7 @@ object Similarity {
     // consumers (the codebook seeds, the coding pass, and the
     // list-id join) — without it each re-runs the coarse argmin over
     // the corpus. Production persists codes to a store instead.
-    val res = ivfResiduals(vectors, coarse, idCol, vecCol).localCheckpoint()
+    val res = ivfResiduals(vectors, coarse, idCol, vecCol).transform(Checkpoints.pin)
     val seedIds = residualSeeds.select(col(idCol)).distinct()
     // trainIters > 0 trains the residual codebook per-subspace
     // (k-means over ALL residuals, seeds from residualSeeds) — the
@@ -1175,13 +1159,12 @@ object Similarity {
     * nProbe/lists of the corpus"). */
   def writeIvfPqIndex(vectors: DataFrame, coarse: DataFrame,
       codebook: DataFrame, idCol: String, vecCol: String, dim: Int, m: Int,
-      root: String, batchId: Long): Unit = {
+      root: String, batchId: Long): Unit = Checkpoints.scoped {
     // barrier: residuals feed the coding pass AND the list-id join
-    val res = ivfResiduals(vectors, coarse, idCol, vecCol).localCheckpoint()
+    val res = ivfResiduals(vectors, coarse, idCol, vecCol).transform(Checkpoints.pin)
     val codes = pqCodes(res, codebook, idCol, "rv", dim, m)
       .join(res.select(col(idCol), col("list_id")), Seq(idCol))
     BatchStore.append(codes, root, batchId, partitionBy = Seq("list_id"))
-    Checkpoints.releasePinned(res)
   }
 
   /** Maintain the IVF-PQ index FROM A STREAM — vector ingest as a
@@ -1248,7 +1231,7 @@ object Similarity {
       dim: Int, m: Int, nProbe: Int, k: Int): DataFrame = {
     require(nProbe >= 1 && k >= 1, s"need nProbe/k >= 1, got $nProbe/$k")
     val qres = ivfProbeResiduals(queries, coarse, idCol, vecCol, nProbe)
-      .localCheckpoint() // feeds the ADC table AND the probed-list collect
+      .transform(Checkpoints.pin) // feeds the ADC table AND the probed-list collect
     val subDim = dim / m
     val dt = qres.select(col("query_id"), col("list_id"),
         explode(array((0 until m).map { s0 =>
@@ -1264,7 +1247,7 @@ object Similarity {
     // the ADC table is (queries × nProbe × m × codes) rows — small;
     // materialize it so qres (which it references) can be released
     // before the serving join runs
-    val dtm = dt.localCheckpoint()
+    val dtm = Checkpoints.pin(dt)
     val probed = qres.select(col("list_id")).distinct()
       .collect().map(_.getLong(0)).sorted
     Checkpoints.releasePinned(qres)

@@ -112,14 +112,14 @@ object Sketches {
     val distinctVals0 = df.select(col(groupCol), col(valueCol))
       .filter(col(valueCol).isNotNull).distinct()
     // fanout = 0: count probe on a barriered distinct frame (the probe
-    // and the windows then share ONE materialization; caller owns the
-    // checkpoint's release). Output is fanout-independent either way
+    // and the windows then share ONE materialization, in the caller's
+    // scope). Output is fanout-independent either way
     // (global bottom-k ⊆ per-cell bottom-k, Round9TailSpec) — the
     // knob only bounds the cell windows.
     val (distinctVals, fo) =
       if (fanout > 0) (distinctVals0, fanout)
       else {
-        val pinned = distinctVals0.localCheckpoint()
+        val pinned = Checkpoints.pin(distinctVals0)
         (pinned, derivedFanout(pinned.count()))
       }
     val cell = Window

@@ -60,10 +60,7 @@ object SurrogateKeys {
     * `orderCols` must be a unique key of `df` for the assignment to be
     * deterministic (all call sites here order by a distinct key set).
     *
-    * Lifecycle: the checkpoint's blocks stay pinned until GC +
-    * ContextCleaner; long-lived sessions calling this repeatedly should
-    * release consumed blocks between calls ([[graft.Bench.releaseBlocks]];
-    * CheckpointLifecycleSpec pins block stability under that pattern).
+    * Lifecycle: [[Checkpoints]].
     */
   def sequentialKeys(df: DataFrame, orderCols: Seq[Column], skName: String): DataFrame = {
     // Size gate, same spirit as AQE's coalesce-to-one: a frame whose
@@ -87,23 +84,18 @@ object SurrogateKeys {
         .withColumn(skName, monotonically_increasing_id())
     val spark = df.sparkSession
     val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = df.repartitionByRange(partitions, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-      .localCheckpoint()
-    val schema = StructType(sorted.schema.fields :+ StructField(skName, LongType, nullable = false))
-    val indexed = sorted.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
-    // Checkpoint the RESULT too, then release `sorted`: zipWithIndex's
-    // output is a fresh LogicalRDD whose dependency on the sorted
-    // checkpoint is RDD-level — invisible to plan traversal — so
-    // without this, `sorted`'s blocks outlive every release the caller
-    // can express short of a session-wide sweep. The extra
-    // materialization is one cheap map pass over the already-pinned
-    // sorted blocks (never a recompute), and the returned frame
-    // becomes self-contained: one plan-visible checkpoint, released by
-    // the caller per the lifecycle contract above.
-    val result = spark.createDataFrame(indexed, schema).localCheckpoint()
-    Checkpoints.releasePinned(sorted)
-    result
+    Checkpoints.scoped {
+      val sorted = df.repartitionByRange(partitions, orderCols: _*)
+        .sortWithinPartitions(orderCols: _*)
+        .transform(Checkpoints.pin)
+      val schema = StructType(sorted.schema.fields :+ StructField(skName, LongType, nullable = false))
+      val indexed = sorted.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ i) }
+      // zipWithIndex reads `sorted` through RDD-level lineage, which
+      // the scope cannot see, so the result pins itself (one cheap map
+      // pass over the pinned sorted blocks) and `sorted` is released
+      // when the scope ends.
+      spark.createDataFrame(indexed, schema).transform(Checkpoints.pin)
+    }
   }
 
   /** Distinct natural keys → dense sequential sk starting at 0,
@@ -127,7 +119,7 @@ object SurrogateKeys {
   def stableHashKeyChecked(df: DataFrame, naturalKey: Seq[String], skName: String): DataFrame = {
     // materialize once: the assertion is an action and the caller will
     // read the frame again
-    val keyed = stableHashKey(df, naturalKey, skName).localCheckpoint()
+    val keyed = stableHashKey(df, naturalKey, skName).transform(Checkpoints.pin)
     val Row(rows: Long, hashes: Long) =
       keyed.agg(count(lit(1)), countDistinct(col(skName))).head()
     require(rows == hashes,

@@ -96,11 +96,11 @@ object Tokenizer {
     * (oracle-gated, q157). The fold cannot cascade: the fused symbol
     * `s1s2` can never equal `s1` (s2 is non-empty), so a fresh merge
     * site is never fabricated inside one application pass. */
-  def bpeTrain(docs: DataFrame, textCol: String, nMerges: Int): DataFrame = {
+  def bpeTrain(docs: DataFrame, textCol: String, nMerges: Int): DataFrame = Checkpoints.scoped {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (merges, vocab) = bpeTrainCore(docs, textCol, nMerges, batch = 1)
-    Checkpoints.releasePinned(vocab) // merges are driver-side; blocks are dead
+    // merges are driver-side; the scope releases the vocab pin
+    val (merges, _) = bpeTrainCore(docs, textCol, nMerges, batch = 1)
     merges.map { case (r, _, s1, s2, c) => (r, s1, s2, c) }
       .toDF("merge_rank", "s1", "s2", "pair_count")
   }
@@ -138,11 +138,10 @@ object Tokenizer {
     * Returns `(merge_rank, round, s1, s2, pair_count)` — rank is the
     * global application order, `round` exposes the batching. */
   def bpeTrainBatched(docs: DataFrame, textCol: String, nMerges: Int,
-      batch: Int): DataFrame = {
+      batch: Int): DataFrame = Checkpoints.scoped {
     val spark = docs.sparkSession
     import spark.implicits._
-    val (merges, vocab) = bpeTrainCore(docs, textCol, nMerges, batch)
-    Checkpoints.releasePinned(vocab)
+    val (merges, _) = bpeTrainCore(docs, textCol, nMerges, batch)
     merges.toDF("merge_rank", "round", "s1", "s2", "pair_count")
   }
 
@@ -177,7 +176,7 @@ object Tokenizer {
     * [[bpeSegmentStats]]: returns the learned merges as
     * `(rank, round, s1, s2, count)` AND the final vocab frame
     * `(word, cnt, str)` — `str` is each distinct word's fully-merged
-    * segmentation, still pinned (the CALLER owns the release). */
+    * segmentation, still pinned in the caller's scope. */
   private def bpeTrainCore(docs: DataFrame, textCol: String, nMerges: Int,
       batch: Int): (Seq[(Int, Int, String, String, Long)], DataFrame) = {
     require(nMerges >= 1, s"need nMerges >= 1, got $nMerges")
@@ -189,7 +188,7 @@ object Tokenizer {
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
       .select(col("word"), col("cnt"),
         concat(lit(BpeSep), concat_ws(BpeSep, charArr), lit(BpeSep)).as("str"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     val merges =
       scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String, String, Long)]
     var exhausted = false
@@ -206,7 +205,7 @@ object Tokenizer {
       // batch > 1 runs up to `batch` top-1 selections against this
       // frame — barrier it so the vocab scan+explode runs once per
       // round, not per slot (single-consumer batch=1 skips it)
-      val pairs = if (batch == 1) pairs0 else pairs0.localCheckpoint()
+      val pairs = if (batch == 1) pairs0 else pairs0.transform(Checkpoints.pin)
       val want = math.min(batch, nMerges - merges.size)
       val selected = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
       var open = true
@@ -239,7 +238,7 @@ object Tokenizer {
         // aggregation (the explode-heavy job), not the rewrite.
         selected.foreach { case (s1, s2, _) =>
           val next = vocab.withColumn("str", applyMerge(col("str"), s1, s2))
-            .localCheckpoint()
+            .transform(Checkpoints.pin)
           Checkpoints.releasePinned(vocab)
           vocab = next
         }
@@ -272,9 +271,8 @@ object Tokenizer {
   def bpeSegmentStats(docs: DataFrame, textCol: String,
       groupCols: Seq[String], nMerges: Int): DataFrame = {
     val (_, vocab) = bpeTrainCore(docs, textCol, nMerges, batch = 1)
-    // the stats plan references the pinned vocab lazily; hand the
-    // release to the caller's consumption via Bench.releaseBlocks —
-    // eager release here would truncate the un-executed plan
+    // the stats plan reads the pinned vocab lazily, so it reaches the
+    // pin and the caller's scope keeps it
     segmentStatsFrom(vocab, docs, textCol, groupCols)
   }
 
@@ -322,10 +320,10 @@ object Tokenizer {
       .distinct()
       .select(col("word"),
         concat(lit(BpeSep), concat_ws(BpeSep, charArr), lit(BpeSep)).as("str"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     merges.foreach { case (s1, s2) =>
       val next = vocab.withColumn("str", applyMerge(col("str"), s1, s2))
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
       Checkpoints.releasePinned(vocab)
       vocab = next
     }
@@ -433,9 +431,7 @@ object Tokenizer {
     * one aggregation, then broadcast into every join; pair generation
     * is array arithmetic over each document's ≤ `vocabSize` retained
     * tokens — never an exploded self-join of the corpus. Lifecycle:
-    * the pinned vocab blocks are k rows; long-lived callers release
-    * via [[Checkpoints.releasePinned]] once done (the bench sweeps
-    * between runs).
+    * [[Checkpoints]].
     */
   def cooccurrenceLift(docs: DataFrame, idCol: String, textCol: String,
       vocabSize: Int): DataFrame = {
@@ -445,7 +441,7 @@ object Tokenizer {
       .groupBy(col("token")).agg(count(lit(1)).as("df"))
       .orderBy(col("df").desc, col("token"))
       .limit(vocabSize)
-      .localCheckpoint(true)
+      .transform(Checkpoints.pin)
 
     // Corpus pass 2: keep only vocabulary tokens (broadcast hash
     // join, map-side), re-assemble the ≤ vocabSize survivors per doc,

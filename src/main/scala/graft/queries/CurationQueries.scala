@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Packing, Sampling, Skew, SurrogateKeys}
+import graft.operators.{Checkpoints, Packing, Sampling, Skew, SurrogateKeys}
 
 /** Corpus-curation + skew-mitigation queries (q47–q50): the operators
   * the round-1 verdict noted as unit-tested-but-not-oracle-gated
@@ -304,18 +304,15 @@ object CurationQueries {
         Seq(E.KeptStore(kept), E.LedgerStore(led)), batchId = 10L)
       val stores = CP.Stores("", "", "", "", kept)
       def serve() = CP.packedShards(s, stores, "doc_id", "text",
-        shards = 4, budgetTokens = 512).localCheckpoint()
+        shards = 4, budgetTokens = 512).transform(Checkpoints.pin)
       val masked = serve()
       E.purgeEverywhere(s, Seq(E.KeptStore(kept), E.LedgerStore(led)),
         "doc_id", newBatchId = 20L)
       val purged = serve()
-      val out = StoreGates.compactionIdentityGate(masked, purged,
+      StoreGates.compactionIdentityGate(masked, purged,
           "kept-store purge changed the packed export")
         .orderBy(col("shard"))
-        .localCheckpoint()
-      graft.operators.Checkpoints.releasePinned(masked)
-      graft.operators.Checkpoints.releasePinned(purged)
-      out
+        .transform(Checkpoints.pin)
     }
   }
   /** Per-shard packing stats over `pc(doc_id, shard, n_tokens,
@@ -370,7 +367,7 @@ object CurationQueries {
           col("seq_id"), col("seq_offset"), col("straddles"),
           (col("batch") - 1).cast("long").as("epoch"))
         .orderBy(col("doc_id"))
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }
   }
   private val q235Sql = {
@@ -419,7 +416,7 @@ object CurationQueries {
           col("seq_id"), col("seq_offset"), col("straddles"),
           (col("batch") - 1).cast("long").as("epoch"))
         .orderBy(col("doc_id"))
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }
   }
 
@@ -661,11 +658,11 @@ object CurationQueries {
       boilerLined(Tables.documents(s, dir)),
       "doc_id", "source", "text", minDf = 10L)
     // pin: feeds the content-hash pass AND the keeper join back
-    val st = stripped.localCheckpoint()
+    val st = Checkpoints.pin(stripped)
     val keep = graft.operators.Dedup.exactGroups(st, "doc_id", "text")
       .filter(col("doc_id") === col("keeper_id"))
       .select(col("doc_id"), col("group_size"))
-    val out = st.join(keep, Seq("doc_id"))
+    st.join(keep, Seq("doc_id"))
       .select(col("source"), col("group_size"),
         size(graft.operators.TextFunctions.tokens(col("text")))
           .cast("long").as("n_toks"))
@@ -674,9 +671,7 @@ object CurationQueries {
         sum(col("group_size")).as("n_represented"),
         sum(col("n_toks")).as("sum_toks"))
       .orderBy(col("source"))
-      .localCheckpoint()
-    graft.operators.Checkpoints.releasePinned(st)
-    out
+      .transform(Checkpoints.pin)
   }
   private lazy val q214Sql =
     boilerLinedCte + ",\n" +
@@ -723,17 +718,14 @@ object CurationQueries {
       B.deleteFromLineDfStore(lined.filter(col("doc_id") % 10 === 3),
         "doc_id", "source", "text", root, batchId = 3L)
       def serve() = B.stripRepeatedLinesFromStore(s, root, remaining,
-        "doc_id", "source", "text", minDf = 10L).localCheckpoint()
+        "doc_id", "source", "text", minDf = 10L).transform(Checkpoints.pin)
       val masked = serve()
       B.compactLineDfStore(s, root, "source", newBatchId = 4L)
       val compacted = serve()
-      val out = StoreGates.compactionIdentityGate(masked, compacted,
+      StoreGates.compactionIdentityGate(masked, compacted,
           "line-df compaction changed the served strip")
         .orderBy(col("doc_id"))
-        .localCheckpoint()
-      graft.operators.Checkpoints.releasePinned(masked)
-      graft.operators.Checkpoints.releasePinned(compacted)
-      out
+        .transform(Checkpoints.pin)
     }
   }
   private lazy val q216Sql = boilerplateSqlTail(
@@ -810,11 +802,8 @@ object CurationQueries {
       val masked = serve()
       QC.compactQualityStore(s, root, newBatchId = 4L)
       val compacted = serve()
-      val out = confusion(StoreGates.compactionIdentityGate(masked, compacted,
+      confusion(StoreGates.compactionIdentityGate(masked, compacted,
         "quality-store compaction changed classifications"), cand)
-      graft.operators.Checkpoints.releasePinned(masked)
-      graft.operators.Checkpoints.releasePinned(compacted)
-      out
     }
   }
   /** q210/q213's confusion counts: predicted labels joined to the
@@ -825,7 +814,7 @@ object CurationQueries {
       .groupBy(col("label_true"), col("label_pred"))
       .agg(count(lit(1)).as("n_docs"))
       .orderBy(col("label_true"), col("label_pred"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
 
   /** The classifier's naive-Bayes model CTEs: labeled training tokens
     * `tr` read from `trainFrom`, hashed uni+bigram features `tf`,
@@ -915,9 +904,7 @@ object CurationQueries {
     ) { store =>
       val served = QC.classifyFromStore(s, store, cand,
         "doc_id", "text", buckets = 4096)
-      val out = confusion(served, cand)
-      graft.operators.Checkpoints.releasePinned(served)
-      out
+      confusion(served, cand)
     }
   }
   private val q213Sql = qualityNbSqlFor("doc_id % 4 <> 0")
@@ -948,7 +935,7 @@ object CurationQueries {
           docs.filter(col("doc_id") % 3 === 0),
           "doc_id", "text", groupCol = "source", cutQ = 0.625)
         .orderBy(col("doc_id"))
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }
   }
   private lazy val q211Sql =
@@ -1062,13 +1049,10 @@ object CurationQueries {
       DS.compactDsirStore(s, root, newBatchId = 4L)
       val compacted = DS.dsirTopKFromStore(s, root, cand,
         "doc_id", "text", buckets = 4096, k = 20)
-      val out = StoreGates.compactionIdentityGate(masked, compacted,
+      StoreGates.compactionIdentityGate(masked, compacted,
           "DSIR-store compaction changed served selection")
         .orderBy(desc("dsir_avg"), col("doc_id"))
-        .localCheckpoint()
-      graft.operators.Checkpoints.releasePinned(masked)
-      graft.operators.Checkpoints.releasePinned(compacted)
-      out
+        .transform(Checkpoints.pin)
     }
   }
   private val q201Sql = dsirSqlFor("doc_id % 7 = 0 AND doc_id % 5 <> 0")
@@ -1199,11 +1183,11 @@ object CurationQueries {
           .select(col("doc_id"), col("source"), col("stage"),
             (col("batch") - 1).cast("long").as("epoch"))
           .orderBy(col("doc_id"))
-          .localCheckpoint() // owns the data; the temp stores delete now
+          .transform(Checkpoints.pin) // owns the data; the temp stores delete now
       else
         CP.packedShards(s, stores, "doc_id", "text",
             shards = 4, budgetTokens = 512)
-          .localCheckpoint() // owns the data; the temp stores delete now
+          .transform(Checkpoints.pin) // owns the data; the temp stores delete now
     }
   }
 

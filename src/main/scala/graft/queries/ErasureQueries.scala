@@ -35,41 +35,32 @@ object ErasureQueries {
   // Erasure.purgeEverywhere, then each store's physically-remaining
   // surface ([[surface]]) in a single (store, metric, value) frame.
   // The vector stores erase by VECTOR id (the embeddings table),
-  // exercising the vecIds leg of the fan-out. The document and
-  // codebook pins are released whether or not a build throws.
+  // exercising the vecIds leg of the fan-out. The gate runs in its own
+  // pin scope, so the document and codebook pins are released whether
+  // or not a build throws.
   private[graft] def forgetGate(s: SparkSession, dir: String, tag: String,
-      registry: (String => String) => Seq[Erasure.StoreRef]): DataFrame = {
+      registry: (String => String) => Seq[Erasure.StoreRef]): DataFrame = Checkpoints.scoped {
     val docs = Tables.documents(s, dir).filter(expr(writtenF))
     val allVecs = Tables.embeddings(s, dir)
     val vecs = allVecs.filter(col("vec_id") % 2 === 0)
     StoreGates.withTempStore(s, tag) { base =>
       val stores = registry(n => new org.apache.hadoop.fs.Path(base, n).toString)
-      val pinnedDocs = docs.localCheckpoint()
-      var cbPin: Option[DataFrame] = None
+      val pinnedDocs = Checkpoints.pin(docs)
       // feeds both vector-index writes; whichever build needs it first
       // trains it, the other waits on the lazy val
-      lazy val cb = {
-        val c = Similarity.pqCodebook(
-          Similarity.pqSeeds(vecs, "vec_id", centroids = 8),
-          "vec_id", "embedding", dim = 64, m = 4).localCheckpoint()
-        cbPin = Some(c)
-        c
-      }
-      try {
-        // the builds are INDEPENDENT (distinct roots), so they overlap
-        // (guide §2.6, r18: a sequential chain paid one straggler tail
-        // per store)
-        ParallelJobs.run(stores.map(ref => () => build(ref, pinnedDocs, vecs, allVecs, cb)))
-        // the composed takedown: one call, every store
-        Erasure.forget(docs.filter(col("doc_id") % 10 === 0),
-          "doc_id", "text", stores, batchId = 2L,
-          vecIds = Some((vecs.filter(col("vec_id") % 10 === 0), "vec_id")))
-        Erasure.purgeEverywhere(s, stores, "doc_id", newBatchId = 3L,
-          vecIdCol = "vec_id")
-      } finally {
-        cbPin.foreach(Checkpoints.releasePinned)
-        Checkpoints.releasePinned(pinnedDocs)
-      }
+      lazy val cb = Similarity.pqCodebook(
+        Similarity.pqSeeds(vecs, "vec_id", centroids = 8),
+        "vec_id", "embedding", dim = 64, m = 4).transform(Checkpoints.pin)
+      // the builds are INDEPENDENT (distinct roots), so they overlap
+      // (guide §2.6, r18: a sequential chain paid one straggler tail
+      // per store)
+      ParallelJobs.run(stores.map(ref => () => build(ref, pinnedDocs, vecs, allVecs, cb)))
+      // the composed takedown: one call, every store
+      Erasure.forget(docs.filter(col("doc_id") % 10 === 0),
+        "doc_id", "text", stores, batchId = 2L,
+        vecIds = Some((vecs.filter(col("vec_id") % 10 === 0), "vec_id")))
+      Erasure.purgeEverywhere(s, stores, "doc_id", newBatchId = 3L,
+        vecIdCol = "vec_id")
       stores.flatMap(ref => surface(ref).map { m =>
           val v = m.value(s, ref.root)
           v.select(lit(m.store).as("store"), lit(m.metric).as("metric"),
@@ -77,7 +68,7 @@ object ErasureQueries {
         })
         .reduce(_.unionByName(_))
         .orderBy(col("store"), col("metric"))
-        .localCheckpoint() // owns the data; the temp stores delete now
+        .transform(Checkpoints.pin) // owns the data; the temp stores delete now
     }
   }
 

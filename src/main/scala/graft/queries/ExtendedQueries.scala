@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.operators.DataQuality
+import graft.operators.{Checkpoints, DataQuality}
 
 /** Extended analytics surface beyond the reference's own inventory:
   * rollup subtotals, semi joins, exact percentiles, ordered string
@@ -373,7 +373,7 @@ object ExtendedQueries {
       rollup(graft.operators.BatchStore.readAsOf(s, root, 1L), 1L)
         .unionByName(rollup(graft.operators.BatchStore.read(s, root), 2L))
         .orderBy(col("as_of"), col("source"))
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }
   }
   private val q226Sql =
@@ -412,19 +412,16 @@ object ExtendedQueries {
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
       val merged = rollup(
           graft.operators.BatchStore.read(s, root, mergeSchema = true))
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
       graft.operators.BatchStore.compactEvolved(s, root, newBatchId = 3L)
       // post-compaction the unified schema is physical — the PLAIN
       // read serves it
       val compacted = rollup(graft.operators.BatchStore.read(s, root))
-        .localCheckpoint()
-      val out = StoreGates.compactionIdentityGate(merged, compacted,
+        .transform(Checkpoints.pin)
+      StoreGates.compactionIdentityGate(merged, compacted,
           "evolved compaction changed the served rollup")
         .orderBy(col("lang"))
-        .localCheckpoint()
-      graft.operators.Checkpoints.releasePinned(merged)
-      graft.operators.Checkpoints.releasePinned(compacted)
-      out
+        .transform(Checkpoints.pin)
     }
   }
   private val q229Sql =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Dedup, Multimodal}
+import graft.operators.{Checkpoints, Dedup, Multimodal}
 
 /** q218–q219: the dedup suite's IMAGE modality — perceptual
   * difference-hash over REALLY decoded pixels ([[Multimodal
@@ -122,10 +122,8 @@ object ImageQueries {
     // §5 — recomputing is the expensive side here, unlike q199's
     // chunk-text trade)
     val hashes = Multimodal.imageDHash(s, renditions(s, dir))
-      .toDF().localCheckpoint()
-    val out = hashes.orderBy(col("media_id")).localCheckpoint()
-    graft.operators.Checkpoints.releasePinned(hashes)
-    out
+      .toDF().transform(Checkpoints.pin)
+    hashes.orderBy(col("media_id")).transform(Checkpoints.pin)
   }
   private val q218Sql =
     s"""WITH $dHashCtes
@@ -151,13 +149,11 @@ object ImageQueries {
   private def q219(s: SparkSession, dir: String): DataFrame = {
     val hashes = Multimodal.imageDHash(s, renditions(s, dir))
       .filter(col("codec") === "image").toDF()
-      .localCheckpoint() // feeds band explode AND both verify sides
-    val out = Dedup.hammingNearDupPairs(hashes, "media_id",
+      .transform(Checkpoints.pin) // feeds band explode AND both verify sides
+    Dedup.hammingNearDupPairs(hashes, "media_id",
         Seq("b0", "b1", "b2", "b3"), maxDist = 8)
       .orderBy(col("id_a"), col("id_b"))
-      .localCheckpoint()
-    graft.operators.Checkpoints.releasePinned(hashes)
-    out
+      .transform(Checkpoints.pin)
   }
   private val q219Sql =
     s"""WITH $dHashCtes,
@@ -224,7 +220,7 @@ object ImageQueries {
       // the takedown selection, and the unpinned chain re-encoded +
       // re-decoded ~2.5k PNGs per consumer (the rows are 5 ints/image;
       // guide §5 recompute-vs-pin trade clearly favors the pin here)
-      val hh = Multimodal.imageDHash(s, history).toDF().localCheckpoint()
+      val hh = Multimodal.imageDHash(s, history).toDF().transform(Checkpoints.pin)
       val bands = Seq("b0", "b1", "b2", "b3")
       // the two appends are independent (distinct batch ids) — overlap
       // them (guide §2.6)
@@ -237,19 +233,16 @@ object ImageQueries {
         hh.filter(col("media_id") % 10 === 0).select(col("media_id")),
         "media_id", root, batchId = 3L)
       // pin: the batch hashes feed the band collect AND both serves
-      val bh = Multimodal.imageDHash(s, batch).toDF().localCheckpoint()
+      val bh = Multimodal.imageDHash(s, batch).toDF().transform(Checkpoints.pin)
       def serve() = D.incrementalHammingDedup(s, root, bh, "media_id",
         bands, maxDist = 8)
-      val masked = serve().localCheckpoint()
+      val masked = serve().transform(Checkpoints.pin)
       D.purgeHammingStore(s, root, "media_id", newBatchId = 4L)
-      val compacted = serve().localCheckpoint()
-      val out = StoreGates.compactionIdentityGate(masked, compacted,
+      val compacted = serve().transform(Checkpoints.pin)
+      StoreGates.compactionIdentityGate(masked, compacted,
           "hamming-store compaction changed served verdicts")
         .orderBy(col("media_id"))
-        .localCheckpoint()
-      Seq(hh, bh, masked, compacted)
-        .foreach(graft.operators.Checkpoints.releasePinned)
-      out
+        .transform(Checkpoints.pin)
     }
   }
   private val q222Sql =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.Similarity
+import graft.operators.{Checkpoints, Similarity}
 
 /** Similarity search over the `embeddings` table (`array<float>`,
   * 64-dim): brute-force exact top-k, IVF-style bucketed top-k, and
@@ -772,7 +772,7 @@ object SimilarityQueries {
       Similarity.ivfPqTopKFromStore(s, root, queries, coarse, rcb,
           "vec_id", "embedding", dim = 64, m = 4, nProbe = 2, k = 5)
         .orderBy(col("query_id"), col("rank"))
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }
   }
   /** The q179 serving oracle, parameterized by a predicate on the
@@ -808,7 +808,7 @@ object SimilarityQueries {
       Similarity.ivfPqTopKFromStore(s, store, queries, coarse, rcb,
           "vec_id", "embedding", dim = 64, m = 4, nProbe = 2, k = 5)
         .orderBy(col("query_id"), col("rank"))
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }
   }
   private val q186Sql = q179Sql
@@ -835,17 +835,14 @@ object SimilarityQueries {
         "vec_id", root, batchId = 2L)
       def serve() = Similarity.ivfPqTopKFromStore(s, root, queries, coarse,
           rcb, "vec_id", "embedding", dim = 64, m = 4, nProbe = 2, k = 5)
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
       val masked = serve()
       Similarity.purgeIvfPqIndex(s, root, "vec_id", newBatchId = 3L)
       val purged = serve()
-      val out = StoreGates.compactionIdentityGate(masked, purged,
+      StoreGates.compactionIdentityGate(masked, purged,
           "purge changed served IVF-PQ results")
         .orderBy(col("query_id"), col("rank"))
-        .localCheckpoint()
-      graft.operators.Checkpoints.releasePinned(masked)
-      graft.operators.Checkpoints.releasePinned(purged)
-      out
+        .transform(Checkpoints.pin)
     }
   }
   private val q187Sql = ivfPqStoreSql(codesWhere = "WHERE vec_id % 2 = 0")
@@ -910,7 +907,7 @@ object SimilarityQueries {
       Similarity.pqAdcTopKFromStore(s, root, queries, cb,
           "vec_id", "embedding", dim = 64, m = 4, k = 5)
         .orderBy(col("query_id"), col("rank"))
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }
   }
   private val q176Sql =
@@ -943,7 +940,7 @@ object SimilarityQueries {
   private def q150(s: SparkSession, dir: String): DataFrame = {
     // fixture, not a table read: deterministic, engine-reproducible
     val e = graft.ScaleGen.plantedEmbeddings(s, clusters = 50,
-      perCluster = 10, dim = 64, noise = 1.0).localCheckpoint()
+      perCluster = 10, dim = 64, noise = 1.0).transform(Checkpoints.pin)
     val queries = e.filter(col("vec_id") < 10)
     val seeds = e.filter(col("vec_id") < 32)
     val cb = Similarity.pqTrainedCodebook(e, seeds, "vec_id", "embedding",
@@ -981,7 +978,7 @@ object SimilarityQueries {
   private def q152(s: SparkSession, dir: String): DataFrame = {
     // fixture, not a table read: deterministic, engine-reproducible
     val e = graft.ScaleGen.plantedEmbeddings(s, clusters = 50,
-      perCluster = 10, dim = 64, noise = 1.0).localCheckpoint()
+      perCluster = 10, dim = 64, noise = 1.0).transform(Checkpoints.pin)
     val coarse = e.filter(col("vec_id") < 8)
     val resSeeds = e.filter(col("vec_id") >= 8 && col("vec_id") < 40)
     val queries = e.filter(col("vec_id") < 10)
@@ -1009,7 +1006,7 @@ object SimilarityQueries {
   // scale, exclusion and ranking unchanged.
   private def q165(s: SparkSession, dir: String): DataFrame = {
     val e = graft.ScaleGen.plantedEmbeddings(s, clusters = 50,
-      perCluster = 10, dim = 64, noise = 1.0).localCheckpoint()
+      perCluster = 10, dim = 64, noise = 1.0).transform(Checkpoints.pin)
     Similarity.hardNegatives(e, e.filter(col("vec_id") < 10),
         "vec_id", "label", "embedding", k = 3)
       .orderBy(col("query_id"), col("rank"))
@@ -1040,7 +1037,7 @@ object SimilarityQueries {
   // first-mate rank, and the gate sees it as integers.
   private def q167(s: SparkSession, dir: String): DataFrame = {
     val e = graft.ScaleGen.plantedEmbeddings(s, clusters = 50,
-      perCluster = 10, dim = 64, noise = 1.0).localCheckpoint()
+      perCluster = 10, dim = 64, noise = 1.0).transform(Checkpoints.pin)
     val q = e.filter(col("vec_id") < 10)
     val lbl = e.select(col("vec_id"), col("label"))
     val firstMate = Similarity

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.Tables
+import graft.operators.Checkpoints
 
 /** The `spark.sql` entry surface over the testdata, oracle-gated —
   * proof that the engine's SQL front door (temp views + full Catalyst
@@ -179,7 +180,7 @@ object SqlQueries {
             min(col("n_chars")).as("min_chars"), max(col("n_chars")).as("max_chars"))
           .orderBy(col("lang"))
         requireRollupScan(out, summary, "summary")
-        out.localCheckpoint()
+        out.transform(Checkpoints.pin)
       } finally graft.plans.SummaryRewrite.deregister(basePath)
     }
   }
@@ -224,7 +225,7 @@ object SqlQueries {
             min(col("n_chars")).as("min_chars"), max(col("n_chars")).as("max_chars"))
           .orderBy(col("source"))
         requireRollupScan(out, root, "incremental-rollup")
-        out.localCheckpoint()
+        out.transform(Checkpoints.pin)
       } finally graft.plans.SummaryRewrite.deregister(basePath)
     }
   }
@@ -270,7 +271,7 @@ object SqlQueries {
             max(col("n_chars")).as("max_chars"))
           .orderBy(col("lang"))
         requireRollupScan(out, root, "fresh-rollup")
-        out.localCheckpoint()
+        out.transform(Checkpoints.pin)
       } finally graft.plans.SummaryRewrite.deregister(basePath)
     }
   }
@@ -306,7 +307,7 @@ object SqlQueries {
             |GROUP BY lang, source
             |ORDER BY lang, source""".stripMargin)
         requireRollupScan(out, summary, "SQL-front-door")
-        out.localCheckpoint()
+        out.transform(Checkpoints.pin)
       } finally graft.plans.SummaryRewrite.deregister(basePath)
     }
   }
@@ -349,7 +350,7 @@ object SqlQueries {
           .agg(count(lit(1)).as("n_docs"), min(col("n_chars")).as("min_chars"))
           .orderBy(col("lang"), col("source"))
         requireRollupScan(out, root, "streamed-rollup")
-        out.localCheckpoint()
+        out.transform(Checkpoints.pin)
       }
     } finally graft.plans.SummaryRewrite.deregister(basePath)
   }

@@ -18,7 +18,7 @@ private[queries] object StoreGates {
     * the root runs even when the in-plan equality gate (or any Spark
     * action inside `body`) throws — a failed gate must not leak the
     * store directory on disk. Safe because every serving call inside
-    * materializes its result (`localCheckpoint`) before `body`
+    * pins its result ([[graft.operators.Checkpoints]]) before `body`
     * returns. */
   def withTempStore(s: SparkSession, prefix: String)(
       body: String => DataFrame): DataFrame = {
@@ -35,8 +35,8 @@ private[queries] object StoreGates {
     * file source into the store's exactly-once `foreachBatch` sink,
     * serve from the completed store, and clean up stage + store +
     * checkpoint (also when `serve` throws) — the serve result must be
-    * materialized (`localCheckpoint`) by `serve` (every FromStore
-    * serving call does) since the dirs are deleted on return. */
+    * pinned by `serve` (every FromStore serving call does) since the
+    * dirs are deleted on return. */
   def withStreamedStore(s: SparkSession, prefix: String,
       slices: Seq[DataFrame], sink: String => (DataFrame, Long) => Unit)(
       serve: String => DataFrame): DataFrame = {

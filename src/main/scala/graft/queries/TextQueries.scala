@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Chunking, Decontaminate, Dedup, Multimodal, Pii, Sampling, Sketches, TextAnalysis, TextFunctions}
+import graft.operators.{Checkpoints, Chunking, Decontaminate, Dedup, Multimodal, Pii, Sampling, Sketches, TextAnalysis, TextFunctions}
 
 /** Training-data text operators over the `documents` table: per-doc
   * stats, quality scoring, language id, fingerprinting, exact dedup,
@@ -519,7 +519,7 @@ object TextQueries {
       .withColumn("nrm", sqrt(aggregate(
         transform(col("emb"), x => x * x), lit(0.0), (a, v) => a + v)))
       .filter(col("nrm") > 0)
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     val left = docs.select(col("doc_id").as("id_a"), col("source"),
       col("emb").as("ea"), col("nrm").as("na"))
     val right = docs.select(col("doc_id").as("id_b"), col("source"),
@@ -591,7 +591,7 @@ object TextQueries {
     val docs = Tables.documents(s, dir)
       .select(col("doc_id"),
         TextFunctions.hashEmbed(col("text"), dim).as("emb"))
-      .localCheckpoint() // barrier FIRST: a filter above an alias gets
+      .transform(Checkpoints.pin) // barrier FIRST: a filter above an alias gets
       // predicate-pushed below the project with the alias substituted,
       // which would run the whole encoder twice per row
       .filter(graft.operators.Similarity.l2Norm(col("emb")) > 0)
@@ -772,17 +772,14 @@ object TextQueries {
       def verdict() = Dedup.incrementalDedupFromStore(
           Dedup.readSignatureStore(s, root, "doc_id"), batch,
           "doc_id", "text", k = 16, shingleN = 3, bands = 8, threshold = 0.5)
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
       val masked = verdict()
       Dedup.purgeSignatureStore(s, root, "doc_id", newBatchId = 4L)
       val purged = verdict()
-      val out = StoreGates.compactionIdentityGate(masked, purged,
+      StoreGates.compactionIdentityGate(masked, purged,
           "purge changed the dedup verdict")
         .orderBy(col("doc_id"))
-        .localCheckpoint()
-      graft.operators.Checkpoints.releasePinned(masked)
-      graft.operators.Checkpoints.releasePinned(purged)
-      out
+        .transform(Checkpoints.pin)
     }
   }
   private val q188Sql =
@@ -809,7 +806,7 @@ object TextQueries {
       Dedup.incrementalDedupFromStore(
           Dedup.readSignatureStore(s, root), docs.filter(isBatch),
           "doc_id", "text", k = 16, shingleN = 3, bands = 8, threshold = 0.5)
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }.orderBy(col("doc_id"))
   }
   private val q134Sql = q128Sql
@@ -845,7 +842,7 @@ object TextQueries {
       Dedup.incrementalDedupFromStoreAt(s, root,
           docs.filter(coin < 1), "doc_id", "text", k = 16, shingleN = 3,
           bands = 8, threshold = 0.5)
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }.orderBy(col("doc_id"))
   }
   private val q239Sql = q128Sql
@@ -916,7 +913,7 @@ object TextQueries {
     // parquet scans in the plan). The checkpointed frame is
     // sketch-sized (≤ sources·k rows), so the barrier costs nothing.
     val sk = Sketches.kMinValues(grams, "source", "h", k = 64)
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     val sizes = sk.groupBy(col("source")).agg(count(lit(1)).as("sk_n"))
     val pairs = sizes.select(col("source").as("source_a"), col("sk_n").as("n_a"))
       .join(sizes.select(col("source").as("source_b"), col("sk_n").as("n_b")),
@@ -983,7 +980,7 @@ object TextQueries {
     val grams = docs.select(col("source"),
         explode(TextFunctions.hashedShingles(
           TextFunctions.tokens(col("text")), 3)).as("h"))
-      .distinct().localCheckpoint()
+      .distinct().transform(Checkpoints.pin)
     val sk = Sketches.kMinValues(grams, "source", "h", k = 64)
     val est = sk.groupBy(col("source"))
       .agg(count(lit(1)).as("n_sk"), max(col("h")).as("h_max"))
@@ -1031,7 +1028,7 @@ object TextQueries {
     // the keep-count join — without it the quality regexes run 3×
     val scored = docs.select(col("doc_id"), col("source"),
         TextAnalysis.qualityScore(col("text")).as("quality"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     val cut = Sampling.groupQuantileDisc(scored, "source", "quality", q = 0.25)
       .withColumnRenamed("quantile", "cutoff")
     scored.join(broadcast(cut), Seq("source"))
@@ -1163,7 +1160,7 @@ object TextQueries {
       graft.operators.InvertedIndex.andSearchFromStore(
           graft.operators.BatchStore.read(s, root), "doc_id",
           terms = Seq("spark", "join", "hash"), k = 20)
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }
   }
   private val q159Sql = q139Sql
@@ -1188,7 +1185,7 @@ object TextQueries {
       graft.operators.InvertedIndex.andSearchFromStore(
           graft.operators.BatchStore.read(s, root), "doc_id",
           terms = Seq("spark", "join", "hash"), k = 20)
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }
   }
   private val q169Sql = q139Sql
@@ -1215,7 +1212,7 @@ object TextQueries {
         .postingStoreSink("doc_id", "text", store)) { store =>
       graft.operators.InvertedIndex.bm25SearchFromStore(
           s, store, "doc_id", q151Terms, k = 20)
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }
   }
   // lazy: bm25SqlFor reads q151Terms, which initializes LATER in this
@@ -1247,19 +1244,16 @@ object TextQueries {
         docs.filter(col("doc_id") % 7 === 3), "doc_id", "text", root, batchId = 3L)
       val masked = graft.operators.InvertedIndex.bm25SearchFromStore(
           s, root, "doc_id", q151Terms, k = 20)
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
       graft.operators.InvertedIndex.purgeTombstones(
         s, root, "doc_id", newBatchId = 4L)
       val purged = graft.operators.InvertedIndex.bm25SearchFromStore(
           s, root, "doc_id", q151Terms, k = 20)
-        .localCheckpoint()
-      val out = StoreGates.compactionIdentityGate(masked, purged,
+        .transform(Checkpoints.pin)
+      StoreGates.compactionIdentityGate(masked, purged,
           "purge changed served BM25 results")
         .orderBy(desc("score"), col("doc_id"))
-        .localCheckpoint()
-      graft.operators.Checkpoints.releasePinned(masked)
-      graft.operators.Checkpoints.releasePinned(purged)
-      out
+        .transform(Checkpoints.pin)
     }
   }
   private lazy val q180Sql = bm25SqlFor(
@@ -1355,7 +1349,7 @@ object TextQueries {
       graft.operators.BatchStore.compact(s, root, newBatchId = 3L)
       graft.operators.LanguageModel.bigramLmScoreFromStore(
           s, root, docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", k = 20)
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }
   }
   private val q182Sql = lmSql
@@ -1385,7 +1379,7 @@ object TextQueries {
         .agg(count(lit(1)).as("n_train"),
           sum(when(col("is_contaminated"), 1L).otherwise(0L)).as("n_contaminated"))
         .orderBy(col("lang"))
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }
   }
   // lazy: q60Sql initializes later in this object (the q177 rule)
@@ -1555,13 +1549,10 @@ object TextQueries {
       val masked = LM.bigramLmScoreFromStore(s, root, cand, "doc_id", "text", k = 20)
       LM.compactLmStore(s, root, newBatchId = 4L)
       val compacted = LM.bigramLmScoreFromStore(s, root, cand, "doc_id", "text", k = 20)
-      val out = StoreGates.compactionIdentityGate(masked, compacted,
+      StoreGates.compactionIdentityGate(masked, compacted,
           "LM-store compaction changed served scoring")
         .orderBy(col("lm_avg"), col("doc_id"))
-        .localCheckpoint()
-      graft.operators.Checkpoints.releasePinned(masked)
-      graft.operators.Checkpoints.releasePinned(compacted)
-      out
+        .transform(Checkpoints.pin)
     }
   }
   private val q189Sql = lmSqlFor(erasedLmFilter)
@@ -1620,16 +1611,13 @@ object TextQueries {
       val masked = LM.classifyLangByTrigramsFromStore(s, root, cand, "doc_id", "text")
       LM.compactLangIdStore(s, root, newBatchId = 4L)
       val compacted = LM.classifyLangByTrigramsFromStore(s, root, cand, "doc_id", "text")
-      val out = StoreGates.compactionIdentityGate(masked, compacted,
+      StoreGates.compactionIdentityGate(masked, compacted,
           "lang-id store compaction changed served classification")
         .join(cand.select(col("doc_id"), col("lang")), Seq("doc_id"))
         .groupBy(col("lang"), col("lang_pred"))
         .agg(count(lit(1)).as("n_docs"))
         .orderBy(col("lang"), col("lang_pred"))
-        .localCheckpoint()
-      graft.operators.Checkpoints.releasePinned(masked)
-      graft.operators.Checkpoints.releasePinned(compacted)
-      out
+        .transform(Checkpoints.pin)
     }
   }
   private val q191Sql = langidSqlFor("doc_id % 5 <> 0 AND doc_id % 7 <> 0")
@@ -1956,7 +1944,7 @@ object TextQueries {
           "query_id", "neighbor_id", "text",
           dim = 16, maxQueryTokens = 16, k = 5)
         .orderBy(col("query_id"), col("rank"))
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }
   }
   private lazy val q198Sql = q197Sql
@@ -1980,8 +1968,8 @@ object TextQueries {
     // front runs once, not per serve; passages stay lazy (measured:
     // materializing corpus chunk text costs more than re-chunking)
     val (cands0, qtext, passages) = maxSimFixture(s, dir)
-    val cands = cands0.localCheckpoint()
-    val res = StoreGates.withTempStore(s, "graft_q199_ti") { root =>
+    val cands = Checkpoints.pin(cands0)
+    StoreGates.withTempStore(s, "graft_q199_ti") { root =>
       // r19: one tokenize+embed pass + overlapped commits (q198's
       // writeTokenIndexSlices note)
       LI.writeTokenIndexSlices(passages, "neighbor_id", "text", dim = 16,
@@ -1997,16 +1985,11 @@ object TextQueries {
       val masked = serve()
       LI.purgeTokenIndex(s, root, "neighbor_id", newBatchId = 4L)
       val purged = serve()
-      val out = StoreGates.compactionIdentityGate(masked, purged,
+      StoreGates.compactionIdentityGate(masked, purged,
           "token-index purge changed served ranking")
         .orderBy(col("query_id"), col("rank"))
-        .localCheckpoint()
-      graft.operators.Checkpoints.releasePinned(masked)
-      graft.operators.Checkpoints.releasePinned(purged)
-      out
+        .transform(Checkpoints.pin)
     }
-    graft.operators.Checkpoints.releasePinned(cands)
-    res
   }
   private lazy val q199Sql = maxSimSqlFor("cid % 13 <> 5")
 
@@ -2041,7 +2024,7 @@ object TextQueries {
           "query_id", "neighbor_id", "text",
           dim = 16, maxQueryTokens = 16, k = 5)
         .orderBy(col("query_id"), col("rank"))
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }
   }
   private lazy val q204Sql = maxSimSqlFor("TRUE", int8 = true)
@@ -2069,7 +2052,7 @@ object TextQueries {
           "query_id", "neighbor_id", "text",
           dim = 16, maxQueryTokens = 16, k = 5)
         .orderBy(col("query_id"), col("rank"))
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }
   }
   private lazy val q200Sql = q197Sql
@@ -2099,7 +2082,7 @@ object TextQueries {
           countDistinct(col("doc_bucket")).as("n_buckets"))
         .orderBy(desc("cf"), col("token"))
         .limit(20)
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }
   }
   private val q174Sql = {
@@ -2138,7 +2121,7 @@ object TextQueries {
       .select(col("doc_id"), col("chunk_id"),
         TextFunctions.hashEmbed(col("chunk_text"), dim).as("cemb"))
       .withColumn("cn", nrm(col("cemb"))).filter(col("cn") > 0)
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
     val queries = docs.filter(col("doc_id") % 97 === 3)
       .select(col("doc_id").as("query_id"),
         TextFunctions.hashEmbed(col("text"), dim).as("qemb"))
@@ -2215,7 +2198,7 @@ object TextQueries {
       .groupBy(col("query_id"))
       .agg(sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
       .withColumn("recall", col("n_hits").cast("double") / lit(5.0))
-      .localCheckpoint() // feeds the mean aggregate AND the output rows
+      .transform(Checkpoints.pin) // feeds the mean aggregate AND the output rows
     val mean = per.agg(avg(col("recall")).as("__mean"))
     per.crossJoin(broadcast(mean))
       .filter(assert_true(col("__mean") >= Q172MeanRecallFloor,
@@ -2265,7 +2248,7 @@ object TextQueries {
     val docs = Tables.documents(s, dir)
     val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
         k = 16, shingleN = 3, bands = 8, threshold = 0.5)
-      .select(col("id_a"), col("id_b")).localCheckpoint()
+      .select(col("id_a"), col("id_b")).transform(Checkpoints.pin)
     val comp = Dedup.connectedComponents(pairs)
       .withColumnRenamed("node", "doc_id")
     val labeled = docs.select(col("doc_id"))
@@ -2343,7 +2326,7 @@ object TextQueries {
         sum(col("n_chars")).as("n_chars"),
         sum(length(col("text")).cast("long")).as("text_chars"))
       .orderBy(col("lang"))
-      .localCheckpoint()
+      .transform(Checkpoints.pin)
   private val q163Sql =
     """SELECT lang, COUNT(*) AS n_docs,
       |  CAST(SUM(n_chars) AS BIGINT) AS n_chars,
@@ -2416,7 +2399,7 @@ object TextQueries {
           .outputMode("complete").start()
         try q.processAllAvailable() finally q.stop()
       }
-      val out = s.table(sink).orderBy(col("lang")).localCheckpoint()
+      val out = s.table(sink).orderBy(col("lang")).transform(Checkpoints.pin)
       // the checkpoint owns the rows now — drop the memory-sink temp
       // view, or each bench invocation (3 runs/query) leaves a cached
       // result table registered for the session's lifetime
@@ -2548,7 +2531,7 @@ object TextQueries {
       writePostingHalves(docs, root)
       graft.operators.InvertedIndex.bm25SearchFromStore(
           s, root, "doc_id", q151Terms, k = 20)
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }
   }
   private val q161Sql = bm25SqlFor(
@@ -3761,13 +3744,10 @@ object TextQueries {
       val masked = serve()
       FH.purgeHashedStore(s, root, "doc_id", newBatchId = 4L)
       val purged = serve()
-      val out = StoreGates.compactionIdentityGate(masked, purged,
+      StoreGates.compactionIdentityGate(masked, purged,
           "hashed-store purge changed the served retrieval")
         .orderBy(col("query_id"), col("rank"))
-        .localCheckpoint()
-      graft.operators.Checkpoints.releasePinned(masked)
-      graft.operators.Checkpoints.releasePinned(purged)
-      out
+        .transform(Checkpoints.pin)
     }
   }
   private lazy val q231Sql =
@@ -3907,7 +3887,7 @@ object TextQueries {
       graft.operators.BatchStore.read(s, p("kept"))
         .select(col("doc_id"), (col("batch") - 1).cast("long").as("epoch"))
         .orderBy(col("doc_id"))
-        .localCheckpoint() // owns the data; the temp stores delete now
+        .transform(Checkpoints.pin) // owns the data; the temp stores delete now
     }
   }
   private val q238Sql = {

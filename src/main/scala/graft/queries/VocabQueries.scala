@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.Tokenizer
+import graft.operators.{Checkpoints, Tokenizer}
 
 /** Tokenizer-training queries over the `documents` corpus (q72–q74):
   * the corpus statistics a BPE/vocabulary trainer computes before any
@@ -359,7 +359,7 @@ object VocabQueries {
       Tokenizer.bpeApplyStats(docs.filter(col("doc_id") % 2 === 1), "text",
           Seq("lang"), trained)
         .orderBy(col("lang"))
-        .localCheckpoint()
+        .transform(Checkpoints.pin)
     }
   }
   private val q207Sql = q178Sql

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.operators.Checkpoints
 
 /** Window/analytic queries over the `events` table. The reference has
   * no window functions (SURVEY.md §2.6); these cover the Spark-native
@@ -399,7 +400,7 @@ object WindowQueries {
         try q.processAllAvailable() finally q.stop()
       }
     }
-    val out = finish(s.read.parquet(outDir)).localCheckpoint()
+    val out = finish(s.read.parquet(outDir)).transform(Checkpoints.pin)
     gs.delete()
     out
   }
@@ -519,7 +520,7 @@ object WindowQueries {
         try q.processAllAvailable() finally q.stop()
       }
     }
-    val out = finish(s.read.parquet(outDir)).localCheckpoint()
+    val out = finish(s.read.parquet(outDir)).transform(Checkpoints.pin)
     gs.delete()
     out
   }

@@ -5,7 +5,7 @@ import java.time.LocalDate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.operators.{ScdType2, SnapshotCommit}
+import graft.operators.{Checkpoints, ScdType2, SnapshotCommit}
 
 /** Streaming SCD Type 2 maintenance: dimension snapshots arrive as a
   * stream and each micro-batch merges into the versioned dimension via
@@ -125,18 +125,17 @@ object ScdUpsert {
     snapshots.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val existing = latestVersion(spark, dimRoot, belowBatch = batchId)
-          .map(spark.read.parquet(_))
-        val next = ScdType2(batch, existing, idCol, attrCols, tracked, skCol,
-          asOfForBatch(batchId))
-        SnapshotCommit.write(next, dimRoot, batchId)
-        // the write consumed every frame ScdType2 checkpointed this
-        // batch; release exactly THOSE (plan-reachable) blocks so
-        // stream storage stays O(1). Never a session-wide sweep — that
-        // would unpersist frames a concurrent job on the shared
-        // session still needs.
-        graft.operators.Checkpoints.releasePinned(next)
-        ()
+        // one pin scope per batch: every frame ScdType2 pins is
+        // released once the write has consumed it, so stream storage
+        // stays O(1) — never a session-wide sweep, which would
+        // unpersist frames a concurrent job on the shared session
+        // still needs
+        Checkpoints.scoped {
+          val existing = latestVersion(spark, dimRoot, belowBatch = batchId)
+            .map(spark.read.parquet(_))
+          SnapshotCommit.write(ScdType2(batch, existing, idCol, attrCols,
+            tracked, skCol, asOfForBatch(batchId)), dimRoot, batchId)
+        }
       }
       .start()
 }

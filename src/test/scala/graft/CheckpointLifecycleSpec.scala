@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the checkpoint lifecycle contract: operators that localCheckpoint
-  * internally (Dedup.materialize, SurrogateKeys.sequentialKeys, ScdType2)
+  * internally (Dedup's signature barriers, SurrogateKeys.sequentialKeys, ScdType2)
   * pin executor storage blocks that `spark.catalog.clearCache()` does NOT
   * free — only GC + ContextCleaner (eventually) or an explicit unpersist
   * does. A long-lived session (the bench, a notebook, a service) that
@@ -44,6 +44,20 @@ class CheckpointLifecycleSpec extends AnyFunSuite {
     assert(counts.forall(_._2 == 0), s"blocks leaked past release: $counts")
   }
 
+  test("writeSignatureStore releases its signing barrier when it returns") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_sig_pin").toString
+    val docs = (1L to 20L).map(i => (i, s"alpha beta gamma delta tok$i"))
+      .toDF("doc_id", "text")
+    // id-set delta, not a count (the ContextCleaner drops dead pins async)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    operators.Dedup.writeSignatureStore(docs, "doc_id", "text", k = 8,
+      shingleN = 3, root = root, batchId = 1L)
+    val left = spark.sparkContext.getPersistentRDDs
+      .filter { case (id, _) => !before(id) }.values.map(_.toString)
+    assert(left.isEmpty, s"the signature writer left pins: $left")
+  }
+
   test("connectedComponents releases edges and superseded rounds itself") {
     import spark.implicits._
     Bench.releaseBlocks(spark)
@@ -53,7 +67,7 @@ class CheckpointLifecycleSpec extends AnyFunSuite {
     val out = operators.Dedup.connectedComponents(chain)
     assert(out.count() == 12)
     // only the FINAL labels checkpoint may remain pinned (the caller
-    // releases that one per the materialize contract)
+    // releases that one, per the Checkpoints contract)
     assert(persistentCount == 1,
       s"expected only the final labels frame pinned, got $persistentCount")
     Bench.releaseBlocks(spark)

@@ -109,6 +109,27 @@ class CurationPipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("epochs release their pins: with a ModelCache only the cache's frames remain, none after releaseAll") {
+    withBase(ledger = true) { (st, gates) =>
+      // id sets, never counts, and no forced GC: the ContextCleaner
+      // would hide a leak; each pin's call site is its pin site
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      def left = spark.sparkContext.getPersistentRDDs
+        .filter { case (id, _) => !before(id) }.values
+        .map(_.toString).toSeq
+      val models = new ModelCache
+      Seq(docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1))
+        .zipWithIndex.foreach { case (slice, i) =>
+          CP.processSlice(spark, st, gates, slice, "doc_id", "source", "text",
+            batchId = 1L + i, models = Some(models))
+        }
+      assert(left.nonEmpty && left.forall(_.contains("localCheckpoint at ModelCache.scala:")),
+        s"an epoch left pins outside the model cache: $left")
+      models.releaseAll()
+      assert(left.isEmpty, s"pins left after releaseAll: $left")
+    }
+  }
+
   test("streamed run commits the SAME kept set as the sequential fold; epoch replay no-ops") {
     var foldKept: Set[Long] = null
     withBase() { (st, gates) =>

@@ -81,11 +81,11 @@ class DataSelectionSpec extends AnyFunSuite {
     import spark.implicits._
     val docs = (1L to 50L).map(i => (i, s"tok${i % 9} tok${(i + 2) % 9}"))
       .toDF("doc_id", "text")
-    val (scored, pins) = graft.operators.DataSelection.dsirScored(
+    val scored = graft.operators.DataSelection.dsirScored(
       docs.filter(col("doc_id") % 4 =!= 0), docs.filter(col("doc_id") % 4 === 0),
       "doc_id", "text", buckets = 128, k = 10)
     val p = scored.queryExecution.executedPlan.toString
-    Seq(scored) ++ pins foreach graft.operators.Checkpoints.releasePinned
+    graft.operators.Checkpoints.releasePinned(scored)
     // the B-row weights frame broadcasts into per-doc scoring — the
     // candidate side never shuffles for the join
     assert(p.contains("BroadcastHashJoin"), p)

@@ -149,8 +149,8 @@ class ErasureSpec extends AnyFunSuite {
       val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
       intercept[Exception] {
         graft.queries.ErasureQueries.forgetGate(spark, dir, "graft_erasure_leak",
-          p => Seq(Erasure.LmStore(p("lm")), Erasure.PqStore(p("pq")),
-            Erasure.KeptStore(s"$blocker/kept")))
+          p => Seq(Erasure.SignatureStore(p("sig")), Erasure.LmStore(p("lm")),
+            Erasure.PqStore(p("pq")), Erasure.KeptStore(s"$blocker/kept")))
       }
       val leaked = spark.sparkContext.getPersistentRDDs
         .filter { case (id, _) => !before.contains(id) }.values

@@ -38,9 +38,16 @@ class QueriesSpec extends AnyFunSuite {
 
   for (q <- SparkEntry.registry) {
     test(s"${q.name} runs at sf0.001") {
+      // pins are compared as id sets, never counts, and no GC is
+      // forced: the ContextCleaner would hide a leak
+      val before = spark.sparkContext.getPersistentRDDs.keySet
       val df = q.run(spark, sf)
       assert(df.columns.nonEmpty)
       assert(df.count() >= 0)
+      operators.Checkpoints.releasePinned(df)
+      val leaked = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
+      assert(leaked.isEmpty, s"${q.name} left pins behind: " +
+        leaked.values.map(_.toString).mkString(", "))
     }
   }
 

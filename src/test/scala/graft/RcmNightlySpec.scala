@@ -113,6 +113,31 @@ class RcmNightlySpec extends AnyFunSuite with TimeLimits {
     assert(claims.filter(col("patient_sk").isNull).count() == RcmFixtures.orphanTransactions)
   }
 
+  test("a night leaves only the pins its star reaches, and none once the star is released") {
+    val dir = java.nio.file.Files.createTempDirectory("rcm_night_pins").toString
+    RcmFixtures.write(dir, 1)
+    RcmFixtures.write(dir, 2)
+    // id sets, never counts, and no forced GC: the ContextCleaner would hide a leak
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def night(day: Int, asOf: LocalDate, existing: Option[DataFrame]): Unit = {
+      val r = RcmPipeline.runRaw(RcmFixtures.extract(spark, dir, day), asOf, existing)
+      RcmPipeline.write(r.star, s"$dir/star$day")
+      (r.star.dimensions.values ++ r.star.facts.values)
+        .foreach(operators.Checkpoints.releasePinned)
+    }
+    // no auto-broadcast: the re-keys take the dimension-scale path,
+    // whose own pins (sort, diff join) the result does not reach
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      night(1, asOf1, None)
+      night(2, asOf2, Some(spark.read.parquet(s"$dir/star1/dim_patients.parquet")))
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(left.isEmpty, "pins the night left behind: " +
+      left.values.map(_.toString).mkString(", "))
+  }
+
   test("an empty table writes, observes 0 rows and reconciles without hanging") {
     val (r, _) = day1
     val empty = r.star.dimensions("dim_departments").filter(lit(false))

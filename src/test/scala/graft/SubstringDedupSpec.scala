@@ -83,20 +83,6 @@ class SubstringDedupSpec extends AnyFunSuite {
     }
   }
 
-  test("staging barrier changes the plan, not the result") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("substr_stage").toString
-    try {
-      val plain = Dedup.substringDupSpans(docs, "doc_id", "text", 5)
-        .orderBy("doc_id").collect().toSeq
-      val staged = Dedup.substringDupSpans(docs, "doc_id", "text", 5,
-          stagingDir = Some(dir))
-        .orderBy("doc_id").collect().toSeq
-      assert(plain == staged)
-    } finally
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
   test("corpus invariants: coverage bounded, zero-dup consistency") {
     val out = Dedup.substringDupSpans(
       Tables.documents(spark, "/root/testdata/sf0.001"), "doc_id", "text", 5)

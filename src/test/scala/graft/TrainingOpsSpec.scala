@@ -34,22 +34,6 @@ class TrainingOpsSpec extends AnyFunSuite {
         s"LSH recall ${lsh.size}/${truth.size} below 0.8")
   }
 
-  test("LSH staging-dir barrier produces identical pairs to localCheckpoint") {
-    val docs = Tables.documents(spark, sf001)
-    val staging = java.nio.file.Files.createTempDirectory("lsh_staging").toString
-    def pairs(dir: Option[String]) =
-      Dedup.minhashLshPairs(docs, "doc_id", "text", 16, 3, 8, 0.5, dir)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val staged = pairs(Some(s"$staging/shingles"))
-    assert(staged == pairs(None))
-    assert(staged.nonEmpty)
-    // the barrier really went through parquet (one unique stage subdir)
-    val stages = new java.io.File(s"$staging/shingles").listFiles()
-    assert(stages != null && stages.exists(d =>
-      d.getName.startsWith("stage-") &&
-        d.listFiles().exists(_.getName.endsWith(".parquet"))))
-  }
-
   test("identical texts get identical simhash; different texts differ") {
     val df = Seq(
       (1L, "spark makes big data small again and again"),
