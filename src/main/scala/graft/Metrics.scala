@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Measured execution metrics — the audit layer behind the plan-shape
@@ -53,10 +53,44 @@ object Metrics {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** The Spark jobs one window started, in start order, each named by
+    * its call site (the name of its final stage, e.g. `count at
+    * RcmModeling.scala:160`). */
+  final case class JobCount(sites: Seq[String]) {
+    def jobs: Int = sites.size
+  }
+
+  /** Run `body` and return (result, every job started during it). The
+    * bus is drained before the listener is added, so no earlier job's
+    * event lands in the window, and again after `body`, so none of its
+    * own is missed. Every job counts, whatever its thread or job group
+    * (a job-group filter would miss stream threads' jobs); serialize
+    * calls per SparkContext, as for [[capture]]. */
+  def countJobs[A](spark: SparkSession)(body: => A): (A, JobCount) = {
+    val sc = spark.sparkContext
+    drainListenerBus(sc)
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        // a job over zero partitions starts with no stage at all
+        val site = j.stageInfos.sortBy(-_.stageId).headOption.map(_.name)
+          .orElse(Option(j.properties).flatMap(p => Option(p.getProperty("callSite.short"))))
+          .getOrElse("?")
+        started.add(j.jobId -> site)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      drainListenerBus(sc)
+      (a, JobCount(started.toArray(Array.empty[(Int, String)]).sortBy(_._1).map(_._2).toSeq))
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** `listenerBus.waitUntilEmpty()` is `private[spark]`; reach it via
     * reflection (it is the correct drain — events are async), falling
     * back to a bounded sleep if the internal moves in a future Spark. */
-  private def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+  private[graft] def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     try {
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
       bus.getClass.getMethod("waitUntilEmpty").invoke(bus)

@@ -1,7 +1,12 @@
 package graft.etl
 
+import java.io.FileNotFoundException
 import java.time.LocalDate
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -82,17 +87,21 @@ object RcmPipeline {
     * ([[DataQuality.observeValidation]]'s `n_rows`), so the count and
     * the sink see the same rows without pinning the table first. Each
     * write gets its own unnamed observation, so the concurrent writes
-    * cannot collide. `reloaded` comes from ONE query over the sink:
-    * the tables' parquet reads, each with the schema that was written
-    * (no footer inference job), tagged by name and counted per name.
-    * A table whose files all vanished reloads as 0.
+    * cannot collide. `reloaded` is re-read from the sink, not taken
+    * from the write's metrics: the row counts in the parquet footers
+    * of the data files the table's directory lists once the write has
+    * committed (hidden `_`/`.` files skipped, as Spark's file index
+    * skips them). A table whose files all vanished reloads as 0.
     *
     * Scale notes: one write job per table (the writes overlap through
     * [[ParallelJobs]], so one table's straggler tail back-fills the
-    * next) plus one reload query for the whole star. The observation
-    * is a map-side count folded into the write's tasks; the reload
-    * reads parquet row-group metadata only. Neither recomputes the
-    * pipeline: the expensive star inputs are pinned upstream
+    * next). The reconcile runs no Spark job: the driver lists each
+    * table's directory and reads one footer per file, O(files) small
+    * reads (a few per table here; at thousands of files per table a
+    * listing service's per-file cost dominates and the footers could
+    * be read by one distributed job instead). The observation is a
+    * map-side count folded into the write's tasks. Neither recomputes
+    * the pipeline: the expensive star inputs are pinned upstream
     * ([[RcmModeling]]), and each table's own plan runs exactly once. */
   def write(star: RcmModeling.StarSchema, outDir: String): Seq[TableLoad] = {
     val clustering: Map[String, Seq[String]] = Map(
@@ -109,20 +118,28 @@ object RcmPipeline {
       val obs = Observation()
       DataQuality.observeValidation(out, obs, Seq.empty)
         .write.mode("overwrite").parquet(path(name))
-      (name, obs.get("n_rows").asInstanceOf[Long], out.schema)
+      (name, obs.get("n_rows").asInstanceOf[Long])
     }})
-    val spark = tables.head._2.sparkSession
-    val reloaded = written.map { case (name, _, schema) =>
-      spark.read.schema(schema).parquet(path(name)).select(lit(name).as("table"))
-    }.reduce(_.unionByName(_))
-      .groupBy(col("table")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val loads = written.map { case (name, n, _) =>
-      TableLoad(name, n, reloaded.getOrElse(name, 0L))
-    }
+    val conf = tables.head._2.sparkSession.sessionState.newHadoopConf()
+    val loads = written.map { case (name, n) => TableLoad(name, n, footerRows(path(name), conf)) }
     val bad = loads.filterNot(_.reconciled)
     require(bad.isEmpty,
       s"post-load reconciliation failed: ${bad.mkString(", ")}")
     loads
+  }
+
+  /** Rows in the parquet data files directly under `dir`, summed from
+    * their footers; 0 when the directory is gone. */
+  private def footerRows(dir: String, conf: Configuration): Long = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(conf)
+    val files = try fs.listStatus(path)
+      catch { case _: FileNotFoundException => Array.empty[FileStatus] }
+    files.iterator
+      .filter(f => f.isFile && !Seq("_", ".").exists(f.getPath.getName.startsWith))
+      .map { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try reader.getRecordCount finally reader.close()
+      }.sum
   }
 }

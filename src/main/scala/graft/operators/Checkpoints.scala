@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one place that pins frames and releases them.
@@ -34,6 +34,24 @@ import org.apache.spark.sql.execution.LogicalRDD
   * releases it with [[releasePinned]] once nothing reads it again.
   * [[graft.Bench.releaseBlocks]] is the bench's whole-session sweep
   * between isolated runs, not a release path for operators.
+  *
+  * Every release (scope end, [[releasePinned]], a [[ModelCache]]
+  * eviction) frees the blocks through one path that skips
+  * `RDD.unpersist`'s lineage-truncation WARN: a seam release is always
+  * deliberate, so the WARN would only bury real ones. An `unpersist`
+  * outside the seam still warns.
+  *
+  * Size: a pin re-enters the plan with its stored bytes (memory plus
+  * disk, read from the block-manager master once the checkpoint job
+  * has returned; no extra job) as its `sizeInBytes`. The estimate the
+  * frame was checkpointed with is not used: for a join it is the
+  * product of its sides' sizes (gigabytes, or 10²⁴ bytes, for a
+  * megabyte of rows), which kept every pinned join off the broadcast
+  * path and every size gate ([[SurrogateKeys.sequentialKeys]]) on its
+  * dimension-scale branch. Stored bytes count deserialized rows, so
+  * they overstate the serialized size a broadcast ships; they never
+  * understate it, even for wide string and array rows, which a
+  * row-count × schema-width figure would.
   */
 object Checkpoints {
 
@@ -88,20 +106,20 @@ object Checkpoints {
     } finally {
       open.set(parent)
       val (reached, dead) = scope.drain().partition(r => live(r.id))
-      dead.foreach(_.unpersist(blocking = false))
+      dead.foreach(GraftBridge.release)
       Option(parent).foreach(_.add(reached))
     }
   }
 
   /** Release every pin `df`'s plan reaches. Only call once nothing
     * will read the frame again. */
-  def releasePinned(df: Dataset[_]): Unit =
-    rddsOf(df).foreach(_.unpersist(blocking = false))
+  def releasePinned(df: Dataset[_]): Unit = rddsOf(df).foreach(GraftBridge.release)
 
-  /** The eager checkpoint, with the caller's `file:line` outside this
-    * object as the call site of its jobs and RDDs, so leak reports and
-    * the Spark UI name the pinning site. (A call site, not an RDD name:
-    * a name would show in every plan that scans the pin.) */
+  /** The eager checkpoint, re-entered with its stored bytes as its
+    * size, with the caller's `file:line` outside this object as the
+    * call site of its jobs and RDDs, so leak reports and the Spark UI
+    * name the pinning site. (A call site, not an RDD name: a name
+    * would show in every plan that scans the pin.) */
   private def checkpoint(df: DataFrame): (DataFrame, Seq[RDD[_]]) = {
     val site = Thread.currentThread.getStackTrace.find { f =>
       val c = f.getClassName
@@ -113,7 +131,8 @@ object Checkpoints {
     sc.setLocalProperty(ShortCallSite, s"localCheckpoint at $site")
     val pinned = try df.localCheckpoint()
       finally sc.setLocalProperty(ShortCallSite, callSite)
-    (pinned, rddsOf(pinned))
+    val rdds = rddsOf(pinned)
+    (GraftBridge.withSizeInBytes(pinned, rdds.map(GraftBridge.storedBytes).sum), rdds)
   }
 
   private def rddsOf(df: Dataset[_]): Seq[RDD[_]] = {

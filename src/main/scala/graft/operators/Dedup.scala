@@ -118,13 +118,6 @@ object Dedup {
           .otherwise(lit(0.0)).as("dup_fraction"))
   }
 
-  /** Per-doc MinHash signature: k permuted mins over the document's
-    * hashed word-`n`-gram shingle set. Rows for docs shorter than n
-    * tokens are dropped — they cannot near-dup at shingle granularity. */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-      k: Int, shingleN: Int): DataFrame =
-    withShingleSignatures(df, idCol, textCol, k, shingleN).drop("hs")
-
   /** Universal-hash permutation family over a 32-bit base hash:
     * `h_j(x) = (a_j * h32(x) + b_j) mod P32` with P32 prime > 2^32.
     * Products stay < 2^63 (no overflow in either engine); multipliers

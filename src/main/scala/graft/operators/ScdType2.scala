@@ -31,14 +31,19 @@ import org.apache.spark.sql.types.{DateType, StringType}
   *    `datetime.now()` is parameterized as `asOf` (SURVEY.md §7.3).
   *
   * Scale notes (100 TB design point): the join shuffles both sides on
-  * the business id only — tracked-attribute comparison is map-side; the
-  * four classes are produced from ONE shared joined frame (Spark reuses
-  * the exchange under AQE). The final re-key is
-  * [[SurrogateKeys.sequentialKeys]] — a two-phase range-partitioned
-  * re-key with no single-partition window, so it parallelizes across
-  * the cluster even at billion-row dimension cardinality; for stable
-  * cross-run keys swap [[SurrogateKeys.stableHashKeyChecked]] — the
-  * trade-off is documented there.
+  * the business id only — tracked-attribute comparison is map-side.
+  * Every row class (expired, new version, brand-new, and the carried
+  * current rows) comes from ONE pinned diff, so the prior is read once
+  * for its current rows and once for its expired history, and no
+  * class re-joins the prior against the changed ids. The final re-key
+  * is [[SurrogateKeys.sequentialKeys]]: a frame that fits the
+  * broadcast threshold (the diff pin is gated at its measured size)
+  * ranks in one task and is pinned here; a larger one takes the
+  * two-phase range-partitioned re-key with no single-partition window,
+  * so it parallelizes across the cluster even at billion-row
+  * dimension cardinality. Both paths return a frame computed once. For
+  * stable cross-run keys swap [[SurrogateKeys.stableHashKeyChecked]] —
+  * the trade-off is documented there.
   *
   * Lifecycle: [[Checkpoints]].
   */
@@ -51,7 +56,9 @@ object ScdType2 {
     *                  empty prior needs no special case: every
     *                  snapshot row is right-only in the diff and comes
     *                  out as the first run's row. The prior is read
-    *                  twice and never pinned here; a caller that
+    *                  twice (current rows into the diff, expired
+    *                  history around it; three times under
+    *                  `changedOnly`) and never pinned here; a caller that
     *                  overwrites its path before this output is
     *                  written pins it first (RcmRun does).
     * @param idCol     business key (e.g. `unified_patient_id`)
@@ -64,10 +71,11 @@ object ScdType2 {
     *                  `newSnap` BEFORE the full-outer diff, so the
     *                  diff join is batch-sized on both sides instead
     *                  of dimension-sized. Semantically a no-op — the
-    *                  diff's left-only rows (dimension ids absent from
-    *                  the batch) were never consumed by any output
-    *                  class; they flow through the unchanged branch
-    *                  either way (equality property-pinned in
+    *                  current rows of dimension ids absent from the
+    *                  batch flow through unchanged either way: as the
+    *                  diff's left-only rows, or, pruned, through an
+    *                  anti-join of the prior's current rows with the
+    *                  batch's ids (equality property-pinned in
     *                  ScdType2Spec, oracle-gated as q109). Use when
     *                  upstream delivers only changed/new rows (CDC);
     *                  the reference's whole-snapshot reruns
@@ -124,15 +132,18 @@ object ScdType2 {
 
       case Some(existingDim) => Checkpoints.scoped {
         val cur0 = existingDim.filter(col("is_current"))
+        val snapIds = snap.select(col(idCol))
         val cur = (if (!changedOnly) cur0
-          else cur0.join(snap.select(col(idCol)).distinct(), Seq(idCol), "left_semi"))
+          else cur0.join(snapIds, Seq(idCol), "left_semi"))
           .withColumn("_old_present", lit(true))
         val newP = snap.select(
           col(idCol) +: attrCols.map(c => col(c).as(s"_new_$c")): _*)
           .withColumn("_new_present", lit(true))
 
         // Full-outer diff join on the business id (J5); materialized
-        // once — read by all four row classes below.
+        // once — every row class below is read from it. Left-only rows
+        // carry a NULL `_new_present`, right-only rows a NULL
+        // `_old_present` (not false).
         val joined = cur.join(newP, Seq(idCol), "full_outer").transform(Checkpoints.pin)
 
         // `fillna('')`-style null-safe inequality for strings, <=> else.
@@ -144,8 +155,7 @@ object ScdType2 {
           }
         }.reduce(_ || _)
 
-        val matched = col("_old_present") && col("_new_present")
-        val changed = joined.filter(matched && changePred)
+        val changed = joined.filter(col("_old_present") && col("_new_present") && changePred)
 
         val expiredOld = changed
           .select((Seq(idCol, "version", "effective_date") ++ attrCols).map(col): _*)
@@ -158,33 +168,42 @@ object ScdType2 {
               (col("version") + 1).as("_v")): _*),
           col("_v")).drop("_v")
 
-        // Right-only rows carry a NULL `_old_present` (not false).
         val brandNew = stamped(
           joined.filter(col("_old_present").isNull && col("_new_present"))
             .select(col(idCol) +: attrCols.map(c => col(s"_new_$c").as(c)): _*),
           lit(1))
 
         // Unchanged = every existing row EXCEPT the current rows of
-        // changed ids (those are replaced by their expired copies).
-        // Expired history of changed ids flows through. NOTE: the
-        // reference drops ALL rows of a changed id here
+        // changed ids (those are replaced by their expired copies):
+        // the prior's expired history, plus the diff's current rows
+        // that no change replaces — left-only rows (ids absent from
+        // the snapshot, retained) and matched rows without a tracked
+        // change. Under `changedOnly` the absent ids' current rows
+        // were pruned from the diff, so they come from the prior
+        // directly. Expired history of changed ids flows through.
+        // NOTE: the reference drops ALL rows of a changed id here
         // (`scd_implementation.py:82-86`) — on a second change an id
         // would lose its v1 history. That path never executed (the
         // `version_old` crash, see the class doc), so we implement the
         // correct retention; the invariant is property-tested.
-        val changedIds = changed.select(idCol).distinct()
-          .withColumn("_changed", lit(true))
-        val unchanged = existingDim.join(changedIds, Seq(idCol), "left")
-          .filter(col("_changed").isNull || !col("is_current"))
-          .drop("_changed")
+        val priorCols = (Seq(idCol) ++ attrCols ++
+          Seq("version", "effective_date", "expiry_date", "is_current")).map(col)
+        val carried = joined
+          .filter(col("_old_present") && (col("_new_present").isNull || !changePred))
+        val absent = if (changedOnly) Seq(cur0.join(snapIds, Seq(idCol), "left_anti")) else Nil
+        val unchanged = (existingDim.filter(!col("is_current")) +: carried +: absent)
+          .map(_.select(priorCols: _*)).reduce(_.unionByName(_))
 
-        val assembled = unchanged.drop(skCol)
+        val assembled = unchanged
           .unionByName(expiredOld)
           .unionByName(newVersion)
           .unionByName(brandNew)
-        // the scope releases the diff pin when the re-key's own
-        // checkpoint no longer reaches it
-        rekey(assembled)
+        // Computed once on either re-key path: the dimension-scale
+        // re-key returns a pin, the one-task re-key is pinned here.
+        // Either pin reads the diff pin only through its own blocks,
+        // so the scope releases the diff pin.
+        val keyed = rekey(assembled)
+        if (SurrogateKeys.fitsOneTask(assembled)) Checkpoints.pin(keyed) else keyed
       }
     }
   }

@@ -60,20 +60,14 @@ object SurrogateKeys {
     * `orderCols` must be a unique key of `df` for the assignment to be
     * deterministic (all call sites here order by a distinct key set).
     *
+    * The one-task path is lazy: a caller that reads its result more
+    * than once pins it (ScdType2 does). The dimension-scale path
+    * returns a pin.
+    *
     * Lifecycle: [[Checkpoints]].
     */
   def sequentialKeys(df: DataFrame, orderCols: Seq[Column], skName: String): DataFrame = {
-    // Size gate, same spirit as AQE's coalesce-to-one: a frame whose
-    // plan-estimated size fits comfortably in a single task (the
-    // broadcast threshold) gains nothing from a distributed re-key —
-    // it takes a deliberate one-partition rank (constant partition
-    // key, so the ordering semantics are identical) and skips two
-    // exchanges + a range-sampling pass. Dimension-scale frames above
-    // the threshold take the fully parallel two-phase path below.
-    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val small = threshold > 0 &&
-      df.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
-    if (small)
+    if (fitsOneTask(df))
       // One partition + total local sort, then
       // monotonically_increasing_id: on partition 0 the ids are
       // exactly 0..N-1 in row (= sort) order. No WindowExec, no extra
@@ -96,6 +90,20 @@ object SurrogateKeys {
       // when the scope ends.
       spark.createDataFrame(indexed, schema).transform(Checkpoints.pin)
     }
+  }
+
+  /** The size gate, same spirit as AQE's coalesce-to-one: a frame
+    * whose plan-estimated size fits the broadcast threshold gains
+    * nothing from a distributed re-key, so [[sequentialKeys]] ranks it
+    * in one deliberate task (constant partition key, so the ordering
+    * semantics are identical) and skips two exchanges and a
+    * range-sampling pass. The estimate reads pinned inputs at their
+    * measured size ([[Checkpoints]]), so a frame derived from a pinned
+    * join is gated on its rows, not on the product of the join's sides
+    * that Spark's pre-checkpoint estimate would carry. */
+  private[operators] def fitsOneTask(df: DataFrame): Boolean = {
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    threshold > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
   }
 
   /** Distinct natural keys → dense sequential sk starting at 0,

@@ -138,6 +138,37 @@ class RcmNightlySpec extends AnyFunSuite with TimeLimits {
       left.values.map(_.toString).mkString(", "))
   }
 
+  /** Spark jobs of one night's `runRaw` + `write` on the fixtures,
+    * auto-broadcast on (the benchmark's shape). A change that adds or
+    * removes a job moves these; update them with the reason in the
+    * change's notes. */
+  private val nightJobs = Map(1 -> 31, 2 -> 32)
+
+  test("a day-1 and a day-2 night run exactly their budgeted Spark jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("rcm_night_jobs").toString
+    RcmFixtures.write(dir, 1)
+    RcmFixtures.write(dir, 2)
+    def night(day: Int, asOf: LocalDate, existing: Option[DataFrame]): Metrics.JobCount = {
+      val raw = RcmFixtures.extract(spark, dir, day)
+      val (r, count) = Metrics.countJobs(spark) {
+        val r = RcmPipeline.runRaw(raw, asOf, existing)
+        RcmPipeline.write(r.star, s"$dir/star$day")
+        r
+      }
+      (r.star.dimensions.values ++ r.star.facts.values)
+        .foreach(operators.Checkpoints.releasePinned)
+      count
+    }
+    val counts = Map(
+      1 -> night(1, asOf1, None),
+      2 -> night(2, asOf2, Some(spark.read.parquet(s"$dir/star1/dim_patients.parquet"))))
+    val off = counts.toSeq.sortBy(_._1).collect { case (day, c) if c.jobs != nightJobs(day) =>
+      f"day $day: ${c.jobs} jobs, budget ${nightJobs(day)} (${c.jobs - nightJobs(day)}%+d); " +
+        c.sites.mkString("call sites: ", " | ", "")
+    }
+    assert(off.isEmpty, off.mkString("\n"))
+  }
+
   test("an empty table writes, observes 0 rows and reconciles without hanging") {
     val (r, _) = day1
     val empty = r.star.dimensions("dim_departments").filter(lit(false))

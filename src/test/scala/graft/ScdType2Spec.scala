@@ -104,6 +104,41 @@ class ScdType2Spec extends AnyFunSuite {
     assert(viaCdc == run(pruned = false))
   }
 
+  test("the diff branch gives the same rows on the one-task and the dimension-scale re-key, either changedOnly") {
+    val d3 = LocalDate.parse("2024-08-01")
+    val first = ScdType2(snap(("a", "Ann", "2 Oak"), ("b", "Bob", "1 Main"),
+      ("c", "Cal", "5 Pine"), ("e", "Eve", "4 Elm")), None, "id", attrs, tracked, "sk", d1)
+    // a's first change leaves expired history in the prior
+    val prior = ScdType2(snap(("a", "Ann", "9 New"), ("b", "Bob", "1 Main"),
+      ("c", "Cal", "5 Pine"), ("e", "Eve", "4 Elm")), Some(first), "id", attrs, tracked, "sk", d2)
+    // a: tracked change; b: untracked change; c: disappears; d: new; e: unchanged
+    val batch = snap(("a", "Ann", "11 Fir"), ("b", "Bobby", "1 Main"),
+      ("d", "Dee", "7 Ash"), ("e", "Eve", "4 Elm"))
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val threshold = spark.conf.get(key)
+    def run(broadcast: Boolean, pruned: Boolean) = {
+      // -1 turns the size gate off: the re-key takes the dimension-scale path
+      spark.conf.set(key, if (broadcast) threshold else "-1")
+      try ScdType2(batch, Some(prior), "id", attrs, tracked, "sk", d3, changedOnly = pruned)
+        .collect().map(r => (r.getAs[Long]("sk"), r.getAs[String]("id"), r.getAs[String]("name"),
+          r.getAs[String]("address"), r.getAs[Long]("version"), r.getAs[Boolean]("is_current"),
+          String.valueOf(r.getAs[java.sql.Date]("expiry_date"))))
+        .sortBy(_._1).toSeq
+      finally spark.conf.set(key, threshold)
+    }
+    val want = run(broadcast = true, pruned = false)
+    assert(want == Seq(
+      (0L, "a", "Ann", "2 Oak", 1L, false, "2024-06-30"),
+      (1L, "a", "Ann", "9 New", 2L, false, "2024-07-31"),
+      (2L, "a", "Ann", "11 Fir", 3L, true, "null"),
+      (3L, "b", "Bob", "1 Main", 1L, true, "null"),
+      (4L, "c", "Cal", "5 Pine", 1L, true, "null"),
+      (5L, "d", "Dee", "7 Ash", 1L, true, "null"),
+      (6L, "e", "Eve", "4 Elm", 1L, true, "null")), s"got $want")
+    for (broadcast <- Seq(true, false); pruned <- Seq(false, true))
+      assert(run(broadcast, pruned) == want, s"broadcast=$broadcast changedOnly=$pruned")
+  }
+
   test("untracked change (name only) does not version") {
     val out = secondRun(snap(("a", "Annie", "2 Oak"), ("b", "Bob", "1 Main"))).collect()
     assert(out.length == 2)
